@@ -29,7 +29,7 @@ from pyspark.sql.datasource import (
 
 from kafkastreaming_spark.io import EVENTS_ORACLE_CTE
 from kafkastreaming_spark.registry import query
-from kafkastreaming_spark.streaming.harness import scratch_dir
+from kafkastreaming_spark.streaming.harness import drain, scratch_dir, stream_events
 
 _N_SENSORS = 64
 _N_READINGS = 1000
@@ -220,22 +220,15 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    from kafkastreaming_spark.streaming.harness import stream_shuffle
-
     for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
-        with stream_shuffle(spark):
-            q = (
-                spark.readStream.format("ks_feed")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
+        q = drain(
+            spark,
+            spark.readStream.format("ks_feed")
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out),
+            checkpoint=ckpt,
+        )
         # drain proof from the query's own progress metrics — a sink
         # re-count would cost one extra job per restart
         lp = q.lastProgress
@@ -356,28 +349,13 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir(), f"ks_pysink_{uuid.uuid4().hex[:12]}"
     )
     outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     os.makedirs(outdir)
-    from kafkastreaming_spark.streaming.harness import stream_events
-
     # 2 chunks: multi-batch commit protocol demonstrated at half the
     # micro-batch scheduling cost of the default 4-chunk replay
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="pysink").select(
+    sdf = stream_events(spark, sf_dir, n_chunks=2).select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    from kafkastreaming_spark.streaming.harness import stream_shuffle
-
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.format("ks_jsonl_sink")
-            .option("outdir", outdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
+    drain(spark, sdf.writeStream.format("ks_jsonl_sink").option("outdir", outdir))
     back = spark.read.schema("event_id long, cents long").json(
         os.path.join(outdir, "batch_*.jsonl")
     )

@@ -16,20 +16,17 @@ Kafka broker (none exists in this sandbox — SURVEY.md §7.5).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kafkastreaming_spark.io import load_table
 from kafkastreaming_spark.sources.factory import file_event_stream
-
-# chunk dirs already built by THIS process: (path,) -> reuse
-_REPLAY_BUILT: set[tuple] = set()
 
 
 def scratch_dir() -> str:
@@ -61,9 +58,9 @@ def scratch_dir() -> str:
 # partitions keep every core busy inside one wave while cutting the
 # fixed per-batch state-store overhead 4× (r11, VERDICT r10 item 2 —
 # stream_stream_join/_outer were 13.1 s each with 32-partition state).
-# At 100 TB you'd raise spark.sql.shuffle.partitions (or use RocksDB +
-# more partitions) — this knob tunes the HARNESS, not the operator.
-_STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+# At 100 TB state volume crosses _STATE_VOLUME_THRESHOLD and
+# state_partitions() sizes to the machine instead.
+_STREAM_SHUFFLE = 8
 
 # State-volume threshold above which the harness stops trusting the
 # low-overhead replay default and sizes state partitions to the machine
@@ -73,9 +70,7 @@ _STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
 # in fresh processes: once per-group state compute dominates the fixed
 # per-partition state-store overhead, fewer-partitions-than-cores is a
 # 3x loss.  Replay fixtures (<=100k state rows) stay on _STREAM_SHUFFLE.
-_STATE_VOLUME_THRESHOLD = int(
-    os.environ.get("SPARK_GRAFT_STATE_VOLUME_THRESHOLD", "1000000")
-)
+_STATE_VOLUME_THRESHOLD = 1_000_000
 
 
 def state_partitions(state_groups: int | None, cores: int | None = None) -> int:
@@ -101,28 +96,111 @@ def state_partitions(state_groups: int | None, cores: int | None = None) -> int:
     return _STREAM_SHUFFLE
 
 
-@contextlib.contextmanager
-def stream_shuffle(spark: SparkSession, n: int | None = None):
-    """Scope spark.sql.shuffle.partitions to ``n`` (default
-    _STREAM_SHUFFLE) for the duration of a streaming query lifecycle
-    (set → start → awaitTermination → restore).  Safe because every
-    harness query runs synchronously (AvailableNow + awaitTermination)
-    and each uses a fresh checkpoint, so the captured partition count
-    never conflicts with a prior run.
+# Serializes the conf-scoping step of every lifecycle (see drain): the
+# session confs are shared, so two lifecycles' set/start/restore must
+# not interleave.
+_CONF_LOCK = threading.Lock()
 
-    Per-key overrides (r12 sweep, VERDICT r11 item 7 — 4/8/16/32 probed
-    per key at sf0.1): the Python-stateful ``stream_session_ttl`` wins
-    at 16 (more Arrow workers in flight beats per-batch state-store
-    overhead: 6.2 s vs 6.7 s at 8, 9.6 s at 4), while the pure-JVM
-    3-lifecycle ``stream_late_update`` wins at 4 (fixed per-partition
-    state-store cost × 3 lifecycles dominates: 5.3 s vs 5.6 s at 8,
-    12.0 s at 32).  Everything else keeps the fleet-swept default 8."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n or _STREAM_SHUFFLE))
+
+def _start_scoped(
+    spark: SparkSession, writer: DataStreamWriter, confs: dict[str, str]
+) -> StreamingQuery:
+    """Set ``confs`` on the session, start ``writer`` as an AvailableNow
+    query, and restore the confs — all under :data:`_CONF_LOCK`.  A conf
+    that was unset before is unset again, not pinned to its default."""
+    with _CONF_LOCK:
+        old = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            return writer.trigger(availableNow=True).start()
+        finally:
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    timeout_sec: float = 120,
+    checkpoint: str | None = None,
+    shuffle_n: int | None = None,
+    state_groups: int | None = None,
+    no_data_batches: bool = True,
+    confs: dict[str, str] | None = None,
+) -> StreamingQuery:
+    """Run one streaming lifecycle to completion: start ``writer`` with
+    Trigger.AvailableNow, wait for it, stop it, clean up.  Returns the
+    terminated query (for ``lastProgress`` and friends).
+
+    The lifecycle's confs — ``spark.sql.shuffle.partitions``,
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` and any extra
+    ``confs`` (e.g. a state-store provider) — are on the session only
+    while ``start()`` runs, under a module lock.  That is enough because
+    Spark fixes a streaming query's confs at ``start()`` (the query
+    clones the session when it is created), so concurrent lifecycles
+    with conflicting confs are safe and the session is left unchanged.
+
+    * ``shuffle_n`` is the state-partition count; when None,
+      ``state_groups`` (expected state-store volume) picks it via
+      :func:`state_partitions`.  Per-key overrides (r12 sweep, VERDICT
+      r11 item 7 — 4/8/16/32 probed per key at sf0.1): the pure-JVM
+      3-lifecycle ``stream_late_update`` wins at 4 (fixed per-partition
+      state-store cost × 3 lifecycles dominates: 5.3 s vs 5.6 s at 8,
+      12.0 s at 32), as do the stream-stream joins (r13 re-sweep);
+      everything else keeps the swept 8.
+    * ``no_data_batches=False`` skips the trailing zero-row micro-batch.
+      That batch exists ONLY to advance the watermark and fire state
+      evictions/timeouts after the last data batch — operators whose
+      evictions EMIT (outer joins, session timeouts, append-mode window
+      finalization) need it; operators whose evictions are
+      output-silent (inner stream-stream join) pay its full
+      state-store-commit floor (r13 profile: an EMPTY batch costs
+      addBatch≈712 ms) for nothing.  Only pass False when the final
+      sink is provably independent of the trailing batch.
+
+    Raises ``TimeoutError`` when the query has not finished within
+    ``timeout_sec`` — never returns a partial sink.  Whatever happens,
+    the query is stopped, and a checkpoint this call created is
+    removed; a caller-supplied ``checkpoint`` (restart, state reader)
+    stays with the caller."""
+    own_ckpt = checkpoint is None
+    if own_ckpt:
+        checkpoint = os.path.join(scratch_dir(), f"ks_ckpt_{uuid.uuid4().hex[:12]}")
+    scoped = {
+        "spark.sql.shuffle.partitions": str(
+            shuffle_n or state_partitions(state_groups)
+        ),
+        "spark.sql.streaming.noDataMicroBatches.enabled": str(
+            no_data_batches
+        ).lower(),
+        **(confs or {}),
+    }
+    q = None
     try:
-        yield
+        q = _start_scoped(
+            spark, writer.option("checkpointLocation", checkpoint), scoped
+        )
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"streaming query {q.name or q.id} did not finish in "
+                f"{timeout_sec}s — refusing to return a partial sink"
+            )
+        return q
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        if q is not None and q.isActive:
+            q.stop()
+        if own_ckpt:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+
+
+# chunk dirs already built by THIS process; built under _REPLAY_LOCK so
+# concurrent lifecycles never race the check against the rmtree
+_REPLAY_BUILT: set[str] = set()
+_REPLAY_LOCK = threading.Lock()
 
 
 def replay_chunks(
@@ -130,7 +208,6 @@ def replay_chunks(
     sf_dir: str,
     n_chunks: int = 6,
     late_fraction: float = 0.0,
-    tag: str = "replay",
 ) -> str:
     """Write events as n_chunks arrival-ordered parquet files; optionally
     move a slice of mid-timeline rows into the last chunk (late data).
@@ -142,17 +219,23 @@ def replay_chunks(
     (each has its own checkpoint), and bench repeats.  Before this memo
     the rows-only bench paid a toPandas + parquet rewrite per
     invocation: ~12 rewrites of the full events table per repeat at
-    sf0.1 (r8 roadmap item).  ``tag`` is kept for API compatibility but
-    no longer differentiates storage."""
-    del tag  # shared storage: content depends only on the params below
+    sf0.1 (r8 roadmap item)."""
     out = os.path.join(
         scratch_dir(),
         "ks_stream_shared_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
         f"_{int(late_fraction * 10_000)}_{os.getpid()}",
     )
-    if (out, ) in _REPLAY_BUILT:
-        return out
+    with _REPLAY_LOCK:
+        if out not in _REPLAY_BUILT:
+            _write_chunks(spark, sf_dir, out, n_chunks, late_fraction)
+            _REPLAY_BUILT.add(out)
+    return out
+
+
+def _write_chunks(
+    spark: SparkSession, sf_dir: str, out: str, n_chunks: int, late_fraction: float
+) -> None:
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
@@ -182,8 +265,6 @@ def replay_chunks(
             coerce_timestamps="us",
             allow_truncated_timestamps=True,
         )
-    _REPLAY_BUILT.add((out,))
-    return out
 
 
 # memory-sink temp views registered by run_to_memory, oldest first —
@@ -217,89 +298,30 @@ def release_sinks(spark: SparkSession, keep: int = 4) -> int:
 def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
     shuffle_n: int | None = None,
     no_data_batches: bool = True,
     state_groups: int | None = None,
+    confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
-    memory sink; returns the sink table as a batch DataFrame.
-    ``shuffle_n`` forwards a per-key state-partition override to
-    :func:`stream_shuffle` (see its sweep table).  When ``shuffle_n`` is
-    None, ``state_groups`` (expected state-store volume) picks the
-    default via :func:`state_partitions` — replay-sized state keeps the
-    swept 8, >=threshold state sizes to the machine (r14 100x A/B:
-    3x faster at one partition per core).
-
-    ``no_data_batches=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to this
-    lifecycle: the trailing zero-row micro-batch exists ONLY to advance
-    the watermark and fire state evictions/timeouts after the last data
-    batch — operators whose evictions EMIT (outer joins, session
-    timeouts, append-mode window finalization) need it; operators whose
-    evictions are output-silent (inner stream-stream join: eviction
-    just drops matched state) pay its full state-store-commit floor
-    (~0.7-0.9 s at 8 partitions × 4 join stores, r13 profile: an EMPTY
-    batch costs addBatch≈712 ms) for nothing.  Only pass False when the
-    final sink is provably independent of the trailing batch.
-
-    Concurrency caveat (ADVICE r13): the toggle is a SESSION conf saved
-    and restored around this one lifecycle — Structured Streaming has no
-    per-query spelling for it — so any OTHER streaming query started on
-    the same session during the window silently inherits the disabled
-    trailing batch.  This harness runs one query at a time (bench /
-    verifier / tests are single-threaded per session); callers embedding
-    it elsewhere must keep that single-query-at-a-time assumption or
-    leave ``no_data_batches=True``."""
-    if shuffle_n is None:
-        shuffle_n = state_partitions(state_groups)
+    memory sink; returns the sink table as a batch DataFrame.  The
+    lifecycle options are :func:`drain`'s.  The sink view is tracked for
+    :func:`release_sinks` from the moment the query starts, so a failed
+    lifecycle does not leak it either."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    spark_ = sdf.sparkSession
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    ndb_old = spark_.conf.get(ndb_key, "true")
-    if not no_data_batches:
-        spark_.conf.set(ndb_key, "false")
-    try:
-        return _run_to_memory_inner(
-            sdf, output_mode, timeout_sec, shuffle_n, name, ckpt
-        )
-    finally:
-        spark_.conf.set(ndb_key, ndb_old)
-
-
-def _run_to_memory_inner(
-    sdf: DataFrame,
-    output_mode: str,
-    timeout_sec: int,
-    shuffle_n: int | None,
-    name: str,
-    ckpt: str,
-) -> DataFrame:
-    with stream_shuffle(sdf.sparkSession, shuffle_n):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming query {name} did not finish in {timeout_sec}s — "
-                    "refusing to return a partial memory sink"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
     spark = sdf.sparkSession
-    result = spark.table(name)
     _SINK_TABLES.append(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    drain(
+        spark,
+        sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        timeout_sec=timeout_sec,
+        shuffle_n=shuffle_n,
+        state_groups=state_groups,
+        no_data_batches=no_data_batches,
+        confs=confs,
+    )
+    return spark.table(name)
 
 
 def stream_events(
@@ -307,11 +329,11 @@ def stream_events(
     sf_dir: str,
     n_chunks: int = 6,
     late_fraction: float = 0.0,
-    tag: str = "replay",
 ) -> DataFrame:
     """Convenience: chunked replay of the events table as a streaming DF."""
-    chunk_dir = replay_chunks(spark, sf_dir, n_chunks, late_fraction, tag)
-    return file_event_stream(spark, chunk_dir)
+    return file_event_stream(
+        spark, replay_chunks(spark, sf_dir, n_chunks, late_fraction)
+    )
 
 
 def console_sink(
@@ -328,23 +350,14 @@ def console_sink(
     state sizes to the machine (ADVICE r15: previously only run_to_memory
     had this, so large-state lifecycles through this sink silently kept
     the 3x-slow small-state default)."""
-    name = f"console_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_partitions(state_groups)):
-        q = (
-            sdf.writeStream.format("console")
-            .option("numRows", str(num_rows))
-            .option("truncate", "true")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(timeout_sec)
-        finally:
-            if q.isActive:
-                q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    drain(
+        sdf.sparkSession,
+        sdf.writeStream.format("console")
+        .option("numRows", str(num_rows))
+        .option("truncate", "true"),
+        timeout_sec=timeout_sec,
+        state_groups=state_groups,
+    )
 
 
 def foreach_batch_collect(
@@ -360,24 +373,10 @@ def foreach_batch_collect(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         seen.append((batch_id, batch_df.count()))
 
-    name = f"feb_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_partitions(state_groups)):
-        q = (
-            sdf.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(
-                    f"foreachBatch query {name} did not finish in "
-                    f"{timeout_sec}s — refusing to return a partial batch log"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
+    drain(
+        sdf.sparkSession,
+        sdf.writeStream.foreachBatch(handle),
+        timeout_sec=timeout_sec,
+        state_groups=state_groups,
+    )
     return seen

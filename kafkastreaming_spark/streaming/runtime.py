@@ -19,6 +19,10 @@ custom-stateful surface stays on ``applyInPandasWithState``.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,12 +36,12 @@ from kafkastreaming_spark.registry import query
 from kafkastreaming_spark.sources.factory import file_event_stream
 from kafkastreaming_spark.streaming.harness import (
     console_sink,
+    drain,
     foreach_batch_collect,
     replay_chunks,
     run_to_memory,
     scratch_dir,
     stream_events,
-    stream_shuffle,
 )
 
 
@@ -64,7 +68,7 @@ def source_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the drained replay, so the memory sink equals the plain
     batch filter — no envelope needed, the twin is exact.
     """
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="src")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     parsed = sdf.filter(F.col("event_type").isin("click", "purchase")).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -88,7 +92,7 @@ def sink_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink table every micro-batch, so after the replay drains the
     table IS the full-input aggregate — exactly the batch groupBy the
     DuckDB twin computes (decimal-exact sum via the dsum discipline)."""
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="sinkmem")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     agg = sdf.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", "sum_value"),
@@ -128,10 +132,10 @@ def sink_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 with the oracle's rpc/range moved in lockstep): two
     micro-batches are the minimal multi-batch proof, at half the
     scheduling cost of four."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="sinkcon")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     console_sink(sdf.select("event_id", "ts", "event_type", "value"), num_rows=3)
     batches = foreach_batch_collect(
-        stream_events(spark, sf_dir, n_chunks=2, tag="sinkfeb")
+        stream_events(spark, sf_dir, n_chunks=2)
     )
     return spark.createDataFrame(
         [(int(b), int(n)) for b, n in batches], "batch_id long, n_rows long"
@@ -160,37 +164,21 @@ def sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     The key is hash-checked: the read-back of every batch directory must
     aggregate to exactly the batch-table answer — any dropped or doubled
     batch breaks the oracle."""
-    import os
-    import shutil
-    import uuid
 
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="e1")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     out = os.path.join(scratch_dir(), f"ks_e1_{uuid.uuid4().hex[:12]}")
-    ckpt = out + "_ckpt"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
 
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    try:
+        drain(spark, sdf.writeStream.foreachBatch(write_batch))
+        back = spark.read.parquet(out).groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
         )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError("exactly-once sink did not finish in 120s")
-        finally:
-            if q.isActive:
-                q.stop()
-    back = spark.read.parquet(out).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
-    )
-    result = back.localCheckpoint(eager=True)  # materialize before cleanup
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)  # no orphaned batch dirs per run
-    return result
+        return back.localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        shutil.rmtree(out, ignore_errors=True)  # no orphaned batch dirs per run
 
 
 @query(
@@ -238,7 +226,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark itself is ms-granular).  Windows whose end passed that
     horizon are exactly the append-mode output after AvailableNow
     drains (the trailing no-data batch flushes the final eviction)."""
-    sdf = stream_events(spark, sf_dir, n_chunks=6, late_fraction=0.02, tag="wm")
+    sdf = stream_events(spark, sf_dir, n_chunks=6, late_fraction=0.02)
     agg = (
         sdf.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -284,7 +272,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing and the drained sink equals the plain batch interval join,
     exactly."""
     clicks = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="ssj_c")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -294,7 +282,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="ssj_p")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -313,7 +301,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle_n=4: r13 tmpfs re-sweep optimum (4.27 s vs 4.89 at 8); the
     # trailing no-data batch is skipped because inner-join eviction is
     # output-silent — the sink equals the batch twin with or without it
-    # (run_to_memory docstring; pinned in tests/test_streaming.py).
+    # (drain docstring; pinned in tests/test_streaming.py).
     # 2-chunk replay (r14): per-batch state-store commits across 4 join
     # stores dominate; halving batches halves them (4.1 -> 2.0 s at
     # sf0.1) and the emitted set is chunk-independent (row-count-equal
@@ -396,7 +384,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation the key exists to demonstrate (state written in batch
     1 is read+updated in batch 2); the batch-twin oracle is closed-form
     in n_chunks, so the variant stays hash-checked."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="stateful")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     updates = sdf.groupBy("user_id").applyInPandasWithState(
         _running_user_agg,
         outputStructType=_STATEFUL_OUT,
@@ -472,18 +460,10 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts-ordered split lands mid-hour, so windows still span the chunk
     boundary and update > complete keeps demonstrating the mode
     difference."""
-    import os
-    import shutil
-    import uuid
     from concurrent.futures import ThreadPoolExecutor
 
-    from kafkastreaming_spark.streaming.harness import (
-        _SINK_TABLES,
-        scratch_dir,
-    )
-
     def agg_for(mode: str):
-        sdf = stream_events(spark, sf_dir, n_chunks=2, tag=f"mode_{mode}")
+        sdf = stream_events(spark, sf_dir, n_chunks=2)
         return (
             sdf.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "60 minutes").alias("w"))
@@ -491,65 +471,24 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # shuffle_n=4: swept optimum for this 3-lifecycle JVM-only key
-    # (stream_shuffle docstring, r12 sweep).  Only APPEND needs the
-    # trailing no-data batch (it flushes the final evictions the
-    # mode's output is defined by); update-mode eviction emits
-    # nothing and complete re-emits the identical table (r13).
-    counts = {
-        "append": run_to_memory(
-            agg_for("append"), "append", shuffle_n=4
+    # (drain docstring, r12 sweep).  Only APPEND needs the trailing
+    # no-data batch (it flushes the final evictions the mode's output is
+    # defined by); update-mode eviction emits nothing and complete
+    # re-emits the identical table (r13).
+    def run(mode: str) -> int:
+        return run_to_memory(
+            agg_for(mode), mode, shuffle_n=4, no_data_batches=mode == "append"
         ).count()
-    }
 
+    counts = {"append": run("append")}
     # r17 (guide §2.6 overlap independent jobs): update and complete are
-    # independent lifecycles (separate checkpoints/sinks) that need the
-    # SAME session confs (noDataMicroBatches=false, 4 state partitions),
-    # so both confs are scoped ONCE around a 2-thread pool instead of
-    # per-lifecycle — run_to_memory's per-call save/set/restore is not
-    # thread-safe (interleaved restores can leak a conf), which is why
-    # the pool does its own start/await/stop with the confs pinned
-    # outside it.  Batch counts, commit logs, and per-mode semantics are
-    # unchanged (each query captures its confs at start); A/B 3/3 pairs
-    # faster, median ratio 0.78.
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    shuf_key = "spark.sql.shuffle.partitions"
-    ndb_old = spark.conf.get(ndb_key, "true")
-    shuf_old = spark.conf.get(shuf_key)
-    spark.conf.set(ndb_key, "false")
-    spark.conf.set(shuf_key, "4")
-    try:
-
-        def run(mode: str) -> int:
-            name = f"sink_{uuid.uuid4().hex[:12]}"
-            ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-            q = (
-                agg_for(mode)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        f"{mode}-mode lifecycle did not finish in 120s"
-                    )
-            finally:
-                if q.isActive:
-                    q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
-            _SINK_TABLES.append(name)
-            return spark.table(name).count()
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = {m: pool.submit(run, m) for m in ("update", "complete")}
-            for m, f in futs.items():
-                counts[m] = f.result()
-    finally:
-        spark.conf.set(ndb_key, ndb_old)
-        spark.conf.set(shuf_key, shuf_old)
+    # independent lifecycles (separate checkpoints/sinks), so they run
+    # concurrently; each query captures its confs at start.  A/B 3/3
+    # pairs faster, median ratio 0.78.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = {m: pool.submit(run, m) for m in ("update", "complete")}
+        for m, f in futs.items():
+            counts[m] = f.result()
 
     rows = [(m, counts[m]) for m in ("append", "update", "complete")]
     return spark.createDataFrame(rows, "output_mode string, emitted_rows long")
@@ -610,7 +549,7 @@ def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven.  At 100 TB state is bounded by the watermark horizon per
     side, exactly as the inner variant."""
     clicks = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="sso_c")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -620,7 +559,7 @@ def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="sso_p")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -786,7 +725,7 @@ def stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     of n_chunks (every emitted session is either gap-closed — its
     closer drains in SOME batch — or tail-timed-out by the final
     watermark, which depends only on max(ts))."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="sess_ttl")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     closed = (
         sdf.withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
@@ -836,11 +775,8 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     break the oracle.  At 100 TB this is the nightly-restart /
     crash-recovery path every production stream exercises; checkpoint
     to object storage, same semantics."""
-    import os
-    import shutil
-    import uuid
 
-    src_all = replay_chunks(spark, sf_dir, n_chunks=4, tag="ckptr")
+    src_all = replay_chunks(spark, sf_dir, n_chunks=4)
     run_id = uuid.uuid4().hex[:12]
     base = os.path.join(scratch_dir(), f"ks_ckptr_{run_id}")
     src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
@@ -852,31 +788,20 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out, f"batch={batch_id}")
         )
 
-    def drain() -> None:
-        with stream_shuffle(spark):
-            q = (
-                file_event_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        "restart-harness run did not finish in 120s"
-                    )
-            finally:
-                if q.isActive:
-                    q.stop()
+    def run() -> None:
+        drain(
+            spark,
+            file_event_stream(spark, src).writeStream.foreachBatch(write_batch),
+            checkpoint=ckpt,
+        )
 
     try:
         for f in chunks[:2]:
             shutil.copy(os.path.join(src_all, f), os.path.join(src, f))
-        drain()  # run 1: commits offsets for chunks 0-1, then stops
+        run()  # run 1: commits offsets for chunks 0-1, then stops
         for f in chunks[2:]:
             shutil.copy(os.path.join(src_all, f), os.path.join(src, f))
-        drain()  # run 2: same checkpoint -> processes ONLY new files
+        run()  # run 2: same checkpoint -> processes ONLY new files
         back = spark.read.parquet(out).groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
         )
@@ -914,38 +839,30 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     state values are exact ints (count + cents).  At 100 TB the state
     source reads each store shard in parallel, one task per state
     partition — the same layout the stream itself maintains."""
-    import os
-    import uuid
 
-    from kafkastreaming_spark.streaming.harness import stream_events
-
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="streader")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     agg = sdf.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    name = f"streader_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_streader_{uuid.uuid4().hex[:8]}")
+    try:
+        # the sink is irrelevant here — the key reads the state files
+        drain(
+            spark,
+            agg.writeStream.format("noop").outputMode("complete"),
+            checkpoint=ckpt,
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
-    state = spark.read.format("statestore").load(ckpt)
-    # state value fields carry the INTERNAL aggregation-buffer names
-    # (count/sum), not the query aliases — part of what this key pins
-    return state.select(
-        F.col("key.event_type").alias("event_type"),
-        F.col("value.count").cast("long").alias("n_events"),
-        F.col("value.sum").cast("long").alias("cents"),
-    )
+        state = spark.read.format("statestore").load(ckpt)
+        # state value fields carry the INTERNAL aggregation-buffer names
+        # (count/sum), not the query aliases — part of what this key pins
+        return state.select(
+            F.col("key.event_type").alias("event_type"),
+            F.col("value.count").cast("long").alias("n_events"),
+            F.col("value.sum").cast("long").alias("cents"),
+        ).localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -979,11 +896,8 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the backpressure signal: numInputRows vs trigger interval IS
     the consumer-lag metric Kafka dashboards chart."""
     import time
-    import uuid
 
     from pyspark.sql.streaming import StreamingQueryListener
-
-    from kafkastreaming_spark.streaming.harness import stream_events
 
     got: list[tuple[int, int]] = []
 
@@ -1004,22 +918,7 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _Listener()
     spark.streams.addListener(listener)
     try:
-        sdf = stream_events(spark, sf_dir, n_chunks=4, tag="listener")
-        name = f"listener_{uuid.uuid4().hex[:8]}"
-        import os
-
-        ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-        with stream_shuffle(spark):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
+        run_to_memory(stream_events(spark, sf_dir, n_chunks=4))
         # progress events are ASYNC; poll briefly for the full trail
         for _ in range(40):
             if len({b for b, _ in got}) >= 4:
@@ -1071,13 +970,8 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     by user — at 100 TB the snapshot join prunes to keys present in
     the batch (merge-on-read layouts) and versions compact in the
     background; the apply loop's shape is unchanged."""
-    import os
-    import shutil
-    import uuid
 
-    from kafkastreaming_spark.streaming.harness import stream_events
-
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="upsq")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     base = os.path.join(
         scratch_dir(), f"ks_upsert_{uuid.uuid4().hex[:12]}"
     )
@@ -1104,30 +998,16 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         newest.write.mode("overwrite").parquet(out)
         state["path"] = out
 
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(base, "_ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
+    try:
+        drain(spark, sdf.writeStream.foreachBatch(apply_batch))
+        snap = spark.read.parquet(state["path"]).select(
+            "user_id",
+            F.col("event_type").alias("last_type"),
+            F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
         )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError("upsert apply loop did not finish in 120s")
-        finally:
-            if q.isActive:
-                q.stop()
-    snap = spark.read.parquet(state["path"]).select(
-        "user_id",
-        F.col("event_type").alias("last_type"),
-        F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
-    )
-    result = snap.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return snap.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1153,62 +1033,37 @@ def stream_rocksdb_state(
 
     The full events replay runs the per-type count+cents aggregation
     through micro-batches with the provider flipped to RocksDB for
-    EXACTLY this query (session conf saved/restored in finally — other
-    streaming keys keep their default provider), and the final complete
+    EXACTLY this query (a lifecycle conf: the shared session never holds
+    it past the query's start — other streaming keys keep their default
+    provider), and the final complete
     state is hash-checked against the batch oracle: state encode/decode
     through RocksDB must change NOTHING.
 
     Exact ints only (count + cent sums) — the state round-trip is
     byte-faithful by construction."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
     # r17: changelog checkpointing is RocksDB's incremental-checkpoint
     # mode (commit uploads the batch's changelog instead of snapshotting
     # SST files every commit) — the setting this key's docstring already
     # names as the at-scale story; off by default in Spark 4.  State
     # contents are identical (replayed on recovery); A/B 3/3 pairs
     # faster locally (medians 2.55 -> 2.31 s).
-    chlog_key = (
+    rocks = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
         "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled"
+        "changelogCheckpointing.enabled": "true",
+    }
+    sdf = stream_events(spark, sf_dir, n_chunks=n_chunks)
+    agg = sdf.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("long")
+        .alias("cents"),
     )
-    from kafkastreaming_spark.streaming.harness import (
-        run_to_memory,
-        stream_events,
-    )
-
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    try:
-        chlog_prev = spark.conf.get(chlog_key)
-    except Exception:
-        chlog_prev = None
-    spark.conf.set(conf_key, rocks)
-    spark.conf.set(chlog_key, "true")
-    try:
-        sdf = stream_events(spark, sf_dir, n_chunks=n_chunks, tag="rocks")
-        agg = sdf.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long")
-            .alias("cents"),
-        )
-        out = run_to_memory(agg, output_mode="complete")
-        return out.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-        if chlog_prev is None:
-            spark.conf.unset(chlog_key)
-        else:
-            spark.conf.set(chlog_key, chlog_prev)
+    out = run_to_memory(agg, output_mode="complete", confs=rocks)
+    return out.localCheckpoint(eager=True)
 
 
 _DDWW_BUILT: set = set()
@@ -1222,10 +1077,8 @@ def _ddww_chunks(
     chunk (state long expired by arrival) and from the LAST chunk
     (state still live) is delivered a second time, byte-identical,
     after all originals."""
-    import os
-    import shutil
 
-    base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks, tag="ddww")
+    base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks)
     out = os.path.join(
         scratch_dir(),
         f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}"
@@ -1311,6 +1164,6 @@ def stream_dedup_watermark(
     # dropDuplicatesWithinWatermark emits first-seen rows AT ARRIVAL
     # (both suppression paths act on the incoming row, batch 5 here);
     # the trailing no-data batch only evicts state, emitting nothing —
-    # skip it (run_to_memory docstring, r13).
+    # skip it (drain docstring, r13).
     out = run_to_memory(sdf, "append", no_data_batches=False)
     return out.select("event_id", "user_id", "ts", "event_type", "value")

@@ -160,7 +160,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     import shutil
     import tempfile
 
-    shared = replay_chunks(spark, sf_dir, n_chunks=3, tag="deduptest")
+    shared = replay_chunks(spark, sf_dir, n_chunks=3)
     chunk_dir = os.path.join(tempfile.gettempdir(), "ks_stream_deduptest_priv")
     shutil.rmtree(chunk_dir, ignore_errors=True)
     shutil.copytree(shared, chunk_dir)
@@ -455,13 +455,13 @@ def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatc
     from kafkastreaming_spark.streaming import harness
 
     captured: list[int | None] = []
-    real = harness.stream_shuffle
+    real = harness._start_scoped
 
-    def spy(session, n=None):
-        captured.append(n)
-        return real(session, n)
+    def spy(session, writer, confs):
+        captured.append(int(confs["spark.sql.shuffle.partitions"]))
+        return real(session, writer, confs)
 
-    monkeypatch.setattr(harness, "stream_shuffle", spy)
+    monkeypatch.setattr(harness, "_start_scoped", spy)
 
     sdf = harness.stream_events(spark, sf_dir, n_chunks=2).select(
         "event_id", "ts", "event_type", "value"
@@ -477,3 +477,73 @@ def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatc
     # default path (no state_groups) keeps the swept replay default
     harness.console_sink(sdf, num_rows=1)
     assert captured[-1] == harness._STREAM_SHUFFLE
+
+
+_LIFECYCLE_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def test_drain_timeout_releases_query_checkpoint_and_confs(spark, sf_dir):
+    """A lifecycle that cannot finish in its timeout raises TimeoutError
+    instead of returning a partial sink, and still leaves nothing
+    behind: no active query, no checkpoint dir, session confs as they
+    were before the call."""
+    import glob
+
+    from kafkastreaming_spark.streaming import harness
+
+    confs = {k: spark.conf.get(k, None) for k in _LIFECYCLE_CONFS}
+    ckpts = set(glob.glob(os.path.join(harness.scratch_dir(), "ks_ckpt_*")))
+    agg = harness.stream_events(spark, sf_dir, n_chunks=4).groupBy("event_type").count()
+    with pytest.raises(TimeoutError):
+        # 1 ms: four stateful micro-batches cannot drain that fast
+        harness.run_to_memory(
+            agg, "complete", timeout_sec=0.001, shuffle_n=3, no_data_batches=False
+        )
+    assert not spark.streams.active
+    assert set(glob.glob(os.path.join(harness.scratch_dir(), "ks_ckpt_*"))) == ckpts
+    assert {k: spark.conf.get(k, None) for k in _LIFECYCLE_CONFS} == confs
+
+
+def test_concurrent_lifecycles_with_conflicting_confs(spark, sf_dir):
+    """run_to_memory lifecycles with conflicting confs, two of each, in
+    a thread pool each produce exactly their single-threaded result and
+    leave the session confs as they were: drain scopes the confs to each
+    query's start(), where Spark fixes them."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from kafkastreaming_spark.streaming import harness
+
+    lifecycles = {
+        "3_no_trailing": dict(shuffle_n=3, no_data_batches=False),
+        "5_trailing": dict(shuffle_n=5, no_data_batches=True),
+    }
+
+    def run(name: str) -> list:
+        agg = (
+            harness.stream_events(spark, sf_dir, n_chunks=4)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "30 minutes").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
+        )
+        return sorted(harness.run_to_memory(agg, "append", **lifecycles[name]).collect())
+
+    confs = {k: spark.conf.get(k, None) for k in _LIFECYCLE_CONFS}
+    solo = {name: run(name) for name in lifecycles}
+    # the confs really conflict: only the trailing no-data batch emits
+    # the windows its final watermark advance closes
+    assert len(solo["3_no_trailing"]) < len(solo["5_trailing"])
+    names = list(lifecycles) * 2
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the threads' py4j calls
+    try:
+        with ThreadPoolExecutor(max_workers=len(names)) as pool:
+            together = list(pool.map(run, names))
+    finally:
+        sys.setswitchinterval(switch)
+    assert together == [solo[name] for name in names]
+    assert {k: spark.conf.get(k, None) for k in _LIFECYCLE_CONFS} == confs

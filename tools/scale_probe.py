@@ -785,10 +785,7 @@ def run_streaming_state(rebuild: bool = False) -> None:
     from kafkastreaming_spark.session import get_session
     from kafkastreaming_spark.sources.factory import file_event_stream
     from kafkastreaming_spark.streaming import runtime as rt
-    from kafkastreaming_spark.streaming.harness import (
-        scratch_dir,
-        stream_shuffle,
-    )
+    from kafkastreaming_spark.streaming.harness import drain, scratch_dir
 
     spark = get_session("scale_probe_stream")
     spark.sparkContext.setLogLevel("ERROR")
@@ -871,22 +868,9 @@ def run_streaming_state(rebuild: bool = False) -> None:
         .withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    import uuid
-
-    ckpt = os.path.join(scratch_dir(), f"ks_probe_ddww_ck_{uuid.uuid4().hex[:8]}")
     t0 = time.perf_counter()
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(count_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise TimeoutError("ddww 100x did not drain in 600s")
+    drain(spark, sdf.writeStream.foreachBatch(count_batch), timeout_sec=600)
     hund_sec = time.perf_counter() - t0
-    shutil.rmtree(ckpt, ignore_errors=True)
     report["stream_dedup_watermark"] = {
         "driving_table": "events",
         "base_rows": base_rows,
@@ -938,28 +922,20 @@ def run_streaming_state(rebuild: bool = False) -> None:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    ck = os.path.join(scratch_dir(), f"ks_probe_sttl_ck_{uuid.uuid4().hex[:8]}")
     # State partitions SCALED to the 100x state volume (one per core),
     # not the base-optimal 8: at 10M events / ~150k state groups the
     # Python state-processing compute dominates and 32 workers run the
     # batch 3x faster (1270 s at 8 partitions vs 447 s at 32, r14).
     # r15: the rule is now the harness DEFAULT — state_partitions()
     # derives it from state volume; the probe exercises that same path.
-    from kafkastreaming_spark.streaming.harness import state_partitions
-
     t0 = time.perf_counter()
-    with stream_shuffle(spark, state_partitions(10_000_000)):
-        q = (
-            sdf100.writeStream.foreachBatch(fold_batch)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(1800):
-            q.stop()
-            raise TimeoutError("session_ttl 100x did not drain in 1800s")
+    drain(
+        spark,
+        sdf100.writeStream.foreachBatch(fold_batch),
+        timeout_sec=1800,
+        state_groups=10_000_000,
+    )
     hund_sec = time.perf_counter() - t0
-    shutil.rmtree(ck, ignore_errors=True)
 
     import duckdb
 
@@ -2029,17 +2005,15 @@ def run_provider_ab() -> None:
     print("building 100x fixture ...", flush=True)
     build_hundred()
 
-    import uuid
-
     from pyspark.sql import functions as F
 
     from kafkastreaming_spark.io import load_table
     from kafkastreaming_spark.session import get_session
     from kafkastreaming_spark.sources.factory import file_event_stream
     from kafkastreaming_spark.streaming.harness import (
+        drain,
         scratch_dir,
         state_partitions,
-        stream_shuffle,
     )
 
     spark = get_session("scale_probe_provider")
@@ -2072,59 +2046,43 @@ def run_provider_ab() -> None:
 
     report: dict[str, dict] = {}
     for name, cls in providers.items():
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(conf_key, cls)
-        try:
-            runs = []
-            final_fold = None
-            for _ in range(2):
-                last: dict = {}
+        runs = []
+        final_fold = None
+        for _ in range(2):
+            last: dict = {}
 
-                def fold_batch(df, bid, _last=last):
-                    _last["fold"] = _fold(df)
-                    _last["bid"] = bid
+            def fold_batch(df, bid, _last=last):
+                _last["fold"] = _fold(df)
+                _last["bid"] = bid
 
-                sdf = (
-                    file_event_stream(spark, big_dir)
-                    .groupBy("user_id")
-                    .agg(
-                        F.count(F.lit(1)).cast("long").alias("n_events"),
-                        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                        .cast("long")
-                        .alias("cents"),
-                    )
+            sdf = (
+                file_event_stream(spark, big_dir)
+                .groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).cast("long").alias("n_events"),
+                    F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                    .cast("long")
+                    .alias("cents"),
                 )
-                ck = os.path.join(
-                    scratch_dir(), f"ks_probe_prov_ck_{uuid.uuid4().hex[:8]}"
-                )
-                t0 = time.perf_counter()
-                with stream_shuffle(spark, shuffle_n):
-                    q = (
-                        sdf.writeStream.foreachBatch(fold_batch)
-                        .outputMode("complete")
-                        .option("checkpointLocation", ck)
-                        .trigger(availableNow=True)
-                        .start()
-                    )
-                    if not q.awaitTermination(900):
-                        q.stop()
-                        raise TimeoutError(f"{name} leg did not drain in 900s")
-                runs.append(round(time.perf_counter() - t0, 3))
-                shutil.rmtree(ck, ignore_errors=True)
-                final_fold = last["fold"]
-            report[name] = {
-                "provider_class": cls.rsplit(".", 1)[-1],
-                "runs_sec": runs,
-                "best_sec": min(runs),
-                "state_rows": n_state,
-                "state_partitions": shuffle_n,
-                "final_state_equals_batch": final_fold == batch_fold,
-            }
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+            )
+            t0 = time.perf_counter()
+            drain(
+                spark,
+                sdf.writeStream.foreachBatch(fold_batch).outputMode("complete"),
+                timeout_sec=900,
+                shuffle_n=shuffle_n,
+                confs={conf_key: cls},
+            )
+            runs.append(round(time.perf_counter() - t0, 3))
+            final_fold = last["fold"]
+        report[name] = {
+            "provider_class": cls.rsplit(".", 1)[-1],
+            "runs_sec": runs,
+            "best_sec": min(runs),
+            "state_rows": n_state,
+            "state_partitions": shuffle_n,
+            "final_state_equals_batch": final_fold == batch_fold,
+        }
         print(f"{name}: {report[name]}", flush=True)
         assert report[name]["final_state_equals_batch"], name
 
