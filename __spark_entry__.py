@@ -22,30 +22,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kafkastreaming_spark import all as _all  # noqa: E402
 
 
-# Opt-in breadth smoke (VERDICT r9 item 8): one key per subsystem, so a
-# driver-side environment drift (jar/conf change) surfaces before a full
-# correctness sample burns on it.
-_SMOKE_KEYS = [
-    "scan_parquet",
-    "join_broadcast",
-    "win_rank",
-    "stream_tumbling",
-    "llm_exact_dedup",
-]
-
-
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query (SURVEY.md §7.4): Q1-shape pricing summary, sf0.001.
-
-    With ``SPARK_GRAFT_ENTRY_SMOKE=1`` it first executes a 5-key smoke
-    spanning scan/join/window/stream/llm (each must return ≥1 row) —
-    opt-in so the default entry schema stays stable for the driver."""
+    """Flagship query (SURVEY.md §7.4): Q1-shape pricing summary, sf0.001."""
     sf = "/root/testdata/sf0.001"
-    if os.environ.get("SPARK_GRAFT_ENTRY_SMOKE") == "1":
-        for key in _SMOKE_KEYS:
-            n = _all.QUERIES[key](spark, sf).count()
-            if n < 1:
-                raise AssertionError(f"entry smoke: {key} returned {n} rows")
     return _all.QUERIES["agg_group"](spark, sf)
 
 

@@ -1,7 +1,8 @@
 """Import every operator module so their @query decorators register.
 
 ``__spark_entry__.py``, tests, the verifier, and bench.py all import this
-module and then read ``registry.QUERIES`` / ``registry.ORACLES``.
+module and then read ``registry.QUERIES`` / ``registry.ORACLES``, which
+keep registration order; every consumer that needs a stable order sorts.
 """
 
 from __future__ import annotations
@@ -35,34 +36,6 @@ from kafkastreaming_spark.operators import (  # noqa: F401
     setops,
     sorts,
 )
-from kafkastreaming_spark._rotation import ROTATION
 from kafkastreaming_spark.registry import ORACLES, QUERIES  # noqa: F401
 from kafkastreaming_spark.sources import python_ds  # noqa: F401
 from kafkastreaming_spark.streaming import batch_twins, runtime  # noqa: F401
-
-
-def _apply_rotation() -> None:
-    """Order ``QUERIES``/``ORACLES`` by the committed evidence rotation.
-
-    The round driver samples the HEAD of ``queries()`` insertion order, so
-    registry order IS the sampler; ``_rotation.ROTATION`` (generated once
-    per round by ``tools/update_rotation.py`` from the CORRECTNESS trail)
-    puts the least driver-evidenced keys first.  Pure data application —
-    no file I/O, no JSON parsing, no environment dependence at import time
-    (ADVICE r13: the previous spelling globbed repo-root artifacts on
-    every import, so order differed per checkout).  Keys registered but
-    absent from the committed rotation sort FIRST: a brand-new key has
-    zero driver evidence by definition, and this keeps "add a key" safe
-    even before the rotation is regenerated.  Correctness is
-    order-independent — every key keeps its oracle."""
-    pos = {k: i for i, k in enumerate(ROTATION)}
-    order = sorted(QUERIES, key=lambda k: (pos.get(k, -1), k))
-    q_snap = dict(QUERIES)
-    QUERIES.clear()
-    QUERIES.update({k: q_snap[k] for k in order})
-    o_snap = dict(ORACLES)
-    ORACLES.clear()
-    ORACLES.update({k: o_snap[k] for k in order if k in o_snap})
-
-
-_apply_rotation()

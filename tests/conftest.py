@@ -22,3 +22,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def oracle_con():
+    """One DuckDB connection with the fixture views over ``SF_SMOKE``,
+    shared by every oracle comparison in the session."""
+    from tools.verify_local import oracle_connection
+
+    con = oracle_connection(SF_SMOKE)
+    yield con
+    con.close()

@@ -1,11 +1,13 @@
-"""Smoke tests: every registered query runs at sf0.001 and returns rows
-with a stable schema; registry invariants hold (SURVEY.md §5.2 layer 2)."""
+"""Every registered query matches its DuckDB oracle at sf0.001; registry
+invariants hold (SURVEY.md §5.2 layer 2)."""
 
 from __future__ import annotations
 
 import pytest
 
 from kafkastreaming_spark.all import ORACLES, QUERIES
+from kafkastreaming_spark.streaming.harness import release_sinks
+from tools.verify_local import compare
 
 
 def test_oracle_keys_subset_of_queries():
@@ -20,28 +22,32 @@ def test_entry_contract(spark):
     assert df.count() > 0
 
 
-def test_entry_smoke_knob(spark, monkeypatch):
-    """SPARK_GRAFT_ENTRY_SMOKE=1 runs the 5-key breadth smoke
-    (scan/join/window/stream/llm) before the flagship query (VERDICT r9
-    item 8); the default path must not change schema."""
-    import __spark_entry__ as e
-
-    base_schema = e.entry(spark).schema
-    monkeypatch.setenv("SPARK_GRAFT_ENTRY_SMOKE", "1")
-    df = e.entry(spark)
-    assert df.schema == base_schema
-    assert df.count() > 0
-    assert all(k in QUERIES for k in e._SMOKE_KEYS)
+def _assert_matches_oracle(spark, sf_dir, con, key):
+    release_sinks(spark, keep=2)  # drop old memory-sink rows, as verify_local
+    spdf = QUERIES[key](spark, sf_dir).toPandas()
+    # column names must be unique for the order-insensitive comparison
+    assert spdf.columns.is_unique, f"duplicate column names {list(spdf.columns)}"
+    ok, why = compare(spdf, con.execute(ORACLES[key]).df())
+    assert ok, f"{key}: {why}"
 
 
 @pytest.mark.parametrize("key", sorted(QUERIES))
-def test_query_runs(spark, sf_dir, key):
-    df = QUERIES[key](spark, sf_dir)
-    rows = df.count()
-    assert rows >= 0
-    assert len(df.columns) > 0
-    # column names must be stable + lowercase-ish identifiers for the hash
-    assert len(set(df.columns)) == len(df.columns), "duplicate column names"
+def test_query_runs(spark, sf_dir, oracle_con, key):
+    """The key's result equals its DuckDB oracle at sf0.001: row count,
+    column names and order-insensitive exact values, compared the way
+    tools/verify_local.py compares them."""
+    _assert_matches_oracle(spark, sf_dir, oracle_con, key)
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["join_asof", "join_interval", "join_skew_salted", "mm_decode_features"],
+)
+def test_stale_driver_fail_keys_match_oracle(spark, sf_dir, oracle_con, key):
+    """Four keys that once failed on a load_table signature issue, pinned
+    by name against their oracles so a regression in them is reported
+    under this test as well as under test_query_runs."""
+    _assert_matches_oracle(spark, sf_dir, oracle_con, key)
 
 
 def test_survey_section2_matches_registry_exactly():
@@ -90,49 +96,12 @@ def test_survey_section2_matches_registry_exactly():
     )
 
 
-@pytest.mark.parametrize(
-    "key",
-    ["join_asof", "join_interval", "join_skew_salted", "mm_decode_features"],
-)
-def test_stale_driver_fail_keys_match_oracle(spark, key):
-    """The four keys whose LATEST driver row is a stale r1/r4 FAIL (a
-    long-fixed load_table signature issue) pinned against their DuckDB
-    oracles inside pytest, so any regression trips the suite before the
-    driver ever re-samples them (VERDICT r9 item 5).  Exact-equality
-    compare, same canonicalization as tools/verify_local.py."""
-    import os
-    import sys
-
-    import duckdb
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from verify_local import compare
-
-    from kafkastreaming_spark.all import ORACLES
-    from kafkastreaming_spark.io import TABLES
-
-    sf = "/root/testdata/sf0.001"
-    spdf = QUERIES[key](spark, sf).toPandas()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-    odf = con.execute(ORACLES[key]).df()
-    ok, why = compare(spdf, odf)
-    assert ok, why
-
-
 def test_scale_probe_accounts_for_every_key():
     """SCALE_PROBE accounting (r11, VERDICT r10 item 5): every registered
     key must be TIMED, the regime-sectioned cluster key, or carry an
     explicit exemption reason — a new operator landing without a scale
     decision fails here before the judge sees a gap."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import scale_probe as sp
+    from tools import scale_probe as sp
 
     from kafkastreaming_spark.all import QUERIES as REG
 
@@ -195,76 +164,3 @@ def test_release_local_checkpoint_frees_persistent_rdd(spark):
     # non-checkpointed frames are a safe no-op (callers fall back)
     plain = spark.range(10)
     assert release_local_checkpoint(plain) is False
-
-
-def test_registry_order_leads_with_least_driver_evidence():
-    """The driver samples the HEAD of queries() insertion order (its r12
-    50-key CORRECTNESS sample equals the first 50 registry keys exactly),
-    so the registry is ordered by the COMMITTED rotation
-    (kafkastreaming_spark/_rotation.py, generated once per round by
-    tools/update_rotation.py from the CORRECTNESS trail — ADVICE r13
-    moved the ordering out of the import path; import is now pure data).
-    Pin three contracts: (a) the live registry order equals the committed
-    rotation, (b) the rotation reproduces exactly from the GENERATED_FROM
-    artifacts it declares (so the pin stays green when a LATER round's
-    CORRECTNESS file lands — regenerating is the next round's first job,
-    not a test failure at judge time), and (c) the never-sampled head is
-    family-diverse (round-robin, not import order)."""
-    import json
-    import os
-    import re
-    import sys
-
-    from kafkastreaming_spark._rotation import GENERATED_FROM, ROTATION
-    from kafkastreaming_spark.all import QUERIES
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # Load via importlib (ADVICE r14): mutating sys.path would leave
-    # repo/tools shadowing same-named modules for every later test import.
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "_update_rotation_for_pin", os.path.join(repo, "tools", "update_rotation.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    evidence_order = mod.evidence_order
-
-    # (a) live order == committed rotation (no unregistered strays)
-    assert list(QUERIES) == [k for k in ROTATION if k in QUERIES]
-    assert set(ROTATION) == set(QUERIES), (
-        "rotation out of sync with registry — run tools/update_rotation.py"
-    )
-
-    # (b) rotation reproduces from exactly the declared artifacts
-    newest = {}
-    for name in GENERATED_FROM:
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", name).group(1))
-        with open(os.path.join(repo, name)) as fh:
-            data = json.load(fh)
-        for key, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            ok = bool(
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            if key not in newest or rnd > newest[key][0]:
-                newest[key] = (rnd, ok)
-    assert ROTATION == evidence_order(list(QUERIES), newest)
-
-    # (c) the never-sampled block is family-diverse: its first 40 keys
-    # span at least 15 distinct family prefixes
-    stale = sorted(k for k in ROTATION if k in newest and not newest[k][1])
-    never_block = [k for k in ROTATION if k not in newest]
-    assert ROTATION[: len(stale)] == stale
-    if len(never_block) >= 40:
-        fams = {k.split("_", 1)[0] for k in never_block[:40]}
-        # The round-robin can only show as many families as the pool
-        # still CONTAINS — as driver sampling drains the never-sampled
-        # pool (198/304 sampled after r14) the remaining keys span fewer
-        # prefixes, so cap the expectation at what is achievable.
-        all_fams = {k.split("_", 1)[0] for k in never_block}
-        assert len(fams) >= min(15, len(all_fams)), sorted(fams)

@@ -45,10 +45,18 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from kafkastreaming_spark.io import TABLES  # noqa: E402
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table under ``sf_dir``,
+    the names every ``ORACLES`` query reads."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -137,11 +145,7 @@ def main() -> int:
 
     spark = get_session("verify_local", shuffle_partitions=shuffle_override or 8)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')"
-        )
+    con = oracle_connection(args.sf)
 
     keys = args.keys or sorted(QUERIES)
     n_pass = n_fail = n_rows_only = 0
