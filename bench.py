@@ -191,6 +191,7 @@ def main() -> None:
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
     from kafkastreaming_spark.all import ORACLES, QUERIES
+    from kafkastreaming_spark.io import session_cores
     from kafkastreaming_spark.session import get_session
     from kafkastreaming_spark.streaming.harness import (
         release_sinks as _release_sinks,
@@ -371,7 +372,7 @@ def main() -> None:
         # end-of-round 8-core scaling run also lands a BENCH_DETAIL file,
         # and without this field the r8-idle regression gate can't tell
         # a deliberately-downsized run from a plan regression.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": session_cores(),
         "partial": partial,
         "errors": errors,
         "repeat_times": per_repeat,
@@ -407,19 +408,18 @@ def main() -> None:
             with open(prev_path) as f:
                 prev = json.load(f)
             pc, cc = prev.get("canary") or {}, detail["canary"]
+
+            def peak(canary: dict, probe: str) -> float:
+                return max(
+                    (canary.get("pre") or {}).get(probe, 0),
+                    (canary.get("post") or {}).get(probe, 0),
+                )
+
+            # a probe missing on either side is left out, not fatal
             canary_ratio = {
-                probe: round(
-                    max(cc["pre"][probe], cc["post"][probe])
-                    / max(pp, 1e-9),
-                    3,
-                )
+                probe: round(cur / pp, 3)
                 for probe in ("jvm_sec", "shuffle_sec", "job_overhead_sec")
-                if (
-                    pp := max(
-                        (pc.get("pre") or {}).get(probe, 0),
-                        (pc.get("post") or {}).get(probe, 0),
-                    )
-                )
+                if (cur := peak(cc, probe)) and (pp := peak(pc, probe))
             }
             detail["vs_prev"] = {
                 "prev_file": os.path.basename(prev_path),

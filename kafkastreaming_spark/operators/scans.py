@@ -141,6 +141,9 @@ def _bucketed_join(
     # are independent (different tables), so submit them concurrently —
     # each write's bucket layout is unchanged, the merge join stays
     # exchange-free.  A/B 4/4 pairs faster, median ratio 0.74.
+    # The two concurrent saveAsTable calls assume the session's default
+    # in-memory catalog.  Against a Hive/Derby metastore, table creation
+    # must be serialized (Derby's embedded metastore is single-writer).
     from concurrent.futures import ThreadPoolExecutor
 
     def _write(args) -> None:

@@ -25,7 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.io import load_table, session_cores
 from kafkastreaming_spark.sources.factory import file_event_stream
 
 
@@ -49,51 +49,90 @@ def scratch_dir() -> str:
         return cand
     return tempfile.gettempdir()
 
-# State/shuffle partition count for replay streaming queries.  Streaming
-# state stores cost O(partitions) per micro-batch per stateful operator
-# (provider init, snapshot/delta files, commit) regardless of data
-# volume, and AQE is disabled in streaming so nothing coalesces the
-# session's batch-sized 32 back down.  You size state partitions for
-# state VOLUME: the replay fixtures carry ≤100k rows of state, where 8
-# partitions keep every core busy inside one wave while cutting the
-# fixed per-batch state-store overhead 4× (r11, VERDICT r10 item 2 —
-# stream_stream_join/_outer were 13.1 s each with 32-partition state).
-# At 100 TB state volume crosses _STATE_VOLUME_THRESHOLD and
-# state_partitions() sizes to the machine instead.
-_STREAM_SHUFFLE = 8
+# State/shuffle partition counts for replay streaming queries.  A
+# streaming state store costs O(partitions) per micro-batch per stateful
+# operator (provider load, delta file, commit) however little state it
+# holds, and AQE is disabled in streaming, so nothing coalesces the
+# session's batch-sized shuffle partitions back down.  Replay fixtures
+# carry <=100k rows of state, so that fixed cost is what the count
+# decides:
+#
+# * JVM state stores (aggregations, dedup, stream-stream joins) or no
+#   state: 2.  The r11/r12 sweep (4/8/16/32) never went below 4; an 8 -> 2
+#   sweep (4-vCPU VM, SPARK_GRAFT_CPUS=4, medians of 3 warm calls):
+#
+#     key                          sf0.01: 8 -> 2    sf0.1: 8 -> 2
+#     sink_memory                  2.09 -> 1.32 s    2.40 -> 1.44 s
+#     stream_dedup_watermark       2.22 -> 1.41      2.78 -> 2.12
+#     stream_rocksdb_state         2.24 -> 1.49      -
+#     stream_state_reader          2.21 -> 1.35      -
+#     stream_watermark             3.64 -> 2.36      -
+#     stream_stream_outer          2.90 -> 2.42 (4)  4.62 -> 3.00
+#     stream_stream_join           2.66 -> 2.16 (4)  -
+#     stream_late_update           2.86 -> 2.37 (4)  -
+#
+#   ((4): from the old per-key override of 4.)  The other ~30 stream_,
+#   sink_ and source_ keys were flat within noise.
+# * Python per-group state (applyInPandasWithState, a
+#   FlatMapGroupsInPandasWithState node in the plan): 8.  Each partition
+#   is a Python worker doing per-group work, so 2 starves the cores —
+#   at sf0.1 stream_stateful went 5.52 -> 6.91 s and stream_session_ttl
+#   10.49 -> 11.69 s.
+#
+# At state volumes at or above _STATE_VOLUME_THRESHOLD, state_partitions()
+# sizes to the machine instead.
+_JVM_STATE_SHUFFLE = 2
+_PYTHON_STATE_SHUFFLE = 8
 
 # State-volume threshold above which the harness stops trusting the
-# low-overhead replay default and sizes state partitions to the machine
+# low-overhead replay counts and sizes state partitions to the machine
 # (VERDICT r14 item 3, promoting the r14 100x-probe finding from a
 # docstring to a tested default).  The probe's A/B at 10M events through
 # stream_session_ttl measured 447 s at 32 partitions vs 1270-1348 s at 8
 # in fresh processes: once per-group state compute dominates the fixed
 # per-partition state-store overhead, fewer-partitions-than-cores is a
-# 3x loss.  Replay fixtures (<=100k state rows) stay on _STREAM_SHUFFLE.
+# 3x loss.
 _STATE_VOLUME_THRESHOLD = 1_000_000
 
 
-def state_partitions(state_groups: int | None, cores: int | None = None) -> int:
-    """State-partition count for a stateful streaming lifecycle, derived
-    from expected STATE VOLUME (``state_groups`` = rows/groups the state
+def state_partitions(
+    state_groups: int | None,
+    cores: int | None = None,
+    python_state: bool = False,
+) -> int:
+    """State-partition count for a streaming lifecycle, derived from
+    expected STATE VOLUME (``state_groups`` = rows/groups the state
     store will track; pass the best estimate available, e.g. distinct
-    keys x windows).
+    keys x windows) and from where the state lives (``python_state``:
+    per-group state processed in Python workers).
 
     Below :data:`_STATE_VOLUME_THRESHOLD` the fixed per-partition
-    per-micro-batch state-store cost (provider init, snapshot/delta
-    files, commit) dominates, so the swept harness default
-    :data:`_STREAM_SHUFFLE` (8) wins.  At or above it, per-group state
+    per-micro-batch state-store cost dominates, so JVM state gets
+    :data:`_JVM_STATE_SHUFFLE` (2) and Python per-group state, whose
+    partitions are Python workers that must keep the cores busy,
+    :data:`_PYTHON_STATE_SHUFFLE` (8).  At or above it, per-group state
     compute dominates and the rule flips to >= one partition per core —
     the r14 100x probe measured the flip at 3x (447 s @32 vs
     1270-1348 s @8 for 10M events / ~150k Python-stateful groups).
     ``None`` state volume means "unknown, assume replay-sized"."""
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-            os.cpu_count() or _STREAM_SHUFFLE
-        )
     if state_groups is not None and state_groups >= _STATE_VOLUME_THRESHOLD:
-        return max(cores, _STREAM_SHUFFLE)
-    return _STREAM_SHUFFLE
+        if cores is None:
+            cores = session_cores()
+        return max(cores, _PYTHON_STATE_SHUFFLE)
+    return _PYTHON_STATE_SHUFFLE if python_state else _JVM_STATE_SHUFFLE
+
+
+def _python_state(writer: DataStreamWriter) -> bool:
+    """Whether ``writer``'s analyzed plan keeps per-group state in Python
+    workers (a FlatMapGroupsInPandasWithState node)."""
+    todo = [writer._df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            return True
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return False
 
 
 # Serializes the conf-scoping step of every lifecycle (see drain): the
@@ -146,12 +185,11 @@ def drain(
 
     * ``shuffle_n`` is the state-partition count; when None,
       ``state_groups`` (expected state-store volume) picks it via
-      :func:`state_partitions`.  Per-key overrides (r12 sweep, VERDICT
-      r11 item 7 — 4/8/16/32 probed per key at sf0.1): the pure-JVM
-      3-lifecycle ``stream_late_update`` wins at 4 (fixed per-partition
-      state-store cost × 3 lifecycles dominates: 5.3 s vs 5.6 s at 8,
-      12.0 s at 32), as do the stream-stream joins (r13 re-sweep);
-      everything else keeps the swept 8.
+      :func:`state_partitions`, told whether the writer's analyzed
+      plan holds Python per-group state.  The rule follows the plan,
+      not the key: no key overrides it (the r12/r13 per-key 4s for
+      ``stream_late_update`` and the stream-stream joins lost to the
+      JVM-state 2 — see the table above :data:`_JVM_STATE_SHUFFLE`).
     * ``no_data_batches=False`` skips the trailing zero-row micro-batch.
       That batch exists ONLY to advance the watermark and fire state
       evictions/timeouts after the last data batch — operators whose
@@ -172,7 +210,8 @@ def drain(
         checkpoint = os.path.join(scratch_dir(), f"ks_ckpt_{uuid.uuid4().hex[:12]}")
     scoped = {
         "spark.sql.shuffle.partitions": str(
-            shuffle_n or state_partitions(state_groups)
+            shuffle_n
+            or state_partitions(state_groups, python_state=_python_state(writer))
         ),
         "spark.sql.streaming.noDataMicroBatches.enabled": str(
             no_data_batches
@@ -346,7 +385,7 @@ def console_sink(
 
     ``state_groups`` (expected state-store volume) sizes state partitions
     via :func:`state_partitions`, exactly like :func:`run_to_memory` —
-    replay-sized state keeps the swept 8-partition default, >=threshold
+    replay-sized state keeps the plan-based replay count, >=threshold
     state sizes to the machine (ADVICE r15: previously only run_to_memory
     had this, so large-state lifecycles through this sink silently kept
     the 3x-slow small-state default)."""

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
 import uuid
 
 import numpy as np
@@ -298,8 +299,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") > F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 5 MINUTES")),
     ).select("click_id", "purchase_id", "c_user", "click_ts", "purchase_ts", "purchase_value")
-    # shuffle_n=4: r13 tmpfs re-sweep optimum (4.27 s vs 4.89 at 8); the
-    # trailing no-data batch is skipped because inner-join eviction is
+    # The trailing no-data batch is skipped because inner-join eviction is
     # output-silent — the sink equals the batch twin with or without it
     # (drain docstring; pinned in tests/test_streaming.py).
     # 2-chunk replay (r14): per-batch state-store commits across 4 join
@@ -307,7 +307,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1) and the emitted set is chunk-independent (row-count-equal
     # swept at 1/2/4 chunks), while 2 data chunks keep cross-batch join
     # state live (batch-1 clicks match batch-2 purchases).
-    return run_to_memory(joined, "append", shuffle_n=4, no_data_batches=False)
+    return run_to_memory(joined, "append", no_data_batches=False)
 
 
 _STATE_SCHEMA = T.StructType(
@@ -470,14 +470,12 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
 
-    # shuffle_n=4: swept optimum for this 3-lifecycle JVM-only key
-    # (drain docstring, r12 sweep).  Only APPEND needs the trailing
-    # no-data batch (it flushes the final evictions the mode's output is
-    # defined by); update-mode eviction emits nothing and complete
-    # re-emits the identical table (r13).
+    # Only APPEND needs the trailing no-data batch (it flushes the final
+    # evictions the mode's output is defined by); update-mode eviction
+    # emits nothing and complete re-emits the identical table (r13).
     def run(mode: str) -> int:
         return run_to_memory(
-            agg_for(mode), mode, shuffle_n=4, no_data_batches=mode == "append"
+            agg_for(mode), mode, no_data_batches=mode == "append"
         ).count()
 
     counts = {"append": run("append")}
@@ -580,14 +578,14 @@ def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "click_id", "c_user", "click_ts", "purchase_id", "purchase_ts"
     )
-    # shuffle_n=4 (r13 tmpfs re-sweep); the no-data batch STAYS — outer
-    # join eviction EMITS the null-padded unmatched clicks, so the
-    # trailing watermark advance is part of the result, not overhead.
+    # The no-data batch STAYS — outer join eviction EMITS the null-padded
+    # unmatched clicks, so the trailing watermark advance is part of the
+    # result, not overhead.
     # 2-chunk replay (r14, same argument as the inner key): the
     # null-pad set depends only on the FINAL min-of-sides watermark,
     # so the emitted set is chunk-independent (row-count-equal swept
     # at 1/2/4 chunks; 4.0 -> 2.7 s at sf0.1).
-    return run_to_memory(joined, "append", shuffle_n=4)
+    return run_to_memory(joined, "append")
 
 
 _SESS_GAP_US = 30 * 60 * 1_000_000
@@ -1066,7 +1064,10 @@ def stream_rocksdb_state(
     return out.localCheckpoint(eager=True)
 
 
+# dup-replay dirs already built by THIS process; built under _DDWW_LOCK
+# so concurrent lifecycles never race the check against the rmtree
 _DDWW_BUILT: set = set()
+_DDWW_LOCK = threading.Lock()
 
 
 def _ddww_chunks(
@@ -1078,14 +1079,22 @@ def _ddww_chunks(
     (state still live) is delivered a second time, byte-identical,
     after all originals."""
 
+    # outside the lock: replay_chunks takes the (non-re-entrant)
+    # _REPLAY_LOCK itself
     base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks)
     out = os.path.join(
         scratch_dir(),
         f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}"
         f"_{n_chunks}_{os.getpid()}",
     )
-    if out in _DDWW_BUILT:
-        return out
+    with _DDWW_LOCK:
+        if out not in _DDWW_BUILT:
+            _write_ddww(base_dir, out)
+            _DDWW_BUILT.add(out)
+    return out
+
+
+def _write_ddww(base_dir: str, out: str) -> None:
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     chunks = sorted(
@@ -1115,8 +1124,6 @@ def _ddww_chunks(
         allow_truncated_timestamps=True,
     )
     os.utime(dup_path, (base_mtime + len(chunks), base_mtime + len(chunks)))
-    _DDWW_BUILT.add(out)
-    return out
 
 
 @query(

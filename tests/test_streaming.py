@@ -420,31 +420,34 @@ def test_dedup_watermark_duplicates_really_delivered(spark, sf_dir):
 
 
 def test_state_partitions_sized_for_state_volume():
-    """VERDICT r14 item 3 pin: the harness derives state partitions from
-    expected state VOLUME.  The r14 100x probe A/B'd 10M events through
-    stream_session_ttl in fresh processes: 447 s at 32 partitions vs
-    1270-1348 s at 8 — once per-group state compute dominates the fixed
-    per-partition state-store overhead, fewer-partitions-than-cores is a
-    3x loss.  Below the threshold the swept replay default (8) must hold
-    (stream_stream_join/_outer halved when 32 -> 8 at sf0.1, r11)."""
-    import os
-
+    """The harness derives state partitions from expected state VOLUME
+    and from where the state lives.  Below the threshold the fixed
+    per-partition state-store commit dominates: replay-sized JVM state
+    gets 2 (sink_memory 2.40 -> 1.44 s at sf0.1 going 8 -> 2), Python
+    per-group state keeps 8 (stream_stateful 5.52 -> 6.91 s at 2).  At or
+    above it, per-group compute dominates: the r14 100x probe A/B'd 10M
+    events through stream_session_ttl in fresh processes, 447 s at 32
+    partitions vs 1270-1348 s at 8, so fewer-partitions-than-cores is a
+    3x loss whatever the state kind."""
+    from kafkastreaming_spark.io import session_cores
     from kafkastreaming_spark.streaming.harness import (
         _STATE_VOLUME_THRESHOLD,
-        _STREAM_SHUFFLE,
         state_partitions,
     )
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    # at/above threshold: >= one partition per core, never below the default
-    assert state_partitions(_STATE_VOLUME_THRESHOLD) >= cores
-    assert state_partitions(10_000_000) == max(cores, _STREAM_SHUFFLE)
-    assert state_partitions(10_000_000, cores=4) == max(4, _STREAM_SHUFFLE)
-    # below threshold / unknown: the swept replay default
-    assert state_partitions(100_000) == _STREAM_SHUFFLE
-    assert state_partitions(None) == _STREAM_SHUFFLE
-    # explicit cores override wins above threshold
-    assert state_partitions(10_000_000, cores=64) == 64
+    cores = session_cores()
+    # below threshold / unknown: replay-sized JVM state 2, Python state 8
+    for groups in (100_000, None):
+        assert state_partitions(groups) == 2
+        assert state_partitions(groups, python_state=True) == 8
+    # at/above threshold: >= one partition per core, never below 8
+    for python_state in (False, True):
+        kw = dict(python_state=python_state)
+        assert state_partitions(_STATE_VOLUME_THRESHOLD, **kw) >= cores
+        assert state_partitions(10_000_000, **kw) == max(cores, 8)
+        assert state_partitions(10_000_000, cores=4, **kw) == 8
+        # explicit cores override wins above threshold
+        assert state_partitions(10_000_000, cores=64, **kw) == 64
 
 
 def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatch):
@@ -470,13 +473,35 @@ def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatc
     harness.console_sink(sdf, num_rows=1, state_groups=big)
     batches = harness.foreach_batch_collect(sdf, state_groups=big)
     assert captured == [harness.state_partitions(big)] * 2
-    assert captured[0] >= harness._STREAM_SHUFFLE
+    assert captured[0] >= 8
     assert sum(n for _, n in batches) == sdf.sparkSession.read.parquet(
         harness.replay_chunks(spark, sf_dir, 2)
     ).count()
-    # default path (no state_groups) keeps the swept replay default
+    # default path (no state_groups, no Python state): the JVM count
     harness.console_sink(sdf, num_rows=1)
-    assert captured[-1] == harness._STREAM_SHUFFLE
+    assert captured[-1] == harness._JVM_STATE_SHUFFLE == 2
+
+
+def test_state_partitions_follow_python_state_in_plan(spark, sf_dir, monkeypatch):
+    """drain picks the state-partition count from the writer's plan, not
+    from the key: sink_memory (JVM aggregation state) starts with 2,
+    stream_stateful (applyInPandasWithState) with 8."""
+    from kafkastreaming_spark.streaming import harness
+
+    captured: list[int] = []
+    real = harness._start_scoped
+
+    def spy(session, writer, confs):
+        captured.append(int(confs["spark.sql.shuffle.partitions"]))
+        return real(session, writer, confs)
+
+    monkeypatch.setattr(harness, "_start_scoped", spy)
+    started = {}
+    for key in ("sink_memory", "stream_stateful"):
+        captured.clear()
+        QUERIES[key](spark, sf_dir).count()
+        started[key] = list(captured)
+    assert started == {"sink_memory": [2], "stream_stateful": [8]}
 
 
 _LIFECYCLE_CONFS = (

@@ -2000,8 +2000,9 @@ def run_provider_ab() -> None:
     probe and the spill sweep cover the memory-pressure side.)
 
     State partitions come from the promoted harness default:
-    state_partitions(150_000) -> 8 (below the 10^6 threshold), the same
-    sizing either provider would get in production at this volume."""
+    state_partitions(150_000) -> 2 (JVM aggregation state below the
+    10^6 threshold), the same sizing either provider would get in
+    production at this volume."""
     print("building 100x fixture ...", flush=True)
     build_hundred()
 
