@@ -6,9 +6,14 @@ All queries load inputs through :func:`load_table` so that:
   (SURVEY.md §7.5): whatever physical encoding the fixture uses (int64
   nanos, TIMESTAMP_NTZ micros, or plain TIMESTAMP), downstream operators
   always see a session-UTC TIMESTAMP ``ts`` column.
-* column pruning / predicate pushdown stay available — we return the raw
-  ``spark.read.parquet`` DataFrame untouched for every other table, so
-  Catalyst pushes filters and projections into the scan.
+* column pruning / predicate pushdown stay available — every other table
+  is returned as a plain parquet scan with the reused schema (below), so
+  Catalyst pushes filters and projections into it; pushdown and pruning
+  are unchanged.
+* table metadata launches no Spark job: a single local fixture file's
+  inferred schema is reused on later loads, and :func:`table_rows` reads
+  whole-table row counts from the parquet footer.  Each load still builds
+  a fresh relation.
 
 At 100 TB the same function signature holds; only the path changes to a
 partitioned directory layout (e.g. ``events/date=.../``), which activates
@@ -18,12 +23,13 @@ partition pruning on top of row-group pushdown.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kafkastreaming_spark.session import prepare
+from kafkastreaming_spark.session import prepare, session_cores  # noqa: F401
 
 TABLES = [
     "region",
@@ -49,6 +55,83 @@ EVENTS_ORACLE_CTE = (
 )
 
 
+# ---------------------------------------------------------------------------
+# Zero-job table metadata.  Inferring a parquet schema is a Spark job (about
+# 0.1-0.2 s at small scale) and a whole-table count() is two more, yet both
+# answers sit in a footer that does not change between calls.  So both are
+# cached per single local file, keyed on the file's identity (inode, size,
+# mtime) so a file rewritten at the same path is read afresh.  A directory,
+# remote path or missing file keeps the plain inference path: at 100 TB that
+# is one job per load, negligible next to the scan.  Only metadata is
+# cached, never a DataFrame — two loads sharing one relation would share
+# attribute ids (ambiguous self-joins) and freeze the file listing.  Plain
+# dicts: a race between threads only infers a schema or reads a footer twice.
+# ---------------------------------------------------------------------------
+
+# SQL confs that change the schema Spark infers from the same parquet bytes.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+_FOOTER_CACHE: dict[tuple, tuple[int, int]] = {}
+
+
+def _table_path(sf_dir: str, name: str) -> str:
+    return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
+def _local_file(uri: str) -> tuple[str, tuple[int, int, int]] | None:
+    """``(path, (st_ino, st_size, st_mtime_ns))`` of one local regular
+    file; None for a directory, a remote URI or a missing path."""
+    if uri.startswith("file://"):
+        uri = uri[7:]
+    elif "://" in uri:
+        return None
+    try:
+        st = os.stat(uri)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return uri, (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _footer(uri: str) -> tuple[int, int] | None:
+    """``(row groups, rows)`` from one local parquet file's footer, read
+    once per file identity; None if not a local file or unreadable."""
+    f = _local_file(uri)
+    if f is None:
+        return None
+    if f not in _FOOTER_CACHE:
+        try:
+            import pyarrow.parquet as pq
+
+            md = pq.read_metadata(f[0])
+        except Exception:  # noqa: BLE001 — unreadable footer: treat as unknown
+            return None
+        _FOOTER_CACHE[f] = (md.num_row_groups, md.num_rows)
+    return _FOOTER_CACHE[f]
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema of an earlier read of
+    the same single local file (same bytes, same inference confs) given
+    up front so no inference job runs."""
+    f = _local_file(path)
+    if f is None:
+        return spark.read.parquet(path)
+    key = (f, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table; events gets a schema-adaptive ts shim.
 
@@ -59,8 +142,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Either way downstream operators see a session-UTC TIMESTAMP column.
     """
     prepare(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, _table_path(sf_dir, name))
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, T.LongType):
@@ -72,6 +154,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # pure type relabel (no wall-clock shift).
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """Row count of a whole fixture table: the parquet footer's row count
+    for a single local file (no Spark job), else ``load_table(...).count()``."""
+    footer = _footer(_table_path(sf_dir, name))
+    if footer is not None:
+        return footer[1]
+    return load_table(spark, sf_dir, name).count()
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -98,33 +189,11 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # assume the layout parallelizes rather than pay a blind shuffle).
 # ---------------------------------------------------------------------------
 
-_ROW_GROUP_CACHE: dict[str, int] = {}
-
-
-def session_cores() -> int:
-    """Executor-core count for scale-adaptive sizing: the driver contract's
-    ``SPARK_GRAFT_CPUS`` if set, else the host's CPU count (r17 — factored
-    out of spread()/source_binaryfile, which each duplicated it)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-        os.cpu_count() or 8
-    )
-
 
 def _parquet_row_groups(uri: str) -> int | None:
     """Row-group count of one local parquet file; None if unreadable."""
-    if uri in _ROW_GROUP_CACHE:
-        return _ROW_GROUP_CACHE[uri]
-    path = uri[7:] if uri.startswith("file://") else uri
-    if not os.path.isfile(path):
-        return None
-    try:
-        import pyarrow.parquet as pq
-
-        n = pq.ParquetFile(path).metadata.num_row_groups
-    except Exception:  # noqa: BLE001 — unreadable footer: treat as unknown
-        return None
-    _ROW_GROUP_CACHE[uri] = n
-    return n
+    footer = _footer(uri)
+    return None if footer is None else footer[0]
 
 
 def scan_width(df: DataFrame) -> int | None:

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.io import load_table, table_rows
 from kafkastreaming_spark.registry import query
 
 _K = 16
@@ -62,7 +62,7 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        k = ivf_k(emb.count())
+        k = ivf_k(table_rows(spark, sf_dir, "embeddings"))
         cent, _, _ = kmeans_fit(spark, emb, k=k)
         rounded = np.round(cent, 6)
         df = spark.createDataFrame(
@@ -375,8 +375,7 @@ def llm_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed init, sorted partial folds); the artifact itself
     (``pq_train_artifact``) stays memoized and pinned by the ADC recall
     test in tests/test_pipeline.py."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n_vectors = emb.count()
+    n_vectors = table_rows(spark, sf_dir, "embeddings")
     art = pq_train_artifact(spark, sf_dir).collect()
     per_sub: dict[int, list] = {}
     for r in art:

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafkastreaming_spark.hashing import H2_DUCK, H2_SPARK, H_DUCK, H_SPARK
-from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.io import load_table, table_rows
 from kafkastreaming_spark.memo import memo, release_local_checkpoint
 from kafkastreaming_spark.registry import query
 
@@ -578,7 +578,7 @@ def llm_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg run once.  (A localCheckpoint pin was A/B'd and LOST to exchange
     # reuse: 0.67 vs 0.52 s — the write+read of the pin costs more.)
     docs = load_table(spark, sf_dir, "documents")
-    n_docs = docs.count()  # scalar dimension; exact and tiny
+    n_docs = table_rows(spark, sf_dir, "documents")  # footer metadata — no scan
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

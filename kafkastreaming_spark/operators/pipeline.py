@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from kafkastreaming_spark import hashing as hashing_mod
 from kafkastreaming_spark.hashing import H_DUCK as _H_DUCK
 from kafkastreaming_spark.hashing import H_SPARK as _H_SPARK
-from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.io import load_table, table_rows
 from kafkastreaming_spark.memo import memo
 from kafkastreaming_spark.operators.llm import _DOT, _SQ_NORM
 from kafkastreaming_spark.registry import query
@@ -843,7 +843,7 @@ def llm_cosine_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     took 34 s at sf0.1 — per-pair lambda folds are interpreted, while
     one matmul per batch/block is ~free."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()  # parquet footer metadata — no scan
+    n = table_rows(spark, sf_dir, "embeddings")  # parquet footer metadata — no scan
     if n <= _NN_BROADCAST_MAX_N:
         return _cosine_nn_broadcast(spark, emb, sf_dir)
     return _cosine_nn_blocked(spark, emb, n_blocks=_nn_block_count(n))
@@ -1039,7 +1039,7 @@ def llm_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Filtering on the ROUNDED score mirrors the oracle exactly, so the
     threshold boundary is cross-engine stable."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
+    n = table_rows(spark, sf_dir, "embeddings")
     if n <= _NN_BROADCAST_MAX_N:
         return _cosine_pairs_broadcast(spark, emb, sf_dir)
     return _cosine_pairs_blocked(spark, emb, n_blocks=_nn_block_count(n))
@@ -1439,8 +1439,7 @@ def llm_semdedup_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops ⊆ the exact global pair scan — a same-bucket witness is a
     global witness).  Recall vs the exact scan stays pinned in
     tests/test_pipeline.py via ``semdedup_trained_manifest``."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n_vectors = emb.count()
+    n_vectors = table_rows(spark, sf_dir, "embeddings")
     from kafkastreaming_spark.operators.kmeans import trained_centroids
 
     k_buckets = trained_centroids(spark, sf_dir).count()

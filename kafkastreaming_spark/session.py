@@ -46,12 +46,20 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
 }
 
+
+def session_cores() -> int:
+    """Executor-core count for scale-adaptive sizing: ``SPARK_GRAFT_CPUS``
+    if set, else the host's CPU count.  The local master, the shuffle
+    partitions and the ``cpus`` stamp all use it."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
+        os.cpu_count() or 8
+    )
+
+
 # Lazily-resolved runtime confs (env-dependent; same values get_session uses).
 def _runtime_confs() -> dict[str, str]:
     confs = dict(_RUNTIME_CONFS)
-    confs["spark.sql.shuffle.partitions"] = os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
+    confs["spark.sql.shuffle.partitions"] = str(session_cores())
     confs["spark.sql.files.maxPartitionBytes"] = os.environ.get(
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"
     )
@@ -87,14 +95,14 @@ def get_session(
 ) -> SparkSession:
     """Build a session tuned for this engine.
 
-    Local default is ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
+    Local default is ``local[session_cores()]``; on a real cluster the
     caller passes its own master/deploy config and these settings still
     apply (AQE re-plans shuffles at runtime, which is the main lever that
     carries a plan from local[32] to 1000 executors).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = session_cores()
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions if shuffle_partitions is not None else int(cpus)
+    shuffle = shuffle_partitions if shuffle_partitions is not None else cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -278,8 +278,8 @@ def _write_chunks(
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
-    rows_per_chunk = ev.count() // n_chunks + 1
     pdf = ev.toPandas()
+    rows_per_chunk = len(pdf) // n_chunks + 1
     late = None
     if late_fraction > 0:
         # displace rows from the 2nd chunk to arrive last → late by most of

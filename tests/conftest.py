@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -33,3 +34,24 @@ def oracle_con():
     con = oracle_connection(SF_SMOKE)
     yield con
     con.close()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` returns ``(fn(), n)``, where ``n`` is the number
+    of Spark jobs ``fn`` launched on the calling thread, counted under a
+    fresh job group through the status tracker."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus; let it catch up
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

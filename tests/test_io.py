@@ -10,7 +10,7 @@ import os
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 
-from kafkastreaming_spark.io import load_table, spread
+from kafkastreaming_spark.io import TABLES, load_table, spread, table_rows
 
 _MICROS = 1_705_312_800_000_000  # 2024-01-15 10:00:00 UTC
 
@@ -160,6 +160,55 @@ def test_write_codec_default_is_zstd(spark, tmp_path):
     assert files
     md = pq.ParquetFile(os.path.join(out, files[0])).metadata
     assert md.row_group(0).column(0).compression.lower() == "zstd"
+
+
+# ---------------------------------------------------------------------------
+# Zero-job table metadata: a single local fixture file's inferred schema is
+# reused and whole-table row counts come from the parquet footer.  Each load
+# must still be a fresh relation, and a rewritten file must be read afresh.
+
+
+def test_load_table_reuses_schema_without_a_job(spark, sf_dir, spark_jobs):
+    for name in ("orders", "events", "embeddings"):
+        first = load_table(spark, sf_dir, name)
+        second, jobs = spark_jobs(lambda: load_table(spark, sf_dir, name))
+        assert jobs == 0, name
+        assert second.schema == first.schema, name
+    inferred = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+    assert load_table(spark, sf_dir, "orders").schema == inferred
+    # two loads are two relations: a self-join resolves and keeps every key
+    a, b = load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "orders")
+    assert a.join(b, a.o_orderkey == b.o_orderkey).count() == a.count()
+
+
+def test_load_table_rereads_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int32())}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema["id"].dataType == T.IntegerType()
+    pq.write_table(pa.table({"id": pa.array(["a", "b", "c"], pa.string())}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema["id"].dataType == T.StringType()
+    assert sorted(r["id"] for r in df.collect()) == ["a", "b", "c"]
+    assert table_rows(spark, str(tmp_path), "t") == 3
+
+
+def test_table_rows_reads_footer_and_matches_count(spark, sf_dir, spark_jobs):
+    for name in TABLES:
+        n, jobs = spark_jobs(lambda: table_rows(spark, sf_dir, name))
+        assert jobs == 0, name
+        assert n == load_table(spark, sf_dir, name).count(), name
+
+
+def test_table_rows_falls_back_to_count_for_directory(spark, tmp_path, spark_jobs):
+    d = str(tmp_path / "t.parquet")
+    spark.range(37).repartition(3).write.mode("overwrite").parquet(d)
+    n, jobs = spark_jobs(lambda: table_rows(spark, str(tmp_path), "t"))
+    assert n == 37
+    assert jobs > 0  # no footer shortcut: a real count() ran
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,16 @@ from kafkastreaming_spark.all import QUERIES
 from kafkastreaming_spark.io import load_table
 
 
+def test_llm_pipeline_rebuild_launches_no_job(spark, sf_dir, spark_jobs):
+    """Box-independent build pin: once a key's memos are warm, building it
+    again runs no Spark job — no schema-inferring read, no count() of a
+    whole table.  An eager action added at build time fails here."""
+    for key in ("llm_cosine_nn", "llm_semdedup", "llm_exact_dedup"):
+        QUERIES[key](spark, sf_dir)
+        _, jobs = spark_jobs(lambda: QUERIES[key](spark, sf_dir))
+        assert jobs == 0, key
+
+
 def test_mm_decode_features_real_wav_roundtrip(spark, sf_dir):
     """The decode path must be a REAL container parse: every payload is a
     valid PCM WAV (44-byte canonical header + int16 frames) and the
