@@ -16,10 +16,8 @@ iterating.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import statistics
 import sys
 import time
@@ -55,51 +53,21 @@ HARNESS_KEYS = {
 }
 
 
-def current_round() -> int:
-    """Resolve the in-progress round number for artifact stamping.
-
-    SPARK_GRAFT_ROUND wins (the round recipe exports it — the only
-    unambiguous source at a round boundary).  The fallback combines
-    both trails, because each alone fails in one direction: the
-    driver's BENCH_r{N}.json appears only after round N ends (so
-    driver_max+1 = the round being built), but our own
-    BENCH_DETAIL_r{N}.json appears DURING round N (so a second ad-hoc
-    bench inside the same round must NOT bump to N+1 — the r7 bug:
-    inferring own_max+1 misfiled SCALE_PROBE as r08 mid-round-7).
-    Two states are unambiguous: own trail behind the driver's → fresh
-    round (driver+1); own trail ahead → mid-round re-run (own).  Equal
-    nonzero trails are GENUINELY ambiguous (ADVICE r7): a fresh round
-    start (driver just dropped BENCH_rN, our BENCH_DETAIL_rN is last
-    round's → true round N+1) is observationally identical to the
-    driver dropping BENCH_rN early while round-N artifacts are still
-    being produced (true round N).  In that state we warn on stderr
-    and assume the far-more-common fresh-round reading — set
-    SPARK_GRAFT_ROUND to override.
-    """
-    env = os.environ.get("SPARK_GRAFT_ROUND")
-    if env and env.isdigit():
-        return int(env)
-
-    def trail(pattern: str) -> int:
-        return max(
-            (
-                int(m.group(1))
-                for p in glob.glob(os.path.join(REPO, pattern))
-                if (m := re.search(r"_r(\d+)\.json$", p))
-            ),
-            default=0,
-        )
-
-    driver, own = trail("BENCH_r*.json"), trail("BENCH_DETAIL_r*.json")
-    if driver and driver == own:
-        print(
-            f"WARNING: round inference is ambiguous (BENCH_r{driver} and "
-            f"BENCH_DETAIL_r{own} coexist): assuming fresh round "
-            f"{driver + 1}; export SPARK_GRAFT_ROUND if this is a "
-            f"mid-round re-run after an early driver drop.",
-            file=sys.stderr,
-        )
-    return max(driver + 1, own)
+def time_call(fn, repeats: int) -> tuple[float, list[float]]:
+    """The one timing loop: call ``fn`` once as a warm run (it absorbs
+    codegen compiles and lazy one-time inits), then ``repeats`` timed
+    calls.  Returns ``(warm_sec, samples)``; the warm call's duration is
+    never among the samples.  An exception from ``fn``
+    propagates, so the caller decides how to record it."""
+    t0 = time.perf_counter()
+    fn()
+    warm = time.perf_counter() - t0
+    samples = []
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        fn()
+        samples.append(time.perf_counter() - t0)
+    return warm, samples
 
 
 def _canary(spark) -> dict:
@@ -113,19 +81,11 @@ def _canary(spark) -> dict:
     no I/O, no shuffle.  shuffle: 2M-row exchange + count.  python: a
     fixed numpy matmul on the driver — the Arrow/pandas-kernel proxy.
     """
-    import statistics as _st
-    import time as _t
-
     import numpy as _np
 
-    def med(fn, n=3):
-        fn()  # discard the cold sample (codegen compile / first alloc)
-        s = []
-        for _ in range(n):
-            t0 = _t.perf_counter()
-            fn()
-            s.append(_t.perf_counter() - t0)
-        return round(_st.median(s), 3)
+    def med(fn):
+        # the warm call discards the cold sample (codegen compile / first alloc)
+        return round(statistics.median(time_call(fn, 3)[1]), 3)
 
     jvm = med(
         lambda: spark.range(200_000_000)
@@ -166,20 +126,21 @@ def _canary(spark) -> dict:
     }
 
 
+LINE_BYTES = 1800
+
+
 def contract_line(base: dict, per_query: dict[str, float]) -> str:
     """Serialize the one-line stdout contract, packing as many slowest
-    keys as fit ``SPARK_GRAFT_BENCH_LINE_BYTES`` (default 1800 — safely
-    under the driver's 2000-char stdout-tail capture that truncated the
-    90-entry r1 line).  Slowest-first, so the old slowest-5 set is always
-    a subset: entries are only ever added, never dropped, relative to the
-    r16 line."""
-    budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BYTES", "1800"))
+    keys as fit ``LINE_BYTES`` (safely under the driver's 2000-char
+    stdout-tail capture that truncated the 90-entry r1 line).
+    Slowest-first, so the old slowest-5 set is always a subset: entries
+    are only ever added, never dropped, relative to the r16 line."""
     qmap: dict[str, float] = {}
     line = json.dumps({**base, "queries": qmap}, separators=(",", ":"))
     for k in sorted(per_query, key=per_query.get, reverse=True):
         qmap[k] = per_query[k]
         cand = json.dumps({**base, "queries": qmap}, separators=(",", ":"))
-        if len(cand) > budget:
+        if len(cand) > LINE_BYTES:
             del qmap[k]
             break
         line = cand
@@ -274,44 +235,51 @@ def main() -> None:
     # steady state, so spread >2 now MEANS environment noise
     # (VERDICT r12 item 3).  Medians move little (median-of-3 already
     # discarded one cold sample); the protocol note is in BASELINE.md.
-    per_query: dict[str, float] = {}
-    per_repeat: dict[str, list[float]] = {}
-    per_warm: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for key in sorted(set(ORACLES) - HARNESS_KEYS):
-        samples = []
-        try:
-            w0 = time.perf_counter()
-            QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # untimed warm run (see block comment)
-            # The warm run is excluded from the median but its cost must
-            # stay auditable (ADVICE r13): warm_sec per key lets a
-            # cross-round diff account for init cost the steady-state
-            # medians no longer carry.
-            per_warm[key] = round(time.perf_counter() - w0, 3)
-            for _ in range(repeats):
-                t0 = time.perf_counter()
+    def time_keys(keys) -> dict:
+        timed: dict[str, dict] = {
+            "queries": {},
+            "repeat_times": {},
+            "warm_times": {},
+            "spread": {},
+            "errors": {},
+        }
+        for key in keys:
+
+            def run() -> None:
                 # noop sink: full materialization, no driver-side collection
                 QUERIES[key](spark, sf_dir).write.format("noop").mode(
                     "overwrite"
                 ).save()
-                samples.append(time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001 — one broken key must not
-            # take down the whole suite report (round 4: a fixture schema
-            # change crashed the run and the driver recorded nothing).
-            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
-            continue
-        per_query[key] = round(statistics.median(samples), 3)
-        per_repeat[key] = [round(s, 3) for s in samples]
-        _release_sinks(spark, keep=2)  # driver memory hygiene (harness.py)
-        # max/min within one key's repeats: background-load outliers on the
-        # same box show up as spread here, so a cross-round per-key diff can
-        # mechanically separate "noisy environment" from "real regression"
-        # (round 6: driver saw set_except at 4.03 s vs 0.29 s committed with
-        # no plan change — nothing in the artifact proved it was noise).
-        spread[key] = round(max(samples) / max(min(samples), 1e-9), 2)
+
+            try:
+                warm, samples = time_call(run, repeats)
+            except Exception as exc:  # noqa: BLE001 — one broken key must
+                # not take down the whole suite report (round 4: a fixture
+                # schema change crashed the run and the driver recorded
+                # nothing).
+                timed["errors"][key] = f"{type(exc).__name__}: {exc}"[:300]
+                continue
+            timed["queries"][key] = round(statistics.median(samples), 3)
+            timed["repeat_times"][key] = [round(s, 3) for s in samples]
+            # The warm run is excluded from the median but its cost must
+            # stay auditable (ADVICE r13): warm_sec per key lets a
+            # cross-round diff account for init cost the steady-state
+            # medians no longer carry.
+            timed["warm_times"][key] = round(warm, 3)
+            _release_sinks(spark, keep=2)  # driver memory hygiene (harness.py)
+            # max/min within one key's repeats: background-load outliers on
+            # the same box show up as spread here, so a cross-round per-key
+            # diff can mechanically separate "noisy environment" from "real
+            # regression" (round 6: driver saw set_except at 4.03 s vs
+            # 0.29 s committed with no plan change — nothing in the
+            # artifact proved it was noise).
+            timed["spread"][key] = round(max(samples) / max(min(samples), 1e-9), 2)
+        return timed
+
+    headline = time_keys(sorted(set(ORACLES) - HARNESS_KEYS))
+    per_query = headline["queries"]
+    errors = headline["errors"]
+    spread = headline["spread"]
 
     # Harness-cost keys (sketch envelopes, trained indexes, streaming
     # replays — all hash-oracled since r10) are timed the SAME way but
@@ -319,32 +287,7 @@ def main() -> None:
     # performance trail) — excluded from suite_wall_sec so the headline
     # stays a pure engine-throughput number (BASELINE.md protocol;
     # per-round headline key counts recorded there).
-    ro_query: dict[str, float] = {}
-    ro_repeat: dict[str, list[float]] = {}
-    ro_warm: dict[str, float] = {}
-    ro_spread: dict[str, float] = {}
-    ro_errors: dict[str, str] = {}
-    for key in sorted((set(QUERIES) - set(ORACLES)) | HARNESS_KEYS):
-        samples = []
-        try:
-            w0 = time.perf_counter()
-            QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # untimed warm run (headline-loop block comment)
-            ro_warm[key] = round(time.perf_counter() - w0, 3)
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001
-            ro_errors[key] = f"{type(exc).__name__}: {exc}"[:300]
-            continue
-        ro_query[key] = round(statistics.median(samples), 3)
-        ro_repeat[key] = [round(s, 3) for s in samples]
-        _release_sinks(spark, keep=2)
-        ro_spread[key] = round(max(samples) / max(min(samples), 1e-9), 2)
+    harness = time_keys(sorted((set(QUERIES) - set(ORACLES)) | HARNESS_KEYS))
 
     canary_post = _canary(spark)
 
@@ -359,8 +302,6 @@ def main() -> None:
 
     # Per-query detail goes to a file: the driver captures only a tail of
     # stdout, and a 90-entry JSON line overflows it (BENCH_r01 "parsed": null).
-    # Also persist a round-stamped copy so per-key regressions across rounds
-    # are mechanically diffable (BENCH_DETAIL.json alone is overwritten).
     detail = {
         "metric": "suite_wall_sec",
         "value": None if partial else total,
@@ -375,8 +316,8 @@ def main() -> None:
         "cpus": session_cores(),
         "partial": partial,
         "errors": errors,
-        "repeat_times": per_repeat,
-        "warm_times": per_warm,
+        "repeat_times": headline["repeat_times"],
+        "warm_times": headline["warm_times"],
         "spread": spread,
         "noisy": sorted(k for k, s in spread.items() if s > 2.0),
         "canary": {"pre": canary_pre, "post": canary_post},
@@ -387,25 +328,25 @@ def main() -> None:
             # "harness-cost keys outside the headline protocol set".
             # Tools diffing old artifacts read both names.
             "note": "hash-oracled harness keys (r10); excluded from headline",
-            "queries": ro_query,
-            "total_sec": round(sum(ro_query.values()), 3),
-            "repeat_times": ro_repeat,
-            "warm_times": ro_warm,
-            "spread": ro_spread,
-            "errors": ro_errors,
+            "queries": harness["queries"],
+            "total_sec": round(sum(harness["queries"].values()), 3),
+            "repeat_times": harness["repeat_times"],
+            "warm_times": harness["warm_times"],
+            "spread": harness["spread"],
+            "errors": harness["errors"],
         },
     }
-    # Canary-normalized diff vs the PREVIOUS round's detail (VERDICT r16
-    # item 10): pure reporting, zero protocol change.  Cross-round per-key
-    # comparisons keep getting poisoned by host drift (r16: a 2.3x canary
-    # swing made 237 untouched keys look regressed), so the detail file
-    # now records the canary ratio next to every per-key ratio — a reader
-    # can mechanically separate "box got slower" from "plan regressed".
-    rnd = current_round()
-    prev_path = os.path.join(REPO, f"BENCH_DETAIL_r{rnd - 1:02d}.json")
-    if os.path.exists(prev_path):
+    # Canary-normalized diff vs the PREVIOUS run's detail (VERDICT r16
+    # item 10), read before this run overwrites it: pure reporting, zero
+    # protocol change.  Cross-run per-key comparisons keep getting
+    # poisoned by host drift (r16: a 2.3x canary swing made 237 untouched
+    # keys look regressed), so the detail file records the canary ratio
+    # next to every per-key ratio — a reader can mechanically separate
+    # "box got slower" from "plan regressed".
+    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
+    if os.path.exists(detail_path):
         try:
-            with open(prev_path) as f:
+            with open(detail_path) as f:
                 prev = json.load(f)
             pc, cc = prev.get("canary") or {}, detail["canary"]
 
@@ -422,7 +363,7 @@ def main() -> None:
                 if (cur := peak(cc, probe)) and (pp := peak(pc, probe))
             }
             detail["vs_prev"] = {
-                "prev_file": os.path.basename(prev_path),
+                "prev_file": os.path.basename(detail_path),
                 "prev_cpus": prev.get("cpus"),
                 "canary_ratio": canary_ratio,
                 "per_key_ratio": {
@@ -434,9 +375,8 @@ def main() -> None:
         except Exception:  # noqa: BLE001 — reporting must never kill a run
             pass
 
-    for name in ("BENCH_DETAIL.json", f"BENCH_DETAIL_r{rnd:02d}.json"):
-        with open(os.path.join(REPO, name), "w") as f:
-            json.dump(detail, f, indent=1)
+    with open(detail_path, "w") as f:
+        json.dump(detail, f, indent=1)
 
     # The machine-readable contract line: the LAST stdout line, and it must
     # fit the driver's 2000-char stdout-tail capture (the r1 overflow: a

@@ -135,15 +135,6 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    # Driver JVM thread stack, applied only when the first session of the
-    # process is built here.  Needed by the 100x streaming-state probe:
-    # at 10M-event replays the stream execution thread dies with a
-    # StackOverflowError inside java.util.regex (a backtracking pattern
-    # over a per-batch string that grows with scale); 32m absorbs it
-    # (tools/scale_probe.py run_streaming_state).  Unset by default.
-    xss = os.environ.get("SPARK_GRAFT_DRIVER_XSS")
-    if xss:
-        builder = builder.config("spark.driver.extraJavaOptions", f"-Xss{xss}")
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,6 +1,5 @@
-"""bench.py round-stamping logic (judge r5 item 5 / ADVICE partial-run
-flag): the round inference must track the driver's BENCH_r{N}.json trail
-and honor the env override."""
+"""bench.py protocol pieces: the one timing loop, the headline/harness
+key split, the stdout contract line, and the per-key regression gate."""
 
 from __future__ import annotations
 
@@ -8,49 +7,42 @@ import importlib
 import os
 
 
-def test_current_round_is_max_bench_plus_one(monkeypatch):
+def test_time_call_excludes_warm_run(monkeypatch):
+    """bench.time_call is the one timing loop: one warm call whose time is
+    returned apart, then exactly ``repeats`` timed samples — and a failing
+    callable raises to the caller, which records it under ``errors``."""
+    import types
+
+    import pytest
+
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    # repo currently holds BENCH_r01..r05 → in-progress round is 6+
-    assert bench.current_round() >= 6
+    clock = [0.0]
+    durations = [5.0, 1.0, 2.0, 3.0]  # the warm call is the slow one
+    calls = []
 
+    def fn():
+        clock[0] += durations[len(calls)]
+        calls.append(1)
 
-def test_current_round_env_override(monkeypatch):
-    import bench
+    monkeypatch.setattr(
+        bench, "time", types.SimpleNamespace(perf_counter=lambda: clock[0])
+    )
+    warm, samples = bench.time_call(fn, 3)
+    assert len(calls) == 3 + 1
+    assert len(samples) == 3
+    assert warm == 5.0
+    assert samples == [1.0, 2.0, 3.0]  # the warm duration is not a sample
 
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "42")
-    assert bench.current_round() == 42
+    def broken():
+        calls.append(1)
+        if len(calls) == 2:  # the first timed call fails
+            raise ValueError("boom")
 
-
-def test_current_round_mid_round_rerun(monkeypatch, tmp_path):
-    """The r7 misfile bug: once this repo's own BENCH_DETAIL_r{N} exists
-    mid-round, a second artifact run must still stamp N — only the
-    driver's end-of-round BENCH_r{N} advances the inference."""
-    import bench
-
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "BENCH_r06.json").write_text("{}")
-    assert bench.current_round() == 7  # fresh round: driver trail + 1
-    (tmp_path / "BENCH_DETAIL_r07.json").write_text("{}")
-    assert bench.current_round() == 7  # mid-round re-run: NOT 8
-    (tmp_path / "BENCH_r07.json").write_text("{}")
-    assert bench.current_round() == 8  # driver closed round 7
-
-
-def test_current_round_ambiguous_state_warns(monkeypatch, tmp_path, capsys):
-    """Equal nonzero trails (driver dropped BENCH_rN early, or a fresh
-    round start) are genuinely ambiguous (ADVICE r7): the inference must
-    say so on stderr and assume the fresh-round reading."""
-    import bench
-
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
-    monkeypatch.setattr(bench, "REPO", str(tmp_path))
-    (tmp_path / "BENCH_r07.json").write_text("{}")
-    (tmp_path / "BENCH_DETAIL_r07.json").write_text("{}")
-    assert bench.current_round() == 8
-    assert "ambiguous" in capsys.readouterr().err
+    calls.clear()
+    with pytest.raises(ValueError, match="boom"):
+        bench.time_call(broken, 3)
+    assert len(calls) == 2
 
 
 def test_harness_keys_consistent_with_registry():
@@ -143,7 +135,7 @@ def test_bench_regression_gate_vs_r08_idle():
     )
 
 
-def test_contract_line_packs_slowest_within_budget(monkeypatch):
+def test_contract_line_packs_slowest_within_budget():
     """r17 (VERDICT r16 items 2/4): the one-line JSON must carry as many
     slowest keys as fit the driver's 2000-char tail capture — always
     including the old slowest-5 subset — and stay parseable."""
@@ -151,7 +143,6 @@ def test_contract_line_packs_slowest_within_budget(monkeypatch):
 
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_LINE_BYTES", raising=False)
     base = {"metric": "suite_wall_sec", "value": 1.0, "unit": "sec"}
     per_query = {f"some_query_key_{i:03d}": round(0.1 + i * 0.01, 3) for i in range(300)}
     line = bench.contract_line(base, per_query)
@@ -167,12 +158,11 @@ def test_contract_line_packs_slowest_within_budget(monkeypatch):
     assert got[slowest[0]] == per_query[slowest[0]]
 
 
-def test_contract_line_small_suite_is_complete(monkeypatch):
+def test_contract_line_small_suite_is_complete():
     import json
 
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_LINE_BYTES", raising=False)
     base = {"metric": "suite_wall_sec", "value": 1.0, "unit": "sec"}
     per_query = {"a": 1.0, "b": 2.0}
     parsed = json.loads(bench.contract_line(base, per_query))

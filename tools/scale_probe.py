@@ -45,19 +45,15 @@ Regime checks (``regimes`` section):
 Usage::
 
     python tools/scale_probe.py                  # full probe, writes
-                                                 # SCALE_PROBE_r{N}.json
-    python tools/scale_probe.py --keys tpch_q1   # subset, no artifact
+                                                 # SCALE_PROBE.json
+    python tools/scale_probe.py --keys tpch_q1   # subset: prints its rows,
+                                                 # writes no artifact
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
 import json
-
-import pandas as pd  # module-level so pandas_udf string type hints
-# ('pd.Series', stringified by `from __future__ import annotations`)
-# resolve from module globals at decoration time
 import os
 import shutil
 import sys
@@ -462,128 +458,6 @@ def exempt_reason(key: str) -> str | None:
     return None
 
 
-# 100× wave (r11): the brief's actual question is "would this survive a
-# 100× scale-up", and the 10× probe answers it only by extrapolation.
-# This wave builds a 100-replica blowup of the four fact tables
-# (embeddings excluded — the cosine kernels' gated regimes are already
-# proven at 60×) and times a curated core: the flagship decimal
-# aggregate battery, two TPC-H join trees, a real parquet write at
-# ~1.1 GB, the distinct/dedup shuffles, a window suite member, and the
-# r11 KM key.  per_row_ratio is computed base(sf0.1)→100× — ≤~2 means
-# the cost stayed linear across TWO orders of magnitude.
-OUT100 = "/tmp/scale_probe/sf10"
-HUNDRED_REPS = 100
-HUNDRED_KEYS = {
-    "agg_group": "lineitem",
-    "tpch_q1": "lineitem",
-    "tpch_q3": "lineitem",
-    "agg_count_distinct": "lineitem",
-    "sink_parquet": "lineitem",
-    "events_rfm": "events",
-    "win_range_frame": "events",
-    "events_survival": "events",
-    "llm_exact_dedup": "documents",
-    "llm_fingerprint": "documents",
-    # r12 (VERDICT r11 item 3): the shuffle-heaviest families the first
-    # wave skipped — the pinned SortMergeJoin, the manual skew-salted
-    # join, the RocksDB stateful lifecycle, the gram-hash contamination
-    # join, and the two-pass profile battery.  graph_components is NOT
-    # here by design: its driving table (embeddings) is deliberately
-    # byte-copied in the 100x fixture (cosine kernels are O(n^2) by
-    # contract); its distributed-CC regime is already forced + verified
-    # in the `regimes` section at the 60x embeddings blowup.
-    "join_smj": "lineitem",
-    "join_skew_salted": "events",
-    "stream_rocksdb_state": "events",
-    "llm_contamination": "documents",
-    "dq_profile": "orders",
-    # r15 (VERDICT r14 item 5): the join tree at 100x — the 10x probe
-    # covers these, but skew/spill behavior in multi-join plans only
-    # shows where the build sides stop fitting comfortably: the two
-    # largest TPC-H join trees (q9 5-way, q21 lineitem self-join x3),
-    # two more multi-join trees (q5 6-way, q18 group-then-join), the
-    # theta/residual join, and the four distinct non-equi join shapes
-    # over events (grid equi-bucket spatial, range-bucketed interval,
-    # point-in-time multi-key asof, gaps-and-islands sessionize) plus
-    # the day-grid distinct-count join (events_dau_wau, 100x users).
-    "tpch_q9": "lineitem",
-    "tpch_q21": "lineitem",
-    "tpch_q5": "lineitem",
-    "tpch_q18": "lineitem",
-    "join_theta": "lineitem",
-    "events_dau_wau": "events",
-    "join_spatial_grid": "events",
-    "join_range_bucket": "events",
-    "join_pit_multi": "events",
-    "events_sessionize": "events",
-    # r16 (VERDICT r15 item 5): the last untimed-at-100x families — the
-    # window battery's single-exchange ntile/rank plan (win_ntile; its
-    # sibling win_percentiles runs the identical plan shape over the
-    # byte-copied customer dim, ratio vacuous — recorded under
-    # `exceptions`) and the mm_* binary keys (sha256 manifest, binary
-    # exact-dedup, Arrow-batched WAV/BMP decode kernels — per-blob
-    # mapInPandas whose 100x behavior is the decode-batch shape, not
-    # the fixture).  binaryFile ingestion itself is probed separately
-    # (`binaryfile_smallfiles` section): its cost is the small-files
-    # listing/split tax, not row volume.
-    "win_ntile": "events",
-    "mm_ingest": "documents",
-    "mm_dedup_binary": "documents",
-    "mm_decode_features": "documents",
-    "mm_phash_dedup": "documents",
-}
-
-# 100x-wave documented contractual exceptions (VERDICT r15 item 5):
-# keys the wave deliberately does NOT time, with the reason recorded in
-# the artifact so "not timed" reads as a decision, not an omission.
-HUNDRED_EXCEPTIONS = {
-    "win_percentiles": (
-        "identical single-exchange percent_rank/cume_dist/ntile plan as "
-        "the timed win_ntile, but driven by the byte-copied customer "
-        "dimension — probe input equals base input, ratio vacuous; the "
-        "salt-and-merge rewrite documented for skewed partitions is "
-        "plan-shape-shared with win_ntile's measured 100x run"
-    ),
-    "source_binaryfile": (
-        "cost is the small-files listing/split tax (one ~1KB file per "
-        "doc), not row volume — measured head-on in the "
-        "binaryfile_smallfiles section instead of a ratio that would "
-        "mostly time filesystem metadata"
-    ),
-}
-
-
-def build_hundred(force: bool = False) -> None:
-    import duckdb
-
-    manifest = os.path.join(OUT100, "_MANIFEST.json")
-    want = {"base": BASE, "reps": HUNDRED_REPS, "copy": COPY}
-    if not force and os.path.exists(manifest):
-        with open(manifest) as f:
-            if json.load(f) == json.loads(json.dumps(want)):
-                return
-    shutil.rmtree(OUT100, ignore_errors=True)
-    os.makedirs(OUT100, exist_ok=True)
-    con = duckdb.connect()
-    for table, _, keys in BLOWUP:
-        if table == "embeddings":
-            continue
-        repl = ", ".join(f"{c} + r * {off} AS {c}" for c, off in keys)
-        con.execute(
-            f"COPY (SELECT t.* REPLACE ({repl}) "
-            f"FROM '{BASE}/{table}.parquet' t, range({HUNDRED_REPS}) g(r)) "
-            f"TO '{OUT100}/{table}.parquet' (FORMAT PARQUET)"
-        )
-    for table in COPY:
-        shutil.copyfile(f"{BASE}/{table}.parquet", f"{OUT100}/{table}.parquet")
-    # embeddings byte-copied so keys that merely join it still resolve
-    shutil.copyfile(
-        f"{BASE}/embeddings.parquet", f"{OUT100}/embeddings.parquet"
-    )
-    with open(manifest, "w") as f:
-        json.dump(want, f)
-
-
 def build_blowup(force: bool = False) -> dict:
     import duckdb
 
@@ -640,2127 +514,23 @@ def _fold(df):
     return int(out["n"]), int(out["x"] or 0)
 
 
-def run_hundred(rebuild: bool = False) -> None:
-    """Time HUNDRED_KEYS at base (sf0.1) and 100×, merge a `hundredfold`
-    section into the round artifact."""
-    print("building 100x fixture ...", flush=True)
-    t0 = time.perf_counter()
-    build_hundred(force=rebuild)
-    print(f"100x fixture ready in {time.perf_counter() - t0:.1f}s", flush=True)
-
-    from kafkastreaming_spark.all import QUERIES
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_100x")
-    spark.sparkContext.setLogLevel("ERROR")
-    rows = {}
-    for t in sorted({v for v in HUNDRED_KEYS.values()}):
-        rows[t] = (
-            load_table(spark, BASE, t).count(),
-            load_table(spark, OUT100, t).count(),
-        )
-    print("row counts:", rows, flush=True)
-    QUERIES["agg_group"](spark, BASE).count()  # warm-up
-    report: dict[str, dict] = {}
-    for key, table in HUNDRED_KEYS.items():
-        entry: dict = {"driving_table": table}
-        try:
-            t0 = time.perf_counter()
-            _materialize(QUERIES[key](spark, BASE))
-            base_sec = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            _materialize(QUERIES[key](spark, OUT100))
-            probe_sec = time.perf_counter() - t0
-            entry["base_sec"] = round(base_sec, 3)
-            entry["hundred_sec"] = round(probe_sec, 3)
-            br, pr = rows[table]
-            entry["base_rows"], entry["hundred_rows"] = br, pr
-            entry["per_row_ratio"] = (
-                round((probe_sec / pr) / (base_sec / br), 3)
-                if base_sec > 0
-                else None
-            )
-        except Exception as exc:  # noqa: BLE001 — record, keep probing
-            entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
-        report[key] = entry
-        print(f"{key}: {entry}", flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["hundredfold"] = {
-        "reps": HUNDRED_REPS,
-        "exceptions": HUNDRED_EXCEPTIONS,
-        "note": (
-            "100x-replica blowup of the fact tables (embeddings excluded "
-            "- cosine regimes proven at 60x in `regimes`); per_row_ratio "
-            "= (hundred_sec/hundred_rows)/(base_sec/base_rows) - <=~2 "
-            "means per-row cost held across TWO orders of magnitude."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def _build_chunks_duckdb(src_dir: str, out_dir: str, n_chunks: int) -> str:
-    """(ts, event_id)-ordered chunk split of an events table too large
-    for the harness's pandas splitter (replay_chunks toPandas()-s the
-    whole table — fine at fixture sizes, a driver-memory anti-pattern at
-    60M rows).  One DuckDB window pass assigns chunk ids by ceil
-    division of the global order — the same rule as replay_chunks — and
-    one partitioned COPY writes them; files are then renamed flat with
-    strictly-increasing mtimes so FileStreamSource batch order equals
-    chunk order."""
-    import duckdb
-
-    if os.path.isdir(out_dir) and sorted(os.listdir(out_dir)):
-        return out_dir
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    stage = out_dir + "_stage"
-    shutil.rmtree(stage, ignore_errors=True)
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        COPY (
-          SELECT * EXCLUDE (rn, n),
-                 CAST(rn // (n // {n_chunks} + 1) AS INT) AS chunk
-          FROM (
-            SELECT *, row_number() OVER (ORDER BY ts, event_id) - 1 AS rn,
-                   COUNT(*) OVER () AS n
-            FROM '{src_dir}/events.parquet'
-          )
-        ) TO '{stage}' (FORMAT PARQUET, PARTITION_BY (chunk))
-        """
-    )
-    base_mtime = 1_600_000_000
-    i = 0
-    for part in sorted(
-        os.listdir(stage), key=lambda d: int(d.split("=")[1])
-    ):
-        for f in sorted(os.listdir(os.path.join(stage, part))):
-            dst = os.path.join(out_dir, f"chunk_{i:03d}.parquet")
-            shutil.move(os.path.join(stage, part, f), dst)
-            os.utime(dst, (base_mtime + i, base_mtime + i))
-            i += 1
-    shutil.rmtree(stage, ignore_errors=True)
-    return out_dir
-
-
-def run_streaming_state(rebuild: bool = False) -> None:
-    """VERDICT r12 item 6: measure state-store cost growth DIRECTLY on
-    the streaming state path — stream_rocksdb_state (RocksDB LSM) and
-    stream_dedup_watermark (watermark-bounded dedup state) at 100×
-    events with proportionally scaled chunk counts (4 → 40 micro-batches
-    of ~10× base rows each: state volume, commit count, and LSM size all
-    grow, which is the claim being tested).
-
-    Correctness rides along: the RocksDB key's complete-mode sink is
-    fold-compared against the batch groupBy at 100×; the dedup run
-    counts emitted rows via foreachBatch (a memory sink holding 60M
-    rows on the driver would measure the HARNESS anti-pattern, not the
-    operator) and must emit exactly the distinct originals despite the
-    re-delivered duplicate chunk."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred(force=rebuild)
-
-    # The session_ttl 100x replay needs a deeper driver thread stack:
-    # at default Xss the stream execution thread dies mid-replay with a
-    # StackOverflowError fully inside java.util.regex (1024 identical
-    # Loop/GroupTail/Branch frames — a backtracking pattern over a
-    # per-batch string that grows with scale; r14 probe log).  Must be
-    # set before the FIRST session of this process builds.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_XSS", "32m")
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.session import get_session
-    from kafkastreaming_spark.sources.factory import file_event_stream
-    from kafkastreaming_spark.streaming import runtime as rt
-    from kafkastreaming_spark.streaming.harness import drain, scratch_dir
-
-    spark = get_session("scale_probe_stream")
-    spark.sparkContext.setLogLevel("ERROR")
-    report: dict[str, dict] = {}
-
-    base_rows = load_table(spark, BASE, "events").count()
-    hund_rows = load_table(spark, OUT100, "events").count()
-
-    # --- stream_rocksdb_state: registered callable, chunk count scaled
-    t0 = time.perf_counter()
-    _materialize(rt.stream_rocksdb_state(spark, BASE, n_chunks=4))
-    base_sec = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    out100 = rt.stream_rocksdb_state(spark, OUT100, n_chunks=40)
-    hund_sec = time.perf_counter() - t0
-    batch = (
-        load_table(spark, OUT100, "events")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    report["stream_rocksdb_state"] = {
-        "driving_table": "events",
-        "base_rows": base_rows,
-        "hundred_rows": hund_rows,
-        "base_chunks": 4,
-        "hundred_chunks": 40,
-        "base_sec": round(base_sec, 3),
-        "hundred_sec": round(hund_sec, 3),
-        "per_row_ratio": round((hund_sec / hund_rows) / (base_sec / base_rows), 3),
-        "hundred_exact_match": _fold(out100) == _fold(batch),
-    }
-    print("stream_rocksdb_state:", report["stream_rocksdb_state"], flush=True)
-
-    # --- stream_dedup_watermark: base via registered callable; 100× via
-    # the same stream over a DuckDB-built 40-chunk dir + dup trailer,
-    # counted through foreachBatch.
-    t0 = time.perf_counter()
-    rt.stream_dedup_watermark(spark, BASE, n_chunks=4).count()
-    base_sec = time.perf_counter() - t0
-
-    big_dir = _build_chunks_duckdb(
-        OUT100, os.path.join(scratch_dir(), "ks_probe_ddww100"), 40
-    )
-    # duplicate trailer: event_id % 7 == 0 of first and last chunks,
-    # byte-identical, delivered after all originals (same rule as
-    # runtime._ddww_chunks)
-    import pandas as pd
-
-    chunks = sorted(f for f in os.listdir(big_dir) if f.startswith("chunk_0"))
-    dup_path = os.path.join(big_dir, "chunk_999_dup.parquet")
-    if not os.path.exists(dup_path):
-        dups = pd.concat(
-            [
-                pd.read_parquet(os.path.join(big_dir, chunks[0])),
-                pd.read_parquet(os.path.join(big_dir, chunks[-1])),
-            ]
-        )
-        dups = dups[dups["event_id"] % 7 == 0]
-        dups.to_parquet(
-            dup_path,
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-        os.utime(dup_path, (1_600_000_000 + 999,) * 2)
-    n_dups = len(pd.read_parquet(dup_path, columns=["event_id"]))
-
-    emitted = {"n": 0}
-
-    def count_batch(df, _bid):
-        emitted["n"] += df.count()
-
-    sdf = (
-        file_event_stream(spark, big_dir)
-        .withWatermark("ts", "10 minutes")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    t0 = time.perf_counter()
-    drain(spark, sdf.writeStream.foreachBatch(count_batch), timeout_sec=600)
-    hund_sec = time.perf_counter() - t0
-    report["stream_dedup_watermark"] = {
-        "driving_table": "events",
-        "base_rows": base_rows,
-        "hundred_rows": hund_rows,
-        "base_chunks": 4,
-        "hundred_chunks": 40,
-        "hundred_dup_rows_delivered": int(n_dups),
-        "base_sec": round(base_sec, 3),
-        "hundred_sec": round(hund_sec, 3),
-        "per_row_ratio": round((hund_sec / hund_rows) / (base_sec / base_rows), 3),
-        "hundred_emitted_equals_originals": emitted["n"] == hund_rows,
-    }
-    print("stream_dedup_watermark:", report["stream_dedup_watermark"], flush=True)
-
-    # --- stream_session_ttl (r14): the EVICTION key at 100× — state keys
-    # grow 100× (the blowup offsets user_id per replica, so ~100× distinct
-    # users hold open-session state inside the watermark horizon), which
-    # is exactly the bounded-state claim the key's docstring makes.
-    # Exactness: fold-compare the streamed emission (accumulated per
-    # batch via foreachBatch — no driver-resident 100× memory sink)
-    # against the DuckDB gaps-and-islands oracle run on the 100× events
-    # and folded with the SAME Spark hash after a parquet round-trip.
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    t0 = time.perf_counter()
-    _materialize(rt.stream_session_ttl(spark, BASE))
-    base_sec = time.perf_counter() - t0
-
-    sttl_dir = _build_chunks_duckdb(
-        OUT100, os.path.join(scratch_dir(), "ks_probe_sttl100"), 20
-    )
-    acc = {"n": 0, "x": 0}
-
-    def fold_batch(df, _bid):
-        n, x = _fold(df)
-        acc["n"] += n
-        acc["x"] ^= x
-
-    sdf100 = (
-        file_event_stream(spark, sttl_dir)
-        .withWatermark("ts", "10 minutes")
-        .select("user_id", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            rt._session_ttl_fn,
-            outputStructType=rt._SESS_OUT,
-            stateStructType=rt._SESS_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    # State partitions SCALED to the 100x state volume (one per core),
-    # not the base-optimal 8: at 10M events / ~150k state groups the
-    # Python state-processing compute dominates and 32 workers run the
-    # batch 3x faster (1270 s at 8 partitions vs 447 s at 32, r14).
-    # r15: the rule is now the harness DEFAULT — state_partitions()
-    # derives it from state volume; the probe exercises that same path.
-    t0 = time.perf_counter()
-    drain(
-        spark,
-        sdf100.writeStream.foreachBatch(fold_batch),
-        timeout_sec=1800,
-        state_groups=10_000_000,
-    )
-    hund_sec = time.perf_counter() - t0
-
-    import duckdb
-
-    from kafkastreaming_spark.all import ORACLES
-
-    ora_pq = os.path.join(scratch_dir(), "ks_probe_sttl_oracle.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM '{OUT100}/events.parquet'"
-    )
-    # the registered oracle references main.events (view above); COPY its
-    # result out so Spark can fold it with the identical hash
-    con.execute(
-        f"COPY ({ORACLES['stream_session_ttl']}) TO '{ora_pq}' (FORMAT PARQUET)"
-    )
-    oracle_fold = _fold(spark.read.parquet(ora_pq))
-    report["stream_session_ttl"] = {
-        "driving_table": "events",
-        "base_rows": base_rows,
-        "hundred_rows": hund_rows,
-        "base_chunks": 2,
-        "hundred_chunks": 20,
-        "base_sec": round(base_sec, 3),
-        "hundred_sec": round(hund_sec, 3),
-        "per_row_ratio": round((hund_sec / hund_rows) / (base_sec / base_rows), 3),
-        "hundred_emitted_sessions": acc["n"],
-        "hundred_exact_match": (acc["n"], acc["x"]) == oracle_fold,
-    }
-    print("stream_session_ttl:", report["stream_session_ttl"], flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["streaming_state_hundredfold"] = {
-        "note": (
-            "VERDICT r12 item 6: streaming state path at 100x events, "
-            "chunk count scaled 10x per key (per-key base/hundred chunk "
-            "counts recorded in each timed entry; each micro-batch ~10x "
-            "base rows, so state volume, commit count, and RocksDB LSM "
-            "size all grow). r14 note: the chunker switched from CAST "
-            "(round-half-away) to // (floor) division, shifting chunk "
-            "boundaries vs pre-r14 artifacts — cross-round per_row_ratio "
-            "diffs for stream_dedup_watermark are not strictly "
-            "like-for-like across that fix. "
-            "per_row_ratio <=~2 means per-row cost held; exact-match / "
-            "emitted-equals-originals are the at-scale correctness "
-            "witnesses."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-OUT100SKEW = "/tmp/scale_probe/sf10_skew"
-
-
-def build_skew(force: bool = False) -> None:
-    """100x lineitem with a genuinely HOT join key: every replica re-keys
-    a deterministic 10% of its rows onto o_orderkey=0 (replica 0 keeps
-    natural keys, so order 0 exists exactly once in the 100x orders
-    fixture).  The uniform 100x blowup replicates skew-free — each
-    orderkey's weight stays ~4 lineitems — so the hundredfold wave never
-    actually exercises a straggler; this fixture puts ~6M of 60M rows on
-    ONE key, which a hash shuffle must land on one reducer."""
-    import duckdb
-
-    build_hundred(force=force)  # provides the 100x orders side
-    manifest = os.path.join(OUT100SKEW, "_MANIFEST.json")
-    want = {"base": BASE, "reps": HUNDRED_REPS, "hot_pct": 10}
-    if not force and os.path.exists(manifest):
-        with open(manifest) as f:
-            if json.load(f) == json.loads(json.dumps(want)):
-                return
-    shutil.rmtree(OUT100SKEW, ignore_errors=True)
-    os.makedirs(OUT100SKEW, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(
-        f"COPY (SELECT t.* REPLACE (CASE WHEN "
-        f"hash(t.l_orderkey * 31 + t.l_linenumber + g.r) % 10 = 0 THEN 0 "
-        f"ELSE t.l_orderkey + g.r * 1_000_000 END AS l_orderkey) "
-        f"FROM '{BASE}/lineitem.parquet' t, range({HUNDRED_REPS}) g(r)) "
-        f"TO '{OUT100SKEW}/lineitem.parquet' (FORMAT PARQUET)"
-    )
-    with open(manifest, "w") as f:
-        json.dump(want, f)
-
-
-def run_skew_ab(rebuild: bool = False) -> None:
-    """Skew A/B at 100x (r15, VERDICT r14 item 5 follow-through): the
-    join-tree wave proved the multi-join PLANS sub-linear, but the
-    uniform blowup cannot produce a straggler.  This probe joins the
-    hot-key lineitem fixture (10% of 60M rows on o_orderkey=0) to the
-    100x orders three ways and fold-compares the outputs EXACTLY:
-
-      aqe_skew_on  — AQE skew-join split enabled, thresholds scaled to
-                     the local shuffle sizes (factor 2 / 64m threshold /
-                     32m advisory; at production partition sizes the
-                     DEFAULT 256MB threshold fires without tuning — the
-                     scaling substitutes for being on a real cluster),
-      aqe_skew_off — same plan with the splitter disabled: the honest
-                     cost of the straggler reducer,
-      salted_known — the pre-AQE production pattern for skew KNOWN ahead
-                     of time: targeted salting — only the hot key fans
-                     out over 16 salts on the fact side, and only the
-                     hot dim row replicates 16x (never the whole dim).
-
-    Timing = min of 2 runs per variant; the executed-plan string is
-    scanned for AQE's skew markers so the artifact proves the split
-    actually happened (not just that a config was set)."""
-    print("building skew fixture ...", flush=True)
-    t0 = time.perf_counter()
-    build_skew(force=rebuild)
-    print(f"skew fixture ready in {time.perf_counter() - t0:.1f}s", flush=True)
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_skew")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    li_path = f"{OUT100SKEW}/lineitem.parquet"
-    o_path = f"{OUT100}/orders.parquet"
-    hot_rows = (
-        spark.read.parquet(li_path).filter(F.col("l_orderkey") == 0).count()
-    )
-    total_rows = spark.read.parquet(li_path).count()
-    print(f"skew fixture: {total_rows} rows, {hot_rows} on the hot key", flush=True)
-
-    def plain_join():
-        li = spark.read.parquet(li_path).select(
-            "l_orderkey", "l_quantity", "l_extendedprice"
-        )
-        o = spark.read.parquet(o_path).select("o_orderkey", "o_orderdate")
-        return li.join(o, li.l_orderkey == o.o_orderkey).select(
-            "l_orderkey", "l_quantity", "l_extendedprice", "o_orderdate"
-        )
-
-    def salted_join():
-        # targeted salting: ONLY the known-hot key fans out — everything
-        # else keeps salt 0, and the dim side replicates one row 16x
-        li = spark.read.parquet(li_path).select(
-            "l_orderkey",
-            "l_quantity",
-            "l_extendedprice",
-            F.when(
-                F.col("l_orderkey") == 0,
-                F.pmod(F.xxhash64("l_quantity", "l_extendedprice"), F.lit(16)),
-            )
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("salt"),
-        )
-        o = (
-            spark.read.parquet(o_path)
-            .select("o_orderkey", "o_orderdate")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.when(
-                        F.col("o_orderkey") == 0, F.expr("sequence(0, 15)")
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .withColumn("salt", F.col("salt").cast("int"))
-        )
-        return li.join(
-            o, (li.l_orderkey == o.o_orderkey) & (li.salt == o.salt)
-        ).select("l_orderkey", "l_quantity", "l_extendedprice", "o_orderdate")
-
-    def fold_with_plan(df):
-        folded = df.select(
-            F.xxhash64(
-                *[F.col(c).cast("string") for c in sorted(df.columns)]
-            ).alias("h")
-        ).agg(F.count(F.lit(1)).alias("n"), F.expr("bit_xor(h)").alias("x"))
-        row = folded.collect()[0]
-        plan = folded._jdf.queryExecution().executedPlan().toString()
-        # count only the runtime markers AQE stamps on actually-split
-        # operators ("skew=true" on the join, "skewed" on AQEShuffleRead)
-        # - the bare substring "skew" also matches conf echoes in the
-        # plan header and is non-zero even when no split happened
-        marks = plan.count("skew=true") + plan.lower().count("skewed")
-        return int(row["n"]), int(row["x"] or 0), marks
-
-    @contextlib.contextmanager
-    def confs(pairs):
-        old = {k: spark.conf.get(k, None) for k in pairs}
-        for k, v in pairs.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in old.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    scaled = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32m",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }
-    variants = {
-        "aqe_skew_on": (
-            plain_join,
-            {**scaled, "spark.sql.adaptive.skewJoin.enabled": "true"},
-        ),
-        "aqe_skew_off": (
-            plain_join,
-            {**scaled, "spark.sql.adaptive.skewJoin.enabled": "false"},
-        ),
-        "salted_known": (
-            salted_join,
-            {**scaled, "spark.sql.adaptive.skewJoin.enabled": "false"},
-        ),
-    }
-
-    # warm-up: parquet footers + codegen on a cheap slice
-    spark.read.parquet(li_path).limit(1000).count()
-    report: dict[str, dict] = {}
-    folds = {}
-    for name, (builder, conf) in variants.items():
-        times = []
-        with confs(conf):
-            for _ in range(3):
-                t0 = time.perf_counter()
-                n, x, skew_marks = fold_with_plan(builder())
-                times.append(round(time.perf_counter() - t0, 3))
-        folds[name] = (n, x)
-        report[name] = {
-            "runs_sec": times,
-            "best_sec": min(times),
-            "rows": n,
-            "plan_skew_marks": skew_marks,
-        }
-        print(f"{name}: {report[name]}", flush=True)
-
-    vals = set(folds.values())
-    report["_equivalence"] = {
-        "count_xor_match": len(vals) == 1,
-        "rows": folds["aqe_skew_on"][0],
-    }
-    assert len(vals) == 1, f"variant outputs diverge: {folds}"
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["skew_ab_hundredfold"] = {
-        "note": (
-            "hot-key skew A/B at 100x: 10% of 60M lineitem rows on ONE "
-            "orderkey, joined to 100x orders (15M). aqe_skew_on vs "
-            "aqe_skew_off isolates AQE's skew-join split; salted_known "
-            "is the targeted-salt production pattern for skew known "
-            "ahead of time. All three outputs fold-match exactly. Skew "
-            "thresholds scaled to local shuffle sizes (factor 2 / 64m / "
-            "advisory 32m) because the hot partition here is ~10^2 MB "
-            "while the production default threshold is 256MB; on a real "
-            "cluster the default fires on multi-GB partitions untouched."
-        ),
-        "hot_rows": hot_rows,
-        "total_rows": total_rows,
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_cluster_skip() -> None:
-    """Data-skipping from clustered layout at 100x (r15).  Predicate
-    pushdown reaches the parquet scan in every plan we pin — but whether
-    the row-group min/max stats actually SKIP anything is a property of
-    the LAYOUT, not the plan: randomly-written data has every file
-    spanning the full key range, so stats prune nothing.  The same 60M
-    rows are written (a) shuffled at random and (b) range-clustered +
-    sorted on l_shipdate, then a one-week shipdate slice is aggregated
-    from each (best of 3, folds exact).  Input bytes per leg are read
-    from the UI REST API, so the artifact shows the scan READ less, not
-    just ran faster."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_clusterskip")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    src = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate"
-    )
-    layouts = {}
-    rand_dir = "/tmp/scale_probe/cluster_random"
-    clus_dir = "/tmp/scale_probe/cluster_bydate"
-    if not os.path.isdir(rand_dir) or not os.listdir(rand_dir):
-        src.repartition(32).write.mode("overwrite").parquet(rand_dir)
-    if not os.path.isdir(clus_dir) or not os.listdir(clus_dir):
-        (
-            src.repartitionByRange(32, "l_shipdate")
-            .sortWithinPartitions("l_shipdate")
-            .write.mode("overwrite")
-            .parquet(clus_dir)
-        )
-    layouts = {"random": rand_dir, "clustered_shipdate": clus_dir}
-
-    lo, hi = "1996-06-01", "1996-06-08"
-
-    def week_agg(path):
-        df = spark.read.parquet(path).filter(
-            (F.col("l_shipdate") >= lo) & (F.col("l_shipdate") < hi)
-        )
-        return _fold(
-            df.groupBy((F.col("l_orderkey") % 97).alias("b")).agg(
-                F.sum("l_quantity").alias("sq"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-
-    def rg_stats(dir_path):
-        """(row groups whose [min,max] intersect the week, total) — what
-        a stats-pruning reader must touch, read straight from the
-        parquet footers with pyarrow (deterministic; the UI inputBytes
-        metric proved unreliable for scan-level attribution)."""
-        import datetime
-
-        import pyarrow.parquet as pq
-
-        wlo = datetime.datetime.fromisoformat(lo)
-        whi = datetime.datetime.fromisoformat(hi)
-        tot = hit = 0
-        for f in os.listdir(dir_path):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(dir_path, f)).metadata
-            idx = md.schema.names.index("l_shipdate")
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                tot += 1
-                if st is None or (st.min < whi and st.max >= wlo):
-                    hit += 1
-        return hit, tot
-
-    report: dict[str, dict] = {}
-    folds = {}
-    for name, path in layouts.items():
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            folds[name] = week_agg(path)
-            sec = time.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        hit, tot = rg_stats(path)
-        report[name] = {
-            "scan_agg_sec": round(best, 3),
-            "row_groups_touched": f"{hit}/{tot}",
-            "agg_groups": folds[name][0],
-        }
-        print(f"{name}: {report[name]}", flush=True)
-    assert len(set(folds.values())) == 1, folds
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["cluster_skip_hundredfold"] = {
-        "note": (
-            "same 60M rows written randomly vs range-clustered+sorted "
-            "on l_shipdate; a one-week shipdate slice aggregated from "
-            "each, folds exact. row_groups_touched is read from the "
-            "parquet footers (pyarrow): the row groups whose min/max "
-            "intersect the predicate - what any stats-pruning reader "
-            "must read. Row-group pruning is a LAYOUT property: "
-            "pushed-down predicates skip nothing over randomly-written "
-            "files because every row group spans the full key range. "
-            "Local NVMe + page cache mutes the wall-time gap; at object-"
-            "store bandwidth the touched-fraction IS the cost ratio."
-        ),
-        "predicate": f"l_shipdate in [{lo}, {hi})",
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_codec_ab() -> None:
-    """Parquet codec trade-off at 100x (r15).  At 100 TB the compression
-    codec is a standing storage-vs-CPU contract: snappy is Spark's
-    default, zstd compresses tighter for more CPU, uncompressed is the
-    'are we I/O- or CPU-bound' control.  The same 60M-row projection is
-    written once per codec and scan+agg'd (best of 3), folds exact —
-    the artifact records both axes so the choice is a read-off:
-    bytes-on-disk (what you pay the object store forever) vs scan time
-    (what every downstream query pays)."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_codec")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    src = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice", "l_shipdate"
-    )
-    codecs = ["snappy", "zstd", "uncompressed"]
-    report: dict[str, dict] = {}
-    folds = {}
-    for codec in codecs:
-        out = os.path.join("/tmp/scale_probe", f"codec_{codec}")
-        if not os.path.isdir(out) or not os.listdir(out):
-            t0 = time.perf_counter()
-            (
-                src.repartition(32)
-                .write.mode("overwrite")
-                .option("compression", codec)
-                .parquet(out)
-            )
-            write_sec = round(time.perf_counter() - t0, 3)
-        else:
-            write_sec = None
-        files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        entry = {
-            "total_mb": round(
-                sum(os.path.getsize(os.path.join(out, f)) for f in files) / 1e6,
-                1,
-            ),
-            "write_sec": write_sec,
-        }
-        best = None
-        for _ in range(3):
-            df = spark.read.parquet(out)
-            t0 = time.perf_counter()
-            folds[codec] = _fold(
-                df.groupBy((F.col("l_orderkey") % 97).alias("b")).agg(
-                    F.sum("l_quantity").alias("sq"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-            )
-            sec = time.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        entry["scan_agg_sec"] = round(best, 3)
-        report[codec] = entry
-        print(f"{codec}: {entry}", flush=True)
-    assert len(set(folds.values())) == 1, folds
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["codec_ab_hundredfold"] = {
-        "note": (
-            "same 60M-row projection written per codec (32 files each), "
-            "scan+agg best of 3, folds exact. Two axes: bytes-on-disk "
-            "(paid forever) vs scan/write time (paid per query/ingest). "
-            "Local NVMe + page cache understates the I/O saving of "
-            "smaller files - on object-store bandwidth the compression "
-            "win grows."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_smallfiles() -> None:
-    """Small-files tax measured at 100x (r15).  sink_compaction implements
-    the cure; this measures the disease: the same 60M-row dataset written
-    as 2048 splinter files vs 32 right-sized files, then scanned by an
-    aggregate.  Locally the tax is footer-parse + per-file task overhead;
-    on an object store every file open is an HTTP round-trip and the
-    same layout is catastrophically worse — the local number is the
-    FLOOR of the problem.  Folds exact across layouts; file counts and
-    bytes recorded so the artifact shows layout, not data, changed."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_smallfiles")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    src = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    layouts = {"splinter_2048": 2048, "rightsized_32": 32}
-    dirs = {}
-    report: dict[str, dict] = {}
-    for name, n in layouts.items():
-        out = os.path.join("/tmp/scale_probe", f"smallfiles_{n}")
-        if not os.path.isdir(out) or not os.listdir(out):
-            src.repartition(n).write.mode("overwrite").parquet(out)
-        dirs[name] = out
-        files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        report[name] = {
-            "n_files": len(files),
-            "total_mb": round(
-                sum(os.path.getsize(os.path.join(out, f)) for f in files) / 1e6,
-                1,
-            ),
-        }
-
-    def scan_agg(path):
-        df = spark.read.parquet(path)
-        return _fold(
-            df.groupBy((F.col("l_orderkey") % 97).alias("b")).agg(
-                F.sum("l_quantity").alias("sq"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-
-    folds = {}
-    for name in layouts:
-        best = None
-        for _ in range(3):
-            t0 = time.perf_counter()
-            folds[name] = scan_agg(dirs[name])
-            sec = time.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        report[name]["scan_agg_sec"] = round(best, 3)
-        print(f"{name}: {report[name]}", flush=True)
-    assert len(set(folds.values())) == 1, folds
-    report["tax"] = round(
-        report["splinter_2048"]["scan_agg_sec"]
-        / report["rightsized_32"]["scan_agg_sec"],
-        2,
-    )
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["smallfiles_hundredfold"] = {
-        "note": (
-            "same 60M rows as 2048 splinter files vs 32 right-sized "
-            "files, scan+agg best of 3, folds exact. Local tax is the "
-            "FLOOR: footer parse + task overhead only - object-store "
-            "deployments add an HTTP round-trip per file open. "
-            "sink_compaction is the cure; this is the measured disease."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_udf_tax() -> None:
-    """Python-UDF tax measured at 100x (r15).  'UDFs are the slow path;
-    pandas UDFs beat row-at-a-time by 10-100x' is the most-quoted Spark
-    folklore of all — this probe puts this box's numbers on record.  One
-    scalar computation (cents bucketing: round(value*100) % 97, exact
-    int result) runs over the 60M-row blowup four ways, folds exact:
-
-      builtin     — pyspark.sql.functions expression (whole-stage
-                    codegen, JVM-only),
-      pandas_udf  — Arrow-batched vectorized Python (per-batch
-                    serialization, numpy kernel),
-      python_udf  — row-at-a-time Python UDF (pickle per row),
-      rdd_map     — the RDD escape hatch people reach for (Row objects
-                    per row, no codegen, no Arrow).
-
-    The row-UDF and RDD legs run ONE timed pass (they are minutes, not
-    seconds); the builtin/pandas legs take best of 2."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_udftax")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    li = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_extendedprice"
-    )
-
-    def agg_fold(df_with_b):
-        # tiny (97-group) aggregate so the probe times the EXPRESSION,
-        # not a shuffle: map-side partials collapse everything
-        out = df_with_b.groupBy("b").agg(F.count(F.lit(1)).alias("n"))
-        return _fold(out)
-
-    # all four legs use floor(x*100 + 0.5): JVM round() is HALF_UP but
-    # pandas .round()/python round() are HALF_EVEN - the one spelling
-    # that is bit-identical across all four runtimes
-    def builtin():
-        return li.withColumn(
-            "b",
-            (F.floor(F.col("l_extendedprice") * 100 + 0.5).cast("long") % 97),
-        )
-
-    @F.pandas_udf(LongType())
-    def bucket_pd(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return (np.floor(s * 100 + 0.5).astype("int64")) % 97
-
-    def pandas_leg():
-        return li.withColumn("b", bucket_pd("l_extendedprice"))
-
-    @F.udf(LongType())
-    def bucket_py(v):
-        import math
-
-        return int(math.floor(v * 100 + 0.5)) % 97
-
-    def python_leg():
-        return li.withColumn("b", bucket_py("l_extendedprice"))
-
-    def rdd_leg_fold():
-        # count per bucket via RDD map — the no-DataFrame escape hatch
-        counts = (
-            li.rdd.map(
-                lambda r: (int(__import__("math").floor(r[0] * 100 + 0.5)) % 97, 1)
-            )
-            .reduceByKey(lambda a, b: a + b)
-            .collect()
-        )
-        return sorted(counts)
-
-    li.limit(1000).count()  # warm-up
-    report: dict[str, dict] = {}
-    folds = {}
-    for name, leg, reps in (
-        ("builtin", builtin, 2),
-        ("pandas_udf", pandas_leg, 2),
-        ("python_udf", python_leg, 1),
-    ):
-        best = None
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            folds[name] = agg_fold(leg())
-            sec = time.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        report[name] = {"best_sec": round(best, 3), "buckets": folds[name][0]}
-        print(f"{name}: {report[name]}", flush=True)
-    t0 = time.perf_counter()
-    rdd_counts = rdd_leg_fold()
-    report["rdd_map"] = {
-        "best_sec": round(time.perf_counter() - t0, 3),
-        "buckets": len(rdd_counts),
-    }
-    print(f"rdd_map: {report['rdd_map']}", flush=True)
-
-    assert len(set(folds.values())) == 1, folds
-    # the RDD leg's (bucket, count) pairs must equal the builtin's groups
-    b = builtin().groupBy("b").agg(F.count(F.lit(1)).alias("n"))
-    builtin_counts = sorted((int(r["b"]), int(r["n"])) for r in b.collect())
-    assert rdd_counts == builtin_counts
-    base = report["builtin"]["best_sec"]
-    for name in report:
-        report[name]["vs_builtin"] = round(report[name]["best_sec"] / base, 1)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["udf_tax_hundredfold"] = {
-        "note": (
-            "one scalar expression (exact cents bucketing mod 97) over "
-            "60M rows via builtin / pandas_udf / row python_udf / "
-            "rdd.map, all four outputs exactly equal. Times the "
-            "expression, not a shuffle (97-group agg). The folklore "
-            "'builtin >> pandas_udf >> python_udf' with this box's "
-            "actual multipliers on record."
-        ),
-        "rows": 60_000_000,
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_coalesce_ab() -> None:
-    """AQE partition-coalescing value at 100x (r15).  The spill sweep
-    showed too FEW shuffle partitions converts memory into disk I/O;
-    this measures the other edge — too MANY — and whether AQE's
-    coalescing really makes over-partitioning safe (the standing advice
-    'when unsure, set shuffle.partitions high and let AQE shrink it').
-    A 100k-group aggregation over the 60M-row blowup runs at
-    shuffle.partitions in {32, 2000} with AQE coalescing on/off, folds
-    exact across all four cells.  2000 partitions of a ~100k-group
-    aggregate are ~50 rows each — pure per-task scheduling overhead
-    unless AQE merges them back to advisory-sized partitions."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_coalesce")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    li = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-
-    def agg():
-        return (
-            li.withColumn("g", F.col("l_orderkey") % 100_000)
-            .groupBy("g")
-            .agg(
-                F.sum("l_quantity").alias("sq"),
-                F.count(F.lit(1)).alias("n"),
-            )
-        )
-
-    li.limit(1000).count()  # warm-up
-    cells = {
-        "p32_coalesce_on": (32, "true"),
-        "p32_coalesce_off": (32, "false"),
-        "p2000_coalesce_on": (2000, "true"),
-        "p2000_coalesce_off": (2000, "false"),
-    }
-    report: dict[str, dict] = {}
-    folds = {}
-    old_p = spark.conf.get("spark.sql.shuffle.partitions")
-    old_c = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    try:
-        for name, (n_parts, coal) in cells.items():
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-            spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coal)
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                folds[name] = _fold(agg())
-                sec = time.perf_counter() - t0
-                best = sec if best is None else min(best, sec)
-            report[name] = {
-                "shuffle_partitions": n_parts,
-                "coalesce": coal == "true",
-                "best_sec": round(best, 3),
-                "groups": folds[name][0],
-            }
-            print(f"{name}: {report[name]}", flush=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_p)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_c)
-    assert len(set(folds.values())) == 1, folds
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["coalesce_ab_hundredfold"] = {
-        "note": (
-            "over-partitioning safety: 100k-group agg over 60M rows at "
-            "shuffle.partitions {32, 2000} x AQE coalescing {on, off}, "
-            "folds exact across all cells. Completes the partition-"
-            "sizing story: too few converts memory to disk I/O (spill "
-            "sweep), too many is per-task scheduling overhead that AQE "
-            "coalescing absorbs."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_broadcast_xover() -> None:
-    """Broadcast-join crossover at 100x (r15).  'Broadcast small dims' is
-    plan-pinned everywhere, and Spark's default autoBroadcastJoinThreshold
-    (10MB) encodes a folklore answer to 'how small is small' — this probe
-    measures the actual crossover on this box: the 60M-row lineitem fact
-    joined to orders-derived dims of 100k / 1M / 5M / 15M rows under
-    three forced strategies (broadcast hint, sort-merge hint,
-    shuffle-hash hint), outputs fold-matched across strategies per size.
-
-    What broadcast buys: the 60M fact side never shuffles.  What it
-    costs: building + shipping the dim to every task and holding it on
-    the heap.  The crossover is where build cost eats the saved shuffle;
-    the artifact records best-of-2 per (size, strategy) so the curve is
-    read off directly rather than inferred from a byte threshold."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_bcast")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    li = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    orders = spark.read.parquet(f"{OUT100}/orders.parquet").select(
-        "o_orderkey", "o_totalprice"
-    )
-
-    # deterministic dim subsets: every k-th orderkey survives
-    sizes = {"100k": 150, "1m": 15, "5m": 3, "15m": 1}
-
-    def dim_of(mod):
-        d = orders
-        if mod > 1:
-            d = d.filter(F.col("o_orderkey") % mod == 0)
-        return d
-
-    strategies = {
-        "broadcast": lambda d: F.broadcast(d),
-        "sort_merge": lambda d: d.hint("merge"),
-        "shuffle_hash": lambda d: d.hint("shuffle_hash"),
-    }
-
-    li.limit(1000).count()  # warm-up
-    report: dict[str, dict] = {}
-    for size_name, mod in sizes.items():
-        dim_rows = dim_of(mod).count()
-        entry: dict = {"dim_rows": dim_rows}
-        folds = {}
-        for strat_name, hint in strategies.items():
-            try:
-                best = None
-                for _ in range(2):
-                    d = hint(dim_of(mod))
-                    j = li.join(d, li.l_orderkey == d.o_orderkey).select(
-                        "l_orderkey", "l_quantity", "o_totalprice"
-                    )
-                    t0 = time.perf_counter()
-                    folds[strat_name] = _fold(j)
-                    sec = time.perf_counter() - t0
-                    best = sec if best is None else min(best, sec)
-                entry[strat_name + "_sec"] = round(best, 3)
-            except Exception as exc:  # noqa: BLE001 — a strategy FAILING
-                # at a size (broadcast OOM/timeout) IS the finding there
-                entry[strat_name + "_error"] = f"{type(exc).__name__}: {exc}"[:200]
-        entry["fold_match_across_strategies"] = len(set(folds.values())) == 1
-        assert entry["fold_match_across_strategies"], (size_name, folds)
-        report[size_name] = entry
-        print(f"{size_name}: {entry}", flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["broadcast_xover_hundredfold"] = {
-        "note": (
-            "forced-strategy sweep: 60M-row fact joined to dims of "
-            "100k..15M rows under broadcast / sort-merge / shuffle-hash "
-            "hints, best of 2, folds exact across strategies per size. "
-            "Reads off where broadcast's build+ship cost eats the saved "
-            "60M-row fact shuffle on this box; a strategy error at a "
-            "size (broadcast OOM) is recorded as the finding, not a "
-            "probe failure."
-        ),
-        "fact_rows": 60_000_000,
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_bucket_ab() -> None:
-    """Bucketed co-located join economics at 100x (r15).  sink_bucketed's
-    no-Exchange property is plan-PINNED at sf scale, but the claim that
-    carries it to 100 TB — 'pay the shuffle once at write time, then
-    every join/agg on the bucket key is shuffle-free' — has a price tag
-    nobody measured: the one-time bucketed write vs the per-join saving.
-    This probe, over the 60M-row lineitem x 15M-row orders blowup:
-
-      plain     — parquet-direct SMJ join (shuffles BOTH sides every
-                  time) and parquet-direct groupBy(l_orderkey),
-      bucketed  — both tables written bucketBy(32, orderkey)+sortBy once
-                  (timed: the amortized cost), then the same join and
-                  the same groupBy read from the bucketed tables.
-
-    The bucketed join plan is string-asserted to have no hash exchange
-    on either join key (same check as the plan pin), outputs fold-match
-    the plain legs exactly, and the artifact records the breakeven: how
-    many joins the write cost amortizes over."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_bucket")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    li = spark.read.parquet(f"{OUT100}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    o = spark.read.parquet(f"{OUT100}/orders.parquet").select(
-        "o_orderkey", "o_orderdate", "o_totalprice"
-    )
-
-    def join_of(left, right):
-        return left.hint("merge").join(
-            right, left.l_orderkey == right.o_orderkey
-        ).select(
-            "l_orderkey", "l_quantity", "l_extendedprice",
-            "o_orderdate", "o_totalprice",
-        )
-
-    def agg_of(left):
-        return left.groupBy("l_orderkey").agg(
-            F.sum("l_quantity").alias("sq"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
-    def time2(thunk):
-        best, out = None, None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            out = thunk()
-            sec = time.perf_counter() - t0
-            best = sec if best is None else min(best, sec)
-        return round(best, 3), out
-
-    report: dict[str, dict] = {}
-    plain_join_sec, plain_join_fold = time2(lambda: _fold(join_of(li, o)))
-    plain_agg_sec, plain_agg_fold = time2(lambda: _fold(agg_of(li)))
-    report["plain_parquet"] = {
-        "join_sec": plain_join_sec,
-        "agg_sec": plain_agg_sec,
-        "join_rows": plain_join_fold[0],
-    }
-    print("plain_parquet:", report["plain_parquet"], flush=True)
-
-    t_li, t_ord = "probe_bucket_li", "probe_bucket_ord"
-    for t in (t_li, t_ord):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    t0 = time.perf_counter()
-    # repartition on the bucket key first so each task holds one hash
-    # slice and writes ~one file per bucket (otherwise every task emits
-    # a file for every bucket: tasks x buckets small files)
-    (
-        li.repartition(32, "l_orderkey")
-        .write.bucketBy(32, "l_orderkey")
-        .sortBy("l_orderkey")
-        .format("parquet")
-        .saveAsTable(t_li)
-    )
-    (
-        o.repartition(32, "o_orderkey")
-        .write.bucketBy(32, "o_orderkey")
-        .sortBy("o_orderkey")
-        .format("parquet")
-        .saveAsTable(t_ord)
-    )
-    write_sec = round(time.perf_counter() - t0, 3)
-
-    try:
-        bli, bo = spark.table(t_li), spark.table(t_ord)
-        bucketed = join_of(bli, bo)
-        plan = bucketed._jdf.queryExecution().executedPlan().toString()
-        no_shuffle = (
-            "hashpartitioning(l_orderkey" not in plan
-            and "hashpartitioning(o_orderkey" not in plan
-        )
-        b_join_sec, b_join_fold = time2(lambda: _fold(join_of(bli, bo)))
-        b_agg_sec, b_agg_fold = time2(lambda: _fold(agg_of(bli)))
-        report["bucketed"] = {
-            "one_time_write_sec": write_sec,
-            "join_sec": b_join_sec,
-            "agg_sec": b_agg_sec,
-            "join_no_exchange_on_keys": no_shuffle,
-            "join_fold_match": b_join_fold == plain_join_fold,
-            "agg_fold_match": b_agg_fold == plain_agg_fold,
-        }
-        saving = plain_join_sec - b_join_sec
-        report["breakeven_joins"] = (
-            round(write_sec / saving, 1) if saving > 0 else None
-        )
-        print("bucketed:", report["bucketed"], flush=True)
-        assert no_shuffle, "bucketed join still shuffles on a join key"
-        assert report["bucketed"]["join_fold_match"]
-        assert report["bucketed"]["agg_fold_match"]
-    finally:
-        for t in (t_li, t_ord):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["bucket_ab_hundredfold"] = {
-        "note": (
-            "bucketed co-located join economics over 60M x 15M: one-time "
-            "bucketBy(32)+sortBy write vs per-join saving of eliminating "
-            "both shuffles (join plan asserted Exchange-free on the join "
-            "keys; join and bucket-key agg fold-match the parquet-direct "
-            "legs exactly). breakeven_joins = write_sec / per-join "
-            "saving: how many downstream joins amortize the layout."
-        ),
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_provider_ab() -> None:
-    """State-store provider A/B at 100x state volume (r15).  SCALE.md has
-    ARGUED since r11 that 'at scale you swap in RocksDB'; the only
-    RocksDB lifecycle we run (stream_rocksdb_state) keys on event_type —
-    5 state rows — which exercises the provider's correctness, not its
-    regime.  This probe runs the identical per-USER count+cents
-    aggregation (150k state groups at 100x: the blowup offsets user_id
-    per replica) through a 40-chunk replay twice — once on the default
-    in-heap HDFSBackedStateStoreProvider, once on RocksDB — and
-    fold-compares the final complete-mode snapshot of BOTH against the
-    batch groupBy.  What it measures: RocksDB's per-update JNI +
-    serialization overhead vs the in-heap HashMap at a state volume the
-    heap still holds comfortably — i.e. the cost of enabling RocksDB
-    BELOW its regime.  (Its regime — state that outgrows the heap —
-    cannot be reached on this box without also crossing into
-    allocation-failure territory for the in-heap leg; the r14 eviction
-    probe and the spill sweep cover the memory-pressure side.)
-
-    State partitions come from the promoted harness default:
-    state_partitions(150_000) -> 2 (JVM aggregation state below the
-    10^6 threshold), the same sizing either provider would get in
-    production at this volume."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.session import get_session
-    from kafkastreaming_spark.sources.factory import file_event_stream
-    from kafkastreaming_spark.streaming.harness import (
-        drain,
-        scratch_dir,
-        state_partitions,
-    )
-
-    spark = get_session("scale_probe_provider")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    big_dir = _build_chunks_duckdb(
-        OUT100, os.path.join(scratch_dir(), "ks_probe_prov100"), 40
-    )
-    batch = (
-        load_table(spark, OUT100, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long")
-            .alias("cents"),
-        )
-    )
-    batch_fold = _fold(batch)
-    n_state = batch_fold[0]
-    print(f"state groups at 100x: {n_state}", flush=True)
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    base_cls = "org.apache.spark.sql.execution.streaming.state."
-    providers = {
-        "hdfs_backed_default": base_cls + "HDFSBackedStateStoreProvider",
-        "rocksdb": base_cls + "RocksDBStateStoreProvider",
-    }
-    shuffle_n = state_partitions(n_state)
-
-    report: dict[str, dict] = {}
-    for name, cls in providers.items():
-        runs = []
-        final_fold = None
-        for _ in range(2):
-            last: dict = {}
-
-            def fold_batch(df, bid, _last=last):
-                _last["fold"] = _fold(df)
-                _last["bid"] = bid
-
-            sdf = (
-                file_event_stream(spark, big_dir)
-                .groupBy("user_id")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_events"),
-                    F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                    .cast("long")
-                    .alias("cents"),
-                )
-            )
-            t0 = time.perf_counter()
-            drain(
-                spark,
-                sdf.writeStream.foreachBatch(fold_batch).outputMode("complete"),
-                timeout_sec=900,
-                shuffle_n=shuffle_n,
-                confs={conf_key: cls},
-            )
-            runs.append(round(time.perf_counter() - t0, 3))
-            final_fold = last["fold"]
-        report[name] = {
-            "provider_class": cls.rsplit(".", 1)[-1],
-            "runs_sec": runs,
-            "best_sec": min(runs),
-            "state_rows": n_state,
-            "state_partitions": shuffle_n,
-            "final_state_equals_batch": final_fold == batch_fold,
-        }
-        print(f"{name}: {report[name]}", flush=True)
-        assert report[name]["final_state_equals_batch"], name
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["state_provider_ab_hundredfold"] = {
-        "note": (
-            "HDFSBacked (in-heap) vs RocksDB state store on the SAME "
-            "150k-group count+cents aggregation over a 40-chunk 10M-row "
-            "replay, complete-mode final snapshot fold-matched against "
-            "the batch groupBy for BOTH providers. Measures RocksDB's "
-            "per-update overhead below its regime (state fits the heap); "
-            "the rule is a crossover, not a constant: pay the overhead "
-            "only when state threatens the heap - see SCALE.md r15."
-        ),
-        "hundred_rows": 10_000_000,
-        "hundred_chunks": 40,
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_spill() -> None:
-    """Spill measured directly (r15): the brief's 'spill-aware' rule —
-    size shuffle partitions so each fits in executor memory — has been
-    ARGUED in docstrings but never measured.  This probe runs in a fresh
-    process with the driver heap constrained to 2g (local mode: driver IS
-    the executor) and executes two memory-hungry shapes over the 60M-row
-    lineitem blowup at two partition sizings, SAME heap:
-
-      undersized  — shuffle.partitions=4: ~15M rows/partition,
-      rightsized  — shuffle.partitions=32: ~2M rows/partition,
-      fine        — shuffle.partitions=128: ~470k rows/partition.
-
-    At a 2g heap every leg is memory-starved (8 concurrent tasks share
-    ~1.2g of execution memory), so the finding is a TREND, not a cliff:
-    each partition-count step cuts spilled bytes and wall time because
-    the external sorter's runs fit progressively better.
-
-    AQE is disabled so the partition counts are exactly what is declared
-    (its coalescing would undo the rightsized leg).  Spill bytes are read
-    from the Spark UI REST API (localhost, per-stage
-    memoryBytesSpilled/diskBytesSpilled deltas per leg) — asserting the
-    undersized leg actually spilled and the rightsized leg spilled ~0,
-    so the artifact proves the mechanism, not just a timing difference.
-    Correctness across spill regimes is exact: the spilled sort's output
-    fold equals the input projection fold (external merge loses/dups no
-    rows) and the spilled aggregation's ~14.7M-group result folds equal
-    to the unspilled one."""
-    print("building 100x fixture ...", flush=True)
-    build_hundred()
-
-    import urllib.request
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    # built directly, NOT via get_session: the probe needs the UI (the
-    # REST API is the spill-metrics source; the tuned session disables
-    # it), a 2g heap regardless of the env's SPARK_GRAFT_DRIVER_MEM, and
-    # a REALISTIC executor shape — local[8] at 2g models a small 8-core
-    # executor; local[32] at 2g gives each of 32 concurrent tasks ~37MB
-    # of execution memory, which is an allocation-failure regime
-    # (GCLocker retry crashes observed), not a spill regime.
-    spark = (
-        SparkSession.builder.appName("scale_probe_spill")
-        .master("local[8]")
-        .config("spark.driver.memory", "2g")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    assert spark.conf.get("spark.driver.memory") == "2g", (
-        "probe needs a fresh process - an earlier session owns the JVM"
-    )
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def spill_bytes() -> tuple[int, int]:
-        url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=10) as resp:
-            stages = json.loads(resp.read())
-        return (
-            sum(s.get("memoryBytesSpilled", 0) for s in stages),
-            sum(s.get("diskBytesSpilled", 0) for s in stages),
-        )
-
-    li_path = f"{OUT100}/lineitem.parquet"
-
-    def proj():
-        return spark.read.parquet(li_path).select(
-            "l_orderkey", "l_quantity", "l_extendedprice"
-        )
-
-    def sort_shape():
-        return proj().orderBy("l_extendedprice", "l_orderkey")
-
-    def agg_shape():
-        return proj().groupBy("l_orderkey").agg(
-            F.sum("l_quantity").alias("sq"),
-            F.count(F.lit(1)).alias("n"),
-        )
-
-    # The sort MUST be materialized through a write: a fold's aggregate
-    # is order-insensitive, so Catalyst's EliminateSorts removes an
-    # orderBy under it and the sort never executes (observed: 0 bytes
-    # spilled, 1.5 s "sorts").  A write depends on row order, so the
-    # global range-partitioned sort survives under it.  The agg shape
-    # returns one row per group, so the fold both materializes it and
-    # witnesses exact equality across spill regimes.
-    shapes = {
-        "sort_60m": ("write", sort_shape),
-        "agg_15m_groups": ("fold", agg_shape),
-    }
-    legs = {"undersized_4": 4, "rightsized_32": 32, "fine_128": 128}
-
-    proj().limit(1000).count()  # warm-up: footers + codegen
-    report: dict[str, dict] = {}
-    folds: dict[tuple[str, str], tuple[int, int]] = {}
-    for shape_name, (mode, shape) in shapes.items():
-        report[shape_name] = {}
-        for leg_name, n_parts in legs.items():
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-            mem0, disk0 = spill_bytes()
-            t0 = time.perf_counter()
-            if mode == "write":
-                shape().write.format("noop").mode("overwrite").save()
-                n = None
-            else:
-                n, x = _fold(shape())
-                folds[(shape_name, leg_name)] = (n, x)
-            sec = round(time.perf_counter() - t0, 3)
-            mem1, disk1 = spill_bytes()
-            report[shape_name][leg_name] = {
-                "shuffle_partitions": n_parts,
-                "sec": sec,
-                "rows": n,
-                "memory_spilled_mb": round((mem1 - mem0) / 1e6, 1),
-                "disk_spilled_mb": round((disk1 - disk0) / 1e6, 1),
-            }
-            print(f"{shape_name}/{leg_name}: {report[shape_name][leg_name]}",
-                  flush=True)
-
-    # exact across spill regimes: the spilled (sort-fallback) aggregation
-    # must produce byte-identical groups regardless of how much it spilled
-    agg_folds = {folds[("agg_15m_groups", leg)] for leg in legs}
-    assert len(agg_folds) == 1, f"agg folds diverge across legs: {folds}"
-    report["agg_15m_groups"]["fold_match_across_regimes"] = True
-    # scan integrity after the spilled legs: the source multiset is intact
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    n_in, _ = _fold(proj())
-    assert n_in == 60_000_000
-    # the probe is only meaningful if the undersized legs really spilled
-    for shape_name in shapes:
-        spilled = report[shape_name]["undersized_4"]["disk_spilled_mb"]
-        assert spilled > 0, f"{shape_name}: undersized leg did not spill"
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["spill_ab_hundredfold"] = {
-        "note": (
-            "partition-sizing sweep at a 2g heap / local[8] over the "
-            "60M-row blowup (local mode: driver heap IS executor memory; "
-            "AQE off so the declared partition counts hold). Spill bytes "
-            "are per-leg REST-API deltas; the agg folds are exact across "
-            "all spill regimes - the external sort/agg spill path loses "
-            "nothing, it just costs. The deployment rule this measures: "
-            "shuffle partition count is how you bound per-task memory; "
-            "undersizing it does not fail, it converts memory pressure "
-            "into disk I/O and wall time, monotonically in this sweep. "
-            "The sort is materialized through a noop WRITE because a "
-            "fold's aggregate is order-insensitive and EliminateSorts "
-            "deletes the orderBy under it (first attempt measured a "
-            "sort that never ran: 0 bytes spilled)."
-        ),
-        "heap": "2g",
-        "timed": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_cosine150() -> None:
-    """VERDICT r12 item 7: run the llm_cosine_nn block-cogroup regime
-    SAFELY past the 100k gate — 150k synthetic vectors (75 replicas of
-    the sf0.1 corpus; the 60× fixture's 120k sat right at the boundary,
-    B=8).  At 150k the block count is ceil(150k/16 384)=10 → 100
-    cogroup tasks.  Equivalence is checked on a sample: the 2 000
-    original-replica query vectors get their exact NN against the FULL
-    150k corpus from the broadcast kernel, and the blocked run must
-    agree row-for-row (count+XOR fold).  Timing for both recorded."""
-    import duckdb
-
-    from kafkastreaming_spark.operators import pipeline as P
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.session import get_session
-
-    dir150 = "/tmp/scale_probe/emb150k"
-    pq = os.path.join(dir150, "embeddings.parquet")
-    if not os.path.exists(pq):
-        os.makedirs(dir150, exist_ok=True)
-        duckdb.connect().execute(
-            f"COPY (SELECT t.* REPLACE (vec_id + r * 1000000 AS vec_id) "
-            f"FROM '{BASE}/embeddings.parquet' t, range(75) g(r)) "
-            f"TO '{pq}' (FORMAT PARQUET)"
-        )
-
-    spark = get_session("scale_probe_cos150")
-    spark.sparkContext.setLogLevel("ERROR")
-    emb = load_table(spark, dir150, "embeddings").select("vec_id", "embedding")
-    n = emb.count()
-    n_blocks = P._nn_block_count(n)
-
-    from pyspark.sql import functions as F
-
-    from kafkastreaming_spark.all import QUERIES
-
-    t0 = time.perf_counter()
-    nat = QUERIES["llm_cosine_nn"](spark, dir150)
-    nat = nat.localCheckpoint(eager=True)  # materialize once, reuse below
-    blocked_sec = round(time.perf_counter() - t0, 3)
-
-    sample = emb.filter(F.col("vec_id") < 1_000_000)
-    n_sample = sample.count()
-    t0 = time.perf_counter()
-    exact_sample = P._cosine_nn_broadcast(spark, sample, dir150)
-    exact_fold = _fold(exact_sample)
-    exact_sec = round(time.perf_counter() - t0, 3)
-    nat_fold = _fold(nat.filter(F.col("vec_id") < 1_000_000))
-
-    entry = {
-        "n_vectors": n,
-        "gate": P._NN_BROADCAST_MAX_N,
-        "natural_regime": "blocked" if n > P._NN_BROADCAST_MAX_N else "broadcast",
-        "n_blocks": n_blocks,
-        "blocked_full_sec": blocked_sec,
-        "sample_rows": n_sample,
-        "broadcast_sample_sec": exact_sec,
-        "sample_count_xor_match": nat_fold == exact_fold,
-        "out_rows": _fold(nat)[0],
-    }
-    print("llm_cosine_nn_150k:", entry, flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact.setdefault("regimes", {})["llm_cosine_nn_150k"] = entry
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_binaryfile_ab() -> None:
-    """VERDICT r15 item 5 (mm_* half): measure the interaction of
-    ``binaryFile`` ingestion with the r15 small-files finding, head-on.
-
-    The media-lake entry path (source_binaryfile) reads one ~1KB file
-    per document.  Split planning charges every file
-    ``spark.sql.files.openCostInBytes`` (default 4 MB) against
-    ``maxPartitionBytes`` — under the engine's local 2 MB split default
-    that is ONE FILE PER TASK, i.e. the scheduling-floor regime the r15
-    smallfiles probe measured at 11.7x on parquet.  A/B at 10x docs
-    (50k files, same bytes): (a) engine default 2 MB splits, (b) the
-    cluster 128 MB splits with the stock 4 MB open cost, (c) 128 MB
-    splits with open cost right-sized to the actual ~1KB files — plus
-    (d) the documented remediation, reading the SAME manifest from the
-    consolidated parquet binary column (mm_ingest).  All four
-    fold-matched on (doc_id, n_bytes, sha) where comparable."""
-    from kafkastreaming_spark.all import QUERIES
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("scale_probe_binfile_ab")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    mpb_key = "spark.sql.files.maxPartitionBytes"
-    ocb_key = "spark.sql.files.openCostInBytes"
-    saved_mpb = spark.conf.get(mpb_key)
-    saved_ocb = spark.conf.get(ocb_key)
-
-    configs = {
-        "splits_2m_opencost_4m": ("2m", saved_ocb),
-        "splits_128m_opencost_4m": ("128m", saved_ocb),
-        "splits_128m_opencost_64k": ("128m", "65536"),
-    }
-    report: dict[str, dict] = {}
-    folds = {}
-    try:
-        # first call writes the 50k payload files (memoized); time the
-        # configs on warm files so only the read path differs
-        QUERIES["source_binaryfile"](spark, OUT).count()
-        for name, (mpb, ocb) in configs.items():
-            spark.conf.set(mpb_key, mpb)
-            spark.conf.set(ocb_key, ocb)
-            df = QUERIES["source_binaryfile"](spark, OUT)
-            n_part = df.rdd.getNumPartitions()
-            t0 = time.perf_counter()
-            folds[name] = _fold(df)
-            report[name] = {
-                "sec": round(time.perf_counter() - t0, 3),
-                "read_partitions": n_part,
-            }
-            print(name, report[name], flush=True)
-    finally:
-        spark.conf.set(mpb_key, saved_mpb)
-        spark.conf.set(ocb_key, saved_ocb)
-
-    # remediation: identical manifest columns off the consolidated
-    # parquet binary column (mm_ingest drops media_type/lang for the
-    # comparable projection)
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    cons = QUERIES["mm_ingest"](spark, OUT).select(
-        "doc_id",
-        "n_bytes",
-        F.col("payload_sha").alias("content_sha"),
-    )
-    folds["consolidated_parquet"] = _fold(cons)
-    report["consolidated_parquet"] = {
-        "sec": round(time.perf_counter() - t0, 3),
-        "note": "same (doc_id, n_bytes, sha256) manifest via mm_ingest "
-        "over the parquet binary column — the documented 'consolidate "
-        "immediately after ingest' rule",
-    }
-    print("consolidated_parquet", report["consolidated_parquet"], flush=True)
-
-    match = len(set(folds.values())) == 1
-    entry = {
-        "n_files": folds[next(iter(configs))][0],
-        "fold_match_all": match,
-        "runs": report,
-    }
-    print("binaryfile_smallfiles:", entry, flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["binaryfile_smallfiles"] = {
-        "note": (
-            "binaryFile ingestion x small-files tax at 10x (50k ~1KB "
-            "files, warm cache): split planning charges openCostInBytes "
-            "(4 MB default) per file, so the local 2 MB split default "
-            "degenerates to one-file-per-task; the cluster 128 MB split "
-            "packs ~30 files/task and right-sizing open cost to the "
-            "actual file size packs thousands — the remediation is "
-            "consolidating to parquet binary columns on ingest "
-            "(mm_ingest), measured last.  All runs fold-identical."
-        ),
-        **entry,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
-def run_cluster_gate() -> None:
-    """VERDICT r15 item 4: run the statistics-gated clustering keys
-    ABOVE their gates NATURALLY — no gate patching on the headline run.
-
-    Every prior regime check forced the distributed path (gate patched
-    to 0) because the 10x fixture's pair graph sat below the 10M-edge
-    gate (6.85M at best).  Here a 30x duplicate-heavy documents blowup
-    grows the SimHash Hamming-<=6 pair graph ~quadratically (clusters
-    of ~195 members) past 10M edges, so llm_dedup_clusters and
-    graph_pagerank take their distributed branches through the key's
-    OWN ``limit(gate+1)`` head check.  Equivalence: forced-local rerun
-    (numpy union-find / grid PageRank — both pytest-pinned exact
-    against the DuckDB oracle at sf0.01/sf0.1) must fold-match
-    count+XOR exactly.
-
-    Also exercises corpus.py's LM-model parquet regime naturally: a
-    10x documents blowup whose replicas append two REPLICA-UNIQUE
-    tokens per doc (' q{doc_id}a q{doc_id}b', doc_id re-keyed per
-    replica) blows the distinct (lang, bigram) count past the 100k
-    ``_LM_BROADCAST_MAX_BIGRAMS`` gate, so llm_lm_score writes the
-    model as parquet + sort-merge joins instead of collect+broadcast.
-    Forced-literals rerun (gate patched high, lm_model memo dropped)
-    must fold-match exactly — the nll9 expression tree is byte-
-    identical in both regimes."""
-    import duckdb
-
-    from kafkastreaming_spark import memo as M
-    from kafkastreaming_spark.all import QUERIES
-    from kafkastreaming_spark.operators import corpus as C
-    from kafkastreaming_spark.operators import pipeline as P
-    from kafkastreaming_spark.session import get_session
-
-    docs30 = "/tmp/scale_probe/docs30"
-    docsvocab = "/tmp/scale_probe/docsvocab"
-    con = duckdb.connect()
-    if not os.path.exists(os.path.join(docs30, "documents.parquet")):
-        os.makedirs(docs30, exist_ok=True)
-        con.execute(
-            f"COPY (SELECT t.* REPLACE (doc_id + r * 1000000 AS doc_id) "
-            f"FROM '{BASE}/documents.parquet' t, range(30) g(r)) "
-            f"TO '{docs30}/documents.parquet' (FORMAT PARQUET)"
-        )
-    if not os.path.exists(os.path.join(docsvocab, "documents.parquet")):
-        os.makedirs(docsvocab, exist_ok=True)
-        con.execute(
-            f"COPY (SELECT t.* REPLACE (doc_id + r * 1000000 AS doc_id, "
-            f"t.text || ' q' || (doc_id + r * 1000000) || 'a q' || "
-            f"(doc_id + r * 1000000) || 'b' AS text) "
-            f"FROM '{BASE}/documents.parquet' t, range(10) g(r)) "
-            f"TO '{docsvocab}/documents.parquet' (FORMAT PARQUET)"
-        )
-
-    spark = get_session("scale_probe_cluster_gate")
-    spark.sparkContext.setLogLevel("ERROR")
-    report: dict[str, dict] = {}
-
-    # --- CC / PageRank above the 10M-edge gate, naturally ---
-    n_edges = QUERIES["llm_simhash_dedup"](spark, docs30).count()
-    saved = P._CC_LOCAL_MAX_EDGES
-    for key in ("llm_dedup_clusters", "graph_pagerank"):
-        entry: dict = {
-            "fixture": "docs30 (30x duplicate-heavy, text verbatim)",
-            "n_edges": n_edges,
-            "gate": saved,
-            "natural_regime": "distributed" if n_edges > saved else "local",
-        }
-        try:
-            # NATURAL run: gate untouched — the key's own head check
-            # must route to the distributed branch.
-            t0 = time.perf_counter()
-            dist = _fold(QUERIES[key](spark, docs30))
-            entry["distributed_sec"] = round(time.perf_counter() - t0, 3)
-            P._CC_LOCAL_MAX_EDGES = n_edges + 1  # force local
-            t0 = time.perf_counter()
-            loc = _fold(QUERIES[key](spark, docs30))
-            entry["local_sec"] = round(time.perf_counter() - t0, 3)
-            entry["count_xor_match"] = dist == loc
-            entry["out_rows"] = dist[0]
-        except Exception as exc:  # noqa: BLE001
-            entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
-        finally:
-            P._CC_LOCAL_MAX_EDGES = saved
-        report[f"{key}_above_gate"] = entry
-        print(f"{key}_above_gate:", entry, flush=True)
-
-    # --- LM model past the 100k-bigram gate, naturally ---
-    n_bigrams = con.execute(
-        "SELECT COUNT(*) FROM (SELECT DISTINCT lang, tk[i] || ' ' || tk[i+1] "
-        "FROM (SELECT lang, string_split(text, ' ') AS tk FROM "
-        f"'{docsvocab}/documents.parquet'), "
-        "unnest(generate_series(1, len(tk) - 1)) AS t(i))"
-    ).fetchone()[0]
-    lm_gate = C._LM_BROADCAST_MAX_BIGRAMS
-    entry = {
-        "fixture": "docsvocab (10x, two replica-unique suffix tokens/doc)",
-        "n_distinct_bigrams": n_bigrams,
-        "gate": lm_gate,
-        "natural_regime": "parquet" if n_bigrams > lm_gate else "literals",
-    }
-    memo_key = (spark.sparkContext.applicationId, docsvocab, "lm_model")
-    try:
-        t0 = time.perf_counter()
-        nat = _fold(QUERIES["llm_lm_score"](spark, docsvocab))
-        entry["parquet_sec"] = round(time.perf_counter() - t0, 3)
-        entry["memoized_regime"] = M._store.get(memo_key, ("?",))[0]
-        # forced literals: drop the memoized parquet model, raise the gate
-        M._store.pop(memo_key, None)
-        C._LM_BROADCAST_MAX_BIGRAMS = n_bigrams + 1
-        t0 = time.perf_counter()
-        lit = _fold(QUERIES["llm_lm_score"](spark, docsvocab))
-        entry["literals_sec"] = round(time.perf_counter() - t0, 3)
-        entry["count_xor_match"] = nat == lit
-        entry["out_rows"] = nat[0]
-    except Exception as exc:  # noqa: BLE001
-        entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
-    finally:
-        C._LM_BROADCAST_MAX_BIGRAMS = lm_gate
-        M._store.pop(memo_key, None)
-    report["llm_lm_score_above_gate"] = entry
-    print("llm_lm_score_above_gate:", entry, flush=True)
-
-    from bench import current_round
-
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
-    artifact = {}
-    if os.path.exists(path):
-        with open(path) as f:
-            artifact = json.load(f)
-    artifact["cluster_gate"] = {
-        "note": (
-            "VERDICT r15 item 4: statistics-gated clustering keys run "
-            "ABOVE their gates NATURALLY (no gate patch on the headline "
-            "run) — distributed CC / unrolled PageRank / parquet LM "
-            "regimes engage through each key's own head check, fold-"
-            "matched count+bit_xor(xxhash64) against the forced "
-            "below-gate regime on identical input."
-        ),
-        "checks": report,
-    }
-    with open(path, "w") as f:
-        json.dump(artifact, f, indent=1, sort_keys=True)
-    print("wrote", path, flush=True)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--keys", nargs="*", default=None)
-    ap.add_argument("--rebuild", action="store_true")
-    ap.add_argument("--skip-regimes", action="store_true")
     ap.add_argument(
-        "--hundred",
-        action="store_true",
-        help="run the 100x wave only (HUNDRED_KEYS vs sf0.1 base)",
+        "--keys",
+        nargs="*",
+        default=None,
+        help="time only these TIMED keys; prints rows, writes no artifact",
     )
     ap.add_argument(
-        "--streaming-state",
-        action="store_true",
-        help="run the streaming-state 100x wave only (VERDICT r12 item 6)",
+        "--rebuild", action="store_true", help="rebuild the blowup fixture"
     )
     ap.add_argument(
-        "--cosine150",
+        "--skip-regimes",
         action="store_true",
-        help="run the 150k-vector blocked-regime probe only (VERDICT r12 item 7)",
-    )
-    ap.add_argument(
-        "--skew-ab",
-        action="store_true",
-        help="run the hot-key skew A/B at 100x only (r15: AQE skew split "
-        "vs straggler vs targeted salting, fold-matched)",
-    )
-    ap.add_argument(
-        "--spill",
-        action="store_true",
-        help="run the 2g-heap partition-sizing spill A/B only (r15); "
-        "must be a fresh process (sets SPARK_GRAFT_DRIVER_MEM=2g)",
-    )
-    ap.add_argument(
-        "--provider-ab",
-        action="store_true",
-        help="run the state-store provider A/B at 100x state volume "
-        "only (r15: in-heap HDFSBacked vs RocksDB, fold-matched)",
-    )
-    ap.add_argument(
-        "--bucket-ab",
-        action="store_true",
-        help="run the bucketed co-located join economics probe at 100x "
-        "only (r15: one-time bucketBy write vs per-join shuffle saving)",
-    )
-    ap.add_argument(
-        "--broadcast-xover",
-        action="store_true",
-        help="run the broadcast-vs-shuffle crossover sweep at 100x only "
-        "(r15: forced strategies over 100k..15M-row dims)",
-    )
-    ap.add_argument(
-        "--coalesce-ab",
-        action="store_true",
-        help="run the AQE partition-coalescing A/B at 100x only (r15: "
-        "over-partitioning safety)",
-    )
-    ap.add_argument(
-        "--udf-tax",
-        action="store_true",
-        help="run the Python-UDF tax probe at 100x only (r15: builtin "
-        "vs pandas_udf vs row udf vs rdd.map, outputs exactly equal)",
-    )
-    ap.add_argument(
-        "--smallfiles",
-        action="store_true",
-        help="run the small-files tax probe at 100x only (r15: 2048 "
-        "splinter files vs 32 right-sized, same 60M rows)",
-    )
-    ap.add_argument(
-        "--codec-ab",
-        action="store_true",
-        help="run the parquet codec trade-off probe at 100x only (r15: "
-        "snappy vs zstd vs uncompressed, same 60M rows)",
-    )
-    ap.add_argument(
-        "--cluster-skip",
-        action="store_true",
-        help="run the clustered-layout data-skipping probe at 100x only "
-        "(r15: random vs shipdate-clustered writes, REST input bytes)",
-    )
-    ap.add_argument(
-        "--binaryfile-ab",
-        action="store_true",
-        help="run the binaryFile small-files ingestion A/B at 10x only "
-        "(r16: split/openCost configs vs consolidated parquet)",
-    )
-    ap.add_argument(
-        "--cluster-gate",
-        action="store_true",
-        help="run the above-gate clustering regimes probe only (r16: "
-        "30x docs pushes the SimHash pair graph past the 10M-edge gate "
-        "so distributed CC/PageRank engage NATURALLY; vocab-blown docs "
-        "push the LM model past 100k bigrams into the parquet regime)",
+        help="skip the regime-gate folds (the most expensive section)",
     )
     args = ap.parse_args()
-
-    if args.binaryfile_ab:
-        run_binaryfile_ab()
-        return
-
-    if args.cluster_gate:
-        run_cluster_gate()
-        return
-
-    if args.cluster_skip:
-        run_cluster_skip()
-        return
-
-    if args.codec_ab:
-        run_codec_ab()
-        return
-
-    if args.smallfiles:
-        run_smallfiles()
-        return
-
-    if args.udf_tax:
-        run_udf_tax()
-        return
-
-    if args.coalesce_ab:
-        run_coalesce_ab()
-        return
-
-    if args.broadcast_xover:
-        run_broadcast_xover()
-        return
-
-    if args.bucket_ab:
-        run_bucket_ab()
-        return
-
-    if args.provider_ab:
-        run_provider_ab()
-        return
-
-    if args.spill:
-        run_spill()
-        return
-
-    if args.skew_ab:
-        run_skew_ab(rebuild=args.rebuild)
-        return
-
-    if args.streaming_state:
-        run_streaming_state(rebuild=args.rebuild)
-        return
-
-    if args.cosine150:
-        run_cosine150()
-        return
-
-    if args.hundred:
-        run_hundred(rebuild=args.rebuild)
-        return
 
     print("building blowup fixture ...", flush=True)
     t0 = time.perf_counter()
@@ -2925,8 +695,6 @@ def main() -> None:
                 P._CC_LOCAL_MAX_EDGES = saved
             print(f"{key}:", regimes[key], flush=True)
 
-    from bench import current_round
-
     # full-inventory accounting (VERDICT r10 item 5): every registered
     # key is either TIMED, the regime-sectioned CLUSTER_KEY, or carries
     # an explicit exemption reason — assert it so a new key without a
@@ -2943,8 +711,10 @@ def main() -> None:
             f"{unaccounted}"
         )
     assert len(TIMED) + len(exempt) + 1 == len(QUERIES)
+    if args.keys:
+        return  # subset run: the rows above are the output
 
-    path = os.path.join(REPO, f"SCALE_PROBE_r{current_round():02d}.json")
+    path = os.path.join(REPO, "SCALE_PROBE.json")
     artifact = {
         "base": BASE,
         "probe": OUT,
@@ -2971,33 +741,6 @@ def main() -> None:
             "(llm_ann_lsh, llm_ann_ivf, llm_semdedup, llm_minhash_lsh)."
         ),
     }
-    if args.keys and os.path.exists(path):
-        # subset run: MERGE the new rows into the round artifact — a
-        # wholesale overwrite would silently drop every previously
-        # probed key from the round's evidence.
-        with open(path) as f:
-            prev = json.load(f)
-        prev.setdefault("timed", {}).update(report)
-        if regimes:
-            prev.setdefault("regimes", {}).update(regimes)
-        # accounting sections are global, not per-key: refresh them
-        prev["exempt"] = exempt
-        prev["accounting"] = artifact["accounting"]
-        artifact = prev
-    elif os.path.exists(path):
-        # full run after specialized entry points (--hundred,
-        # --streaming-state, --cosine150, and the r15 A/B probes): their
-        # sections are written by different code paths — carry EVERY
-        # section this run did not itself recompute, don't drop them.
-        # (r15 lesson: a hardcoded carry list silently dropped the nine
-        # new A/B sections when the full wave ran after them.)
-        with open(path) as f:
-            prev = json.load(f)
-        for section, value in prev.items():
-            if section not in artifact:
-                artifact[section] = value
-        for k, v in prev.get("regimes", {}).items():
-            artifact.setdefault("regimes", {}).setdefault(k, v)
     with open(path, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=True)
     print("wrote", path, flush=True)

@@ -13,20 +13,18 @@ Usage::
 
     python tools/verify_local.py [--sf /root/testdata/sf0.01] [keys...]
     python tools/verify_local.py --report    # full inventory, writes
-                                             # VERIFY_LOCAL_r{N}.json
+                                             # VERIFY_LOCAL.json
 
 ``--report`` persists a machine-checkable per-key artifact (judge round-5
 "next round" item 1: every never-driver-sampled key carries local evidence
 the judge and driver can diff).
 
 ``--axis`` (VERDICT r13 item 5) folds ONE config-robustness axis into the
-run so the four r13 one-time proofs (adversarial partitioning, AQE off,
-hostile host TZ, small driver heap) hold under drift instead of decaying:
-each axis is an env knob applied BEFORE the JVM starts, and the chosen
-axis is recorded in the report JSON.  ``--axis auto`` (the ``--report``
-default) rotates by round number — r14=aqe_off, r15=tz_kiritimati,
-r16=heap3g, r17=local7, r18=splits128m, then repeats — so every fifth
-round re-proves each axis.  ``--axis none`` opts out (ad-hoc key checks).
+run so the r13 one-time proofs (adversarial partitioning, AQE off,
+hostile host TZ, small driver heap, cluster split size) can be re-proved
+as the code drifts: each axis is an env knob applied BEFORE the JVM
+starts, and the chosen axis is recorded in the report JSON.  The default
+``--axis none`` runs the session as configured.
 """
 
 from __future__ import annotations
@@ -85,8 +83,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 # Config-robustness axes (VERDICT r13 item 5).  Every knob is an env var
 # read by session.get_session (or the JVM) BEFORE the first session builds,
 # so applying an axis is valid only in a fresh process — which verify_local
-# always is.  The r13 manual sweeps proved 304/304 under each; the rotation
-# keeps that true as the code drifts.
+# always is.  The r13 manual sweeps proved 304/304 under each.
 AXES: dict[str, dict[str, str]] = {
     "aqe_off": {"SPARK_GRAFT_AQE": "false"},
     "tz_kiritimati": {"TZ": "Pacific/Kiritimati"},
@@ -98,8 +95,6 @@ AXES: dict[str, dict[str, str]] = {
     # row grouping (a 128 MB split swallows every fixture file whole).
     "splits128m": {"SPARK_GRAFT_MAX_PARTITION_BYTES": "128m"},
 }
-# r14 starts the rotation at aqe_off (VERDICT r13 item 5 names it).
-_AXIS_ORDER = ["aqe_off", "tz_kiritimati", "heap3g", "local7", "splits128m"]
 
 
 def _apply_axis(name: str) -> int | None:
@@ -118,27 +113,21 @@ def main() -> int:
     ap.add_argument(
         "--report",
         action="store_true",
-        help="write VERIFY_LOCAL_r{N}.json with per-key results",
+        help="write VERIFY_LOCAL.json with per-key results",
     )
     ap.add_argument(
         "--axis",
-        default=None,
-        choices=["auto", "none", *AXES],
-        help="config-robustness axis (default: auto with --report, "
-        "none otherwise); auto rotates by round number",
+        default="none",
+        choices=["none", *AXES],
+        help="config-robustness axis (default: none)",
     )
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
-    axis = args.axis or ("auto" if args.report else "none")
-    if axis == "auto":
-        from bench import current_round
-
-        axis = _AXIS_ORDER[(current_round() - 14) % len(_AXIS_ORDER)]
     shuffle_override = None
-    if axis != "none":
-        shuffle_override = _apply_axis(axis)
-        print(f"config-robustness axis: {axis} ({AXES[axis]})")
+    if args.axis != "none":
+        shuffle_override = _apply_axis(args.axis)
+        print(f"config-robustness axis: {args.axis} ({AXES[args.axis]})")
 
     from kafkastreaming_spark.all import ORACLES, QUERIES
     from kafkastreaming_spark.session import get_session
@@ -200,14 +189,12 @@ def main() -> int:
     if failures:
         print("failures:", " ".join(failures))
     if args.report:
-        from bench import current_round
-
-        path = os.path.join(REPO, f"VERIFY_LOCAL_r{current_round():02d}.json")
+        path = os.path.join(REPO, "VERIFY_LOCAL.json")
         with open(path, "w") as f:
             json.dump(
                 {
-                    "axis": axis,
-                    "axis_env": AXES.get(axis, {}),
+                    "axis": args.axis,
+                    "axis_env": AXES.get(args.axis, {}),
                     "sf": args.sf,
                     "n_pass": n_pass,
                     "n_fail": n_fail,
