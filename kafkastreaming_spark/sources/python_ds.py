@@ -211,6 +211,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle (~1.5 s each on this box), not row volume."""
     import ast
     import os
+    import shutil
     import uuid
 
     del sf_dir
@@ -220,30 +221,33 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
-        q = drain(
-            spark,
-            spark.readStream.format("ks_feed")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out),
-            checkpoint=ckpt,
-        )
-        # drain proof from the query's own progress metrics — a sink
-        # re-count would cost one extra job per restart
-        lp = q.lastProgress
-        if lp is None or lp["numInputRows"] == 0:
-            break
-        end = ast.literal_eval(lp["sources"][0]["endOffset"])
-        if end["offset"] >= _FEED_MAX:
-            break  # caught up to the high-watermark: drained
-    df = spark.read.parquet(out)
-    return df.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("n_msgs"),
-        F.sum("payload").cast("long").alias("sum_payload"),
-        F.min("seq").alias("min_seq"),
-        F.max("seq").alias("max_seq"),
-    )
+    try:
+        for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
+            q = drain(
+                spark,
+                spark.readStream.format("ks_feed")
+                .load()
+                .writeStream.format("parquet")
+                .option("path", out),
+                checkpoint=ckpt,
+            )
+            # drain proof from the query's own progress metrics — a sink
+            # re-count would cost one extra job per restart
+            lp = q.lastProgress
+            if lp is None or lp["numInputRows"] == 0:
+                break
+            end = ast.literal_eval(lp["sources"][0]["endOffset"])
+            if end["offset"] >= _FEED_MAX:
+                break  # caught up to the high-watermark: drained
+        df = spark.read.parquet(out)
+        return df.groupBy("bucket").agg(
+            F.count(F.lit(1)).cast("long").alias("n_msgs"),
+            F.sum("payload").cast("long").alias("sum_payload"),
+            F.min("seq").alias("min_seq"),
+            F.max("seq").alias("max_seq"),
+        ).localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 class _JsonlCommitMessage(WriterCommitMessage):
@@ -342,6 +346,7 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged-rename pattern is exactly what DBIO/magic committers do;
     per-batch output visibility is atomic at the driver commit."""
     import os
+    import shutil
     import uuid
 
     spark.dataSource.register(JsonlSinkDataSource)
@@ -355,13 +360,18 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = stream_events(spark, sf_dir, n_chunks=2).select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    drain(spark, sdf.writeStream.format("ks_jsonl_sink").option("outdir", outdir))
-    back = spark.read.schema("event_id long, cents long").json(
-        os.path.join(outdir, "batch_*.jsonl")
-    )
-    return back.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-        F.min("event_id").alias("min_event_id"),
-        F.max("event_id").alias("max_event_id"),
-    )
+    try:
+        drain(
+            spark, sdf.writeStream.format("ks_jsonl_sink").option("outdir", outdir)
+        )
+        back = spark.read.schema("event_id long, cents long").json(
+            os.path.join(outdir, "batch_*.jsonl")
+        )
+        return back.agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("cents").cast("long").alias("sum_cents"),
+            F.min("event_id").alias("min_event_id"),
+            F.max("event_id").alias("max_event_id"),
+        ).localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

@@ -21,6 +21,7 @@ import shutil
 import tempfile
 import threading
 import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -135,6 +136,49 @@ def _python_state(writer: DataStreamWriter) -> bool:
     return False
 
 
+# Checkpoint file manager for a checkpoint on local disk.  Every file a
+# query writes under its checkpoint (offsets WAL, commit log, file-source
+# log, state-store deltas, a file sink's _spark_metadata) is written to
+# a temp file and renamed into place by this one manager; the class only
+# changes which Hadoop API performs the write and the rename.  Spark's
+# default, FileContextBasedCheckpointFileManager, goes through
+# FileContext's LocalFs, whose rename stats source and destination (data
+# file and .crc side file) with getFileLinkStatus; with Hadoop's native
+# IO not loaded (NativeIO.isAvailable() is False with the pyspark 4.1.2
+# jars) that runs the `stat` command in a child process.  A py4j probe
+# on one local dir (4-vCPU VM, 200 calls per op, alternating rounds,
+# medians):
+#
+#   call                        FileContext   FileSystem
+#   CheckpointFileManager.create   0.32 ms      0.22 ms
+#   createAtomic + write + close  35.0 ms       8.6 ms
+#   renameTempFile                25.4 ms       0.25 ms
+#   exists                         0.10 ms      0.09 ms
+#   list (100 files)               2.2 ms       2.1 ms
+#
+# Both write the same data and .crc files.  One checkpoint-file write
+# allocated 20 pids under FileContext against 4 under FileSystem (the
+# pid namespace's last pid, read before and after 50 writes);
+# fc.getFileLinkStatus allocates 2 pids per call, fs.getFileStatus 0,
+# and fc.rename with and without OVERWRITE costs the same (13.1 ms).  So
+# the gap is the per-rename child processes, not the .crc files or the
+# overwrite mode.  POSIX rename is atomic on a local file system, so the
+# FileSystem manager keeps the write-temp-then-rename guarantee there.
+# A remote checkpoint (hdfs://, s3a://, ...) keeps Spark's default: see
+# SCALE.md "Streaming state".
+_LOCAL_CHECKPOINT_MANAGER = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+}
+
+
+def _is_local(path: str) -> bool:
+    """Whether ``path`` names local disk: no URI scheme, or ``file``."""
+    return urlparse(path).scheme in ("", "file")
+
+
 # Serializes the conf-scoping step of every lifecycle (see drain): the
 # session confs are shared, so two lifecycles' set/start/restore must
 # not interleave.
@@ -183,6 +227,20 @@ def drain(
     clones the session when it is created), so concurrent lifecycles
     with conflicting confs are safe and the session is left unchanged.
 
+    * A checkpoint on local disk (no URI scheme, or ``file``) is written
+      through Spark's FileSystem checkpoint manager
+      (:data:`_LOCAL_CHECKPOINT_MANAGER`): the default FileContext
+      manager runs child processes on every rename of a local file,
+      and each micro-batch renames a WAL entry, a commit entry and one
+      state delta per partition.  The write order (WAL, execute,
+      commit), temp-then-rename writes and checkpoint checksums are
+      unchanged.  On the ``stream-sink`` benchmark (4-vCPU VM, 10
+      alternating pairs) ``pass_s`` went 2.143 -> 1.535 s median
+      (-28%, 10/10 pairs); a traced pair (seed 931) cut
+      ``stream.wal_commit_ms`` 182.5 -> 37.5,
+      ``stream.commit_offsets_ms`` 154.5 -> 40.0 and
+      ``state.commit_ms`` 455.0 -> 25.5.  A remote checkpoint keeps
+      Spark's default manager.
     * ``shuffle_n`` is the state-partition count; when None,
       ``state_groups`` (expected state-store volume) picks it via
       :func:`state_partitions`, told whether the writer's analyzed
@@ -216,6 +274,7 @@ def drain(
         "spark.sql.streaming.noDataMicroBatches.enabled": str(
             no_data_batches
         ).lower(),
+        **(_LOCAL_CHECKPOINT_MANAGER if _is_local(checkpoint) else {}),
         **(confs or {}),
     }
     q = None

@@ -306,10 +306,18 @@ def test_python_stream_source_exactly_once(spark, sf_dir):
     offset lands exactly once — no seq duplicated by a replayed batch,
     none dropped by a lost offset — and the bucket rollup conserves the
     full offset range."""
+    import glob
+
     from kafkastreaming_spark.all import QUERIES
     from kafkastreaming_spark.sources.python_ds import _FEED_MAX
+    from kafkastreaming_spark.streaming.harness import scratch_dir
 
+    feeds = os.path.join(scratch_dir(), "ks_feed_*")
+    before = set(glob.glob(feeds))
     rows = QUERIES["source_python_stream"](spark, sf_dir).collect()
+    # the key removes its output and checkpoint dir once the rollup is
+    # materialized
+    assert set(glob.glob(feeds)) == before
     assert len(rows) == 8
     assert sum(r.n_msgs for r in rows) == _FEED_MAX
     assert min(r.min_seq for r in rows) == 0
@@ -342,27 +350,38 @@ def test_state_reader_matches_batch_and_partitioning(spark, sf_dir):
     assert got == expect
 
 
-def test_python_sink_two_phase_commit_clean(spark, sf_dir):
+def test_python_sink_two_phase_commit_clean(spark, sf_dir, monkeypatch):
     """sink_python_stream: after the run the sink directory holds ONLY
     committed batch files (no _tmp_ stragglers — abort/commit cleaned
-    up), and the landed rows equal the events table exactly."""
+    up), the landed rows equal the events table exactly, and the key
+    removes its sink directory once the rollup is materialized."""
+    import fnmatch
     import glob
     import os
+    import shutil
 
     from kafkastreaming_spark.all import QUERIES
     from kafkastreaming_spark.io import load_table
     from kafkastreaming_spark.streaming.harness import scratch_dir
 
+    # the sink dir is gone when the key returns: list it as it is removed
+    listed: dict[str, list[str]] = {}
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if os.path.basename(path).startswith("ks_pysink_"):
+            listed[path] = os.listdir(os.path.join(path, "out"))
+        return real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
     before = set(glob.glob(os.path.join(scratch_dir(), "ks_pysink_*")))
     row = QUERIES["sink_python_stream"](spark, sf_dir).collect()[0]
-    newdirs = (
-        set(glob.glob(os.path.join(scratch_dir(), "ks_pysink_*")))
-        - before
-    )
+    assert set(glob.glob(os.path.join(scratch_dir(), "ks_pysink_*"))) == before
+    newdirs = set(listed) - before
     assert len(newdirs) == 1
-    out = os.path.join(newdirs.pop(), "out")
-    assert not glob.glob(os.path.join(out, "_tmp_*"))  # staging cleaned
-    assert glob.glob(os.path.join(out, "batch_*.jsonl"))
+    out = listed[newdirs.pop()]
+    assert not fnmatch.filter(out, "_tmp_*")  # staging cleaned
+    assert fnmatch.filter(out, "batch_*.jsonl")
     ev = load_table(spark, sf_dir, "events")
     assert row.n_rows == ev.count()
     expect = ev.agg(
@@ -507,7 +526,97 @@ def test_state_partitions_follow_python_state_in_plan(spark, sf_dir, monkeypatch
 _LIFECYCLE_CONFS = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.streaming.checkpointFileManagerClass",
 )
+
+
+def test_drain_checkpoint_manager_local_only(spark, sf_dir, monkeypatch):
+    """drain writes a local checkpoint (none given, a plain path, or a
+    file: URI) through the FileSystem checkpoint manager, and leaves a
+    remote one (hdfs://, s3a://) on Spark's default manager."""
+    from kafkastreaming_spark.streaming import harness
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    captured: list[dict[str, str]] = []
+
+    class Started(Exception):
+        pass
+
+    def spy(session, writer, confs):
+        captured.append(dict(confs))
+        raise Started
+
+    monkeypatch.setattr(harness, "_start_scoped", spy)
+    writer = harness.stream_events(spark, sf_dir, n_chunks=2).writeStream.format(
+        "noop"
+    )
+    local = os.path.join(tempfile.gettempdir(), "ks_ckpt_never_started")
+    checkpoints = [None, local, f"file://{local}", "hdfs://nn:8020/ck", "s3a://b/ck"]
+    for ckpt in checkpoints:
+        with pytest.raises(Started):
+            harness.drain(spark, writer, checkpoint=ckpt)
+    managers = [c.get(key) for c in captured]
+    fs_manager = harness._LOCAL_CHECKPOINT_MANAGER[key]
+    assert fs_manager.endswith(".FileSystemBasedCheckpointFileManager")
+    assert managers == [fs_manager] * 3 + [None] * 2
+    assert not os.path.exists(local)
+
+
+def test_local_checkpoint_layout_and_resume(spark, sf_dir, tmp_path):
+    """A stateful lifecycle through drain with a caller-supplied local
+    checkpoint leaves a complete checkpoint on disk: the offsets WAL and
+    the commit log hold the same batch ids, the state store holds delta
+    files, and no temp file of the write-then-rename path is left.  A
+    restart on that checkpoint after one more replay chunk arrives reads
+    only the new chunk and resumes the aggregation state."""
+    import shutil
+    import uuid
+
+    from kafkastreaming_spark.sources.factory import file_event_stream
+    from kafkastreaming_spark.streaming import harness
+
+    src_all = harness.replay_chunks(spark, sf_dir, n_chunks=4)
+    chunks = sorted(f for f in os.listdir(src_all) if f.endswith(".parquet"))
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    src.mkdir()
+
+    def run() -> tuple[dict, int]:
+        name = f"sink_{uuid.uuid4().hex[:12]}"
+        agg = file_event_stream(spark, str(src)).groupBy("event_type").count()
+        writer = agg.writeStream.format("memory").queryName(name)
+        q = harness.drain(
+            spark, writer.outputMode("complete"), checkpoint=str(ckpt)
+        )
+        try:
+            got = {r.event_type: r["count"] for r in spark.table(name).collect()}
+        finally:
+            spark.catalog.dropTempView(name)
+        return got, sum(p["numInputRows"] for p in q.recentProgress)
+
+    def batch_ids(log: str) -> set[int]:
+        return {int(f) for f in os.listdir(ckpt / log) if f.isdigit()}
+
+    def expect(files: list[str]) -> dict:
+        df = spark.read.parquet(*(str(src / f) for f in files))
+        rows = df.groupBy("event_type").count().collect()
+        return {r.event_type: r["count"] for r in rows}
+
+    for f in chunks[:2]:
+        shutil.copy(os.path.join(src_all, f), src / f)
+    got, n_read = run()
+    assert got == expect(chunks[:2])
+    assert n_read == sum(got.values())
+    ids = batch_ids("offsets")
+    assert ids and ids == batch_ids("commits")
+    assert list((ckpt / "state" / "0").glob("*/*.delta"))
+    assert not [p for p in ckpt.rglob("*") if p.name.endswith(".tmp")]
+
+    shutil.copy(os.path.join(src_all, chunks[2]), src / chunks[2])
+    got, n_read = run()
+    assert n_read == spark.read.parquet(str(src / chunks[2])).count()
+    assert got == expect(chunks[:3])
+    assert batch_ids("offsets") == batch_ids("commits") > ids
+    assert not [p for p in ckpt.rglob("*") if p.name.endswith(".tmp")]
 
 
 def test_drain_timeout_releases_query_checkpoint_and_confs(spark, sf_dir):

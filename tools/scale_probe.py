@@ -24,7 +24,8 @@ Blowup recipe (pure DuckDB SQL, seed-free and replica-deterministic):
   engages NATURALLY, not via a patched threshold.
 * dims (``region nation customer supplier part``): byte-copied.
 
-Per timed key the artifact records wall seconds at both scales, the
+Per timed key the artifact records wall seconds at both scales (one
+sample after one warm call each, through ``bench.time_call``), the
 driving-table row counts, and ``per_row_ratio`` =
 (probe_sec/probe_rows)/(base_sec/base_rows) — ≤ ~2 means the key's cost
 is still linear in its input at 10×; >2 flags a super-linear plan.
@@ -500,6 +501,35 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _time_scales(spark, fn, probe_dir: str, driving_table: str, rows) -> dict:
+    """Time query ``fn`` at BASE and at ``probe_dir`` through
+    ``bench.time_call`` (one warm call, then one timed sample per scale,
+    so one-time init stays out of both) and derive ``per_row_ratio``
+    from ``rows`` = (base rows, probe rows) of the driving table.  An
+    exception is recorded in the entry, so the probe keeps going."""
+    from bench import time_call
+
+    entry: dict = {"driving_table": driving_table}
+    try:
+        _, (base_sec,) = time_call(lambda: _materialize(fn(spark, BASE)), 1)
+        _, (probe_sec,) = time_call(lambda: _materialize(fn(spark, probe_dir)), 1)
+        br, pr = rows
+        entry.update(
+            base_sec=round(base_sec, 3),
+            probe_sec=round(probe_sec, 3),
+            base_rows=br,
+            probe_rows=pr,
+            # ratio from the UNROUNDED timings: a sub-millisecond base
+            # run rounds to 0.0 and would ZeroDivisionError (ADVICE r7)
+            per_row_ratio=(
+                round((probe_sec / pr) / (base_sec / br), 3) if base_sec > 0 else None
+            ),
+        )
+    except Exception as exc:  # noqa: BLE001 — record, keep probing
+        entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
+    return entry
+
+
 def _fold(df):
     """Order-free (count, XOR of row hashes) fold — exact equality witness
     with no driver collect, safe at tens of millions of rows."""
@@ -567,58 +597,18 @@ def main() -> None:
     report: dict[str, dict] = {}
     for key in keys:
         table = TIMED[key]
-        entry: dict = {"driving_table": table}
-        try:
-            t0 = time.perf_counter()
-            _materialize(QUERIES[key](spark, BASE))
-            base_sec = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            _materialize(QUERIES[key](spark, OUT))
-            probe_sec = time.perf_counter() - t0
-            entry["base_sec"] = round(base_sec, 3)
-            entry["probe_sec"] = round(probe_sec, 3)
-            br, pr = rows[table]
-            entry["base_rows"], entry["probe_rows"] = br, pr
-            # ratio from the UNROUNDED timings: a sub-millisecond base
-            # run rounds to 0.0 and would ZeroDivisionError (ADVICE r7)
-            entry["per_row_ratio"] = (
-                round((probe_sec / pr) / (base_sec / br), 3)
-                if base_sec > 0
-                else None
-            )
-        except Exception as exc:  # noqa: BLE001 — record, keep probing
-            entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
-        report[key] = entry
-        print(f"{key}: {entry}", flush=True)
+        report[key] = _time_scales(spark, QUERIES[key], OUT, table, rows[table])
+        print(f"{key}: {report[key]}", flush=True)
 
     if not args.keys:
         # ts_gapfill on the 10×-SPAN fixture: the (event_type × hour)
         # grid — and with it the sequence() explode — grows with the
         # calendar range, which the replicate-timestamps blowup can't
         # exercise.  Same per-row-ratio discipline, span-grown input.
-        entry = {"driving_table": "events (10x time span)"}
-        try:
-            t0 = time.perf_counter()
-            _materialize(QUERIES["ts_gapfill"](spark, BASE))
-            base_sec = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            _materialize(QUERIES["ts_gapfill"](spark, OUT_SPAN))
-            probe_sec = time.perf_counter() - t0
-            br = rows["events"][0]
-            pr = load_table(spark, OUT_SPAN, "events").count()
-            entry.update(
-                base_sec=round(base_sec, 3),
-                probe_sec=round(probe_sec, 3),
-                base_rows=br,
-                probe_rows=pr,
-                per_row_ratio=(
-                    round((probe_sec / pr) / (base_sec / br), 3)
-                    if base_sec > 0
-                    else None
-                ),
-            )
-        except Exception as exc:  # noqa: BLE001
-            entry["error"] = f"{type(exc).__name__}: {exc}"[:300]
+        span_rows = (rows["events"][0], load_table(spark, OUT_SPAN, "events").count())
+        entry = _time_scales(
+            spark, QUERIES["ts_gapfill"], OUT_SPAN, "events (10x time span)", span_rows
+        )
         report["ts_gapfill_10x_span"] = entry
         print(f"ts_gapfill_10x_span: {entry}", flush=True)
 
