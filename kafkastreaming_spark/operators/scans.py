@@ -10,7 +10,6 @@ directory layouts and additionally get partition pruning for free.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,14 +21,16 @@ from kafkastreaming_spark.io import (
     spread,
 )
 from kafkastreaming_spark.registry import query
+from kafkastreaming_spark.streaming.harness import process_scratch
 
 
 def _sink_path(name: str, sf_dir: str) -> str:
-    """Per-process, per-scale-factor sink dir: concurrent runs (pytest +
-    driver harness, or different SFs) must never overwrite each other
+    """Per-process, per-scale-factor sink dir under the harness scratch
+    root, removed at process exit: concurrent runs (pytest + driver
+    harness, or different SFs) must never overwrite each other
     mid-read-back."""
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), f"{name}_{sf_tag}_{os.getpid()}")
+    return process_scratch(f"{name}_{sf_tag}")
 
 
 @query(

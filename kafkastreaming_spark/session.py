@@ -15,6 +15,7 @@ Two paths:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -47,6 +48,38 @@ _RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Local Hadoop file system for `file://` (kafkastreaming_spark/jvm/,
+# committed source and jar).  Hadoop's RawLocalFileSystem.setPermission
+# runs `chmod` in a child process when native IO is not loaded
+# (NativeIO.isAvailable() is False with the pyspark 4.1.2 jars), and it
+# is called on every non-append create and every new directory; with
+# .crc side files a checkpoint or parquet-sink file is two creates.
+# NioLocalFileSystem is LocalFileSystem (same .crc files) over a raw
+# file system that sets the same bits with
+# java.nio.file.Files.setPosixFilePermissions.  A py4j probe (4-vCPU
+# VM, 50 calls, median) of one FileSystem create + write + close: 7.3 ms
+# and 4 pids (two chmod processes and their stderr-reader threads) ->
+# 1.0 ms and 0 pids; a 3-level mkdirs 6 pids -> 0.  Pids allocated per
+# warm sink_memory call went 157-220 -> 11-13, per sink_parquet call
+# 31-35 -> 12-17 (the pid namespace's last pid, read around each call).
+# The `file` scheme otherwise resolves to Hive's ProxyLocalFileSystem
+# (registered by hive-exec's service file), a LocalFileSystem whose
+# rename refuses to replace an existing file.
+_LOCAL_FS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "nio-localfs.jar")
+_LOCAL_FS_CONFS: dict[str, str] = {
+    "spark.driver.extraClassPath": _LOCAL_FS_JAR,
+    "spark.hadoop.fs.file.impl": "kafkastreaming_spark.jvm.NioLocalFileSystem",
+}
+
+
+def _in_driver_jvm(master: str) -> bool:
+    """Whether ``master`` runs its executors inside the driver JVM
+    (``local``, ``local[N]``, ``local[*]``, ``local[N,F]``) — so a jar on
+    the driver classpath reaches every task.  ``local-cluster`` and
+    cluster masters launch executor JVMs that lack it."""
+    return re.fullmatch(r"local(\[[^\]]*\])?", master) is not None
+
+
 def session_cores() -> int:
     """Executor-core count for scale-adaptive sizing: ``SPARK_GRAFT_CPUS``
     if set, else the host's CPU count.  The local master, the shuffle
@@ -68,6 +101,10 @@ def _runtime_confs() -> dict[str, str]:
 
 def prepare(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an externally-owned session (idempotent).
+
+    Only runtime-settable confs: the session keeps the local file system
+    it was launched with, not :data:`_LOCAL_FS_CONFS`, because a
+    running JVM's classpath cannot take the jar.
 
     Note one deliberate bytes-on-disk side effect: this sets
     ``spark.sql.parquet.compression.codec=zstd`` session-wide, so any
@@ -99,6 +136,12 @@ def get_session(
     caller passes its own master/deploy config and these settings still
     apply (AQE re-plans shuffles at runtime, which is the main lever that
     carries a plan from local[32] to 1000 executors).
+
+    A local master (executors in the driver JVM) also gets
+    :data:`_LOCAL_FS_CONFS`: `file://` writes set permission bits
+    through java.nio instead of a `chmod` child process.  Other masters
+    keep Hadoop's local file system: the jar is not on remote executors,
+    and their checkpoints and outputs belong on a cluster file system.
     """
     cpus = session_cores()
     master = master or f"local[{cpus}]"
@@ -137,5 +180,8 @@ def get_session(
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)
+    if _in_driver_jvm(master):
+        for k, v in _LOCAL_FS_CONFS.items():
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return prepare(spark)

@@ -16,6 +16,7 @@ Kafka broker (none exists in this sandbox — SURVEY.md §7.5).
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -49,6 +50,28 @@ def scratch_dir() -> str:
     if cand and os.path.isdir(cand) and os.access(cand, os.W_OK):
         return cand
     return tempfile.gettempdir()
+
+
+# Per-process scratch dirs that outlive the call that wrote them
+# (shared replay chunks, sink outputs read back lazily); removed when
+# the process exits.
+_PROCESS_DIRS: set[str] = set()
+
+
+def process_scratch(name: str) -> str:
+    """``<scratch_dir()>/<name>_<pid>``, removed at process exit.  The
+    pid keeps concurrent processes (pytest and a bench run, say) from
+    overwriting each other's dirs mid-read-back."""
+    path = os.path.join(scratch_dir(), f"{name}_{os.getpid()}")
+    _PROCESS_DIRS.add(path)
+    return path
+
+
+@atexit.register
+def _remove_process_dirs() -> None:
+    for path in _PROCESS_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+
 
 # State/shuffle partition counts for replay streaming queries.  A
 # streaming state store costs O(partitions) per micro-batch per stateful
@@ -162,8 +185,16 @@ def _python_state(writer: DataStreamWriter) -> bool:
 # fc.getFileLinkStatus allocates 2 pids per call, fs.getFileStatus 0,
 # and fc.rename with and without OVERWRITE costs the same (13.1 ms).  So
 # the gap is the per-rename child processes, not the .crc files or the
-# overwrite mode.  POSIX rename is atomic on a local file system, so the
-# FileSystem manager keeps the write-temp-then-rename guarantee there.
+# overwrite mode.  The 4 left under FileSystem were the `chmod` child
+# process (plus its stderr-reader thread) that Hadoop's
+# RawLocalFileSystem.setPermission runs on each create of the data file
+# and of its .crc file; a local-master session from session.get_session
+# sets them through java.nio instead (session._LOCAL_FS_CONFS), which
+# took the write to 1.0 ms and 0 pids.  That file system does not reach
+# FileContext, so the FileSystem manager is still what avoids the
+# `stat` children of FileContext's rename.  POSIX rename is atomic on a
+# local file system, so the FileSystem manager keeps the
+# write-temp-then-rename guarantee there.
 # A remote checkpoint (hdfs://, s3a://, ...) keeps Spark's default: see
 # SCALE.md "Streaming state".
 _LOCAL_CHECKPOINT_MANAGER = {
@@ -234,8 +265,11 @@ def drain(
       and each micro-batch renames a WAL entry, a commit entry and one
       state delta per partition.  The write order (WAL, execute,
       commit), temp-then-rename writes and checkpoint checksums are
-      unchanged.  On the ``stream-sink`` benchmark (4-vCPU VM, 10
-      alternating pairs) ``pass_s`` went 2.143 -> 1.535 s median
+      unchanged.  The create of each file and of its .crc runs no
+      child process only under the java.nio local file system that
+      ``session.get_session`` registers for local masters; under
+      Hadoop's stock one each create runs `chmod`.  On the
+      ``stream-sink`` benchmark (4-vCPU VM, 10 alternating pairs) ``pass_s`` went 2.143 -> 1.535 s median
       (-28%, 10/10 pairs); a traced pair (seed 931) cut
       ``stream.wal_commit_ms`` 182.5 -> 37.5,
       ``stream.commit_offsets_ms`` 154.5 -> 40.0 and
@@ -318,11 +352,10 @@ def replay_chunks(
     the rows-only bench paid a toPandas + parquet rewrite per
     invocation: ~12 rewrites of the full events table per repeat at
     sf0.1 (r8 roadmap item)."""
-    out = os.path.join(
-        scratch_dir(),
+    out = process_scratch(
         "ks_stream_shared_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
-        f"_{int(late_fraction * 10_000)}_{os.getpid()}",
+        f"_{int(late_fraction * 10_000)}"
     )
     with _REPLAY_LOCK:
         if out not in _REPLAY_BUILT:

@@ -39,6 +39,7 @@ from kafkastreaming_spark.streaming.harness import (
     console_sink,
     drain,
     foreach_batch_collect,
+    process_scratch,
     replay_chunks,
     run_to_memory,
     scratch_dir,
@@ -1082,10 +1083,8 @@ def _ddww_chunks(
     # outside the lock: replay_chunks takes the (non-re-entrant)
     # _REPLAY_LOCK itself
     base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    out = os.path.join(
-        scratch_dir(),
-        f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{n_chunks}_{os.getpid()}",
+    out = process_scratch(
+        f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
     )
     with _DDWW_LOCK:
         if out not in _DDWW_BUILT:

@@ -41,12 +41,12 @@ def test_sink_memory_complete_equals_batch(spark, sf_dir):
         assert out[et]["n_events"] == row["n_events"]
 
 
-def test_sink_exactly_once_idempotent_retry(spark, sf_dir):
+def test_sink_exactly_once_idempotent_retry(spark, sf_dir, tmp_path):
     """The exactly-once recipe's core claim: re-writing the SAME batch id
     (a retry after failure) replaces its output instead of appending —
     read-back row count is unchanged after a double write."""
     ev = load_table(spark, sf_dir, "events").limit(100)
-    out = os.path.join(tempfile.gettempdir(), f"ks_e1_test_{os.getpid()}")
+    out = str(tmp_path / "e1")
     for _ in range(2):  # initial write + simulated retry of batch 0
         ev.write.mode("overwrite").parquet(os.path.join(out, "batch=0"))
     assert spark.read.parquet(out).count() == 100
@@ -63,6 +63,47 @@ def test_sink_exactly_once_idempotent_retry(spark, sf_dir):
         .collect()
     }
     assert got == want
+
+
+_SCRATCH_CHILD = """
+import json, os, sys
+from kafkastreaming_spark.all import QUERIES
+from kafkastreaming_spark.session import get_session
+
+spark = get_session("scratch_exit", master="local[2]", shuffle_partitions=2)
+for key in ("sink_parquet", "sink_memory"):
+    QUERIES[key](spark, sys.argv[1]).collect()
+print(json.dumps([e for e in os.listdir(sys.argv[2]) if e.startswith("ks_")]))
+spark.stop()
+"""
+
+
+def test_process_scratch_removed_at_exit(sf_dir, tmp_path):
+    """A process that runs a parquet sink and a replayed stream leaves
+    no ks_* scratch dir behind once it exits: the sink output and the
+    shared replay chunks live under SPARK_GRAFT_SCRATCH and are removed
+    at exit."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SCRATCH": str(tmp_path),
+        "TMPDIR": str(tmp_path),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+        "PYTHONPATH": repo,
+    }
+    run = subprocess.run(
+        [sys.executable, "-c", _SCRATCH_CHILD, sf_dir, str(tmp_path)],
+        env=env, cwd=repo, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    during = json.loads(run.stdout.strip().splitlines()[-1])
+    assert any(e.startswith("ks_spark_sink_parquet_") for e in during)
+    assert any(e.startswith("ks_stream_shared_") for e in during)
+    assert [e for e in os.listdir(tmp_path) if e.startswith("ks_")] == []
 
 
 def test_sink_console_foreachbatch_multi_batch(spark, sf_dir):
