@@ -283,12 +283,12 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if n_distinct > gate:
             # open vocabulary: the model is fact-sized — write it as
-            # parquet artifacts, never collect it to the driver
-            import tempfile
+            # parquet artifacts, never collect it to the driver.  The
+            # memo lives as long as the process, and so does this dir.
+            from kafkastreaming_spark.streaming.harness import process_scratch
 
             base = os.path.join(
-                tempfile.gettempdir(),
-                "ks_lm_model",
+                process_scratch("ks_lm_model"),
                 spark.sparkContext.applicationId,
                 hashlib.md5(sf_dir.encode()).hexdigest()[:12],
             )

@@ -68,10 +68,12 @@ def test_sink_exactly_once_idempotent_retry(spark, sf_dir, tmp_path):
 _SCRATCH_CHILD = """
 import json, os, sys
 from kafkastreaming_spark.all import QUERIES
+from kafkastreaming_spark.operators import corpus
 from kafkastreaming_spark.session import get_session
 
 spark = get_session("scratch_exit", master="local[2]", shuffle_partitions=2)
-for key in ("sink_parquet", "sink_memory"):
+corpus._LM_BROADCAST_MAX_BIGRAMS = 0  # open-vocabulary LM: parquet model
+for key in ("sink_parquet", "sink_memory", "llm_lm_score"):
     QUERIES[key](spark, sys.argv[1]).collect()
 print(json.dumps([e for e in os.listdir(sys.argv[2]) if e.startswith("ks_")]))
 spark.stop()
@@ -79,10 +81,10 @@ spark.stop()
 
 
 def test_process_scratch_removed_at_exit(sf_dir, tmp_path):
-    """A process that runs a parquet sink and a replayed stream leaves
-    no ks_* scratch dir behind once it exits: the sink output and the
-    shared replay chunks live under SPARK_GRAFT_SCRATCH and are removed
-    at exit."""
+    """A process that runs a parquet sink, a replayed stream and the
+    open-vocabulary LM leaves no ks_* scratch dir behind once it exits:
+    the sink output, the shared replay chunks and the parquet LM model
+    live under SPARK_GRAFT_SCRATCH and are removed at exit."""
     import json
     import subprocess
     import sys
@@ -93,7 +95,6 @@ def test_process_scratch_removed_at_exit(sf_dir, tmp_path):
         "SPARK_GRAFT_SCRATCH": str(tmp_path),
         "TMPDIR": str(tmp_path),
         "SPARK_GRAFT_DRIVER_MEM": "1g",
-        "PYTHONPATH": repo,
     }
     run = subprocess.run(
         [sys.executable, "-c", _SCRATCH_CHILD, sf_dir, str(tmp_path)],
@@ -103,6 +104,7 @@ def test_process_scratch_removed_at_exit(sf_dir, tmp_path):
     during = json.loads(run.stdout.strip().splitlines()[-1])
     assert any(e.startswith("ks_spark_sink_parquet_") for e in during)
     assert any(e.startswith("ks_stream_shared_") for e in during)
+    assert any(e.startswith("ks_lm_model_") for e in during)
     assert [e for e in os.listdir(tmp_path) if e.startswith("ks_")] == []
 
 
