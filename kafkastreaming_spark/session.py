@@ -78,7 +78,10 @@ _LOCAL_FS_CONFS: dict[str, str] = {
 # $SPARK_HOME/python/lib/pyspark.zip re-read that directory 16 times per
 # task, a fixed 0.13-0.25 s (a trivial two-task mapInPandas job
 # 0.43 -> 0.17 s, median of 9 warm calls, local[2] on a 4-vCPU VM;
-# llm-pipeline benchmark pass_s 1.089 -> 0.749 s, 10 alternating pairs).  A
+# llm-pipeline benchmark pass_s 1.089 -> 0.749 s, 10 alternating pairs).
+# The daemon also drops pyspark.zip from its sys.path when the installed
+# pyspark holds the same files, so workers load cached bytecode instead
+# of compiling pyspark from the zip in every new application.  A
 # custom daemon module makes every Python task, not just the package's
 # UDFs, depend on importing the package, so the workers also
 # get its parent dir on PYTHONPATH (PythonWorkerFactory merges it with

@@ -1,7 +1,9 @@
 """The Python worker daemon of local sessions
-(``kafkastreaming_spark/pydaemon.py``): a zip archive's directory is
-re-read by ``importlib.invalidate_caches()`` only when the archive
-changed, and workers still see new and rewritten archives."""
+(``kafkastreaming_spark/pydaemon.py``): workers import the installed
+pyspark when it holds the same files as Spark's pyspark.zip, a zip
+archive's directory is re-read by ``importlib.invalidate_caches()`` only
+when the archive changed, and workers still see new and rewritten
+archives."""
 
 from __future__ import annotations
 
@@ -159,8 +161,8 @@ def _worker_report(df):
 def test_session_workers_run_pydaemon(spark):
     rows = _worker_report(spark.range(4, numPartitions=2))
     assert rows and all(r["patched"] for r in rows)
-    # every zip the worker imports from (pyspark.zip and py4j's under
-    # $SPARK_HOME) has its signature recorded
+    # every zip the worker imports from (py4j's under $SPARK_HOME) has
+    # its signature recorded
     assert all(r["unrecorded"] == 0 for r in rows)
 
 
@@ -183,6 +185,82 @@ def test_add_py_file_after_workers_started(spark, tmp_path):
         assert {r["v"] for r in df.mapInPandas(late, "v long").collect()} == {42}
     finally:
         sys.modules.pop(name, None)
+
+
+def test_session_workers_import_installed_pyspark(spark):
+    """Workers load the pyspark the driver imported (cached bytecode),
+    not the source-only copy in $SPARK_HOME/python/lib/pyspark.zip."""
+    import pyspark
+
+    def where(it):
+        import pyspark as worker_pyspark
+
+        for _ in it:
+            yield pd.DataFrame({"file": [worker_pyspark.__file__]})
+
+    df = spark.range(4, numPartitions=2)
+    files = {r["file"] for r in df.mapInPandas(where, "file string").collect()}
+    assert files == {pyspark.__file__}
+    assert ".zip" not in pyspark.__file__
+
+
+_SPARK_SOURCES = {
+    "pyspark/__init__.py": "VERSION = 1\n",
+    "pyspark/daemon.py": "def manager():\n    pass\n",
+    "pyspark/sql/__init__.py": "",
+}
+
+
+def _layout(tmp_path, zipped=None, installed=None):
+    """A pyspark.zip holding ``zipped`` plus a test module and a benchmark
+    module, and a site dir holding ``installed`` (no site package when
+    None); returns the two ``sys.path`` entries."""
+    zipped = dict(_SPARK_SOURCES if zipped is None else zipped)
+    zipped["pyspark/tests/test_worker.py"] = "X = 1\n"
+    zipped["pyspark/sql/streaming/benchmark/bench.py"] = "X = 1\n"
+    archive = str(tmp_path / "pyspark.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        for name, src in zipped.items():
+            z.writestr(name, src)
+    site = tmp_path / "site"
+    site.mkdir()
+    for name, src in (installed or {}).items():
+        (site / name).parent.mkdir(parents=True, exist_ok=True)
+        (site / name).write_text(src)
+    return [archive, str(site)]
+
+
+def _changed(name, src):
+    return {**_SPARK_SOURCES, name: src}
+
+
+@pytest.fixture
+def own_importer_cache(monkeypatch):
+    """Path-entry finders made by a test stay out of the session's."""
+    monkeypatch.setattr(sys, "path_importer_cache", {})
+
+
+def test_identical_zip_dropped(tmp_path, own_importer_cache):
+    path = _layout(tmp_path, installed=_SPARK_SOURCES)
+    assert pydaemon.prefer_installed(path)
+    assert path == [str(tmp_path / "site")]
+    assert str(tmp_path / "pyspark.zip") not in sys.path_importer_cache
+
+
+@pytest.mark.parametrize(
+    "zipped, installed",
+    [
+        (None, _changed("pyspark/daemon.py", "def manager():\n    return 1\n")),
+        (_changed("pyspark/sql/extra.py", "X = 1\n"), _SPARK_SOURCES),
+        (None, None),
+    ],
+    ids=["changed_source", "zip_only_module", "no_installed_pyspark"],
+)
+def test_mismatched_zip_kept(tmp_path, own_importer_cache, zipped, installed):
+    path = _layout(tmp_path, zipped, installed)
+    before = list(path)
+    assert not pydaemon.prefer_installed(path)
+    assert path == before
 
 
 _NO_PATH_CHILD = """
