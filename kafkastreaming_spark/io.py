@@ -165,10 +165,6 @@ def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
     return load_table(spark, sf_dir, name).count()
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # ---------------------------------------------------------------------------
 # Input-skew repair (optimization guide §2.5): parquet cannot be split below
 # row-group granularity, so a table written as one file with one row group is

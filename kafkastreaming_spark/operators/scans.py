@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,22 +148,23 @@ def _bucketed_join(
     # must be serialized (Derby's embedded metastore is single-writer).
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write(args) -> None:
-        df, key, table = args
+    def _write(df, key, table) -> None:
         df.write.mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(
             table
         )
 
+    # Each write runs under its own copy of the caller's local properties
+    # (job group included); one copy shared by both threads would mix up
+    # their SQL execution ids.
     with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                _write,
-                (
-                    (orders, "o_custkey", t_ord),
-                    (customer, "c_custkey", t_cust),
-                ),
+        for fut in [
+            pool.submit(inheritable_thread_target(spark)(_write), *args)
+            for args in (
+                (orders, "o_custkey", t_ord),
+                (customer, "c_custkey", t_cust),
             )
-        )
+        ]:
+            fut.result()
     bo, bc = spark.table(t_ord), spark.table(t_cust)
     joined = (
         bo.hint("merge")
@@ -324,20 +326,20 @@ def scan_union_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     # paths, same rows); A/B 4/4 pairs faster, median ratio 0.68.
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write(args) -> None:
-        cols, path = args
+    def _write(cols, path) -> None:
         li.select(*cols).write.mode("overwrite").parquet(path)
 
+    # one copy of the caller's local properties per write, as in
+    # _bucketed_join
     with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                _write,
-                (
-                    (("l_orderkey", "l_quantity"), a_path),
-                    (("l_orderkey", "l_extendedprice"), b_path),
-                ),
+        for fut in [
+            pool.submit(inheritable_thread_target(spark)(_write), *args)
+            for args in (
+                (("l_orderkey", "l_quantity"), a_path),
+                (("l_orderkey", "l_extendedprice"), b_path),
             )
-        )
+        ]:
+            fut.result()
     merged = spark.read.option("mergeSchema", "true").parquet(a_path, b_path)
     return merged.agg(
         F.count(F.lit(1)).alias("n_rows"),

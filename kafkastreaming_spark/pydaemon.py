@@ -1,47 +1,35 @@
-"""Python worker daemon for local sessions: Spark's ``pyspark.daemon``,
-importing pyspark from bytecode-cached sources where it can, with a
-zip-import cache that survives ``importlib.invalidate_caches()``.
+"""Start-up hook of the Python workers of local sessions: pyspark
+imported from bytecode-cached sources where it can be, and a zip-import
+cache that survives ``importlib.invalidate_caches()`` (timings in
+SCALE.md "Python worker boundary").
+
+Where it runs.  ``session.get_session`` puts ``_worker_site/`` on the
+workers' PYTHONPATH for masters whose workers run on this host, and
+``site`` imports the ``sitecustomize`` there at start-up of every
+``pyspark.daemon``: the UDF daemon, and the Python data-source planner,
+writer and streaming-sink daemons, which Spark starts under its stock
+daemon module whatever the session's conf says.  :func:`install` runs
+there before anything imports pyspark, so before the daemon forks.
 
 Bytecode.  Spark puts ``$SPARK_HOME/python/lib/pyspark.zip`` first on
-the daemon's ``sys.path``.  That zip holds no ``.pyc`` and zipimport
-never writes bytecode, so every new application's daemon compiled
-``pyspark.daemon``, ``pyspark.worker`` and their imports from source,
-and each forked worker compiled its lazy ``pyspark.sql.*`` imports
-again.  ``import pyspark.daemon, pyspark.worker`` took 1.35-1.45 s from
-the zip and 0.27-0.30 s from the interpreter's installed pyspark, which
-has ``__pycache__`` (5 fresh interpreters each, 4-vCPU VM); the cold
-first ``mapInPandas`` job of a fresh application (applications 2-4 of
-one process, ``local[2]``) went 1.82-2.50 s -> 1.13-1.29 s.
-:func:`prefer_installed` drops the zip from ``sys.path`` when the
-pyspark that the rest of ``sys.path`` resolves holds every file of the
-zip outside its ``tests/`` and ``benchmark/`` dirs, each with the CRC-32
-that the zip's directory records (about 30 ms).  A file that differs or
-is missing, a zip member outside ``pyspark/``, no installed pyspark, or
-an unreadable file keeps ``sys.path`` as Spark built it.
+the daemon's ``sys.path``.  The zip holds no ``.pyc`` and zipimport
+never writes bytecode, so a daemon and its workers importing from it
+compile pyspark from source.  :func:`prefer_installed` drops the zip
+when the pyspark that the rest of ``sys.path`` resolves holds every file
+of the zip outside its ``tests/`` and ``benchmark/`` dirs, each with the
+CRC-32 that the zip's directory records (about 30 ms).  A file that
+differs or is missing, a zip member outside ``pyspark/``, no installed
+pyspark, or an unreadable file keeps ``sys.path`` as Spark built it.
 
-Zip-import cache.  Every Python task runs
-``pyspark.worker_util.setup_spark_files``, which ends with
-``importlib.invalidate_caches()``.  On CPython 3.11 that calls
-``zipimport.zipimporter.invalidate_caches`` on every zipimporter in
-``sys.path_importer_cache``, and each call re-reads its archive's
-central directory.  A worker importing pyspark from pyspark.zip held 16
-of them (one per sub-package, plus py4j's zip), so each task re-read the
-same two directories 16 times: 0.13-0.25 s per Python task on a 4-vCPU
-VM.  Workers that import the installed pyspark still hold py4j's zip and
-the spark-core jar: without the cache their per-task
-``importlib.invalidate_caches()`` took 101-103 ms against 0.1 ms, and a
-warm trivial ``mapInPandas`` job 0.35-0.36 s against 0.19-0.23 s.
-
-:func:`invalidate_caches` keeps an archive's cached directory while its
-``(st_dev, st_ino, st_size, st_mtime_ns)`` is unchanged since its last
-read, and calls CPython's own method for a changed, new or unreadable
-archive.  :func:`install` patches it in before :func:`pyspark.daemon.
-manager` forks the workers, so every worker inherits it.
-
-``session.get_session`` sets ``spark.python.daemon.module`` to this
-module for masters whose workers run on this host (SCALE.md "Python
-worker boundary").  Spark starts it as
-``python -m kafkastreaming_spark.pydaemon <worker module>``.
+Zip-import cache.  Every Python task ends
+``pyspark.worker_util.setup_spark_files`` with
+``importlib.invalidate_caches()``, which on CPython 3.11 makes every
+zipimporter in ``sys.path_importer_cache`` re-read its archive's central
+directory; workers importing the installed pyspark still hold py4j's zip
+and the spark-core jar.  :func:`invalidate_caches` keeps an archive's
+cached directory while its ``(st_dev, st_ino, st_size, st_mtime_ns)`` is
+unchanged since its last read, and calls CPython's own method for a
+changed, new or unreadable archive.
 """
 
 from __future__ import annotations
@@ -89,13 +77,23 @@ def invalidate_caches(self: zipimport.zipimporter) -> None:
         _read_at.pop(self.archive, None)
 
 
-def install() -> None:
-    """Patch :func:`invalidate_caches` in and read each imported archive
-    once, so forked workers start with every signature recorded."""
-    zipimport.zipimporter.invalidate_caches = invalidate_caches
+def _record_archives() -> None:
+    """Read each imported archive whose signature is not recorded yet;
+    a recorded one costs one ``stat``."""
     for finder in list(sys.path_importer_cache.values()):
         if isinstance(finder, zipimport.zipimporter):
             finder.invalidate_caches()
+
+
+def install() -> None:
+    """The workers' start-up hook: import pyspark from bytecode where
+    :func:`prefer_installed` allows, patch :func:`invalidate_caches` in,
+    and record every imported archive before each fork, so forked
+    workers start with every signature recorded.  Writes nothing to
+    stdout, where ``pyspark.daemon`` sends its port."""
+    prefer_installed(sys.path)
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    os.register_at_fork(before=_record_archives)
 
 
 def _same_files(archive: str, prefix: str, package: str) -> bool:
@@ -142,15 +140,3 @@ def prefer_installed(path: list[str]) -> bool:
     sys.path_importer_cache.pop(loader.archive, None)
     return True
 
-
-if __name__ == "__main__":
-    # Patch through the package module, so workers that import it see
-    # the same function and signatures.
-    from kafkastreaming_spark import pydaemon
-
-    pydaemon.prefer_installed(sys.path)
-
-    import pyspark.daemon
-
-    pydaemon.install()
-    pyspark.daemon.manager()

@@ -71,26 +71,18 @@ _LOCAL_FS_CONFS: dict[str, str] = {
     "spark.hadoop.fs.file.impl": "kafkastreaming_spark.jvm.NioLocalFileSystem",
 }
 
-# Python workers of a local master start from the package's own daemon
-# (kafkastreaming_spark/pydaemon.py), which keeps each zip archive's
-# directory cached across the importlib.invalidate_caches() that every
-# Python task runs.  Without it a worker importing pyspark from
-# $SPARK_HOME/python/lib/pyspark.zip re-read that directory 16 times per
-# task, a fixed 0.13-0.25 s (a trivial two-task mapInPandas job
-# 0.43 -> 0.17 s, median of 9 warm calls, local[2] on a 4-vCPU VM;
-# llm-pipeline benchmark pass_s 1.089 -> 0.749 s, 10 alternating pairs).
-# The daemon also drops pyspark.zip from its sys.path when the installed
-# pyspark holds the same files, so workers load cached bytecode instead
-# of compiling pyspark from the zip in every new application.  A
-# custom daemon module makes every Python task, not just the package's
-# UDFs, depend on importing the package, so the workers also
-# get its parent dir on PYTHONPATH (PythonWorkerFactory merges it with
-# Spark's own path and the environment's PYTHONPATH); they otherwise
-# start from the JVM's cwd.
-_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Python workers of a local master get _worker_site/ on their PYTHONPATH,
+# so every daemon Spark starts for them (UDF and Python data-source
+# workers alike) runs kafkastreaming_spark.pydaemon.install at start-up:
+# pyspark from cached bytecode instead of $SPARK_HOME/python/lib/pyspark.zip,
+# and zip archives' directories cached across the importlib.
+# invalidate_caches() of every Python task.  The package's parent dir is
+# on the same path, so the hook and the package's UDFs import from any cwd
+# (PythonWorkerFactory merges it with Spark's path and the env PYTHONPATH).
+_WORKER_SITE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_site")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(_WORKER_SITE))
 _LOCAL_WORKER_CONFS: dict[str, str] = {
-    "spark.python.daemon.module": "kafkastreaming_spark.pydaemon",
-    "spark.executorEnv.PYTHONPATH": _PACKAGE_PARENT,
+    "spark.executorEnv.PYTHONPATH": os.pathsep.join([_WORKER_SITE, _PACKAGE_PARENT]),
 }
 
 
@@ -128,10 +120,9 @@ def prepare(spark: SparkSession) -> SparkSession:
 
     Only runtime-settable confs: the session keeps the local file system
     it was launched with, not :data:`_LOCAL_FS_CONFS`, because a
-    running JVM's classpath cannot take the jar.  It also keeps its
-    Python worker daemon and worker environment, not
-    :data:`_LOCAL_WORKER_CONFS`: Spark reads both from the SparkConf
-    fixed at launch.
+    running JVM's classpath cannot take the jar.  Its Python workers
+    run without the start-up hook of :data:`_LOCAL_WORKER_CONFS`: Spark
+    reads the workers' environment from the SparkConf fixed at launch.
 
     Note one deliberate bytes-on-disk side effect: this sets
     ``spark.sql.parquet.compression.codec=zstd`` session-wide, so any
@@ -170,14 +161,12 @@ def get_session(
     keep Hadoop's local file system: the jar is not on remote executors,
     and their checkpoints and outputs belong on a cluster file system.
 
-    The same masters get :data:`_LOCAL_WORKER_CONFS`: Python workers
-    fork from ``kafkastreaming_spark.pydaemon``, which keeps zip
-    archives' directories cached across the per-task
-    ``importlib.invalidate_caches()`` (a fixed 0.13-0.25 s per Python
-    task before), and the package's parent dir is on the workers'
-    PYTHONPATH, so they import it from any cwd.  Other masters keep
-    Spark's stock daemon, because their executors may not have the
-    package installed.
+    The same masters get :data:`_LOCAL_WORKER_CONFS`: every Python
+    worker runs ``kafkastreaming_spark.pydaemon.install`` at start-up
+    (pyspark from cached bytecode, zip archives' directories cached
+    across the per-task ``importlib.invalidate_caches()``), and imports
+    the package from any cwd.  Other masters' workers run stock, because
+    their executors may not have the package installed.
     """
     cpus = session_cores()
     master = master or f"local[{cpus}]"

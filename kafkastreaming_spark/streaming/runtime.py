@@ -26,6 +26,7 @@ import uuid
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -484,8 +485,13 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     # independent lifecycles (separate checkpoints/sinks), so they run
     # concurrently; each query captures its confs at start.  A/B 3/3
     # pairs faster, median ratio 0.78.
+    # each lifecycle runs under its own copy of the caller's local
+    # properties, so its jobs carry the caller's job group
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = {m: pool.submit(run, m) for m in ("update", "complete")}
+        futs = {
+            m: pool.submit(inheritable_thread_target(spark)(run), m)
+            for m in ("update", "complete")
+        }
         for m, f in futs.items():
             counts[m] = f.result()
 

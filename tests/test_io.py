@@ -211,6 +211,20 @@ def test_table_rows_falls_back_to_count_for_directory(spark, tmp_path, spark_job
     assert jobs > 0  # no footer shortcut: a real count() ran
 
 
+def test_pool_jobs_carry_callers_job_group(spark, sf_dir, spark_jobs):
+    """scan_union_schema submits its two writes from a thread pool; every
+    job the call launches, pool threads' included, carries the caller's
+    job group."""
+    from kafkastreaming_spark.operators.scans import scan_union_schema
+
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    _, jobs = spark_jobs(lambda: scan_union_schema(spark, sf_dir))
+    spanned = dag.nextJobId() - first
+    assert spanned >= 3  # two writes and the merged read's footer pass
+    assert jobs == spanned
+
+
 # ---------------------------------------------------------------------------
 # spread()'s layout gate (VERDICT r16 item 4): the no-op branches are what
 # make the 18 hot-path spread sites safe at 100 TB — a regression that made

@@ -1,13 +1,15 @@
-"""The Python worker daemon of local sessions
-(``kafkastreaming_spark/pydaemon.py``): workers import the installed
-pyspark when it holds the same files as Spark's pyspark.zip, a zip
-archive's directory is re-read by ``importlib.invalidate_caches()`` only
-when the archive changed, and workers still see new and rewritten
-archives."""
+"""The start-up hook of local sessions' Python workers
+(``kafkastreaming_spark/pydaemon.py``, run from
+``_worker_site/sitecustomize.py``): every worker, UDF and Python data
+source alike, imports the installed pyspark when it holds the same files
+as Spark's pyspark.zip, a zip archive's directory is re-read by
+``importlib.invalidate_caches()`` only when the archive changed, and
+workers still see new and rewritten archives."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
 import subprocess
 import sys
@@ -19,7 +21,12 @@ import pytest
 
 from kafkastreaming_spark import pydaemon
 from kafkastreaming_spark.all import ORACLES
-from kafkastreaming_spark.session import _LOCAL_WORKER_CONFS, _runtime_confs
+from kafkastreaming_spark.session import (
+    _LOCAL_WORKER_CONFS,
+    _WORKER_SITE,
+    _runtime_confs,
+)
+from kafkastreaming_spark.streaming.harness import drain
 from tools.verify_local import compare
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -122,11 +129,46 @@ def test_missing_archive_uses_stock_method(tmp_path, patched):
     assert archive not in pydaemon._read_at
 
 
+_FORK_CHILD = """
+import os, sys, zipimport
+sys.path.insert(0, sys.argv[1])
+from kafkastreaming_spark import pydaemon
+
+pydaemon.install()
+sys.path_importer_cache[sys.argv[2]] = zipimport.zipimporter(sys.argv[2])
+pid = os.fork()
+if pid == 0:
+    os._exit(0 if sys.argv[2] in pydaemon._read_at else 1)
+sys.exit(os.waitstatus_to_exitcode(os.waitpid(pid, 0)[1]))
+"""
+
+
+def test_install_records_archives_before_fork(tmp_path):
+    """After install(), a forked child starts with every archive its
+    parent imports from recorded, and the hook wrote nothing to stdout
+    (``pyspark.daemon`` sends its port there)."""
+    archive = str(tmp_path / "lib.zip")
+    _write_zip(archive, {"ks_zip_fork": "X = 1\n"})
+    run = subprocess.run(
+        [sys.executable, "-c", _FORK_CHILD, REPO, archive],
+        capture_output=True, text=True, timeout=60,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout == ""
+
+
 def test_local_worker_confs_not_runtime():
     """prepare() applies only runtime confs, so a session someone else
-    built keeps Spark's stock daemon and worker environment."""
+    built keeps its own worker environment.  Local sessions keep Spark's
+    daemon module and put the hook's directory, which holds no module
+    but ``sitecustomize``, on the workers' PYTHONPATH."""
     assert not set(_LOCAL_WORKER_CONFS) & set(_runtime_confs())
-    assert _LOCAL_WORKER_CONFS["spark.python.daemon.module"] == pydaemon.__name__
+    assert not any("daemon" in k for k in _LOCAL_WORKER_CONFS)
+    path = _LOCAL_WORKER_CONFS["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+    assert path[0] == _WORKER_SITE
+    assert [f for f in os.listdir(_WORKER_SITE) if f.endswith(".py")] == [
+        "sitecustomize.py"
+    ]
 
 
 def _worker_report(df):
@@ -204,6 +246,119 @@ def test_session_workers_import_installed_pyspark(spark):
     assert ".zip" not in pyspark.__file__
 
 
+def _probe_source(log: str):
+    """A Python DataSource whose reader, writers and stream writer append
+    to ``log``, from inside each worker that runs them, the worker's
+    argv, its ``pyspark.__file__`` and whether the hook's patch is in.
+    Nested, so cloudpickle ships the classes by value."""
+    from pyspark.sql.datasource import (
+        DataSource,
+        DataSourceReader,
+        DataSourceStreamWriter,
+        DataSourceWriter,
+        WriterCommitMessage,
+    )
+
+    def record(where):
+        import json
+        import sys
+        import zipimport as zi
+
+        import pyspark as worker_pyspark
+
+        from kafkastreaming_spark import pydaemon as d
+
+        row = {
+            "where": where,
+            "argv": sys.argv,
+            "pyspark": worker_pyspark.__file__,
+            "patched": zi.zipimporter.invalidate_caches is d.invalidate_caches,
+        }
+        with open(log, "a") as f:
+            f.write(json.dumps(row) + "\n")
+
+    class Reader(DataSourceReader):
+        def read(self, partition):
+            record("read")
+            yield (1,)
+
+    class Writer(DataSourceWriter):
+        def write(self, iterator):
+            record("write")
+            for _ in iterator:
+                pass
+            return WriterCommitMessage()
+
+        def commit(self, messages):
+            record("commit")
+
+    class StreamWriter(DataSourceStreamWriter):
+        def write(self, iterator):
+            for _ in iterator:
+                pass
+            return WriterCommitMessage()
+
+        def commit(self, messages, batchId):
+            record("stream_commit")
+
+    class Probe(DataSource):
+        @classmethod
+        def name(cls):
+            return "ks_worker_probe"
+
+        def schema(self):
+            return "id long"
+
+        def reader(self, schema):
+            record("reader")
+            return Reader()
+
+        def writer(self, schema, overwrite):
+            record("writer")
+            return Writer()
+
+        def streamWriter(self, schema, overwrite):
+            record("streamWriter")
+            return StreamWriter()
+
+    return Probe
+
+
+def test_data_source_workers_run_hook(spark, tmp_path):
+    """The planner, writer and streaming-sink workers of a Python
+    DataSource, which Spark starts under its stock daemon module, run
+    the hook too: each loads the installed pyspark and the patch."""
+    import pyspark
+
+    log = tmp_path / "workers.jsonl"
+    spark.dataSource.register(_probe_source(str(log)))
+    assert spark.read.format("ks_worker_probe").load().collect()
+    spark.range(2).write.format("ks_worker_probe").mode("append").save()
+    src = str(tmp_path / "src")
+    spark.range(2).write.parquet(src)
+    drain(
+        spark,
+        spark.readStream.schema("id long").parquet(src)
+        .writeStream.format("ks_worker_probe"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+
+    rows = [json.loads(line) for line in log.read_text().splitlines()]
+    modules = {r["argv"][-1] for r in rows}
+    assert {
+        "pyspark.worker",
+        "pyspark.sql.worker.plan_data_source_read",
+        "pyspark.sql.worker.write_into_data_source",
+        "pyspark.sql.worker.commit_data_source_write",
+        "pyspark.sql.worker.python_streaming_sink_runner",
+    } <= modules, rows
+    assert {r["where"] for r in rows} == {
+        "reader", "read", "writer", "write", "commit", "streamWriter",
+        "stream_commit",
+    }
+    assert all(r["pyspark"] == pyspark.__file__ and r["patched"] for r in rows), rows
+
+
 _SPARK_SOURCES = {
     "pyspark/__init__.py": "VERSION = 1\n",
     "pyspark/daemon.py": "def manager():\n    pass\n",
@@ -275,11 +430,14 @@ spark.stop()
 """
 
 
-def test_python_udf_key_outside_repo_without_pythonpath(sf_dir, oracle_con, tmp_path):
+@pytest.mark.parametrize("key", ["llm_cosine_nn", "source_python_stream"])
+def test_python_udf_key_outside_repo_without_pythonpath(
+    sf_dir, oracle_con, tmp_path, key
+):
     """A driver that imports the package from sys.path, run from another
-    dir with PYTHONPATH unset: its Python workers (daemon included)
-    still import the package, and a Python-UDF key matches its oracle."""
-    key = "llm_cosine_nn"
+    dir with PYTHONPATH unset: its Python workers (UDF and data-source
+    daemons alike) still import the package, and a Python-UDF key and a
+    Python data-source key match their oracles."""
     out = tmp_path / "out.pkl"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
