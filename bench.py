@@ -309,10 +309,9 @@ def main() -> None:
         "queries": per_query,
         "sf": sf_val,
         "repeats": repeats,
-        # Executor core count the run actually used (r17): the driver's
-        # end-of-round 8-core scaling run also lands a BENCH_DETAIL file,
-        # and without this field the r8-idle regression gate can't tell
-        # a deliberately-downsized run from a plan regression.
+        # Executor core count the run actually used (r17), so a reader
+        # comparing two detail files can tell a deliberately downsized run
+        # (say, an 8-core scaling run) from a plan regression.
         "cpus": session_cores(),
         "partial": partial,
         "errors": errors,

@@ -227,8 +227,6 @@ def spread(
     hash-partition (deterministic, no sort-before-repartition cost) —
     without one, round-robin is used.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df  # kill switch: plans revert to the raw scan (A/B, debug)
     if cores is None:
         cores = session_cores()
     width = scan_width(df)

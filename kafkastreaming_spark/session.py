@@ -1,15 +1,17 @@
 """SparkSession construction and per-session preparation.
 
-Two paths:
+Two paths, one home per conf:
 
-* :func:`get_session` — build our own session (tests, bench) with the
-  configs a 100 TB deployment would want baked in (AQE, UTC, parquet
-  nanos shim, Arrow for pandas UDFs).
-* :func:`prepare` — defensively apply the *runtime-settable* subset of
-  those configs to a session we did not build (the driver hands us its
-  own ``SparkSession``).  Verified: ``spark.sql.legacy.parquet.nanosAsLong``
-  and ``spark.sql.session.timeZone`` are runtime-settable SQL confs in
-  Spark 4.1.2 (SURVEY.md §7.5).
+* :func:`prepare` applies every SQL conf this engine relies on
+  (:func:`_runtime_confs`: UTC, the parquet nanos shim, ANSI off, Arrow,
+  shuffle partitions, split size, the zstd write codec) to any session,
+  one someone else built included (the driver hands us its own
+  ``SparkSession``).  Each is a runtime-settable SQL conf in Spark 4.1.2
+  (SURVEY.md §7.5), so prepare needs no restart.
+* :func:`get_session` builds our own session (tests, bench) with the
+  launch-only settings a running JVM cannot take (app name, master, UI,
+  driver memory, and for local masters the file system jar and the
+  workers' start-up hook), then returns ``prepare(spark)``.
 """
 
 from __future__ import annotations
@@ -29,15 +31,10 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Exact ASCII semantics for upper/lower etc. independent of JVM locale.
     "spark.sql.ansi.enabled": "false",
-    # Performance subset — every one of these is a runtime-settable SQL
-    # conf, so an externally-owned session (the driver's) gets the same
-    # physical plans as get_session().  A vanilla session's 200 shuffle
-    # partitions schedule 6x the tasks per tiny local shuffle; AQE
-    # coalescing hides most but not all of it (iterative operators pay
-    # the scheduling floor every round).
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Arrow transfer for pandas UDFs / toPandas — the only acceptable
+    # Python boundary in the hot path (SURVEY.md §3.2c).  AQE (coalesce,
+    # skew join) is on by Spark 4.1.2's defaults and left to the session:
+    # no key's correctness depends on it.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Write codec: zstd strictly dominated the snappy default in the r15
     # codec A/B (SCALE_PROBE_r15 codec_ab_hundredfold — 24% smaller AND
@@ -105,8 +102,20 @@ def session_cores() -> int:
     )
 
 
-# Lazily-resolved runtime confs (env-dependent; same values get_session uses).
 def _runtime_confs() -> dict[str, str]:
+    """:data:`_RUNTIME_CONFS` plus the env-dependent SQL confs.
+
+    A vanilla session's 200 shuffle partitions schedule many times the
+    tasks per tiny local shuffle; AQE coalescing hides most but not all
+    of it (iterative operators pay the scheduling floor every round), so
+    shuffles get one partition per core.  Splits are sized to the local
+    bench layout: the sf0.1 tables are single <= 11 MB files, which the
+    128 MB default packs into ~3 input splits and leaves most cores idle
+    through every scan; 2 MB splits give the scans real parallelism
+    (measured: join_smj 0.91 -> 0.58 s).  A cluster deployment against
+    100 TB sets ``SPARK_GRAFT_MAX_PARTITION_BYTES`` back to 128-512 MB
+    (SCALE.md "Layout and scan path").
+    """
     confs = dict(_RUNTIME_CONFS)
     confs["spark.sql.shuffle.partitions"] = str(session_cores())
     confs["spark.sql.files.maxPartitionBytes"] = os.environ.get(
@@ -116,7 +125,9 @@ def _runtime_confs() -> dict[str, str]:
 
 
 def prepare(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an externally-owned session (idempotent).
+    """Apply :func:`_runtime_confs` to ``spark`` (idempotent): an
+    externally-owned session, or the one :func:`get_session` just built.
+    SQL confs it does not name keep the session's values.
 
     Only runtime-settable confs: the session keeps the local file system
     it was launched with, not :data:`_LOCAL_FS_CONFS`, because a
@@ -146,14 +157,18 @@ def prepare(spark: SparkSession) -> SparkSession:
 def get_session(
     app_name: str = "kafkastreaming_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a session tuned for this engine.
 
     Local default is ``local[session_cores()]``; on a real cluster the
-    caller passes its own master/deploy config and these settings still
-    apply (AQE re-plans shuffles at runtime, which is the main lever that
-    carries a plan from local[32] to 1000 executors).
+    caller passes its own master/deploy config.  The builder sets only
+    what must be fixed at launch: app name, master, ``spark.ui.enabled``
+    and ``spark.driver.memory`` (``SPARK_GRAFT_DRIVER_MEM``, default
+    8g).  Every SQL conf comes from :func:`prepare`, which runs before
+    the session is returned, so a conf given at launch
+    (``--conf spark.sql.adaptive.enabled=false`` in
+    ``PYSPARK_SUBMIT_ARGS``) or set at runtime stays as set unless
+    :func:`_runtime_confs` names it.
 
     A local master (executors in the driver JVM) also gets
     :data:`_LOCAL_FS_CONFS`: `file://` writes set permission bits
@@ -168,43 +183,13 @@ def get_session(
     the package from any cwd.  Other masters' workers run stock, because
     their executors may not have the package installed.
     """
-    cpus = session_cores()
-    master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions if shuffle_partitions is not None else cpus
+    master = master or f"local[{session_cores()}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # AQE: coalesce small shuffle partitions, split skewed ones, demote/
-        # promote join strategies with runtime stats (SURVEY.md §4).
-        # SPARK_GRAFT_AQE=false is a debugging/robustness knob: the r13
-        # full-inventory sweep runs with it off to prove no key's
-        # CORRECTNESS depends on runtime re-planning (AQE is a pure
-        # performance layer here, as it must be).
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_AQE", "true"),
-        )
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        # Arrow transfer for pandas UDFs / toPandas — the only acceptable
-        # Python boundary in the hot path (SURVEY.md §3.2c).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Split size sized to the LOCAL bench layout: the sf0.1 tables are
-        # single ≤11 MB files, which the 128 MB default packs into ~3 input
-        # splits — 32 cores sit idle through every scan.  2 MB splits give
-        # the scans real parallelism here (measured: join_smj 0.91→0.58 s).
-        # A cluster deployment against 100 TB overrides this back to
-        # 128–512 MB via the env var (SCALE.md "Layout and scan path").
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "2m"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in _RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
     if _in_driver_jvm(master):
         for k, v in {**_LOCAL_FS_CONFS, **_LOCAL_WORKER_CONFS}.items():
             builder = builder.config(k, v)

@@ -15,7 +15,7 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from kafkastreaming_spark.session import get_session
 
-    s = get_session("tests", master="local[8]", shuffle_partitions=8)
+    s = get_session("tests", master="local[8]")
     yield s
     s.stop()
 

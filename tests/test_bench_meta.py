@@ -1,10 +1,7 @@
 """bench.py protocol pieces: the one timing loop, the headline/harness
-key split, the stdout contract line, and the per-key regression gate."""
+key split and the stdout contract line."""
 
 from __future__ import annotations
-
-import importlib
-import os
 
 
 def test_time_call_excludes_warm_run(monkeypatch):
@@ -60,79 +57,6 @@ def test_harness_keys_consistent_with_registry():
     # ts_m4, sql_script); per-round headline counts are recorded in BASELINE.md so
     # totals are compared per-key, never raw-total-to-raw-total
     assert len(set(ORACLES) - bench.HARNESS_KEYS) == 286
-
-
-def _newest_detail_with_canary():
-    import glob
-    import json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    best = None
-    for p in sorted(glob.glob(os.path.join(repo, "BENCH_DETAIL_r*.json"))):
-        with open(p) as f:
-            d = json.load(f)
-        # The r8 idle reference ran the 32-core protocol; a detail file
-        # stamped with a different core count (the driver's end-of-round
-        # scaling run, or a local quick pass) is not comparable — r17
-        # inherited a red gate because the driver's 8-core run landed as
-        # the newest detail.  Files predating the "cpus" field are all
-        # 32-core runs.
-        if d.get("cpus") not in (None, 32):
-            continue
-        if d.get("canary") and d.get("queries") and not d.get("partial"):
-            best = (p, d)
-    return best
-
-
-def test_bench_regression_gate_vs_r08_idle():
-    """Per-key regression gate (r11, VERDICT r10 item 6): every carried
-    key's median in the newest canary-carrying BENCH_DETAIL must stay
-    within 2x of its BENCH_DETAIL_r08 idle value AFTER normalizing for
-    box speed — so a real plan regression fails CI before a driver bench
-    round records it, while pure environmental drift does not.
-
-    Box-speed normalization: the canary times a fixed shuffle probe
-    before and after the suite; r8's idle box corresponds to ~0.224 s
-    (the r10 post-run value, BASELINE.md).  The gate scales its budget
-    by the WORSE of the run's two canaries (a loaded box legitimately
-    slows every key) and skips keys either round flagged noisy
-    (per-repeat spread > 2x)."""
-    import json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, "BENCH_DETAIL_r08.json")) as f:
-        r8 = json.load(f)
-    found = _newest_detail_with_canary()
-    assert found is not None, "no BENCH_DETAIL with canary data yet"
-    path, cur = found
-    canary = cur["canary"]
-    IDLE_SHUFFLE_SEC = 0.224
-    box_factor = max(
-        1.0,
-        max(canary["pre"]["shuffle_sec"], canary["post"]["shuffle_sec"])
-        / IDLE_SHUFFLE_SEC,
-    )
-    noisy = set(r8.get("noisy", [])) | set(cur.get("noisy", []))
-    # sub-0.3s keys are dominated by fixed job-submission overhead where
-    # the 2x bar is all jitter; the gate is for real per-key work
-    FLOOR_SEC = 0.3
-    offenders = {}
-    for key, base in r8["queries"].items():
-        now = cur["queries"].get(key)
-        if now is None or key in noisy:
-            continue
-        if base < FLOOR_SEC and now < FLOOR_SEC * 2 * box_factor:
-            continue
-        if now > 2.0 * box_factor * max(base, FLOOR_SEC):
-            offenders[key] = {
-                "r08_sec": base,
-                "now_sec": now,
-                "budget": round(2.0 * box_factor * max(base, FLOOR_SEC), 3),
-            }
-    assert offenders == {}, (
-        f"{path} (box_factor {box_factor:.2f}): keys beyond the "
-        f"canary-normalized 2x budget vs r8 idle: {offenders}"
-    )
 
 
 def test_contract_line_packs_slowest_within_budget():

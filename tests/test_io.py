@@ -246,8 +246,7 @@ def _single_rg(spark, tmp_path, name: str):
     return spark.read.parquet(p)
 
 
-def test_spread_fires_on_single_row_group(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_fires_on_single_row_group(spark, tmp_path):
     df = _single_rg(spark, tmp_path, "srg")
     out = spread(df, key="id", cores=16)
     assert out is not df
@@ -255,13 +254,12 @@ def test_spread_fires_on_single_row_group(spark, tmp_path, monkeypatch):
     assert out.rdd.getNumPartitions() == 16
 
 
-def test_spread_noop_on_multi_row_group_layout(spark, tmp_path, monkeypatch):
+def test_spread_noop_on_multi_row_group_layout(spark, tmp_path):
     """A healthy layout (many row groups >= cores//4) must pass through
     untouched — this is the 100 TB safety branch."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     p = str(tmp_path / "mrg")
     os.makedirs(p, exist_ok=True)
     pq.write_table(
@@ -273,13 +271,12 @@ def test_spread_noop_on_multi_row_group_layout(spark, tmp_path, monkeypatch):
     assert spread(df, key="id", cores=16) is df  # 20 >= 16//4
 
 
-def test_spread_noop_on_many_files(spark, tmp_path, monkeypatch):
+def test_spread_noop_on_many_files(spark, tmp_path):
     """>256 input files = the layout already parallelizes (or is too
     expensive to probe): spread must not touch it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     p = str(tmp_path / "manyfiles")
     os.makedirs(p, exist_ok=True)
     tbl = pa.table({"id": [1]})
@@ -289,21 +286,76 @@ def test_spread_noop_on_many_files(spark, tmp_path, monkeypatch):
     assert spread(df, key="id", cores=4096) is df
 
 
-def test_spread_noop_on_non_parquet_scan(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_noop_on_non_parquet_scan(spark, tmp_path):
     p = str(tmp_path / "csvsrc")
     spark.createDataFrame([(1,)], "id long").write.mode("overwrite").csv(p)
     df = spark.read.schema("id long").csv(p)
     assert spread(df, key="id", cores=64) is df
 
 
-def test_spread_kill_switch(spark, tmp_path, monkeypatch):
-    df = _single_rg(spark, tmp_path, "kill")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "0")
-    assert spread(df, key="id", cores=16) is df
-
-
-def test_spread_noop_without_file_scan(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_noop_without_file_scan(spark):
     df = spark.range(100)  # no file source below the plan
     assert spread(df, key="id", cores=64) is df
+
+
+def test_prepare_sets_runtime_confs_and_keeps_the_rest(spark, sf_dir):
+    """prepare() is the one home of the engine's SQL confs: after
+    get_session and a load_table every key of ``_runtime_confs()`` reads
+    its value, and a conf it does not name (AQE) keeps a runtime setting
+    across the next load_table."""
+    from kafkastreaming_spark.session import _runtime_confs
+
+    load_table(spark, sf_dir, "orders")
+    want = _runtime_confs()
+    assert {k: spark.conf.get(k) for k in want} == want
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        load_table(spark, sf_dir, "orders")
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        spark.conf.unset("spark.sql.adaptive.enabled")
+
+
+def test_get_session_launches_without_engine_sql_confs(spark):
+    """The builder passes launch-only settings: neither a key of
+    ``_runtime_confs()`` nor an AQE conf is in the SparkConf the JVM
+    started with (Spark itself adds ``spark.sql.warehouse.dir`` and
+    ``spark.sql.artifact.isolation.enabled`` there)."""
+    from kafkastreaming_spark.session import _runtime_confs
+
+    launch = dict(spark.sparkContext.getConf().getAll())
+    assert not set(launch) & set(_runtime_confs())
+    assert not [k for k in launch if k.startswith("spark.sql.adaptive.")]
+
+
+_AQE_OFF_CHILD = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from tools.verify_local import _apply_axis
+
+_apply_axis("aqe_off")
+from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.session import get_session
+
+spark = get_session("aqe_off_axis", master="local[1]")
+load_table(spark, sys.argv[2], "orders")
+print(spark.conf.get("spark.sql.adaptive.enabled"))
+spark.stop()
+"""
+
+
+def test_verify_local_aqe_off_axis_turns_aqe_off(sf_dir, tmp_path):
+    """``verify_local --axis aqe_off`` runs its session with AQE off,
+    still off after load_table has prepared the session."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    run = subprocess.run(
+        [sys.executable, "-c", _AQE_OFF_CHILD, repo, sf_dir],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    assert run.stdout.split()[-1] == "false"

@@ -609,7 +609,7 @@ def test_semdedup_trained_recall_beats_standin():
     claim is pinned at the driver's correctness scale instead."""
     from kafkastreaming_spark.session import get_session
 
-    spark = get_session("tests", master="local[8]", shuffle_partitions=8)
+    spark = get_session("tests", master="local[8]")
     sf = "/root/testdata/sf0.01"
     exact_later = {
         r["vec_b"] for r in QUERIES["llm_cosine_dedup"](spark, sf).collect()
@@ -647,7 +647,7 @@ def test_trained_centroids_shared_index_shape():
     from kafkastreaming_spark.session import get_session
     from kafkastreaming_spark.io import load_table
 
-    spark = get_session("tests", master="local[8]", shuffle_partitions=8)
+    spark = get_session("tests", master="local[8]")
     sf = "/root/testdata/sf0.001"
     n = load_table(spark, sf, "embeddings").count()
     c1 = trained_centroids(spark, sf)

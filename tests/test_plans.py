@@ -551,8 +551,7 @@ def test_bpe_pairs_rank_window_on_counted_table(spark, sf_dir):
     pair stream — the pair-count agg and the single-partition rank,
     plus (layout-dependent) the spread() input-skew repair on the
     single-row-group fixture scan (r16, io.spread — a no-op on healthy
-    multi-row-group layouts and under SPARK_GRAFT_SPREAD=0, hence the
-    tolerant 2-or-3 pin; ADVICE r16)."""
+    multi-row-group layouts, hence the tolerant 2-or-3 pin; ADVICE r16)."""
     plan = _plan(spark, sf_dir, "llm_bpe_pairs")
     tree = _tree(plan)
     assert tree.count("Exchange") in (2, 3)

@@ -424,7 +424,7 @@ sys.path.insert(0, sys.argv[1])
 from kafkastreaming_spark.all import QUERIES
 from kafkastreaming_spark.session import get_session
 
-spark = get_session("no_pythonpath", master="local[2]", shuffle_partitions=2)
+spark = get_session("no_pythonpath", master="local[2]")
 QUERIES[sys.argv[2]](spark, sys.argv[3]).toPandas().to_pickle(sys.argv[4])
 spark.stop()
 """

@@ -71,7 +71,7 @@ from kafkastreaming_spark.all import QUERIES
 from kafkastreaming_spark.operators import corpus
 from kafkastreaming_spark.session import get_session
 
-spark = get_session("scratch_exit", master="local[2]", shuffle_partitions=2)
+spark = get_session("scratch_exit", master="local[2]")
 corpus._LM_BROADCAST_MAX_BIGRAMS = 0  # open-vocabulary LM: parquet model
 for key in ("sink_parquet", "sink_memory", "llm_lm_score"):
     QUERIES[key](spark, sys.argv[1]).collect()

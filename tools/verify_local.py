@@ -83,9 +83,12 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 # Config-robustness axes (VERDICT r13 item 5).  Every knob is an env var
 # read by session.get_session (or the JVM) BEFORE the first session builds,
 # so applying an axis is valid only in a fresh process — which verify_local
-# always is.  The r13 manual sweeps proved 304/304 under each.
+# always is.  aqe_off launches the JVM with AQE off; prepare() does not set
+# spark.sql.adaptive.enabled, so the conf stays off for the whole run.
 AXES: dict[str, dict[str, str]] = {
-    "aqe_off": {"SPARK_GRAFT_AQE": "false"},
+    "aqe_off": {
+        "PYSPARK_SUBMIT_ARGS": "--conf spark.sql.adaptive.enabled=false pyspark-shell"
+    },
     "tz_kiritimati": {"TZ": "Pacific/Kiritimati"},
     "heap3g": {"SPARK_GRAFT_DRIVER_MEM": "3g"},
     "local7": {"SPARK_GRAFT_CPUS": "7"},
@@ -97,14 +100,13 @@ AXES: dict[str, dict[str, str]] = {
 }
 
 
-def _apply_axis(name: str) -> int | None:
-    """Set the axis env knobs; returns a shuffle-partition override (the
-    local7 axis also pins shuffle=7 like the r13 manual sweep did)."""
+def _apply_axis(name: str) -> None:
+    """Set the axis env knobs (local7's SPARK_GRAFT_CPUS=7 also gives 7
+    shuffle partitions, through session.prepare)."""
     for k, v in AXES[name].items():
         os.environ[k] = v
     if name == "tz_kiritimati":
         time.tzset()  # before the JVM starts, so Java inherits the zone
-    return 7 if name == "local7" else None
 
 
 def main() -> int:
@@ -124,15 +126,14 @@ def main() -> int:
     ap.add_argument("keys", nargs="*")
     args = ap.parse_args()
 
-    shuffle_override = None
     if args.axis != "none":
-        shuffle_override = _apply_axis(args.axis)
+        _apply_axis(args.axis)
         print(f"config-robustness axis: {args.axis} ({AXES[args.axis]})")
 
     from kafkastreaming_spark.all import ORACLES, QUERIES
     from kafkastreaming_spark.session import get_session
 
-    spark = get_session("verify_local", shuffle_partitions=shuffle_override or 8)
+    spark = get_session("verify_local")
 
     con = oracle_connection(args.sf)
 
