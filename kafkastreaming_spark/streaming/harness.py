@@ -2,9 +2,12 @@
 
 Replays the bounded events table as a genuine multi-micro-batch stream:
 
-1. sort events by ts, split into N parquet chunk files (arrival order);
-   optionally displace a slice of mid-timeline rows into the final chunk
-   to create *late* arrivals for watermark tests;
+1. ``replay_chunks`` sorts events by (ts, event_id) and splits them
+   into N parquet chunk files with pyarrow alone (no Spark job),
+   optionally displacing a slice of mid-timeline rows into a final
+   chunk to create *late* arrivals for watermark tests; the files'
+   modification times are stamped in name order, which fixes the
+   order in which the file source delivers them;
 2. ``file_event_stream`` reads the chunk dir with maxFilesPerTrigger=1;
 3. ``run_to_memory`` executes with Trigger.AvailableNow — Spark processes
    chunk-by-chunk (real incremental state, real watermark advancement),
@@ -24,10 +27,13 @@ import threading
 import uuid
 from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from kafkastreaming_spark.io import load_table, session_cores
+from kafkastreaming_spark.io import session_cores
 from kafkastreaming_spark.sources.factory import file_event_stream
 
 
@@ -345,13 +351,13 @@ def replay_chunks(
     move a slice of mid-timeline rows into the last chunk (late data).
     Returns the chunk directory.
 
-    The replay is a pure function of (sf_dir, n_chunks, late_fraction) —
-    every streaming key reads the same events table — so the chunk dir
-    is built ONCE per (process, params) and shared across keys, queries
-    (each has its own checkpoint), and bench repeats.  Before this memo
-    the rows-only bench paid a toPandas + parquet rewrite per
-    invocation: ~12 rewrites of the full events table per repeat at
-    sf0.1 (r8 roadmap item)."""
+    The chunks are built with pyarrow alone (:func:`_write_chunks`): no
+    Spark job runs, so ``spark`` is unused and kept for the callers that
+    bind this function by name.  The replay is a pure function of
+    (sf_dir, n_chunks, late_fraction) — every streaming key reads the
+    same events table — so the chunk dir is built ONCE per (process,
+    scratch root, params) and shared across keys, queries (each has its
+    own checkpoint) and bench repeats."""
     out = process_scratch(
         "ks_stream_shared_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
@@ -359,43 +365,68 @@ def replay_chunks(
     )
     with _REPLAY_LOCK:
         if out not in _REPLAY_BUILT:
-            _write_chunks(spark, sf_dir, out, n_chunks, late_fraction)
+            _write_chunks(sf_dir, out, n_chunks, late_fraction)
             _REPLAY_BUILT.add(out)
     return out
 
 
+def _sorted_events(sf_dir: str) -> pa.Table:
+    """The events table as Spark's ``load_table(...).orderBy("ts",
+    "event_id")`` returns it, read with pyarrow: ``ts`` becomes
+    ``timestamp[us]`` without a zone (how Spark reads the chunks back
+    under the UTC session zone; nanoseconds truncate toward zero like
+    ``load_table``'s ``ts div 1000``, a zone's UTC instants are kept),
+    rows sort ascending with nulls first, and the fixture's pandas
+    schema metadata is dropped."""
+    ev = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    i = ev.schema.get_field_index("ts")
+    ev = ev.set_column(i, "ts", ev.column(i).cast(pa.timestamp("us"), safe=False))
+    order = pc.sort_indices(
+        ev,
+        sort_keys=[("ts", "ascending"), ("event_id", "ascending")],
+        null_placement="at_start",
+    )
+    return ev.take(order).replace_schema_metadata(None)
+
+
 def _write_chunks(
-    spark: SparkSession, sf_dir: str, out: str, n_chunks: int, late_fraction: float
+    sf_dir: str, out: str, n_chunks: int, late_fraction: float
 ) -> None:
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
-    pdf = ev.toPandas()
-    rows_per_chunk = len(pdf) // n_chunks + 1
-    late = None
+    ev = _sorted_events(sf_dir)
+    n = ev.num_rows
+    rows_per_chunk = n // n_chunks + 1
+    files = {}
     if late_fraction > 0:
         # displace rows from the 2nd chunk to arrive last → late by most of
         # the timeline, far beyond any reasonable watermark delay
-        lo, hi = rows_per_chunk, rows_per_chunk + int(len(pdf) * late_fraction)
-        late = pdf.iloc[lo:hi]
-        pdf = pdf.drop(pdf.index[lo:hi])
+        lo, hi = rows_per_chunk, rows_per_chunk + int(n * late_fraction)
+        files["chunk_999_late.parquet"] = ev.slice(lo, hi - lo)
+        ev = pa.concat_tables([ev.slice(0, lo), ev.slice(hi)])
     for i in range(n_chunks):
-        chunk = pdf.iloc[i * rows_per_chunk : (i + 1) * rows_per_chunk]
-        if len(chunk) == 0:
-            continue
-        chunk.to_parquet(
-            os.path.join(out, f"chunk_{i:03d}.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
+        files[f"chunk_{i:03d}.parquet"] = ev.slice(
+            i * rows_per_chunk, rows_per_chunk
         )
-    if late is not None and len(late):
-        late.to_parquet(
-            os.path.join(out, "chunk_999_late.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
+    write_replay(out, files)
+
+
+# First modification time stamped on a replay dir's files (2020-09-13).
+_REPLAY_MTIME = 1_600_000_000
+
+
+def write_replay(out: str, files: dict[str, pa.Table]) -> None:
+    """Write ``files`` (file name -> rows) as parquet into a fresh dir
+    ``out``, skipping empty ones, and stamp modification times one second
+    apart in file-name order.  FileStreamSource orders a dir's files into
+    batches by modification time, and files written back to back can tie
+    at Hadoop's millisecond granularity; the stamps make the arrival
+    order the name order (a late chunk named ``chunk_999_*`` is last)."""
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+    names = [f for f in sorted(files) if files[f].num_rows]
+    for i, name in enumerate(names):
+        path = os.path.join(out, name)
+        pq.write_table(files[name], path)
+        os.utime(path, (_REPLAY_MTIME + i, _REPLAY_MTIME + i))
 
 
 # memory-sink temp views registered by run_to_memory, oldest first —

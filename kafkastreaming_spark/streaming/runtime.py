@@ -26,6 +26,9 @@ import uuid
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,6 +48,7 @@ from kafkastreaming_spark.streaming.harness import (
     run_to_memory,
     scratch_dir,
     stream_events,
+    write_replay,
 )
 
 
@@ -1100,35 +1104,22 @@ def _ddww_chunks(
 
 
 def _write_ddww(base_dir: str, out: str) -> None:
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    chunks = sorted(
-        f for f in os.listdir(base_dir) if f.endswith(".parquet")
+    chunks = {
+        f: pq.read_table(os.path.join(base_dir, f))
+        for f in os.listdir(base_dir)
+        if f.endswith(".parquet")
+    }
+    names = sorted(chunks)
+    ends = pa.concat_tables([chunks[names[0]], chunks[names[-1]]])
+    ids = ends.column("event_id")
+    # every event_id ≡ 0 (mod 7) of the first and the last chunk, again;
+    # write_replay's mtime stamps deliver this file after every original
+    # (a scrambled order would deliver early originals below the
+    # watermark and drop them as late)
+    chunks["chunk_999_dup.parquet"] = ends.filter(
+        pc.equal(pc.multiply(pc.divide(ids, 7), 7), ids)
     )
-    # Batch order in FileStreamSource is mtime order; fast sequential
-    # copies can tie at Hadoop's ms granularity, so stamp explicit
-    # strictly-increasing mtimes (ADVICE r12) — a scrambled order would
-    # deliver early originals below the watermark and drop them as late.
-    base_mtime = 1_600_000_000
-    for i, f in enumerate(chunks):
-        dst = os.path.join(out, f)
-        shutil.copyfile(os.path.join(base_dir, f), dst)
-        os.utime(dst, (base_mtime + i, base_mtime + i))
-    dups = pd.concat(
-        [
-            pd.read_parquet(os.path.join(base_dir, chunks[0])),
-            pd.read_parquet(os.path.join(base_dir, chunks[-1])),
-        ]
-    )
-    dups = dups[dups["event_id"] % 7 == 0]
-    dup_path = os.path.join(out, "chunk_999_dup.parquet")
-    dups.to_parquet(
-        dup_path,
-        index=False,
-        coerce_timestamps="us",
-        allow_truncated_timestamps=True,
-    )
-    os.utime(dup_path, (base_mtime + len(chunks), base_mtime + len(chunks)))
+    write_replay(out, chunks)
 
 
 @query(

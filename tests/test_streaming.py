@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from kafkastreaming_spark.all import QUERIES
 from kafkastreaming_spark.io import load_table
+from kafkastreaming_spark.sources.factory import EVENT_SCHEMA
+from kafkastreaming_spark.streaming.harness import replay_chunks
 
 
 def test_source_kafka_file_twin_rowcount(spark, sf_dir):
@@ -108,6 +110,107 @@ def test_process_scratch_removed_at_exit(sf_dir, tmp_path):
     assert [e for e in os.listdir(tmp_path) if e.startswith("ks_")] == []
 
 
+# (n_chunks, late_fraction) of the replay-directory tests
+_REPLAY_CASES = [(k, late) for k in (2, 4, 6) for late in (0.0, 0.02)]
+
+
+def _expected_chunks(rows: list, n_chunks: int, late_fraction: float) -> dict:
+    """File name -> rows of a replay dir, cut from the (ts, event_id)
+    ordered events rows: chunks of ``n // n_chunks + 1`` rows, after the
+    late slice (the rows just past the first chunk) moves to
+    chunk_999_late; empty chunks are not written."""
+    n = len(rows)
+    per = n // n_chunks + 1
+    files = {}
+    if late_fraction > 0:
+        lo, hi = per, per + int(n * late_fraction)
+        files["chunk_999_late.parquet"] = rows[lo:hi]
+        rows = rows[:lo] + rows[hi:]
+    for i in range(n_chunks):
+        files[f"chunk_{i:03d}.parquet"] = rows[i * per : (i + 1) * per]
+    return {f: r for f, r in files.items() if r}
+
+
+def _chunk_rows(spark, chunk_dir: str) -> dict:
+    """File name -> rows of each file in ``chunk_dir``, read with the
+    file source's schema."""
+    return {
+        f: [
+            tuple(r)
+            for r in spark.read.schema(EVENT_SCHEMA)
+            .parquet(os.path.join(chunk_dir, f))
+            .collect()
+        ]
+        for f in sorted(os.listdir(chunk_dir))
+    }
+
+
+def test_replay_chunks_are_ordered_event_slices(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Each replay chunk, read back as the file source reads it, holds
+    its slice of ``load_table(events).orderBy("ts", "event_id")`` row for
+    row, and the late slice is chunk_999_late.  The file source orders a
+    dir into batches by modification time; the mtimes strictly increase
+    in file-name order, so the late chunk always arrives last."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
+    assert ev.columns == EVENT_SCHEMA.fieldNames()
+    rows = [tuple(r) for r in ev.collect()]
+    for k, late in _REPLAY_CASES:
+        d = replay_chunks(spark, sf_dir, k, late)
+        assert _chunk_rows(spark, d) == _expected_chunks(rows, k, late), (k, late)
+        names = sorted(os.listdir(d))
+        mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns for f in names]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), (k, late)
+        last = "chunk_999_late.parquet" if late else f"chunk_{k - 1:03d}.parquet"
+        assert names[-1] == last
+
+
+def test_replay_chunks_start_no_spark_job(
+    spark, sf_dir, tmp_path, monkeypatch, spark_jobs
+):
+    """Building a replay dir (a fresh scratch root, so no memo hit)
+    starts no Spark job."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    d, n_jobs = spark_jobs(lambda: replay_chunks(spark, sf_dir, 4, 0.02))
+    assert d.startswith(str(tmp_path)) and os.listdir(d)
+    assert n_jobs == 0
+
+
+def test_replay_chunks_truncate_nanos_like_load_table(spark, tmp_path, monkeypatch):
+    """An events file with ``ts`` as TIMESTAMP(NANOS) replays as
+    ``load_table`` reads it: nanoseconds truncate toward zero
+    (``ts div 1000``, so -1500 ns is -1 us) BEFORE the sort, which then
+    breaks the microsecond tie of event ids 3 and 4 by event id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    sf = tmp_path / "sf_nanos"
+    sf.mkdir()
+    ns = [-1_500, 1_705_312_799_999_999_999, 1_705_312_800_123_456_789,
+          1_705_312_800_123_456_001]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3, 4], pa.int64()),
+                "ts": pa.array(ns, pa.int64()).cast(pa.timestamp("ns")),
+                "user_id": pa.array([7, 7, 8, 8], pa.int64()),
+                "event_type": ["click", "view", "click", "purchase"],
+                "value": [1.5, 2.0, 0.25, 4.0],
+                "props": ["{}"] * 4,
+            }
+        ),
+        sf / "events.parquet",
+    )
+    assert pq.read_schema(sf / "events.parquet").field("ts").type.unit == "ns"
+    got = _chunk_rows(spark, replay_chunks(spark, str(sf), n_chunks=2))
+    want = load_table(spark, str(sf), "events").orderBy("ts", "event_id")
+    assert got == _expected_chunks([tuple(r) for r in want.collect()], 2, 0.0)
+    assert [r[0] for rows in got.values() for r in rows] == [1, 2, 3, 4]
+
+
 def test_sink_console_foreachbatch_multi_batch(spark, sf_dir):
     batches = QUERIES["sink_console"](spark, sf_dir).collect()
     assert len(batches) >= 2, "replay must produce multiple micro-batches"
@@ -192,20 +295,18 @@ def test_stream_late_update_mode_semantics(spark, sf_dir):
     assert rows["update"] >= rows["complete"]
 
 
-def test_streaming_dedup_within_watermark(spark, sf_dir):
+def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     """dropDuplicatesWithinWatermark removes cross-batch duplicates."""
     from kafkastreaming_spark.sources.factory import file_event_stream
-    from kafkastreaming_spark.streaming.harness import replay_chunks, run_to_memory
+    from kafkastreaming_spark.streaming.harness import run_to_memory
 
     # replay dirs are SHARED per (sf, params) since r8 — copy to a
     # private dir before injecting the duplicate chunk, or the mutation
     # would poison every later consumer of the shared dir
     import shutil
-    import tempfile
 
     shared = replay_chunks(spark, sf_dir, n_chunks=3)
-    chunk_dir = os.path.join(tempfile.gettempdir(), "ks_stream_deduptest_priv")
-    shutil.rmtree(chunk_dir, ignore_errors=True)
+    chunk_dir = str(tmp_path / "chunks")
     shutil.copytree(shared, chunk_dir)
     # duplicate the first 40 rows of chunk 0 into a later-arriving file
     first = pd.read_parquet(os.path.join(chunk_dir, "chunk_000.parquet")).head(40)
