@@ -862,15 +862,17 @@ def _corpus_matrix_bc(spark: SparkSession, sf_dir: str):
     import numpy as np
 
     def build():
-        # id-ascending ⇒ argmax/first-emit tiebreak is lowest id
+        # one collect job; sorted on the driver, not by a Spark orderBy
+        # (its range-sampling and sort-shuffle jobs cost 2 more)
         corpus = (
             load_table(spark, sf_dir, "embeddings")
             .select("vec_id", "embedding")
-            .orderBy("vec_id")
             .toPandas()
         )
-        ids = corpus["vec_id"].to_numpy()
-        m = np.stack(corpus["embedding"].to_numpy()).astype(np.float64)
+        # id-ascending ⇒ argmax/first-emit tiebreak is lowest id
+        order = np.argsort(corpus["vec_id"].to_numpy(), kind="stable")
+        ids = corpus["vec_id"].to_numpy()[order]
+        m = np.stack(corpus["embedding"].to_numpy()[order]).astype(np.float64)
         m_norm = np.sqrt((m * m).sum(axis=1))
         return spark.sparkContext.broadcast((ids, m, m_norm))
 
@@ -1251,12 +1253,10 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"), F.col("ve").alias("cv")
     )
-    # the manifest consumes the assignment twice (pair-scan kernel +
-    # keep-flag join): unpinned, Catalyst re-ran the crossJoin+window
-    # assignment — and its embedding scans — once per branch (4 scans,
-    # r8 plan census).  memo + localCheckpoint is the graph-keys
-    # discipline: one build per (session, sf_dir), shared across both
-    # consumers and bench repeats.
+    # memo + localCheckpoint: the crossJoin+window assignment and its
+    # embedding scans run once per (session, sf_dir); later calls (bench
+    # repeats, the pipeline's passes) read the checkpoint, so a warm
+    # call is only the manifest's one grouped pass.
     asg = memo(
         spark,
         sf_dir,
@@ -1332,18 +1332,21 @@ def _assign_buckets_np(
 
 def _semdedup_manifest(bucket: DataFrame) -> DataFrame:
     """Within-bucket exact cosine pair scan → per-vector keep manifest
-    (vec_id, bucket, keep, n_earlier_dups).  Shared by the stand-in-
-    centroid ``llm_semdedup`` (hash-checked) and the trained-quantizer
-    ``llm_semdedup_trained``."""
+    (vec_id, bucket, keep, n_earlier_dups) in ONE grouped pass: the
+    kernel emits a row for every id of its bucket (buckets of one
+    included), so the manifest needs no join back onto the assignment —
+    one shuffle on the bucket key, one job per action plus AQE's stage
+    job.  ``bucket`` keeps the assignment's own type (long for the
+    stand-in centroid ids, int from ``_assign_buckets_np``).  Shared by
+    the stand-in-centroid ``llm_semdedup`` (hash-checked) and the
+    trained-quantizer ``llm_semdedup_trained``."""
     import numpy as np
     import pandas as pd
 
     t = _COSINE_DEDUP_T
     cells = _NN_SCORE_CELLS
 
-    def bucket_dups(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "n_earlier_dups": []})
+    def bucket_manifest(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id")
         cm = np.stack(pdf["ve"].to_numpy()).astype(np.float64)
         cn = np.sqrt((cm * cm).sum(axis=1))
@@ -1358,23 +1361,19 @@ def _semdedup_manifest(bucket: DataFrame) -> DataFrame:
             # strict upper triangle: row id < column id (ids are sorted)
             hit = (cos >= t) & (ids[s : s + step, None] < ids[None, :])
             n_earlier += hit.sum(axis=0)
-        mask = n_earlier > 0
         return pd.DataFrame(
-            {"vec_id": ids[mask], "n_earlier_dups": n_earlier[mask]}
+            {
+                "vec_id": ids,
+                "bucket": pdf["bucket"].to_numpy(),
+                "keep": (n_earlier == 0).astype(np.int32),
+                "n_earlier_dups": n_earlier,
+            }
         )
 
-    dups = bucket.groupBy("bucket").applyInPandas(
-        lambda pdf: bucket_dups(pdf), "vec_id long, n_earlier_dups long"
-    )
-    return bucket.join(dups, "vec_id", "left").select(
-        "vec_id",
-        "bucket",
-        F.when(F.col("n_earlier_dups").isNull(), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("keep"),
-        F.coalesce("n_earlier_dups", F.lit(0).cast("long")).alias(
-            "n_earlier_dups"
-        ),
+    b_type = bucket.schema["bucket"].dataType.simpleString()
+    return bucket.groupBy("bucket").applyInPandas(
+        lambda pdf: bucket_manifest(pdf),
+        f"vec_id long, bucket {b_type}, keep int, n_earlier_dups long",
     )
 
 

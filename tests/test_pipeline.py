@@ -545,6 +545,97 @@ def test_semdedup_drops_subset_of_exact_pair_scan(spark, sf_dir):
         assert sem[v]["n_earlier_dups"] <= exact_later[v]
 
 
+def test_llm_semdedup_warm_write_runs_one_grouped_pass(spark, sf_dir, spark_jobs):
+    """Box-independent execution pin: with the stand-in assignment memo
+    warm, writing llm_semdedup is one grouped pass — the shuffle stage
+    AQE submits as its own job, then the result job.  Joining the dups
+    back onto the assignment cost two more jobs per action."""
+
+    def write():
+        QUERIES["llm_semdedup"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    write()
+    _, jobs = spark_jobs(write)
+    assert jobs <= 2, jobs
+
+
+def test_corpus_matrix_builds_in_one_job(spark, sf_dir, spark_jobs, monkeypatch):
+    """The memoized corpus-matrix broadcast is one collect job, sorted
+    by vec_id on the driver (a Spark orderBy added its sampling and
+    sort-shuffle jobs: 3 in all).  Counted under an empty memo store;
+    the broadcast it builds is destroyed, and the session's own memo
+    entries come back with the store."""
+    import numpy as np
+
+    from kafkastreaming_spark import memo as M
+    from kafkastreaming_spark.operators.pipeline import _corpus_matrix_bc
+
+    load_table(spark, sf_dir, "embeddings")  # schema inference out of the count
+    monkeypatch.setattr(M, "_store", {})
+    bc, jobs = spark_jobs(lambda: _corpus_matrix_bc(spark, sf_dir))
+    try:
+        ids, m, norms = bc.value
+        want = (
+            load_table(spark, sf_dir, "embeddings")
+            .orderBy("vec_id")
+            .select("vec_id", "embedding")
+            .toPandas()
+        )
+    finally:
+        bc.destroy()
+    assert jobs == 1, jobs
+    assert np.array_equal(ids, want["vec_id"].to_numpy())
+    assert np.array_equal(m, np.stack(want["embedding"].to_numpy()).astype(np.float64))
+    assert np.array_equal(norms, np.sqrt((m * m).sum(axis=1)))
+
+
+def test_semdedup_trained_manifest_matches_numpy_recompute(spark, sf_dir):
+    """The trained-quantizer manifest, row for row, against a numpy
+    recomputation over the collected assignment: per bucket, ids
+    sorted, 6dp-rounded cosine >= the dedup threshold, strict upper
+    triangle; n_earlier_dups counts a vector's earlier same-bucket
+    near-dups, and keep is 1 exactly when there are none."""
+    import numpy as np
+
+    from kafkastreaming_spark.operators.pipeline import (
+        _COSINE_DEDUP_T,
+        _semdedup_trained_assign,
+        semdedup_trained_manifest,
+    )
+
+    man = semdedup_trained_manifest(spark, sf_dir)
+    assert man.dtypes == [
+        ("vec_id", "bigint"),
+        ("bucket", "int"),
+        ("keep", "int"),
+        ("n_earlier_dups", "bigint"),
+    ]
+    rows = man.collect()
+    got = {r["vec_id"]: tuple(r) for r in rows}
+
+    asg = _semdedup_trained_assign(spark, sf_dir).collect()
+    assert len(rows) == len(got) == len(asg)  # one row per vector
+    by_bucket: dict[int, list] = {}
+    for r in asg:
+        by_bucket.setdefault(r["bucket"], []).append((r["vec_id"], r["ve"]))
+    want = {}
+    for b, members in by_bucket.items():
+        members.sort(key=lambda m: m[0])
+        ids = np.array([v for v, _ in members], dtype=np.int64)
+        x = np.array([e for _, e in members], dtype=np.float64)
+        nrm = np.sqrt((x * x).sum(axis=1))
+        cos = np.round((x @ x.T) / np.outer(nrm, nrm), 6)
+        hit = np.triu(cos >= _COSINE_DEDUP_T, k=1)
+        for v, n in zip(ids, hit.sum(axis=0)):
+            want[int(v)] = (int(v), b, int(n == 0), int(n))
+
+    assert got == want
+    assert all(keep == (n == 0) for _, _, keep, n in got.values())
+    assert any(n > 0 for _, _, _, n in got.values())  # exercises the drop path
+
+
 def test_cosine_gate_dispatch_blocked_path_end_to_end(spark, sf_dir, monkeypatch):
     """Force the registry-level gate itself (not the kernels) to take
     the blocked branch by dropping _NN_BROADCAST_MAX_N to 0: the

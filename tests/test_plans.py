@@ -871,7 +871,11 @@ _AUDIT_PINS_2 = [
     ),
     ("agg_heavy_hitters", lambda t: t.count("Scan parquet") <= 1),
     ("llm_span_dedup", lambda t: "NestedLoop" not in t),
-    ("llm_semdedup", lambda t: "InPandas" in t),
+    # one grouped pass emits the whole manifest: no keep-flag join
+    (
+        "llm_semdedup",
+        lambda t: "InPandas" in t and "Join" not in t and _shuffles(t) == 1,
+    ),
     ("mm_phash_dedup", lambda t: "Broadcast" in t),
     ("mm_audio_vad", lambda t: t.count("Window") == 1),
     ("events_sessionize", lambda t: t.count("Exchange") == 1),
