@@ -29,7 +29,7 @@ from pyspark.sql.datasource import (
 
 from kafkastreaming_spark.io import EVENTS_ORACLE_CTE
 from kafkastreaming_spark.registry import query
-from kafkastreaming_spark.streaming.harness import drain, scratch_dir, stream_events
+from kafkastreaming_spark.streaming.harness import call_scratch, drain, stream_events
 
 _N_SENSORS = 64
 _N_READINGS = 1000
@@ -211,17 +211,12 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle (~1.5 s each on this box), not row volume."""
     import ast
     import os
-    import shutil
-    import uuid
 
     del sf_dir
     spark.dataSource.register(FeedDataSource)
-    base = os.path.join(
-        scratch_dir(), f"ks_feed_{uuid.uuid4().hex[:12]}"
-    )
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-    try:
+    with call_scratch("ks_feed") as base:
+        out = os.path.join(base, "out")
+        ckpt = os.path.join(base, "ckpt")
         for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
             q = drain(
                 spark,
@@ -246,8 +241,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("seq").alias("min_seq"),
             F.max("seq").alias("max_seq"),
         ).localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 class _JsonlCommitMessage(WriterCommitMessage):
@@ -270,11 +263,11 @@ class _JsonlStreamWriter(DataSourceStreamWriter):
     def write(self, iterator):
         import json
         import os
-        import uuid as _uuid
+        import tempfile
 
         n = 0
-        tmp = os.path.join(self.outdir, f"_tmp_{_uuid.uuid4().hex}.jsonl")
-        with open(tmp, "w") as f:
+        fd, tmp = tempfile.mkstemp(".jsonl", "_tmp_", self.outdir)
+        with os.fdopen(fd, "w") as f:
             for r in iterator:
                 f.write(
                     json.dumps({"event_id": r.event_id, "cents": r.cents})
@@ -346,21 +339,16 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged-rename pattern is exactly what DBIO/magic committers do;
     per-batch output visibility is atomic at the driver commit."""
     import os
-    import shutil
-    import uuid
 
     spark.dataSource.register(JsonlSinkDataSource)
-    base = os.path.join(
-        scratch_dir(), f"ks_pysink_{uuid.uuid4().hex[:12]}"
-    )
-    outdir = os.path.join(base, "out")
-    os.makedirs(outdir)
     # 2 chunks: multi-batch commit protocol demonstrated at half the
     # micro-batch scheduling cost of the default 4-chunk replay
     sdf = stream_events(spark, sf_dir, n_chunks=2).select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    try:
+    with call_scratch("ks_pysink") as base:
+        outdir = os.path.join(base, "out")
+        os.makedirs(outdir)
         drain(
             spark, sdf.writeStream.format("ks_jsonl_sink").option("outdir", outdir)
         )
@@ -373,5 +361,3 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("min_event_id"),
             F.max("event_id").alias("max_event_id"),
         ).localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -20,11 +20,13 @@ Kafka broker (none exists in this sandbox — SURVEY.md §7.5).
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
 import threading
 import uuid
+from collections.abc import Callable, Iterator
 from urllib.parse import urlparse
 
 import pyarrow as pa
@@ -33,7 +35,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from kafkastreaming_spark.io import session_cores
 from kafkastreaming_spark.sources.factory import file_event_stream
 
 
@@ -79,17 +80,46 @@ def _remove_process_dirs() -> None:
         shutil.rmtree(path, ignore_errors=True)
 
 
-# State/shuffle partition counts for replay streaming queries.  A
-# streaming state store costs O(partitions) per micro-batch per stateful
-# operator (provider load, delta file, commit) however little state it
-# holds, and AQE is disabled in streaming, so nothing coalesces the
-# session's batch-sized shuffle partitions back down.  Replay fixtures
-# carry <=100k rows of state, so that fixed cost is what the count
-# decides:
+# process_scratch dirs that build_once has filled in this process
+_BUILT: set[str] = set()
+# re-entrant: one build may ask for another (a dup replay needs the
+# plain replay); holding it across the check and the build keeps
+# concurrent lifecycles from racing the check against a rebuild
+_BUILD_LOCK = threading.RLock()
+
+
+def build_once(name: str, build: Callable[[str], None]) -> str:
+    """:func:`process_scratch` dir ``name``, filled by ``build(path)``
+    the first time this process asks for it."""
+    out = process_scratch(name)
+    with _BUILD_LOCK:
+        if out not in _BUILT:
+            build(out)
+            _BUILT.add(out)
+    return out
+
+
+@contextlib.contextmanager
+def call_scratch(prefix: str) -> Iterator[str]:
+    """Yield ``<scratch_dir()>/<prefix>_<uuid12>`` (not created) for one
+    call, and remove it on exit, also when the body raises."""
+    path = os.path.join(scratch_dir(), f"{prefix}_{uuid.uuid4().hex[:12]}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+# State/shuffle partition counts for a streaming lifecycle, chosen from
+# its plan.  A streaming state store costs O(partitions) per micro-batch
+# per stateful operator (provider load, delta file, commit) however
+# little state it holds, and AQE is disabled in streaming, so nothing
+# coalesces the shuffle partitions back down.  Replay fixtures carry
+# <=100k rows of state, so that fixed cost is what the count decides:
 #
 # * JVM state stores (aggregations, dedup, stream-stream joins) or no
-#   state: 2.  The r11/r12 sweep (4/8/16/32) never went below 4; an 8 -> 2
-#   sweep (4-vCPU VM, SPARK_GRAFT_CPUS=4, medians of 3 warm calls):
+#   state: 2.  An 8 -> 2 sweep (4-vCPU VM, SPARK_GRAFT_CPUS=4, medians
+#   of 3 warm calls):
 #
 #     key                          sf0.01: 8 -> 2    sf0.1: 8 -> 2
 #     sink_memory                  2.09 -> 1.32 s    2.40 -> 1.44 s
@@ -109,47 +139,11 @@ def _remove_process_dirs() -> None:
 #   at sf0.1 stream_stateful went 5.52 -> 6.91 s and stream_session_ttl
 #   10.49 -> 11.69 s.
 #
-# At state volumes at or above _STATE_VOLUME_THRESHOLD, state_partitions()
-# sizes to the machine instead.
+# State far beyond replay size (about 10^6 rows and up) wants at least
+# one partition per core; a lifecycle sets that through drain's
+# ``confs`` (SCALE.md "Streaming state partitions").
 _JVM_STATE_SHUFFLE = 2
 _PYTHON_STATE_SHUFFLE = 8
-
-# State-volume threshold above which the harness stops trusting the
-# low-overhead replay counts and sizes state partitions to the machine
-# (VERDICT r14 item 3, promoting the r14 100x-probe finding from a
-# docstring to a tested default).  The probe's A/B at 10M events through
-# stream_session_ttl measured 447 s at 32 partitions vs 1270-1348 s at 8
-# in fresh processes: once per-group state compute dominates the fixed
-# per-partition state-store overhead, fewer-partitions-than-cores is a
-# 3x loss.
-_STATE_VOLUME_THRESHOLD = 1_000_000
-
-
-def state_partitions(
-    state_groups: int | None,
-    cores: int | None = None,
-    python_state: bool = False,
-) -> int:
-    """State-partition count for a streaming lifecycle, derived from
-    expected STATE VOLUME (``state_groups`` = rows/groups the state
-    store will track; pass the best estimate available, e.g. distinct
-    keys x windows) and from where the state lives (``python_state``:
-    per-group state processed in Python workers).
-
-    Below :data:`_STATE_VOLUME_THRESHOLD` the fixed per-partition
-    per-micro-batch state-store cost dominates, so JVM state gets
-    :data:`_JVM_STATE_SHUFFLE` (2) and Python per-group state, whose
-    partitions are Python workers that must keep the cores busy,
-    :data:`_PYTHON_STATE_SHUFFLE` (8).  At or above it, per-group state
-    compute dominates and the rule flips to >= one partition per core —
-    the r14 100x probe measured the flip at 3x (447 s @32 vs
-    1270-1348 s @8 for 10M events / ~150k Python-stateful groups).
-    ``None`` state volume means "unknown, assume replay-sized"."""
-    if state_groups is not None and state_groups >= _STATE_VOLUME_THRESHOLD:
-        if cores is None:
-            cores = session_cores()
-        return max(cores, _PYTHON_STATE_SHUFFLE)
-    return _PYTHON_STATE_SHUFFLE if python_state else _JVM_STATE_SHUFFLE
 
 
 def _python_state(writer: DataStreamWriter) -> bool:
@@ -247,8 +241,6 @@ def drain(
     writer: DataStreamWriter,
     timeout_sec: float = 120,
     checkpoint: str | None = None,
-    shuffle_n: int | None = None,
-    state_groups: int | None = None,
     no_data_batches: bool = True,
     confs: dict[str, str] | None = None,
 ) -> StreamingQuery:
@@ -264,30 +256,19 @@ def drain(
     clones the session when it is created), so concurrent lifecycles
     with conflicting confs are safe and the session is left unchanged.
 
+    * The state-partition count follows the writer's analyzed plan, not
+      the key: :data:`_PYTHON_STATE_SHUFFLE` when it holds Python
+      per-group state, else :data:`_JVM_STATE_SHUFFLE`.  ``confs`` is
+      merged last, so ``{"spark.sql.shuffle.partitions": ...}`` there
+      overrides it.
     * A checkpoint on local disk (no URI scheme, or ``file``) is written
       through Spark's FileSystem checkpoint manager
       (:data:`_LOCAL_CHECKPOINT_MANAGER`): the default FileContext
       manager runs child processes on every rename of a local file,
       and each micro-batch renames a WAL entry, a commit entry and one
-      state delta per partition.  The write order (WAL, execute,
-      commit), temp-then-rename writes and checkpoint checksums are
-      unchanged.  The create of each file and of its .crc runs no
-      child process only under the java.nio local file system that
-      ``session.get_session`` registers for local masters; under
-      Hadoop's stock one each create runs `chmod`.  On the
-      ``stream-sink`` benchmark (4-vCPU VM, 10 alternating pairs) ``pass_s`` went 2.143 -> 1.535 s median
-      (-28%, 10/10 pairs); a traced pair (seed 931) cut
-      ``stream.wal_commit_ms`` 182.5 -> 37.5,
-      ``stream.commit_offsets_ms`` 154.5 -> 40.0 and
-      ``state.commit_ms`` 455.0 -> 25.5.  A remote checkpoint keeps
-      Spark's default manager.
-    * ``shuffle_n`` is the state-partition count; when None,
-      ``state_groups`` (expected state-store volume) picks it via
-      :func:`state_partitions`, told whether the writer's analyzed
-      plan holds Python per-group state.  The rule follows the plan,
-      not the key: no key overrides it (the r12/r13 per-key 4s for
-      ``stream_late_update`` and the stream-stream joins lost to the
-      JVM-state 2 — see the table above :data:`_JVM_STATE_SHUFFLE`).
+      state delta per partition.  On the ``stream-sink`` benchmark
+      (4-vCPU VM, 10 alternating pairs) ``pass_s`` went 2.143 -> 1.535 s
+      median.  A remote checkpoint keeps Spark's default manager.
     * ``no_data_batches=False`` skips the trailing zero-row micro-batch.
       That batch exists ONLY to advance the watermark and fire state
       evictions/timeouts after the last data batch — operators whose
@@ -303,71 +284,58 @@ def drain(
     the query is stopped, and a checkpoint this call created is
     removed; a caller-supplied ``checkpoint`` (restart, state reader)
     stays with the caller."""
-    own_ckpt = checkpoint is None
-    if own_ckpt:
-        checkpoint = os.path.join(scratch_dir(), f"ks_ckpt_{uuid.uuid4().hex[:12]}")
-    scoped = {
-        "spark.sql.shuffle.partitions": str(
-            shuffle_n
-            or state_partitions(state_groups, python_state=_python_state(writer))
-        ),
-        "spark.sql.streaming.noDataMicroBatches.enabled": str(
-            no_data_batches
-        ).lower(),
-        **(_LOCAL_CHECKPOINT_MANAGER if _is_local(checkpoint) else {}),
-        **(confs or {}),
-    }
-    q = None
-    try:
-        q = _start_scoped(
-            spark, writer.option("checkpointLocation", checkpoint), scoped
-        )
-        if not q.awaitTermination(timeout_sec):
-            raise TimeoutError(
-                f"streaming query {q.name or q.id} did not finish in "
-                f"{timeout_sec}s — refusing to return a partial sink"
+    with (
+        call_scratch("ks_ckpt")
+        if checkpoint is None
+        else contextlib.nullcontext(checkpoint)
+    ) as ckpt:
+        scoped = {
+            "spark.sql.shuffle.partitions": str(
+                _PYTHON_STATE_SHUFFLE
+                if _python_state(writer)
+                else _JVM_STATE_SHUFFLE
+            ),
+            "spark.sql.streaming.noDataMicroBatches.enabled": str(
+                no_data_batches
+            ).lower(),
+            **(_LOCAL_CHECKPOINT_MANAGER if _is_local(ckpt) else {}),
+            **(confs or {}),
+        }
+        q = None
+        try:
+            q = _start_scoped(
+                spark, writer.option("checkpointLocation", ckpt), scoped
             )
-        return q
-    finally:
-        if q is not None and q.isActive:
-            q.stop()
-        if own_ckpt:
-            shutil.rmtree(checkpoint, ignore_errors=True)
-
-
-# chunk dirs already built by THIS process; built under _REPLAY_LOCK so
-# concurrent lifecycles never race the check against the rmtree
-_REPLAY_BUILT: set[str] = set()
-_REPLAY_LOCK = threading.Lock()
+            if not q.awaitTermination(timeout_sec):
+                raise TimeoutError(
+                    f"streaming query {q.name or q.id} did not finish in "
+                    f"{timeout_sec}s — refusing to return a partial sink"
+                )
+            return q
+        finally:
+            if q is not None and q.isActive:
+                q.stop()
 
 
 def replay_chunks(
-    spark: SparkSession,
-    sf_dir: str,
-    n_chunks: int = 6,
-    late_fraction: float = 0.0,
+    sf_dir: str, n_chunks: int, late_fraction: float = 0.0
 ) -> str:
     """Write events as n_chunks arrival-ordered parquet files; optionally
     move a slice of mid-timeline rows into the last chunk (late data).
     Returns the chunk directory.
 
-    The chunks are built with pyarrow alone (:func:`_write_chunks`): no
-    Spark job runs, so ``spark`` is unused and kept for the callers that
-    bind this function by name.  The replay is a pure function of
-    (sf_dir, n_chunks, late_fraction) — every streaming key reads the
-    same events table — so the chunk dir is built ONCE per (process,
-    scratch root, params) and shared across keys, queries (each has its
-    own checkpoint) and bench repeats."""
-    out = process_scratch(
+    The chunks are built with pyarrow alone (:func:`_write_chunks`); no
+    Spark job runs.  The replay is a pure function of (sf_dir, n_chunks,
+    late_fraction) — every streaming key reads the same events table —
+    so the chunk dir is built ONCE per (process, scratch root, params)
+    and shared across keys, queries (each has its own checkpoint) and
+    bench repeats."""
+    return build_once(
         "ks_stream_shared_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
-        f"_{int(late_fraction * 10_000)}"
+        f"_{int(late_fraction * 10_000)}",
+        lambda out: _write_chunks(sf_dir, out, n_chunks, late_fraction),
     )
-    with _REPLAY_LOCK:
-        if out not in _REPLAY_BUILT:
-            _write_chunks(sf_dir, out, n_chunks, late_fraction)
-            _REPLAY_BUILT.add(out)
-    return out
 
 
 def _sorted_events(sf_dir: str) -> pa.Table:
@@ -461,9 +429,7 @@ def run_to_memory(
     sdf: DataFrame,
     output_mode: str = "append",
     timeout_sec: float = 120,
-    shuffle_n: int | None = None,
     no_data_batches: bool = True,
-    state_groups: int | None = None,
     confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
@@ -478,8 +444,6 @@ def run_to_memory(
         spark,
         sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
         timeout_sec=timeout_sec,
-        shuffle_n=shuffle_n,
-        state_groups=state_groups,
         no_data_batches=no_data_batches,
         confs=confs,
     )
@@ -489,56 +453,10 @@ def run_to_memory(
 def stream_events(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 6,
+    n_chunks: int,
     late_fraction: float = 0.0,
 ) -> DataFrame:
     """Convenience: chunked replay of the events table as a streaming DF."""
     return file_event_stream(
-        spark, replay_chunks(spark, sf_dir, n_chunks, late_fraction)
+        spark, replay_chunks(sf_dir, n_chunks, late_fraction)
     )
-
-
-def console_sink(
-    sdf: DataFrame,
-    num_rows: int = 5,
-    timeout_sec: int = 60,
-    state_groups: int | None = None,
-) -> None:
-    """Console sink (operational debugging sink; SURVEY.md §2.1).
-
-    ``state_groups`` (expected state-store volume) sizes state partitions
-    via :func:`state_partitions`, exactly like :func:`run_to_memory` —
-    replay-sized state keeps the plan-based replay count, >=threshold
-    state sizes to the machine (ADVICE r15: previously only run_to_memory
-    had this, so large-state lifecycles through this sink silently kept
-    the 3x-slow small-state default)."""
-    drain(
-        sdf.sparkSession,
-        sdf.writeStream.format("console")
-        .option("numRows", str(num_rows))
-        .option("truncate", "true"),
-        timeout_sec=timeout_sec,
-        state_groups=state_groups,
-    )
-
-
-def foreach_batch_collect(
-    sdf: DataFrame, timeout_sec: int = 120, state_groups: int | None = None
-) -> list:
-    """foreachBatch sink: collects (batch_id, row_count) per micro-batch —
-    the arbitrary-sink escape hatch (JDBC/object-store writes in prod).
-
-    ``state_groups`` sizes state partitions via :func:`state_partitions`,
-    matching :func:`run_to_memory` (ADVICE r15 — see :func:`console_sink`)."""
-    seen: list = []
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        seen.append((batch_id, batch_df.count()))
-
-    drain(
-        sdf.sparkSession,
-        sdf.writeStream.foreachBatch(handle),
-        timeout_sec=timeout_sec,
-        state_groups=state_groups,
-    )
-    return seen

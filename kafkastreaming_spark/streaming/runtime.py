@@ -21,8 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import threading
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -40,13 +38,11 @@ from kafkastreaming_spark.functions.numeric import dsum, oracle_dsum
 from kafkastreaming_spark.registry import query
 from kafkastreaming_spark.sources.factory import file_event_stream
 from kafkastreaming_spark.streaming.harness import (
-    console_sink,
+    build_once,
+    call_scratch,
     drain,
-    foreach_batch_collect,
-    process_scratch,
     replay_chunks,
     run_to_memory,
-    scratch_dir,
     stream_events,
     write_replay,
 )
@@ -140,10 +136,20 @@ def sink_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches are the minimal multi-batch proof, at half the
     scheduling cost of four."""
     sdf = stream_events(spark, sf_dir, n_chunks=2)
-    console_sink(sdf.select("event_id", "ts", "event_type", "value"), num_rows=3)
-    batches = foreach_batch_collect(
-        stream_events(spark, sf_dir, n_chunks=2)
+    drain(
+        spark,
+        sdf.select("event_id", "ts", "event_type", "value")
+        .writeStream.format("console")
+        .option("numRows", "3")
+        .option("truncate", "true"),
+        timeout_sec=60,
     )
+    batches: list[tuple[int, int]] = []
+
+    def count_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batches.append((batch_id, batch_df.count()))
+
+    drain(spark, sdf.writeStream.foreachBatch(count_batch))
     return spark.createDataFrame(
         [(int(b), int(n)) for b, n in batches], "batch_id long, n_rows long"
     )
@@ -173,19 +179,18 @@ def sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch breaks the oracle."""
 
     sdf = stream_events(spark, sf_dir, n_chunks=4)
-    out = os.path.join(scratch_dir(), f"ks_e1_{uuid.uuid4().hex[:12]}")
+    with call_scratch("ks_e1") as out:
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(out, f"batch={batch_id}")
+            )
 
-    try:
         drain(spark, sdf.writeStream.foreachBatch(write_batch))
         back = spark.read.parquet(out).groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
         )
         return back.localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)  # no orphaned batch dirs per run
 
 
 @query(
@@ -785,26 +790,24 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash-recovery path every production stream exercises; checkpoint
     to object storage, same semantics."""
 
-    src_all = replay_chunks(spark, sf_dir, n_chunks=4)
-    run_id = uuid.uuid4().hex[:12]
-    base = os.path.join(scratch_dir(), f"ks_ckptr_{run_id}")
-    src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
-    os.makedirs(src)
+    src_all = replay_chunks(sf_dir, n_chunks=4)
     chunks = sorted(f for f in os.listdir(src_all) if f.endswith(".parquet"))
+    with call_scratch("ks_ckptr") as base:
+        src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
+        os.makedirs(src)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out, f"batch={batch_id}")
-        )
+        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("overwrite").parquet(
+                os.path.join(out, f"batch={batch_id}")
+            )
 
-    def run() -> None:
-        drain(
-            spark,
-            file_event_stream(spark, src).writeStream.foreachBatch(write_batch),
-            checkpoint=ckpt,
-        )
+        def run() -> None:
+            drain(
+                spark,
+                file_event_stream(spark, src).writeStream.foreachBatch(write_batch),
+                checkpoint=ckpt,
+            )
 
-    try:
         for f in chunks[:2]:
             shutil.copy(os.path.join(src_all, f), os.path.join(src, f))
         run()  # run 1: commits offsets for chunks 0-1, then stops
@@ -815,8 +818,6 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
         )
         return back.localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -854,8 +855,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_streader_{uuid.uuid4().hex[:8]}")
-    try:
+    with call_scratch("ks_ckpt_streader") as ckpt:
         # the sink is irrelevant here — the key reads the state files
         drain(
             spark,
@@ -870,8 +870,6 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value.count").cast("long").alias("n_events"),
             F.col("value.sum").cast("long").alias("cents"),
         ).localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 @query(
@@ -981,33 +979,31 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     background; the apply loop's shape is unchanged."""
 
     sdf = stream_events(spark, sf_dir, n_chunks=4)
-    base = os.path.join(
-        scratch_dir(), f"ks_upsert_{uuid.uuid4().hex[:12]}"
-    )
     state: dict = {"path": None}
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
     )
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        newest = (
-            bdf.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
-        if state["path"] is not None:
-            prev = bdf.sparkSession.read.parquet(state["path"])
+    with call_scratch("ks_upsert") as base:
+
+        def apply_batch(bdf: DataFrame, batch_id: int) -> None:
             newest = (
-                prev.unionByName(newest)
-                .withColumn("rn", F.row_number().over(w))
+                bdf.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
                 .drop("rn")
             )
-        out = os.path.join(base, f"v{batch_id}")
-        newest.write.mode("overwrite").parquet(out)
-        state["path"] = out
+            if state["path"] is not None:
+                prev = bdf.sparkSession.read.parquet(state["path"])
+                newest = (
+                    prev.unionByName(newest)
+                    .withColumn("rn", F.row_number().over(w))
+                    .filter(F.col("rn") == 1)
+                    .drop("rn")
+                )
+            out = os.path.join(base, f"v{batch_id}")
+            newest.write.mode("overwrite").parquet(out)
+            state["path"] = out
 
-    try:
         drain(spark, sdf.writeStream.foreachBatch(apply_batch))
         snap = spark.read.parquet(state["path"]).select(
             "user_id",
@@ -1015,8 +1011,6 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
         )
         return snap.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1029,9 +1023,7 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY event_type
     """,
 )
-def stream_rocksdb_state(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> DataFrame:
+def stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming on the ROCKSDB state store provider — the
     large-state backend (spill-to-disk SST files, incremental
     changelog checkpointing) that replaces the default in-memory
@@ -1064,7 +1056,7 @@ def stream_rocksdb_state(
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled": "true",
     }
-    sdf = stream_events(spark, sf_dir, n_chunks=n_chunks)
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     agg = sdf.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
@@ -1075,32 +1067,22 @@ def stream_rocksdb_state(
     return out.localCheckpoint(eager=True)
 
 
-# dup-replay dirs already built by THIS process; built under _DDWW_LOCK
-# so concurrent lifecycles never race the check against the rmtree
-_DDWW_BUILT: set = set()
-_DDWW_LOCK = threading.Lock()
+# chunks of the replay that _ddww_chunks re-delivers from
+_DUP_REPLAY_CHUNKS = 4
 
 
-def _ddww_chunks(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> str:
-    """n_chunks replay (default 4) PLUS a trailing chunk of true
-    duplicate deliveries: every event_id ≡ 0 (mod 7) from the FIRST
-    chunk (state long expired by arrival) and from the LAST chunk
+def _ddww_chunks(sf_dir: str) -> str:
+    """The :data:`_DUP_REPLAY_CHUNKS`-chunk replay PLUS a trailing chunk
+    of true duplicate deliveries: every event_id ≡ 0 (mod 7) from the
+    FIRST chunk (state long expired by arrival) and from the LAST chunk
     (state still live) is delivered a second time, byte-identical,
     after all originals."""
-
-    # outside the lock: replay_chunks takes the (non-re-entrant)
-    # _REPLAY_LOCK itself
-    base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks)
-    out = process_scratch(
-        f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
+    return build_once(
+        f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}_{_DUP_REPLAY_CHUNKS}",
+        lambda out: _write_ddww(
+            replay_chunks(sf_dir, n_chunks=_DUP_REPLAY_CHUNKS), out
+        ),
     )
-    with _DDWW_LOCK:
-        if out not in _DDWW_BUILT:
-            _write_ddww(base_dir, out)
-            _DDWW_BUILT.add(out)
-    return out
 
 
 def _write_ddww(base_dir: str, out: str) -> None:
@@ -1129,9 +1111,7 @@ def _write_ddww(base_dir: str, out: str) -> None:
     SELECT event_id, user_id, ts, event_type, value FROM events
     """,
 )
-def stream_dedup_watermark(
-    spark: SparkSession, sf_dir: str, n_chunks: int = 4
-) -> DataFrame:
+def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` under TRUE duplicate delivery —
     the at-least-once→exactly-once repair stage in front of every Kafka
     topic whose producer retries.  Unlike the batch-twin ``stream_dedup``
@@ -1158,7 +1138,7 @@ def stream_dedup_watermark(
     re-delivered byte-identical in a trailing 5th micro-batch
     (``_ddww_chunks``).  State sizing: watermark horizon bounds live
     keys exactly as stream_session_ttl's eviction argument."""
-    chunk_dir = _ddww_chunks(spark, sf_dir, n_chunks=n_chunks)
+    chunk_dir = _ddww_chunks(sf_dir)
     sdf = (
         file_event_stream(spark, chunk_dir)
         .withWatermark("ts", "10 minutes")

@@ -158,7 +158,7 @@ def test_replay_chunks_are_ordered_event_slices(
     assert ev.columns == EVENT_SCHEMA.fieldNames()
     rows = [tuple(r) for r in ev.collect()]
     for k, late in _REPLAY_CASES:
-        d = replay_chunks(spark, sf_dir, k, late)
+        d = replay_chunks(sf_dir, k, late)
         assert _chunk_rows(spark, d) == _expected_chunks(rows, k, late), (k, late)
         names = sorted(os.listdir(d))
         mtimes = [os.stat(os.path.join(d, f)).st_mtime_ns for f in names]
@@ -173,7 +173,7 @@ def test_replay_chunks_start_no_spark_job(
     """Building a replay dir (a fresh scratch root, so no memo hit)
     starts no Spark job."""
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    d, n_jobs = spark_jobs(lambda: replay_chunks(spark, sf_dir, 4, 0.02))
+    d, n_jobs = spark_jobs(lambda: replay_chunks(sf_dir, 4, 0.02))
     assert d.startswith(str(tmp_path)) and os.listdir(d)
     assert n_jobs == 0
 
@@ -205,7 +205,7 @@ def test_replay_chunks_truncate_nanos_like_load_table(spark, tmp_path, monkeypat
         sf / "events.parquet",
     )
     assert pq.read_schema(sf / "events.parquet").field("ts").type.unit == "ns"
-    got = _chunk_rows(spark, replay_chunks(spark, str(sf), n_chunks=2))
+    got = _chunk_rows(spark, replay_chunks(str(sf), n_chunks=2))
     want = load_table(spark, str(sf), "events").orderBy("ts", "event_id")
     assert got == _expected_chunks([tuple(r) for r in want.collect()], 2, 0.0)
     assert [r[0] for rows in got.values() for r in rows] == [1, 2, 3, 4]
@@ -305,7 +305,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     # would poison every later consumer of the shared dir
     import shutil
 
-    shared = replay_chunks(spark, sf_dir, n_chunks=3)
+    shared = replay_chunks(sf_dir, n_chunks=3)
     chunk_dir = str(tmp_path / "chunks")
     shutil.copytree(shared, chunk_dir)
     # duplicate the first 40 rows of chunk 0 into a later-arriving file
@@ -562,7 +562,7 @@ def test_dedup_watermark_duplicates_really_delivered(spark, sf_dir):
 
     sf = sf_dir
     out = QUERIES["stream_dedup_watermark"](spark, sf).toPandas()
-    d = _ddww_chunks(spark, sf)
+    d = _ddww_chunks(sf)
     dup_path = os.path.join(d, "chunk_999_dup.parquet")
     assert os.path.exists(dup_path)
     dups = pd.read_parquet(dup_path)
@@ -582,70 +582,7 @@ def test_dedup_watermark_duplicates_really_delivered(spark, sf_dir):
     assert sorted(out["event_id"]) == sorted(originals["event_id"].unique())
 
 
-def test_state_partitions_sized_for_state_volume():
-    """The harness derives state partitions from expected state VOLUME
-    and from where the state lives.  Below the threshold the fixed
-    per-partition state-store commit dominates: replay-sized JVM state
-    gets 2 (sink_memory 2.40 -> 1.44 s at sf0.1 going 8 -> 2), Python
-    per-group state keeps 8 (stream_stateful 5.52 -> 6.91 s at 2).  At or
-    above it, per-group compute dominates: the r14 100x probe A/B'd 10M
-    events through stream_session_ttl in fresh processes, 447 s at 32
-    partitions vs 1270-1348 s at 8, so fewer-partitions-than-cores is a
-    3x loss whatever the state kind."""
-    from kafkastreaming_spark.io import session_cores
-    from kafkastreaming_spark.streaming.harness import (
-        _STATE_VOLUME_THRESHOLD,
-        state_partitions,
-    )
-
-    cores = session_cores()
-    # below threshold / unknown: replay-sized JVM state 2, Python state 8
-    for groups in (100_000, None):
-        assert state_partitions(groups) == 2
-        assert state_partitions(groups, python_state=True) == 8
-    # at/above threshold: >= one partition per core, never below 8
-    for python_state in (False, True):
-        kw = dict(python_state=python_state)
-        assert state_partitions(_STATE_VOLUME_THRESHOLD, **kw) >= cores
-        assert state_partitions(10_000_000, **kw) == max(cores, 8)
-        assert state_partitions(10_000_000, cores=4, **kw) == 8
-        # explicit cores override wins above threshold
-        assert state_partitions(10_000_000, cores=64, **kw) == 64
-
-
-def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatch):
-    """ADVICE r15 pin: console_sink and foreach_batch_collect size their
-    state partitions from ``state_groups`` via state_partitions(), the
-    same way run_to_memory does — a large-state lifecycle through these
-    sinks must not silently keep the 8-partition replay default."""
-    from kafkastreaming_spark.streaming import harness
-
-    captured: list[int | None] = []
-    real = harness._start_scoped
-
-    def spy(session, writer, confs):
-        captured.append(int(confs["spark.sql.shuffle.partitions"]))
-        return real(session, writer, confs)
-
-    monkeypatch.setattr(harness, "_start_scoped", spy)
-
-    sdf = harness.stream_events(spark, sf_dir, n_chunks=2).select(
-        "event_id", "ts", "event_type", "value"
-    )
-    big = 10_000_000  # above _STATE_VOLUME_THRESHOLD
-    harness.console_sink(sdf, num_rows=1, state_groups=big)
-    batches = harness.foreach_batch_collect(sdf, state_groups=big)
-    assert captured == [harness.state_partitions(big)] * 2
-    assert captured[0] >= 8
-    assert sum(n for _, n in batches) == sdf.sparkSession.read.parquet(
-        harness.replay_chunks(spark, sf_dir, 2)
-    ).count()
-    # default path (no state_groups, no Python state): the JVM count
-    harness.console_sink(sdf, num_rows=1)
-    assert captured[-1] == harness._JVM_STATE_SHUFFLE == 2
-
-
-def test_state_partitions_follow_python_state_in_plan(spark, sf_dir, monkeypatch):
+def test_state_shuffle_follows_python_state_in_plan(spark, sf_dir, monkeypatch):
     """drain picks the state-partition count from the writer's plan, not
     from the key: sink_memory (JVM aggregation state) starts with 2,
     stream_stateful (applyInPandasWithState) with 8."""
@@ -719,7 +656,7 @@ def test_local_checkpoint_layout_and_resume(spark, sf_dir, tmp_path):
     from kafkastreaming_spark.sources.factory import file_event_stream
     from kafkastreaming_spark.streaming import harness
 
-    src_all = harness.replay_chunks(spark, sf_dir, n_chunks=4)
+    src_all = harness.replay_chunks(sf_dir, n_chunks=4)
     chunks = sorted(f for f in os.listdir(src_all) if f.endswith(".parquet"))
     src, ckpt = tmp_path / "src", tmp_path / "ckpt"
     src.mkdir()
@@ -778,7 +715,11 @@ def test_drain_timeout_releases_query_checkpoint_and_confs(spark, sf_dir):
     with pytest.raises(TimeoutError):
         # 1 ms: four stateful micro-batches cannot drain that fast
         harness.run_to_memory(
-            agg, "complete", timeout_sec=0.001, shuffle_n=3, no_data_batches=False
+            agg,
+            "complete",
+            timeout_sec=0.001,
+            no_data_batches=False,
+            confs={"spark.sql.shuffle.partitions": "3"},
         )
     assert not spark.streams.active
     assert set(glob.glob(os.path.join(harness.scratch_dir(), "ks_ckpt_*"))) == ckpts
@@ -796,8 +737,12 @@ def test_concurrent_lifecycles_with_conflicting_confs(spark, sf_dir):
     from kafkastreaming_spark.streaming import harness
 
     lifecycles = {
-        "3_no_trailing": dict(shuffle_n=3, no_data_batches=False),
-        "5_trailing": dict(shuffle_n=5, no_data_batches=True),
+        "3_no_trailing": dict(
+            no_data_batches=False, confs={"spark.sql.shuffle.partitions": "3"}
+        ),
+        "5_trailing": dict(
+            no_data_batches=True, confs={"spark.sql.shuffle.partitions": "5"}
+        ),
     }
 
     def run(name: str) -> list:
@@ -825,3 +770,82 @@ def test_concurrent_lifecycles_with_conflicting_confs(spark, sf_dir):
         sys.setswitchinterval(switch)
     assert together == [solo[name] for name in names]
     assert {k: spark.conf.get(k, None) for k in _LIFECYCLE_CONFS} == confs
+
+
+# keys that run in a per-call scratch dir, with the dir's prefix
+_PER_CALL_DIRS = {
+    "sink_exactly_once": "ks_e1_",
+    "stream_checkpoint_restart": "ks_ckptr_",
+    "stream_state_reader": "ks_ckpt_streader_",
+    "stream_foreach_upsert": "ks_upsert_",
+    "source_python_stream": "ks_feed_",
+    "sink_python_stream": "ks_pysink_",
+}
+
+
+def test_per_call_scratch_dirs_removed_after_each_key(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Under a fresh scratch root each key that works in a per-call dir
+    removes it, and drain's own checkpoints, before it returns: only the
+    per-process dirs (``*_<pid>``, removed at exit) are left."""
+    import shutil
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    removed: list[str] = []
+    real_rmtree = shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if os.path.dirname(path) == str(tmp_path) and os.path.exists(path):
+            removed.append(os.path.basename(path))
+        return real_rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree)
+    pid = f"_{os.getpid()}"
+    for key, prefix in _PER_CALL_DIRS.items():
+        removed.clear()
+        QUERIES[key](spark, sf_dir).collect()
+        left = [
+            e for e in os.listdir(tmp_path)
+            if e.startswith("ks_") and not e.endswith(pid)
+        ]
+        assert left == [], key
+        assert any(r.startswith(prefix) for r in removed), (key, removed)
+
+
+def test_call_scratch_removed_when_body_raises(tmp_path, monkeypatch):
+    """call_scratch names a fresh dir under the scratch root and removes
+    it on exit even when the body raises."""
+    from kafkastreaming_spark.streaming import harness
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    with pytest.raises(RuntimeError, match="body failed"):
+        with harness.call_scratch("ks_fail") as d:
+            assert os.path.dirname(d) == str(tmp_path)
+            assert os.path.basename(d).startswith("ks_fail_")
+            os.makedirs(os.path.join(d, "sub"))
+            raise RuntimeError("body failed")
+    assert os.listdir(tmp_path) == []
+
+
+def test_build_once_builds_each_dir_once_even_nested(tmp_path, monkeypatch):
+    """build_once fills a process dir on the first call only, and a build
+    may itself ask for another process dir (the dup replay needs the
+    plain replay) without deadlocking."""
+    from kafkastreaming_spark.streaming import harness
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    calls: list[str] = []
+
+    def inner(out: str) -> None:
+        calls.append("inner")
+        os.makedirs(out)
+
+    def outer(out: str) -> None:
+        calls.append(harness.build_once("ks_test_inner", inner))
+        os.makedirs(out)
+
+    got = [harness.build_once("ks_test_outer", outer) for _ in range(2)]
+    pid = os.getpid()
+    assert got == [str(tmp_path / f"ks_test_outer_{pid}")] * 2
+    assert calls == ["inner", str(tmp_path / f"ks_test_inner_{pid}")]
