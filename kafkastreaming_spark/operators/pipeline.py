@@ -785,20 +785,35 @@ def _nn_block_count(n: int) -> int:
     return max(1, -(-n // rows))
 
 # Cap on score-matrix cells per matmul (~160 MB of float64).  Every
-# cosine kernel — broadcast and blocked — scores the query side in
-# chunks of max(64, _NN_SCORE_CELLS // corpus_rows) rows so per-task
-# peak memory is bounded no matter how large the corpus/block side is.
+# cosine kernel scores its query side in ``_cosine_chunks`` slices of
+# max(64, _NN_SCORE_CELLS // corpus_rows) rows so per-task peak memory
+# is bounded no matter how large the corpus/block side is.
 _NN_SCORE_CELLS = 20_000_000
 
 
 def _score_chunk_rows(n_corpus: int, cells: int) -> int:
     """Query rows per matmul that keep the float64 score matrix under
     ``cells`` score cells against an ``n_corpus``-row right side.
-    ``cells`` is captured driver-side (``cells = _NN_SCORE_CELLS`` in
-    each kernel factory) so it rides into the executor closure —
+    ``cells`` is captured driver-side (``cells = _NN_SCORE_CELLS`` where
+    each kernel is built) so it rides into the executor closure —
     reading the module global inside the UDF would see the executor
     worker's fresh import, not the driver's value."""
     return max(64, cells // max(1, n_corpus))
+
+
+def _cosine_chunks(a, cm, cn, cells: int):
+    """Score query rows ``a`` against corpus rows ``cm`` (row norms
+    ``cn``) one ``_score_chunk_rows`` slice at a time, yielding
+    ``(start, cos)`` where ``cos[i, j]`` is the cosine of ``a[start + i]``
+    and ``cm[j]``.  The one spelling of the score for every cosine
+    kernel: the oracle formula verbatim, dot / (|a|·|b|), THEN round."""
+    import numpy as np
+
+    an = np.sqrt((a * a).sum(axis=1))
+    step = _score_chunk_rows(len(cm), cells)
+    for s in range(0, len(a), step):
+        q = slice(s, s + step)
+        yield s, np.round((a[q] @ cm.T) / np.outer(an[q], cn), 6)
 
 
 @query(
@@ -831,29 +846,31 @@ def llm_cosine_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Statistics-driven physical strategy, exactly like Catalyst's
     broadcast-vs-shuffle join choice: below ``_NN_BROADCAST_MAX_N``
-    vectors the corpus matrix is broadcast and one Arrow-batched
-    ``mapInPandas`` BLAS matmul scores each batch (driver holds one
-    bounded ~50 MB matrix, never an unbounded collect); above it the
-    plan flips to ``_cosine_nn_blocked`` — the distributed analogue of
-    block matrix multiply with no driver collect and no full-corpus
-    broadcast at any size (shuffle volume 2·n·B rows, per-task memory
-    one block pair).  Both paths produce identical output (pytest pins
-    them against each other); ties → lowest nn_id, matching the
-    oracle's ``ORDER BY cos_sim DESC, nn_id``.  A pair-join spelling
-    took 34 s at sf0.1 — per-pair lambda folds are interpreted, while
-    one matmul per batch/block is ~free."""
+    vectors ``_cosine_broadcast`` sends the corpus matrix to every
+    executor and one Arrow-batched ``mapInPandas`` BLAS matmul scores
+    each batch (driver holds one bounded ~50 MB matrix, never an
+    unbounded collect); above it the plan flips to ``_cosine_blocked``
+    — the distributed analogue of block matrix multiply with no driver
+    collect and no full-corpus broadcast at any size (shuffle volume
+    2·n·B rows, per-task memory one block pair) — whose block-local
+    winners ``_nn_merge`` reduces per query.  Both paths produce
+    identical output (pytest pins them against each other); ties →
+    lowest nn_id, matching the oracle's ``ORDER BY cos_sim DESC,
+    nn_id``.  A pair-join spelling took 34 s at sf0.1 — per-pair lambda
+    folds are interpreted, while one matmul per batch/block is ~free."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = table_rows(spark, sf_dir, "embeddings")  # parquet footer metadata — no scan
     if n <= _NN_BROADCAST_MAX_N:
-        return _cosine_nn_broadcast(spark, emb, sf_dir)
-    return _cosine_nn_blocked(spark, emb, n_blocks=_nn_block_count(n))
+        return _cosine_broadcast(spark, emb, sf_dir, _nn_emit, _NN_SCHEMA)
+    local = _cosine_blocked(spark, emb, _nn_block_count(n), _nn_emit, _NN_SCHEMA)
+    return _nn_merge(local)
 
 
 def _corpus_matrix_bc(spark: SparkSession, sf_dir: str):
     """Memoized (ids, matrix, norms) broadcast of the bounded corpus —
-    one collect + broadcast per (session, sf_dir), shared by the
-    broadcast-regime NN and pair kernels.  Rebuilding it per run was
-    most of llm_cosine_nn's 5.58 s driver-visible cost in r2.
+    one collect + broadcast per (session, sf_dir), shared by every
+    ``_cosine_broadcast`` scan.  Rebuilding it per run was most of
+    llm_cosine_nn's 5.58 s driver-visible cost in r2.
 
     Loads the FULL embeddings table itself (rather than taking a
     DataFrame argument) because the memo key is (session, sf_dir) only —
@@ -879,54 +896,45 @@ def _corpus_matrix_bc(spark: SparkSession, sf_dir: str):
     return memo(spark, sf_dir, "cosine_nn_bc", build)
 
 
-def _cosine_nn_broadcast(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
+def _cosine_broadcast(
+    spark: SparkSession, emb: DataFrame, sf_dir: str, emit, schema: str
 ) -> DataFrame:
-    """Broadcast-regime kernel: bounded corpus matrix to every executor,
-    one matmul per Arrow batch."""
+    """Broadcast-regime scan of ``emb`` (vec_id, embedding) against the
+    whole corpus: the memoized corpus matrix goes to every executor,
+    each Arrow batch is scored in ``_cosine_chunks`` slices, and
+    ``emit(q_ids, cos, c_ids)`` turns a slice into ``schema`` rows."""
     import numpy as np
-    import pandas as pd
 
     bc = _corpus_matrix_bc(spark, sf_dir)
-
     cells = _NN_SCORE_CELLS
 
-    def nn_batches(batches):
+    def scan(batches):
         c_ids, cm, cn = bc.value
-        pos = {int(v): i for i, v in enumerate(c_ids)}
-        step = _score_chunk_rows(len(c_ids), cells)
         for pdf in batches:
-            a_all = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids_all = pdf["vec_id"].to_numpy()
-            for s in range(0, len(ids_all), step):
-                a = a_all[s : s + step]
-                an = np.sqrt((a * a).sum(axis=1))
-                # oracle formula verbatim: dot / (|a|·|b|), THEN round
-                cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
-                row_ids = ids_all[s : s + step]
-                for i, vid in enumerate(row_ids):
-                    cos[i, pos[int(vid)]] = -2.0  # exclude self
-                best = cos.argmax(axis=1)  # first max = lowest nn_id on ties
-                yield pd.DataFrame(
-                    {
-                        "vec_id": row_ids,
-                        "nn_id": c_ids[best],
-                        "cos_sim": cos[np.arange(len(best)), best],
-                    }
-                )
+            a = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            q_ids = pdf["vec_id"].to_numpy()
+            for s, cos in _cosine_chunks(a, cm, cn, cells):
+                out = emit(q_ids[s : s + len(cos)], cos, c_ids)
+                if len(out):
+                    yield out
 
-    return emb.mapInPandas(nn_batches, "vec_id long, nn_id long, cos_sim double")
+    return emb.mapInPandas(scan, schema)
 
 
-def _cosine_nn_blocked(
-    spark: SparkSession, emb: DataFrame, n_blocks: int
+def _cosine_blocked(
+    spark: SparkSession, emb: DataFrame, n_blocks: int, emit, schema: str
 ) -> DataFrame:
-    """Block-decomposed exact NN: B×B cogrouped block pairs, one BLAS
-    matmul each, then a per-query max-merge of block-local winners."""
+    """Block-decomposed scan of ``emb`` (vec_id, embedding) against
+    itself: rows fall into ``n_blocks`` crc32 blocks, a broadcast
+    ``range(B)`` crossJoin replicates each side across the B×B block
+    pairs, and every cogrouped block pair is scored in ``_cosine_chunks``
+    slices with ``emit`` as in ``_cosine_broadcast`` — no driver collect,
+    per-task memory one block pair.  Emitted rows are block-local."""
     import numpy as np
     import pandas as pd
 
     cells = _NN_SCORE_CELLS
+    empty = {f.split()[0]: [] for f in schema.split(",")}
 
     blk = emb.withColumn("blk", F.crc32(F.col("vec_id").cast("string")) % n_blocks)
     rep = F.broadcast(spark.range(n_blocks).select(F.col("id").alias("other")))
@@ -938,49 +946,52 @@ def _cosine_nn_blocked(
         F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"),
     )
 
-    def block_nn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    def block(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if left.empty or right.empty:
-            return pd.DataFrame({"vec_id": [], "nn_id": [], "cos_sim": []})
-        right = right.sort_values("c_id")  # argmax's first max = lowest nn_id
+            return pd.DataFrame(empty)
+        right = right.sort_values("c_id")  # emitters want ascending corpus ids
+        c_ids = right["c_id"].to_numpy()
         cm = np.stack(right["c_emb"].to_numpy()).astype(np.float64)
         cn = np.sqrt((cm * cm).sum(axis=1))
-        c_ids = right["c_id"].to_numpy()
-        pos = {int(v): i for i, v in enumerate(c_ids)}
-        a_all = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-        ids_all = left["vec_id"].to_numpy()
-        step = _score_chunk_rows(len(c_ids), cells)
-        outs = []
-        for s in range(0, len(ids_all), step):
-            a = a_all[s : s + step]
-            an = np.sqrt((a * a).sum(axis=1))
-            # oracle formula verbatim: dot / (|a|·|b|), THEN round
-            cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
-            row_ids = ids_all[s : s + step]
-            for i, vid in enumerate(row_ids):
-                j = pos.get(int(vid))
-                if j is not None:
-                    cos[i, j] = -2.0  # exclude self
-            best = cos.argmax(axis=1)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": row_ids,
-                        "nn_id": c_ids[best],
-                        "cos_sim": cos[np.arange(len(best)), best],
-                    }
-                )
-            )
+        a = np.stack(left["embedding"].to_numpy()).astype(np.float64)
+        q_ids = left["vec_id"].to_numpy()
+        outs = [
+            emit(q_ids[s : s + len(cos)], cos, c_ids)
+            for s, cos in _cosine_chunks(a, cm, cn, cells)
+        ]
         return pd.concat(outs, ignore_index=True)
 
-    local = (
+    return (
         queries.groupby("qblk", "cblk")
         .cogroup(corpus.groupby("qblk", "cblk"))
-        .applyInPandas(
-            lambda l, r: block_nn(l, r), "vec_id long, nn_id long, cos_sim double"
-        )
+        .applyInPandas(lambda l, r: block(l, r), schema)
     )
-    # merge block-local winners: max on (cos_sim, -nn_id) == best score,
-    # lowest id on ties — exact because scores are already 6dp-rounded
+
+
+_NN_SCHEMA = "vec_id long, nn_id long, cos_sim double"
+
+
+def _nn_emit(q_ids, cos, c_ids):
+    """Each query row's best corpus match, itself excluded.  ``c_ids``
+    ascend, so argmax's first max is the lowest nn_id on ties."""
+    import numpy as np
+    import pandas as pd
+
+    cos[q_ids[:, None] == c_ids[None, :]] = -2.0  # exclude self
+    best = cos.argmax(axis=1)
+    return pd.DataFrame(
+        {
+            "vec_id": q_ids,
+            "nn_id": c_ids[best],
+            "cos_sim": cos[np.arange(len(best)), best],
+        }
+    )
+
+
+def _nn_merge(local: DataFrame) -> DataFrame:
+    """Merge the blocked scan's block-local NN winners: max on
+    (cos_sim, -nn_id) == best score, lowest id on ties — exact because
+    scores are already 6dp-rounded."""
     return (
         local.groupBy("vec_id")
         .agg(
@@ -1030,117 +1041,37 @@ def llm_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     whatever embedding model produced the vectors.
 
     Same statistics-driven regime split as ``llm_cosine_nn``: below
-    ``_NN_BROADCAST_MAX_N`` vectors the memoized corpus broadcast is
-    scanned once per Arrow batch (each batch emits its qualifying pairs
-    with query_id < corpus_id, so every pair is produced exactly once);
-    above it, the cogrouped block-matmul variant emits pairs per block
-    pair with no driver collect.  Both paths are exact, not ANN — the
-    honest O(n²/B) all-pairs scan; at true 100 TB scale the production
-    path prescreens with ``llm_ann_lsh``/``llm_ann_ivf`` buckets and
-    only rescoring survivors, which composes from these same pieces.
-    Filtering on the ROUNDED score mirrors the oracle exactly, so the
-    threshold boundary is cross-engine stable."""
+    ``_NN_BROADCAST_MAX_N`` vectors ``_cosine_broadcast`` scans the
+    memoized corpus broadcast once per Arrow batch; above it
+    ``_cosine_blocked`` scores the cogrouped block pairs with no driver
+    collect.  Either way ``_pairs_emit`` keeps only query_id < corpus_id,
+    so every pair is produced exactly once.  Both paths are exact, not
+    ANN — the honest O(n²/B) all-pairs scan; at true 100 TB scale the
+    production path prescreens with ``llm_ann_lsh``/``llm_ann_ivf``
+    buckets and only rescoring survivors, which composes from these
+    same pieces.  Filtering on the ROUNDED score mirrors the oracle
+    exactly, so the threshold boundary is cross-engine stable."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = table_rows(spark, sf_dir, "embeddings")
     if n <= _NN_BROADCAST_MAX_N:
-        return _cosine_pairs_broadcast(spark, emb, sf_dir)
-    return _cosine_pairs_blocked(spark, emb, n_blocks=_nn_block_count(n))
+        return _cosine_broadcast(spark, emb, sf_dir, _pairs_emit, _PAIRS_SCHEMA)
+    return _cosine_blocked(spark, emb, _nn_block_count(n), _pairs_emit, _PAIRS_SCHEMA)
 
 
-def _cosine_pairs_broadcast(
-    spark: SparkSession, emb: DataFrame, sf_dir: str
-) -> DataFrame:
-    """Broadcast-regime pair kernel: one matmul per Arrow batch, emit
-    (query < corpus) pairs at cos ≥ τ."""
+_PAIRS_SCHEMA = "vec_a long, vec_b long, cos_sim double"
+
+
+def _pairs_emit(q_ids, cos, c_ids):
+    """Every (query < corpus) pair at cos ≥ τ: each unordered pair is
+    emitted once, from the side holding its lower id."""
     import numpy as np
     import pandas as pd
 
-    bc = _corpus_matrix_bc(spark, sf_dir)
-    t = _COSINE_DEDUP_T
-
-    cells = _NN_SCORE_CELLS
-
-    def pair_batches(batches):
-        c_ids, cm, cn = bc.value
-        step = _score_chunk_rows(len(c_ids), cells)
-        for pdf in batches:
-            a_all = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids_all = pdf["vec_id"].to_numpy()
-            for s in range(0, len(ids_all), step):
-                a = a_all[s : s + step]
-                an = np.sqrt((a * a).sum(axis=1))
-                cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
-                row_ids = ids_all[s : s + step]
-                # query_id < corpus_id: each unordered pair emitted once
-                qi, ci = np.nonzero(
-                    (cos >= t) & (row_ids[:, None] < c_ids[None, :])
-                )
-                if len(qi):
-                    yield pd.DataFrame(
-                        {
-                            "vec_a": row_ids[qi],
-                            "vec_b": c_ids[ci],
-                            "cos_sim": cos[qi, ci],
-                        }
-                    )
-
-    return emb.mapInPandas(pair_batches, "vec_a long, vec_b long, cos_sim double")
-
-
-def _cosine_pairs_blocked(
-    spark: SparkSession, emb: DataFrame, n_blocks: int
-) -> DataFrame:
-    """Block-decomposed pair scan: B×B cogrouped block pairs, each block
-    pair emits its qualifying (query < corpus) pairs — no driver collect,
-    per-task memory one block pair."""
-    import numpy as np
-    import pandas as pd
-
-    cells = _NN_SCORE_CELLS
-    t = _COSINE_DEDUP_T
-    blk = emb.withColumn("blk", F.crc32(F.col("vec_id").cast("string")) % n_blocks)
-    rep = F.broadcast(spark.range(n_blocks).select(F.col("id").alias("other")))
-    queries = blk.crossJoin(rep).select(
-        F.col("blk").alias("qblk"), F.col("other").alias("cblk"), "vec_id", "embedding"
+    qi, ci = np.nonzero(
+        (cos >= _COSINE_DEDUP_T) & (q_ids[:, None] < c_ids[None, :])
     )
-    corpus = blk.crossJoin(rep).select(
-        F.col("other").alias("qblk"), F.col("blk").alias("cblk"),
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"),
-    )
-
-    def block_pairs(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []})
-        cm = np.stack(right["c_emb"].to_numpy()).astype(np.float64)
-        cn = np.sqrt((cm * cm).sum(axis=1))
-        c_ids = right["c_id"].to_numpy()
-        a_all = np.stack(left["embedding"].to_numpy()).astype(np.float64)
-        ids_all = left["vec_id"].to_numpy()
-        step = _score_chunk_rows(len(c_ids), cells)
-        outs = []
-        for s in range(0, len(ids_all), step):
-            a = a_all[s : s + step]
-            an = np.sqrt((a * a).sum(axis=1))
-            cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
-            row_ids = ids_all[s : s + step]
-            qi, ci = np.nonzero((cos >= t) & (row_ids[:, None] < c_ids[None, :]))
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "vec_a": row_ids[qi],
-                        "vec_b": c_ids[ci],
-                        "cos_sim": cos[qi, ci],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return (
-        queries.groupby("qblk", "cblk")
-        .cogroup(corpus.groupby("qblk", "cblk"))
-        .applyInPandas(
-            lambda l, r: block_pairs(l, r), "vec_a long, vec_b long, cos_sim double"
-        )
+    return pd.DataFrame(
+        {"vec_a": q_ids[qi], "vec_b": c_ids[ci], "cos_sim": cos[qi, ci]}
     )
 
 
@@ -1243,10 +1174,10 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the miss risk is near-dup pairs straddling a centroid boundary
     — the recall/cost dial).  Assignment reuses the proven sequential
     double-fold spelling (cross-engine identical); the within-bucket
-    pair scan is the chunked numpy kernel discipline of
-    ``_cosine_pairs_blocked`` — one BLAS matmul per query chunk, per-
-    task score matrix capped at ``_NN_SCORE_CELLS`` cells, per-task
-    memory one bucket — shuffled once on the bucket key."""
+    pair scan iterates ``_cosine_chunks`` like every cosine kernel — one
+    BLAS matmul per query chunk, per-task score matrix capped at
+    ``_NN_SCORE_CELLS`` cells, per-task memory one bucket — shuffled
+    once on the bucket key."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").alias("ve")
     )
@@ -1292,8 +1223,9 @@ def _assign_buckets_np(
     spark: SparkSession, emb: DataFrame, cent_df: DataFrame
 ) -> DataFrame:
     """BLAS nearest-centroid assignment for the TRAINED (rows-only)
-    keys: one float64 matmul per Arrow batch against the broadcast
-    K×d centroid matrix, 6dp-rounded sims, argmax with first-max =
+    keys: ``_cosine_chunks`` scores each Arrow batch against the
+    broadcast K×d centroid matrix (one float64 matmul per batch at
+    K ≤ 256), 6dp-rounded sims, argmax with first-max =
     lowest-cid tiebreak — the same decision rule as ``_assign_buckets``
     without the ×K crossJoin of interpreted HOF folds (scale probe r8:
     the SQL spelling cost 419 s at 120k vectors × K=256; K is trained
@@ -1308,6 +1240,7 @@ def _assign_buckets_np(
     cids = np.array([r["cid"] for r in rows], dtype=np.int64)
     cn = np.sqrt((cmat * cmat).sum(axis=1))
     bc = spark.sparkContext.broadcast((cmat, cids, cn))
+    cells = _NN_SCORE_CELLS
 
     def assign(batches):
         c, ids, ncv = bc.value
@@ -1315,10 +1248,10 @@ def _assign_buckets_np(
             if not len(pdf):
                 continue
             a = np.stack(pdf["ve"].to_numpy()).astype(np.float64)
-            an = np.sqrt((a * a).sum(axis=1))
-            sim = np.round((a @ c.T) / np.outer(an, ncv), 6)
             # argmax returns the FIRST max → lowest cid (rows cid-sorted)
-            bucket = ids[sim.argmax(axis=1)]
+            bucket = np.concatenate(
+                [ids[sim.argmax(axis=1)] for _, sim in _cosine_chunks(a, c, ncv, cells)]
+            )
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -1351,15 +1284,10 @@ def _semdedup_manifest(bucket: DataFrame) -> DataFrame:
         cm = np.stack(pdf["ve"].to_numpy()).astype(np.float64)
         cn = np.sqrt((cm * cm).sum(axis=1))
         ids = pdf["vec_id"].to_numpy()
-        step = _score_chunk_rows(len(ids), cells)
         n_earlier = np.zeros(len(ids), dtype=np.int64)
-        for s in range(0, len(ids), step):
-            a = cm[s : s + step]
-            an = cn[s : s + step]
-            # oracle formula verbatim: dot / (|a|·|b|), THEN round
-            cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
+        for s, cos in _cosine_chunks(cm, cm, cn, cells):
             # strict upper triangle: row id < column id (ids are sorted)
-            hit = (cos >= t) & (ids[s : s + step, None] < ids[None, :])
+            hit = (cos >= t) & (ids[s : s + len(cos), None] < ids[None, :])
             n_earlier += hit.sum(axis=0)
         return pd.DataFrame(
             {
@@ -2454,10 +2382,10 @@ def _two_nn_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     analyze the SAME graph, so the build is factored and memoized once
     (memo key kept as ``triangle_edges`` for bench-repeat sharing).
 
-    Scoring runs in the chunked-numpy ``applyInPandas`` kernel every
-    cosine key uses — per-pair SQL array aggregates are interpreted
+    Scoring iterates ``_cosine_chunks`` in an ``applyInPandas`` kernel,
+    like every cosine key — per-pair SQL array aggregates are interpreted
     (not codegen'd) and measured ~10× slower at the 120k-vector probe;
-    ``np.round(dot/(|a||b|), 6)`` is the oracle formula verbatim, and
+    its 6dp-rounded score is the oracle formula verbatim, and
     the (cos DESC, dst ASC) lexsort reproduces the oracle's row_number
     tie order exactly.  The consumer joins re-use the edge table
     several times; localCheckpoint pins the tiny (≤2n-row) result so
@@ -2480,18 +2408,11 @@ def _two_nn_und_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm = np.stack(pdf["ve"].to_numpy()).astype(np.float64)
         cn = np.sqrt((cm * cm).sum(axis=1))
         ids = pdf["vec_id"].to_numpy()
-        n = len(ids)
-        step = _score_chunk_rows(n, cells)
         src_out: list[int] = []
         dst_out: list[int] = []
-        k = min(2, n - 1)
-        for s in range(0, n, step):
-            a = cm[s : s + step]
-            an = cn[s : s + step]
-            # oracle formula verbatim: dot / (|a|·|b|), THEN round
-            cos = np.round((a @ cm.T) / np.outer(an, cn), 6)
-            for i in range(len(a)):
-                row = cos[i].copy()
+        k = min(2, len(ids) - 1)
+        for s, cos in _cosine_chunks(cm, cm, cn, cells):
+            for i, row in enumerate(cos):
                 row[s + i] = -np.inf  # exclude self
                 # (cos DESC, dst ASC): ids are sorted asc, lexsort's
                 # last key is primary

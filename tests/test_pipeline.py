@@ -175,24 +175,26 @@ def test_ann_ivf_trained_recall_and_shape(spark, sf_dir):
     assert recall >= 0.6
 
 
+def _nn_rows(df):
+    return {r["vec_id"]: (r["nn_id"], r["cos_sim"]) for r in df.collect()}
+
+
+def _pair_rows(df):
+    rows = df.collect()
+    got = {(r["vec_a"], r["vec_b"]): r["cos_sim"] for r in rows}
+    assert len(got) == len(rows)  # no pair emitted twice
+    return got
+
+
 def test_cosine_nn_blocked_matches_broadcast(spark, sf_dir):
     """The >100k-vector block-decomposed plan must produce exactly the
     broadcast-regime result — forced here with 4 blocks at small sf."""
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.operators.pipeline import (
-        _cosine_nn_blocked,
-        _cosine_nn_broadcast,
-    )
+    from kafkastreaming_spark.operators import pipeline as P
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    got = {
-        r["vec_id"]: (r["nn_id"], r["cos_sim"])
-        for r in _cosine_nn_blocked(spark, emb, n_blocks=4).collect()
-    }
-    want = {
-        r["vec_id"]: (r["nn_id"], r["cos_sim"])
-        for r in _cosine_nn_broadcast(spark, emb, sf_dir).collect()
-    }
+    blocked = P._cosine_blocked(spark, emb, 4, P._nn_emit, P._NN_SCHEMA)
+    got = _nn_rows(P._nn_merge(blocked))
+    want = _nn_rows(P._cosine_broadcast(spark, emb, sf_dir, P._nn_emit, P._NN_SCHEMA))
     assert got == want
 
 
@@ -201,64 +203,110 @@ def test_cosine_pairs_blocked_matches_broadcast(spark, sf_dir):
     kernel's pair set — forced with 4 blocks at small sf.  Guards the
     a<b dedup across the (i,j)/(j,i) cogroups: a double- or zero-emitted
     pair shows up as a dict-size or value mismatch here."""
-    from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.operators.pipeline import (
-        _cosine_pairs_blocked,
-        _cosine_pairs_broadcast,
-    )
+    from kafkastreaming_spark.operators import pipeline as P
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    got_rows = _cosine_pairs_blocked(spark, emb, n_blocks=4).collect()
-    got = {(r["vec_a"], r["vec_b"]): r["cos_sim"] for r in got_rows}
-    assert len(got) == len(got_rows)  # no pair emitted twice
-    want = {
-        (r["vec_a"], r["vec_b"]): r["cos_sim"]
-        for r in _cosine_pairs_broadcast(spark, emb, sf_dir).collect()
-    }
+    got = _pair_rows(P._cosine_blocked(spark, emb, 4, P._pairs_emit, P._PAIRS_SCHEMA))
+    want = _pair_rows(
+        P._cosine_broadcast(spark, emb, sf_dir, P._pairs_emit, P._PAIRS_SCHEMA)
+    )
     assert got == want
     assert len(want) > 0  # fixture must exercise the threshold
 
 
-def test_cosine_kernels_chunked_scoring_is_exact(spark, sf_dir, monkeypatch):
+def _manifest_recompute(by_bucket: dict) -> dict:
+    """SemDeDup manifest rows recomputed in numpy from ``{bucket:
+    [(vec_id, vector), ...]}``: per bucket, ids sorted, 6dp-rounded
+    cosine >= the dedup threshold, strict upper triangle; n_earlier_dups
+    counts a vector's earlier same-bucket near-dups, and keep is 1
+    exactly when there are none."""
+    import numpy as np
+
+    from kafkastreaming_spark.operators.pipeline import _COSINE_DEDUP_T
+
+    want = {}
+    for b, members in by_bucket.items():
+        members = sorted(members, key=lambda m: m[0])
+        ids = np.array([v for v, _ in members], dtype=np.int64)
+        x = np.array([e for _, e in members], dtype=np.float64)
+        nrm = np.sqrt((x * x).sum(axis=1))
+        cos = np.round((x @ x.T) / np.outer(nrm, nrm), 6)
+        hit = np.triu(cos >= _COSINE_DEDUP_T, k=1)
+        for v, n in zip(ids, hit.sum(axis=0)):
+            want[int(v)] = (int(v), b, int(n == 0), int(n))
+    return want
+
+
+def test_cosine_kernels_chunked_scoring_is_exact(spark, sf_dir, tmp_path, monkeypatch):
     """Per-task memory in every cosine kernel is bounded by scoring the
-    query side in _score_chunk_rows(...) slices (≤ _NN_SCORE_CELLS score
-    cells per matmul).  Forcing pathologically small chunks (64-row
-    floor) must not change a single output row vs the one-matmul
-    spelling — pins the chunk-boundary bookkeeping (self-exclusion,
-    tiebreaks, pair emission) introduced by the r7 scale probe."""
-    from kafkastreaming_spark.io import load_table
+    query side in _cosine_chunks slices (≤ _NN_SCORE_CELLS score cells
+    per matmul).  Forcing pathologically small chunks (64-row floor)
+    must not change a single output row vs the one-matmul spelling —
+    pins the chunk-boundary bookkeeping (self-exclusion, tiebreaks,
+    pair emission, the upper triangle of the square self-scans) for the
+    NN and pair scans in both regimes, the trained bucket assignment,
+    the SemDeDup manifest and the 2-NN graph.  Fixture buckets hold
+    fewer than 64 rows, so the two self-scans get a synthetic bucket of
+    more than 64 rows to score in more than one slice."""
+    import numpy as np
+
     from kafkastreaming_spark.operators import pipeline as P
+    from kafkastreaming_spark.operators.kmeans import trained_centroids
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    want_nn = {
-        r["vec_id"]: (r["nn_id"], r["cos_sim"])
-        for r in P._cosine_nn_broadcast(spark, emb, sf_dir).collect()
-    }
-    want_pairs = {
-        (r["vec_a"], r["vec_b"]): r["cos_sim"]
-        for r in P._cosine_pairs_broadcast(spark, emb, sf_dir).collect()
-    }
+    emb_ve = emb.select("vec_id", F.col("embedding").alias("ve"))
+    cent = trained_centroids(spark, sf_dir)
+    # 240 vectors around one shared direction: pairwise cosines spread
+    # across τ; the 2-NN copy (8× the direction) falls into 4 LSH
+    # buckets, the largest of 110 rows
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal(64)
+    noise = rng.standard_normal((240, 64))
+    ids = (rng.permutation(240) * 3 + 1).tolist()  # unsorted, not dense
+    vecs = 0.7 * base + noise
+    bucket = spark.createDataFrame(
+        [(i, v.tolist(), 5) for i, v in zip(ids, vecs)],
+        "vec_id long, ve array<double>, bucket long",
+    )
+    graph = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in zip(ids, (8 * base + noise).astype(np.float32))],
+        "vec_id long, embedding array<float>",
+    )
+    for d in ("whole", "sliced"):  # _two_nn_und_edges is memoized per dir
+        graph.coalesce(1).write.parquet(str(tmp_path / d / "embeddings.parquet"))
+    sizes = graph.groupBy(F.expr(P._bucket_expr_spark("embedding"))).count()
+    assert sizes.agg(F.max("count")).first()[0] > 64
+
+    def run(d):
+        nn = P._cosine_broadcast(spark, emb, sf_dir, P._nn_emit, P._NN_SCHEMA)
+        nn_blk = P._cosine_blocked(spark, emb, 3, P._nn_emit, P._NN_SCHEMA)
+        pairs = P._cosine_broadcast(spark, emb, sf_dir, P._pairs_emit, P._PAIRS_SCHEMA)
+        pairs_blk = P._cosine_blocked(spark, emb, 3, P._pairs_emit, P._PAIRS_SCHEMA)
+        asg = P._assign_buckets_np(spark, emb_ve, cent).collect()
+        edges = P._two_nn_und_edges(spark, str(tmp_path / d)).collect()
+        return {
+            "nn": _nn_rows(nn),
+            "nn_blocked": _nn_rows(P._nn_merge(nn_blk)),
+            "pairs": _pair_rows(pairs),
+            "pairs_blocked": _pair_rows(pairs_blk),
+            "assign": {r["vec_id"]: r["bucket"] for r in asg},
+            "manifest": {
+                r["vec_id"]: tuple(r) for r in P._semdedup_manifest(bucket).collect()
+            },
+            "edges": {tuple(r) for r in edges},
+        }
+
+    whole = run("whole")
     monkeypatch.setattr(P, "_NN_SCORE_CELLS", 1)  # step floors at 64 rows
-    got_nn = {
-        r["vec_id"]: (r["nn_id"], r["cos_sim"])
-        for r in P._cosine_nn_broadcast(spark, emb, sf_dir).collect()
-    }
-    got_blk = {
-        r["vec_id"]: (r["nn_id"], r["cos_sim"])
-        for r in P._cosine_nn_blocked(spark, emb, n_blocks=3).collect()
-    }
-    got_pairs = {
-        (r["vec_a"], r["vec_b"]): r["cos_sim"]
-        for r in P._cosine_pairs_broadcast(spark, emb, sf_dir).collect()
-    }
-    got_pblk = {
-        (r["vec_a"], r["vec_b"]): r["cos_sim"]
-        for r in P._cosine_pairs_blocked(spark, emb, n_blocks=3).collect()
-    }
-    assert got_nn == want_nn
-    assert got_blk == want_nn
-    assert got_pairs == want_pairs
-    assert got_pblk == want_pairs
+    sliced = run("sliced")
+    assert sliced == whole
+    assert whole["nn_blocked"] == whole["nn"]
+    assert whole["pairs_blocked"] == whole["pairs"]
+    manifest = whole["manifest"]
+    assert manifest == _manifest_recompute({5: list(zip(ids, vecs))})
+    assert any(n > 0 for *_, n in manifest.values())  # exercises the drop path
+    assert any(keep for _, _, keep, _ in manifest.values())
+    assert len(whole["edges"]) >= len(ids)
 
 
 def test_dedup_keep_best_partitions_corpus(spark, sf_dir):
@@ -597,10 +645,7 @@ def test_semdedup_trained_manifest_matches_numpy_recompute(spark, sf_dir):
     sorted, 6dp-rounded cosine >= the dedup threshold, strict upper
     triangle; n_earlier_dups counts a vector's earlier same-bucket
     near-dups, and keep is 1 exactly when there are none."""
-    import numpy as np
-
     from kafkastreaming_spark.operators.pipeline import (
-        _COSINE_DEDUP_T,
         _semdedup_trained_assign,
         semdedup_trained_manifest,
     )
@@ -620,18 +665,8 @@ def test_semdedup_trained_manifest_matches_numpy_recompute(spark, sf_dir):
     by_bucket: dict[int, list] = {}
     for r in asg:
         by_bucket.setdefault(r["bucket"], []).append((r["vec_id"], r["ve"]))
-    want = {}
-    for b, members in by_bucket.items():
-        members.sort(key=lambda m: m[0])
-        ids = np.array([v for v, _ in members], dtype=np.int64)
-        x = np.array([e for _, e in members], dtype=np.float64)
-        nrm = np.sqrt((x * x).sum(axis=1))
-        cos = np.round((x @ x.T) / np.outer(nrm, nrm), 6)
-        hit = np.triu(cos >= _COSINE_DEDUP_T, k=1)
-        for v, n in zip(ids, hit.sum(axis=0)):
-            want[int(v)] = (int(v), b, int(n == 0), int(n))
 
-    assert got == want
+    assert got == _manifest_recompute(by_bucket)
     assert all(keep == (n == 0) for _, _, keep, n in got.values())
     assert any(n > 0 for _, _, _, n in got.values())  # exercises the drop path
 
@@ -694,10 +729,12 @@ def test_semdedup_trained_recall_beats_standin():
     K=ivf_k(n)~sqrt(n) quantizer must (a) still only PRUNE the exact
     pair scan (drops are a subset of llm_cosine_dedup's later members)
     and (b) recall at least as much of that exact drop set as the
-    first-16 stand-in buckets.  Measured at sf0.01 (2000 vectors,
-    K=45): trained 0.30 vs stand-in 0.21 — the 200-vector smoke
-    fixture is below K-means' useful granularity, so the production
-    claim is pinned at the driver's correctness scale instead."""
+    first-16 stand-in buckets.  Pinned on sf0.01 (500 vectors,
+    K = ivf_k(500) = 22), where the trained buckets recall 16 and the
+    stand-in 11 of the 53 exact drops (0.30 vs 0.21).  The sf0.001 smoke
+    fixture is another 500-vector draw on which the order flips (0.24
+    vs 0.31 of 62), so at this size the margin is fixture luck, not a
+    property of K-means; the subset half (a) holds on both."""
     from kafkastreaming_spark.session import get_session
 
     spark = get_session("tests", master="local[8]")

@@ -33,8 +33,8 @@ is still linear in its input at 10×; >2 flags a super-linear plan.
 Regime checks (``regimes`` section):
 
 * ``llm_cosine_nn`` / ``llm_cosine_dedup``: gate flips to blocked at
-  120k vectors; outputs compared against the forced-broadcast kernel at
-  the SAME scale via count + order-free xxhash64 XOR (no driver collect).
+  120k vectors; outputs compared against a forced ``_cosine_broadcast``
+  scan at the SAME scale via count + order-free xxhash64 XOR (no driver collect).
 * ``llm_cosine_clusters``: its pair graph exceeds ``_CC_LOCAL_MAX_EDGES``
   (10M) at probe scale, so the distributed connected-components path
   engages naturally; checked for agreement with the local-regime labels
@@ -624,7 +624,7 @@ def main() -> None:
         nat = _fold(QUERIES["llm_cosine_nn"](spark, OUT))
         t_nat = round(time.perf_counter() - t0, 3)
         t0 = time.perf_counter()
-        forced = _fold(P._cosine_nn_broadcast(spark, emb, OUT))
+        forced = _fold(P._cosine_broadcast(spark, emb, OUT, P._nn_emit, P._NN_SCHEMA))
         regimes["llm_cosine_nn"] = {
             "n_vectors": n,
             "gate": P._NN_BROADCAST_MAX_N,
@@ -641,7 +641,9 @@ def main() -> None:
         t_nat = round(time.perf_counter() - t0, 3)
         dedup_pair_count = nat[0]  # reused as CLUSTER_KEY's edge count
         t0 = time.perf_counter()
-        forced = _fold(P._cosine_pairs_broadcast(spark, emb, OUT))
+        forced = _fold(
+            P._cosine_broadcast(spark, emb, OUT, P._pairs_emit, P._PAIRS_SCHEMA)
+        )
         regimes["llm_cosine_dedup"] = {
             "n_vectors": n,
             "natural_regime": "blocked" if n > P._NN_BROADCAST_MAX_N else "broadcast",
