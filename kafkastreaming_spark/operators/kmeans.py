@@ -1,23 +1,24 @@
-"""Distributed Lloyd k-means over the embeddings table — the real IVF
-training step behind ``llm_ann_ivf``'s centroid table (SURVEY.md §2.11;
-round-1 verdict item 7: replace the first-16-vectors stand-in with an
-actual trained index).
+"""Distributed Lloyd k-means over the embeddings table: the IVF coarse
+quantizer behind the trained IVF consumers and the per-subspace PQ
+codebooks behind ``llm_pq_train`` (SURVEY.md §2.11).
 
-Spark shape (the MLlib/treeAggregate pattern, spelled with the public
-DataFrame API):
+One loop, :func:`lloyd_fit`, trains both.  It cuts every vector into
+``n_sub`` contiguous subvectors (IVF: 1, PQ: ``pq.N_SUB``) and runs
+k-means in every subspace at once.  Spark shape (the MLlib/treeAggregate
+pattern, spelled with the public DataFrame API):
 
-* each iteration is ONE ``mapInPandas`` pass: per Arrow batch, a BLAS
-  matmul scores every vector against the broadcast K×64 centroid matrix
-  (K=16 — bounded driver/executor metadata, like a broadcast dim table),
-  argmin assigns, and the batch emits per-cluster PARTIAL sums — K×65
-  rows per batch, the map-side combine that keeps shuffle volume
-  independent of corpus size;
+* each iteration is ONE ``mapInPandas`` pass: per Arrow batch and
+  subspace, a BLAS matmul scores every subvector against the broadcast
+  centroids, argmin assigns, and the batch emits per-(sub, cluster, dim)
+  PARTIAL sums plus one inertia partial per subspace — bounded metadata
+  per batch, the map-side combine that keeps shuffle volume independent
+  of corpus size;
 * the driver folds the partials into new centroids.  Partials are summed
-  in sorted (cid, dim, part_id) order so float accumulation order — and
+  in sorted (sub, cid, dim, part) order so float accumulation order — and
   therefore the trained index — is bit-deterministic run to run.
 
-Iterative refinement is not SQL-expressible, so ``llm_ivf_train`` is a
-rows-only key; pytest pins run-to-run determinism and the monotone
+Iterative refinement is not SQL-expressible, so the training keys emit
+invariant summaries; pytest pins run-to-run determinism and the monotone
 inertia decrease that defines Lloyd's algorithm.
 """
 
@@ -29,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkastreaming_spark.io import load_table, table_rows
+from kafkastreaming_spark.operators.pq import N_CENT, N_SUB
 from kafkastreaming_spark.registry import query
 
 _K = 16
@@ -48,23 +50,18 @@ def ivf_k(n: int) -> int:
 
 
 def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The memoized PRODUCTION quantizer (judge r7 item 1): K = ivf_k(n)
-    Lloyd centroids over the embeddings table, 6dp-rounded, as a cached
-    (cid, cv) DataFrame.  Train once per (session, sf_dir); every
-    trained IVF consumer (``llm_ann_ivf_trained``,
-    ``llm_semdedup_trained``) shares this one index — the
-    build/query split of a production vector lake."""
-    import numpy as np
-
+    """The memoized PRODUCTION quantizer: K = ivf_k(n) Lloyd centroids
+    over the embeddings table, 6dp-rounded, as a cached (cid, cv)
+    DataFrame.  Train once per (session, sf_dir); every trained IVF
+    consumer (``llm_ann_ivf_trained``, ``llm_semdedup_trained``) shares
+    this one index — the build/query split of a production vector
+    lake."""
     from kafkastreaming_spark.memo import memo
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
         k = ivf_k(table_rows(spark, sf_dir, "embeddings"))
-        cent, _, _ = kmeans_fit(spark, emb, k=k)
-        rounded = np.round(cent, 6)
+        _, cent, _, _ = _fit(spark, sf_dir, k, 1)
+        rounded = np.round(cent[0], 6)
         df = spark.createDataFrame(
             [(int(i), [float(v) for v in rounded[i]]) for i in range(len(rounded))],
             "cid int, cv array<double>",
@@ -76,11 +73,10 @@ def trained_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def count_and_init(emb: DataFrame, k: int) -> tuple[int, np.ndarray]:
-    """Corpus count AND the first-k init vectors in ONE job (r17 —
-    previously two: a count() and a filter+orderBy+collect).  Values are
-    identical: collect_list skips the when()'s nulls, sort_array orders
-    the surviving structs by vec_id (unique), so the init matrix is the
-    first k vectors by vec_id exactly as before."""
+    """Corpus count AND the first-k init vectors in ONE job.
+    collect_list skips the when()'s nulls and sort_array orders the
+    surviving structs by vec_id (unique), so the init matrix is the
+    first k vectors by vec_id."""
     row = emb.agg(
         F.count(F.lit(1)).alias("n"),
         F.sort_array(
@@ -97,33 +93,25 @@ def count_and_init(emb: DataFrame, k: int) -> tuple[int, np.ndarray]:
     return int(row["n"]), cent
 
 
-def kmeans_fit(
+def lloyd_fit(
     spark: SparkSession,
     emb: DataFrame,
-    k: int = _K,
+    init: np.ndarray,
+    n_sub: int = 1,
     iters: int = _ITERS,
-    init_cent: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, list[float]]:
-    """Lloyd's algorithm; returns (centroids k×d, member counts, per-iter
-    inertia).  Deterministic: init = first k vectors by vec_id, argmin
-    ties → lowest cid, partial sums folded in sorted order.
-    ``init_cent`` lets a caller that already fetched the first-k matrix
-    (:func:`count_and_init`) skip the init job."""
-    if init_cent is not None:
-        cent = init_cent.astype(np.float64, copy=True)
-    else:
-        init = (
-            emb.filter(F.col("vec_id") < k)
-            .orderBy("vec_id")
-            .select("embedding")
-            .collect()
-        )
-        cent = np.array([r["embedding"] for r in init], dtype=np.float64)
-    d = cent.shape[1]
-    counts = np.zeros(k, dtype=np.int64)
+    """Lloyd's algorithm in ``n_sub`` subspaces at once, from the k×d
+    ``init`` matrix (:func:`count_and_init`).  Returns (centroids
+    n_sub×k×(d/n_sub), member counts n_sub×k, per-iteration inertia
+    summed over the subspaces).  Deterministic: argmin ties → lowest
+    cid, partial sums folded in sorted (sub, cid, dim, part) order."""
+    k, d = init.shape
+    w = d // n_sub
+    cent = np.stack([init[:, s * w : (s + 1) * w] for s in range(n_sub)])
+    counts = np.zeros((n_sub, k), dtype=np.int64)
     inertia: list[float] = []
 
-    schema = "cid int, dim int, s double, cnt long, part long"
+    schema = "sub int, cid int, dim int, s double, cnt long, part long"
 
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(cent)
@@ -131,43 +119,77 @@ def kmeans_fit(
         def partials(batches, _b=bc):
             from pyspark import TaskContext
 
-            c = _b.value
-            c_sq = (c * c).sum(axis=1)
+            c = _b.value  # (n_sub, k, w)
             pi = TaskContext.get().partitionId()
             for pdf in batches:
                 a = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                # ||a-c||² = ||a||² - 2a·c + ||c||²; ||a||² constant per row
-                d2 = c_sq[None, :] - 2.0 * (a @ c.T)
-                cid = d2.argmin(axis=1)  # first min = lowest cid on ties
-                err = (d2[np.arange(len(cid)), cid] + (a * a).sum(axis=1)).sum()
                 rows = []
-                for ci in np.unique(cid):
-                    sel = a[cid == ci]
-                    for di in range(sel.shape[1]):
-                        rows.append((int(ci), di, float(sel[:, di].sum()), len(sel), pi))
-                rows.append((-1, 0, float(err), len(a), pi))  # inertia partial
-                yield pd.DataFrame(rows, columns=["cid", "dim", "s", "cnt", "part"])
+                for s, cs in enumerate(c):
+                    asub = a[:, s * w : (s + 1) * w]
+                    # ||a-c||² = ||a||² - 2a·c + ||c||²; ||a||² constant per row
+                    d2 = (cs * cs).sum(axis=1)[None, :] - 2.0 * (asub @ cs.T)
+                    cid = d2.argmin(axis=1)  # first min = lowest cid on ties
+                    # one partial per (sub, cid, dim), each summed on its
+                    # own column: sel.sum(axis=0) may round differently
+                    for ci in np.unique(cid):
+                        sel = asub[cid == ci]
+                        for di in range(w):
+                            rows.append(
+                                (s, int(ci), di, float(sel[:, di].sum()), len(sel), pi)
+                            )
+                    err = (
+                        d2[np.arange(len(cid)), cid] + (asub * asub).sum(axis=1)
+                    ).sum()
+                    rows.append((s, -1, 0, float(err), len(a), pi))  # inertia partial
+                yield pd.DataFrame(
+                    rows, columns=["sub", "cid", "dim", "s", "cnt", "part"]
+                )
 
         got = emb.select("embedding").mapInPandas(partials, schema).collect()
         # fixed fold order ⇒ deterministic float accumulation
-        got.sort(key=lambda r: (r["cid"], r["dim"], r["part"]))
-        sums = np.zeros((k, d))
-        counts = np.zeros(k, dtype=np.int64)
+        got.sort(key=lambda r: (r["sub"], r["cid"], r["dim"], r["part"]))
+        sums = np.zeros((n_sub, k, w))
+        counts = np.zeros((n_sub, k), dtype=np.int64)
         err_total = 0.0
         for r in got:
             if r["cid"] < 0:
                 err_total += r["s"]
             else:
-                sums[r["cid"], r["dim"]] += r["s"]
+                sums[r["sub"], r["cid"], r["dim"]] += r["s"]
                 if r["dim"] == 0:
-                    counts[r["cid"]] += r["cnt"]
+                    counts[r["sub"], r["cid"]] += r["cnt"]
         inertia.append(err_total)
         nonempty = counts > 0
         cent = np.where(
-            nonempty[:, None], sums / np.maximum(counts, 1)[:, None], cent
+            nonempty[:, :, None], sums / np.maximum(counts, 1)[:, :, None], cent
         )
         bc.destroy()
     return cent, counts, inertia
+
+
+def _fit(
+    spark: SparkSession, sf_dir: str, k: int, n_sub: int
+) -> tuple[int, np.ndarray, np.ndarray, list[float]]:
+    """The corpus count, then :func:`lloyd_fit`'s result over the
+    embeddings table from its first k vectors."""
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n, init = count_and_init(emb, k)
+    return (n, *lloyd_fit(spark, emb, init, n_sub))
+
+
+def _codebook_rows(cent: np.ndarray, counts: np.ndarray) -> list[tuple]:
+    """(sub, cid, n_members, c_norm, centroid_csv) per trained centroid."""
+    return [
+        (
+            s,
+            ci,
+            int(counts[s, ci]),
+            float(np.round(np.sqrt((c * c).sum()), 6)),
+            ",".join(f"{v:.6f}" for v in c),
+        )
+        for s, sub in enumerate(cent)
+        for ci, c in enumerate(sub)
+    ]
 
 
 def ivf_train_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,19 +197,10 @@ def ivf_train_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid_csv) — kept for tests and downstream consumers; the
     registered ``llm_ivf_train`` query emits the invariant summary
     instead (engine-checkable facts, not training artifacts)."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent, counts, _ = kmeans_fit(spark, emb)
-    rows = [
-        (
-            int(ci),
-            int(counts[ci]),
-            float(np.round(np.sqrt((cent[ci] * cent[ci]).sum()), 6)),
-            ",".join(f"{v:.6f}" for v in cent[ci]),
-        )
-        for ci in range(cent.shape[0])
-    ]
+    _, cent, counts, _ = _fit(spark, sf_dir, _K, 1)
     return spark.createDataFrame(
-        rows, "cid int, n_members long, c_norm double, centroid_csv string"
+        [r[1:] for r in _codebook_rows(cent, counts)],
+        "cid int, n_members long, c_norm double, centroid_csv string",
     )
 
 
@@ -208,25 +221,21 @@ def llm_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the IVF coarse quantizer: K=16 Lloyd iterations over
     ``embeddings``.
 
-    Invariant-oracle spelling (r10, VERDICT r9 item 2): the trained
-    centroids are iterative artifacts no SQL engine can re-derive, so
-    the query emits the deterministic facts a DuckDB oracle CAN check —
-    corpus size, the fixed (K, iters) configuration, and the Lloyd
-    invariants as booleans: every vector assigned exactly once (member
-    counts sum to n), inertia non-increasing per iteration and strictly
-    improved over the first-16 init, all centroid components finite.
-    Training is bit-deterministic (fixed init, sorted partial folds),
-    so every boolean is stable run to run; pytest additionally pins the
-    artifact itself (``ivf_train_artifact``) for determinism and
-    convergence."""
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # r17: one job yields the corpus count and the first-K init matrix
-    # (count_and_init) — the count stays an independent scan-side fact
-    # the member-count invariant is checked against.
-    n_vectors, cent0 = count_and_init(emb, _K)
-    cent, counts, inertia = kmeans_fit(spark, emb, init_cent=cent0)
+    Invariant-oracle spelling: the trained centroids are iterative
+    artifacts no SQL engine can re-derive, so the query emits the
+    deterministic facts a DuckDB oracle CAN check — corpus size, the
+    fixed (K, iters) configuration, and the Lloyd invariants as
+    booleans: every vector assigned exactly once (member counts sum to
+    n), inertia non-increasing per iteration and strictly improved over
+    the first-16 init, all centroid components finite.  Training is
+    bit-deterministic (fixed init, sorted partial folds), so every
+    boolean is stable run to run; pytest additionally pins the artifact
+    itself (``ivf_train_artifact``) for determinism and convergence."""
+    # the count from the init job stays an independent scan-side fact
+    # the member-count invariant is checked against
+    n_vectors, cent, counts, inertia = _fit(spark, sf_dir, _K, 1)
     row = (
-        int(cent.shape[0]),
+        int(cent.shape[1]),
         len(inertia),
         n_vectors,
         bool(int(counts.sum()) == n_vectors),
@@ -242,84 +251,6 @@ def llm_ivf_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pq_kmeans_fit(
-    spark: SparkSession,
-    emb: DataFrame,
-    n_sub: int = 8,
-    sub_dim: int = 8,
-    k: int = _K,
-    iters: int = _ITERS,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Per-subspace Lloyd k-means for PQ codebooks: returns
-    (centroids n_sub x k x sub_dim, counts n_sub x k).
-
-    All 8 subspaces train SIMULTANEOUSLY — each iteration is ONE
-    ``mapInPandas`` pass emitting (sub, cid, dim) partial sums, not 8
-    independent k-means jobs, so the corpus is scanned ``iters`` times
-    total (the treeAggregate shape of :func:`kmeans_fit`, widened by a
-    subspace axis; shuffle volume stays n_sub*k*(sub_dim+1) rows per
-    batch — bounded metadata, independent of corpus size).
-    Deterministic: init = first k vectors' subvectors by vec_id, argmin
-    ties -> lowest cid, partials folded in sorted (sub, cid, dim, part)
-    order."""
-    init = (
-        emb.filter(F.col("vec_id") < k)
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    a0 = np.array([r["embedding"] for r in init], dtype=np.float64)
-    cent = np.stack(
-        [a0[:, s * sub_dim : (s + 1) * sub_dim].copy() for s in range(n_sub)]
-    )  # (n_sub, k, sub_dim)
-    counts = np.zeros((n_sub, k), dtype=np.int64)
-
-    schema = "sub int, cid int, dim int, s double, cnt long, part long"
-
-    for _ in range(iters):
-        bc = spark.sparkContext.broadcast(cent)
-
-        def partials(batches, _b=bc):
-            from pyspark import TaskContext
-
-            c = _b.value  # (n_sub, k, sub_dim)
-            pi = TaskContext.get().partitionId()
-            for pdf in batches:
-                a = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                rows = []
-                for s in range(c.shape[0]):
-                    asub = a[:, s * sub_dim : (s + 1) * sub_dim]
-                    cs = c[s]
-                    d2 = (cs * cs).sum(axis=1)[None, :] - 2.0 * (asub @ cs.T)
-                    cid = d2.argmin(axis=1)  # first min = lowest cid
-                    for ci in np.unique(cid):
-                        sel = asub[cid == ci]
-                        for di in range(sel.shape[1]):
-                            rows.append(
-                                (s, int(ci), di, float(sel[:, di].sum()), len(sel), pi)
-                            )
-                yield pd.DataFrame(
-                    rows, columns=["sub", "cid", "dim", "s", "cnt", "part"]
-                )
-
-        got = emb.select("embedding").mapInPandas(partials, schema).collect()
-        got.sort(key=lambda r: (r["sub"], r["cid"], r["dim"], r["part"]))
-        sums = np.zeros((n_sub, k, sub_dim))
-        counts = np.zeros((n_sub, k), dtype=np.int64)
-        for r in got:
-            sums[r["sub"], r["cid"], r["dim"]] += r["s"]
-            if r["dim"] == 0:
-                counts[r["sub"], r["cid"]] += r["cnt"]
-        nonempty = counts > 0
-        cent = np.where(
-            nonempty[:, :, None],
-            sums / np.maximum(counts, 1)[:, :, None],
-            cent,
-        )
-        bc.destroy()
-    return cent, counts
-
-
 def pq_train_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained PQ codebook ARTIFACT frame (sub, cid, n_members,
     c_norm, centroid_csv), memoized per (session, sf_dir) — kept for
@@ -328,21 +259,10 @@ def pq_train_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kafkastreaming_spark.memo import memo
 
     def build() -> DataFrame:
-        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        cent, counts = pq_kmeans_fit(spark, emb)
-        rows = [
-            (
-                s,
-                ci,
-                int(counts[s, ci]),
-                float(np.round(np.sqrt((cent[s, ci] * cent[s, ci]).sum()), 6)),
-                ",".join(f"{v:.6f}" for v in cent[s, ci]),
-            )
-            for s in range(cent.shape[0])
-            for ci in range(cent.shape[1])
-        ]
+        _, cent, counts, _ = _fit(spark, sf_dir, N_CENT, N_SUB)
         df = spark.createDataFrame(
-            rows, "sub int, cid int, n_members long, c_norm double, centroid_csv string"
+            _codebook_rows(cent, counts),
+            "sub int, cid int, n_members long, c_norm double, centroid_csv string",
         ).cache()
         df.count()
         return df
@@ -352,29 +272,28 @@ def pq_train_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "llm_pq_train",
-    oracle="""
+    oracle=f"""
     SELECT CAST(t.range AS INTEGER) AS sub,
-           CAST(16 AS INTEGER) AS k_codewords,
+           CAST({N_CENT} AS INTEGER) AS k_codewords,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings) AS n_vectors,
            TRUE AS total_members_match,
            TRUE AS codebook_finite
-    FROM range(8) t
+    FROM range({N_SUB}) t
     """,
 )
 def llm_pq_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train per-subspace PQ codebooks: 8 subspaces x K=16 Lloyd
-    iterations over the embeddings' 8-d subvectors — the production
+    """Train per-subspace PQ codebooks: ``N_SUB`` subspaces × ``N_CENT``
+    codewords, Lloyd over the embeddings' subvectors — the production
     replacement for ``llm_pq_encode``'s deterministic-literal codebook,
     completing the IVF-PQ build story next to ``llm_ivf_train``.
 
-    Invariant-oracle spelling (r10, VERDICT r9 item 2): one row per
-    subspace with the facts DuckDB can check — the fixed codebook shape
-    (8×16), corpus size, and the per-subspace assignment invariant
-    (every vector coded exactly once per subspace, so member counts sum
-    to n) plus codeword finiteness.  Training is bit-deterministic
-    (fixed init, sorted partial folds); the artifact itself
-    (``pq_train_artifact``) stays memoized and pinned by the ADC recall
-    test in tests/test_pipeline.py."""
+    Invariant-oracle spelling: one row per subspace with the facts
+    DuckDB can check — the fixed codebook shape, corpus size, and the
+    per-subspace assignment invariant (every vector coded exactly once
+    per subspace, so member counts sum to n) plus codeword finiteness.
+    Training is bit-deterministic (fixed init, sorted partial folds);
+    the artifact itself (``pq_train_artifact``) stays memoized and
+    pinned by the ADC recall test in tests/test_pipeline.py."""
     n_vectors = table_rows(spark, sf_dir, "embeddings")
     art = pq_train_artifact(spark, sf_dir).collect()
     per_sub: dict[int, list] = {}

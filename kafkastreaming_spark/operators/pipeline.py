@@ -343,10 +343,20 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB if near-dup density explodes); measured at sf0.1 the gate
     cuts the key from 3.6 s to ~1 s."""
     pairs = llm_simhash_dedup(spark, sf_dir).select("doc_a", "doc_b")
+    return _components(spark, pairs, ("doc_a", "doc_b"), "doc_id")
+
+
+def _components(
+    spark: SparkSession, pairs: DataFrame, cols: tuple[str, str], out_id: str
+) -> DataFrame:
+    """Connected components of the ``cols`` edge list as (``out_id``,
+    cluster_id, cluster_size): :func:`_cc_local` on the collected edges
+    up to ``_CC_LOCAL_MAX_EDGES`` (read at call time), else
+    :func:`_cc_distributed`."""
     head = pairs.limit(_CC_LOCAL_MAX_EDGES + 1).toPandas()
     if len(head) <= _CC_LOCAL_MAX_EDGES:
-        return _cc_local(spark, head)
-    return _cc_distributed(spark, pairs)
+        return _cc_local(spark, head, cols, out_id)
+    return _cc_distributed(spark, pairs, cols, out_id)
 
 
 def _cc_distributed(
@@ -1107,17 +1117,14 @@ def llm_cosine_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches verbatim/near-verbatim copies, embedding CC catches
     paraphrases the token operators can't see.
 
-    Same statistics-gated machinery (shared `_cc_local` /
-    `_cc_distributed`): below 10M edges the labelling is a vectorized
-    driver union-find after one distributed materialization of the pair
-    scan; above it, the pointer-halving propagation loop.  Labels are
+    Same statistics-gated machinery (shared `_components`): below 10M
+    edges the labelling is a vectorized driver union-find after one
+    distributed materialization of the pair scan; above it, the
+    pointer-halving propagation loop.  Labels are
     exact min-ids, so the key is hash-checked against the recursive-CTE
     closure."""
     pairs = llm_cosine_dedup(spark, sf_dir).select("vec_a", "vec_b")
-    head = pairs.limit(_CC_LOCAL_MAX_EDGES + 1).toPandas()
-    if len(head) <= _CC_LOCAL_MAX_EDGES:
-        return _cc_local(spark, head, cols=("vec_a", "vec_b"), out_id="vec_id")
-    return _cc_distributed(spark, pairs, cols=("vec_a", "vec_b"), out_id="vec_id")
+    return _components(spark, pairs, ("vec_a", "vec_b"), "vec_id")
 
 
 @query(
@@ -2854,12 +2861,7 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost, and it runs once for all four graph keys.  The oracle is
     DuckDB's recursive-CTE transitive closure (tractable because
     LSH-bucketing bounds every component by its bucket's size)."""
-    und = _two_nn_und_edges(spark, sf_dir)
-    head = und.limit(_CC_LOCAL_MAX_EDGES + 1).toPandas()
-    if len(head) <= _CC_LOCAL_MAX_EDGES:
-        out = _cc_local(spark, head, cols=("a", "b"), out_id="vec_id")
-    else:
-        out = _cc_distributed(spark, und, cols=("a", "b"), out_id="vec_id")
+    out = _components(spark, _two_nn_und_edges(spark, sf_dir), ("a", "b"), "vec_id")
     return out.select(
         "vec_id",
         F.col("cluster_id").alias("component_id"),

@@ -22,7 +22,7 @@ from kafkastreaming_spark.io import (
     spread,
 )
 from kafkastreaming_spark.registry import query
-from kafkastreaming_spark.streaming.harness import process_scratch
+from kafkastreaming_spark.streaming.harness import build_once, process_scratch
 
 
 def _sink_path(name: str, sf_dir: str) -> str:
@@ -30,8 +30,11 @@ def _sink_path(name: str, sf_dir: str) -> str:
     root, removed at process exit: concurrent runs (pytest + driver
     harness, or different SFs) must never overwrite each other
     mid-read-back."""
-    sf_tag = os.path.basename(sf_dir.rstrip("/"))
-    return process_scratch(f"{name}_{sf_tag}")
+    return process_scratch(f"{name}_{_sf_tag(sf_dir)}")
+
+
+def _sf_tag(sf_dir: str) -> str:
+    return os.path.basename(sf_dir.rstrip("/"))
 
 
 @query(
@@ -355,11 +358,6 @@ def scan_union_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# binary-file fixture dirs already written by THIS process (one file per
-# document; reused across bench repeats and test/driver invocations)
-_BINFILES_BUILT: set[str] = set()
-
-
 @query(
     "source_binaryfile",
     oracle="""
@@ -388,8 +386,7 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pathGlobFilter`` prunes non-payload files without reading them."""
     import pandas as pd
 
-    base = _sink_path("ks_spark_binfiles", sf_dir)
-    if base not in _BINFILES_BUILT:
+    def build(base: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", F.encode("text", "utf-8").alias("payload")
         )
@@ -406,7 +403,10 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"n": [n]})
 
         docs.mapInPandas(write_files, "n long").agg(F.sum("n")).collect()
-        _BINFILES_BUILT.add(base)
+
+    # one file per document, written once per process and reused across
+    # bench repeats and every other call in the process
+    base = build_once(f"ks_spark_binfiles_{_sf_tag(sf_dir)}", build)
 
     bf = (
         spark.read.format("binaryFile")

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafkastreaming_spark.all import QUERIES
@@ -117,11 +118,12 @@ def test_ivf_train_deterministic_and_converging(spark, sf_dir):
     import numpy as np
 
     from kafkastreaming_spark.io import load_table
-    from kafkastreaming_spark.operators.kmeans import kmeans_fit
+    from kafkastreaming_spark.operators.kmeans import count_and_init, lloyd_fit
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    c1, n1, in1 = kmeans_fit(spark, emb, k=16, iters=3)
-    c2, n2, in2 = kmeans_fit(spark, emb, k=16, iters=3)
+    _, init = count_and_init(emb, 16)
+    c1, n1, in1 = lloyd_fit(spark, emb, init, iters=3)
+    c2, n2, in2 = lloyd_fit(spark, emb, init, iters=3)
     assert np.array_equal(c1, c2) and np.array_equal(n1, n2) and in1 == in2
     assert all(b <= a + 1e-9 for a, b in zip(in1, in1[1:]))  # monotone
     # one refined iteration beats the raw first-16 stand-in centroids
@@ -472,6 +474,20 @@ def test_dedup_clusters_local_gate_matches_distributed_loop(spark, sf_dir, monke
     assert local == dist
 
 
+@pytest.mark.parametrize("key", ["llm_cosine_clusters", "graph_components"])
+def test_cc_local_gate_matches_distributed_loop(spark, sf_dir, monkeypatch, key):
+    """The two embedding-graph CC keys share ``_components``' gate with
+    llm_dedup_clusters; their driver union-find labels must equal the
+    distributed propagation loop's, forced by dropping the gate to 0."""
+    from kafkastreaming_spark.operators import pipeline
+
+    local = sorted(map(str, QUERIES[key](spark, sf_dir).collect()))
+    assert local  # a non-empty pair graph, so the comparison labels something
+    monkeypatch.setattr(pipeline, "_CC_LOCAL_MAX_EDGES", 0)
+    dist = sorted(map(str, QUERIES[key](spark, sf_dir).collect()))
+    assert local == dist
+
+
 def test_minhash_lsh_recall_vs_exact_jaccard(spark, sf_dir):
     """llm_minhash_lsh is rows-only for the driver (randomized hashes have
     no SQL oracle) — pin its quality instead: recall of the EXACT J>=0.8
@@ -575,6 +591,33 @@ def test_pq_train_trained_adc_recall_beats_literal(spark, sf_dir):
     r_trained, r_literal = recall_at_5(trained), recall_at_5(literal)
     assert r_trained >= r_literal, (r_trained, r_literal)
     assert r_trained >= 0.2, r_trained  # trained codebook must be usable at all
+
+
+def test_pq_lloyd_deterministic_and_converging(spark, sf_dir):
+    """The PQ codebooks train through lloyd_fit at n_sub = N_SUB: two
+    runs must agree bit for bit, every subspace must code each vector
+    exactly once, and the inertia summed over subspaces must never
+    increase.  The first iteration's inertia must equal a numpy replay
+    of every subspace's assignment to the init subvectors."""
+    import numpy as np
+
+    from kafkastreaming_spark.operators.kmeans import count_and_init, lloyd_fit
+    from kafkastreaming_spark.operators.pq import N_CENT, N_SUB, SUB_DIM
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n, init = count_and_init(emb, N_CENT)
+    c1, n1, in1 = lloyd_fit(spark, emb, init, N_SUB)
+    c2, n2, in2 = lloyd_fit(spark, emb, init, N_SUB)
+    assert c1.shape == (N_SUB, N_CENT, SUB_DIM) and n1.shape == (N_SUB, N_CENT)
+    assert np.array_equal(c1, c2) and np.array_equal(n1, n2) and in1 == in2
+    assert (n1.sum(axis=1) == n).all()
+    assert all(b <= a + 1e-9 for a, b in zip(in1, in1[1:]))  # monotone
+    A = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
+    replay = 0.0
+    for s in range(N_SUB):
+        sl = slice(s * SUB_DIM, (s + 1) * SUB_DIM)
+        replay += ((A[:, None, sl] - init[None, :, sl]) ** 2).sum(2).min(1).sum()
+    assert np.isclose(in1[0], replay, rtol=1e-9), (in1[0], replay)
 
 
 def test_semdedup_drops_subset_of_exact_pair_scan(spark, sf_dir):
