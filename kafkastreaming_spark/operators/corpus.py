@@ -41,6 +41,30 @@ _SPLIT_H_DUCK = (
 )
 
 
+def _word_ngrams(n: int) -> str:
+    """The word n-grams of the bound token array ``tk`` as one Spark SQL
+    array: gram i joins tokens i..i+n-1 (1-based ``element_at``, DuckDB's
+    list index) with single spaces — the oracles' ``tk[i] || ' ' || …``
+    over ``generate_series(1, len(tk) - n + 1)``.
+
+    ``tk`` is bound ONCE per row before the lambda: inlining ``split``
+    in the transform re-tokenizes the document per gram, turning an
+    O(tokens) row into O(tokens²).  Rows shorter than n tokens give an
+    empty array (``sequence(1, 0)`` is DESCENDING in Spark, and
+    ``element_at(tk, 0)`` throws), which ``explode`` drops — the oracle's
+    empty ``generate_series``; NULL text explodes to no rows either way.
+    ``split`` never yields NULL tokens, so ``concat`` equals
+    ``concat_ws(' ', …)`` here, and it is the faster spelling."""
+    window = ", ' ', ".join(
+        f"element_at(tk, i + {j})" if j else "element_at(tk, i)" for j in range(n)
+    )
+    return (
+        f"CASE WHEN size(tk) < {n} THEN array()"
+        f" ELSE transform(sequence(1, size(tk) - {n - 1}), i -> concat({window}))"
+        " END"
+    )
+
+
 @query(
     "llm_train_test_split",
     oracle=f"""
@@ -127,33 +151,14 @@ def llm_bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram language-model statistic behind contamination checks and
     boilerplate detection.
 
-    Bigram generation is a per-row array expression (sequence +
-    transform + 1-based element_at, mirroring DuckDB's 1-based list
-    index), then ONE hash-agg on (lang, bigram) — partial aggregation
-    collapses each map partition before the shuffle, so network volume
-    is bounded by distinct bigrams per partition, not corpus tokens —
-    and one tiny per-lang window for the top-3.
-
-    The token array is bound ONCE per row (``tk``) before the lambda —
-    inlining ``split`` inside the transform re-tokenizes the document
-    per bigram, turning an O(tokens) row into O(tokens²).  Documents
-    with fewer than two tokens produce an empty array (``sequence(1,0)``
-    is DESCENDING in Spark, and ``element_at(tk, 0)`` would throw), and
-    ``explode`` drops them — exactly the oracle's ``generate_series(1,0)``
-    emitting no rows."""
+    Bigram generation is a per-row array expression (``_word_ngrams``),
+    then ONE hash-agg on (lang, bigram) — partial aggregation collapses
+    each map partition before the shuffle, so network volume is bounded
+    by distinct bigrams per partition, not corpus tokens — and one tiny
+    per-lang window for the top-3."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("lang", F.split("text", " ").alias("tk"))
-    big = toks.select(
-        "lang",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) < 2 THEN array()"
-                " ELSE transform(sequence(1, size(tk) - 1),"
-                "   i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-                " END"
-            )
-        ).alias("bigram"),
-    )
+    big = toks.select("lang", F.explode(F.expr(_word_ngrams(2))).alias("bigram"))
     counted = big.groupBy("lang", "bigram").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("bigram"))
     return (
@@ -251,16 +256,7 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), key="doc_id")
     toks = docs.select("doc_id", "lang", F.split("text", " ").alias("tk"))
     big = toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) < 2 THEN array()"
-                " ELSE transform(sequence(1, size(tk) - 1),"
-                "   i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-                " END"
-            )
-        ).alias("bigram"),
+        "doc_id", "lang", F.explode(F.expr(_word_ngrams(2))).alias("bigram")
     )
     gate = _LM_BROADCAST_MAX_BIGRAMS
 
@@ -348,17 +344,6 @@ def llm_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# 5-word shingles as a 1-based array expression, Spark / DuckDB spellings
-# (same bind-the-token-array-once discipline as llm_bigram_stats).
-_GRAM5_SPARK = (
-    "CASE WHEN size(tk) < 5 THEN array()"
-    " ELSE transform(sequence(1, size(tk) - 4),"
-    "   i -> concat_ws(' ', element_at(tk, i), element_at(tk, i + 1),"
-    "        element_at(tk, i + 2), element_at(tk, i + 3), element_at(tk, i + 4)))"
-    " END"
-)
-
-
 @query(
     "llm_contamination",
     oracle=f"""
@@ -417,7 +402,7 @@ def llm_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = toks.select(
         "doc_id",
         "bucket",
-        F.explode(F.expr(_GRAM5_SPARK)).alias("gram"),
+        F.explode(F.expr(_word_ngrams(5))).alias("gram"),
     ).select(
         "doc_id",
         "bucket",
@@ -517,17 +502,7 @@ def llm_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_distinct_words"),
         F.max("n").alias("top_word_n"),
     )
-    bigrams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) < 2 THEN array()"
-                " ELSE transform(sequence(1, size(tk) - 1),"
-                "   i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-                " END"
-            )
-        ).alias("b"),
-    )
+    bigrams = toks.select("doc_id", F.explode(F.expr(_word_ngrams(2))).alias("b"))
     bigram_stats = bigrams.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.countDistinct("b").alias("n_distinct_bigrams"),
@@ -627,6 +602,39 @@ def llm_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _chunks(toks: DataFrame) -> DataFrame:
+    """The 64/48 context-window manifest of a (doc_id, tk) frame:
+    (doc_id, chunk_idx, n_tokens, chunk_hash, chunk_hash2).  The chunk
+    index range is a per-row ``sequence`` over the bound token array,
+    each chunk a ``slice``.  Chunk grid: ceil((n-64)/48) + 1 windows,
+    clamped to ≥ 1 so short docs emit their whole text.
+
+    (chunk_hash, chunk_hash2) are the two 60-bit halves of one md5: the
+    pair is the corpus-wide dedup/repack identity downstream (chunk-level
+    exact dedup composes with llm_exact_dedup's keep-earliest shape) —
+    60 bits alone expects ~43 false merges at 10^10 chunks (hashing.py
+    round-7 audit)."""
+    chunks = toks.select(
+        "doc_id",
+        F.explode(
+            F.expr(
+                "transform(sequence(0, greatest(0, CAST(ceil((size(tk) - 64) / 48.0D)"
+                " AS INT))), c -> named_struct("
+                "  'chunk_idx', c,"
+                "  'chunk_text', concat_ws(' ', slice(tk, 1 + c * 48, 64)),"
+                "  'n_tokens', least(64, size(tk) - c * 48)))"
+            )
+        ).alias("ch"),
+    )
+    return chunks.select(
+        "doc_id",
+        F.col("ch.chunk_idx").alias("chunk_idx"),
+        F.col("ch.n_tokens").cast("int").alias("n_tokens"),
+        F.expr(_H_SPARK.format(x="ch.chunk_text")).alias("chunk_hash"),
+        F.expr(_H2_SPARK.format(x="ch.chunk_text")).alias("chunk_hash2"),
+    )
+
+
 @query(
     "llm_chunk",
     oracle=f"""
@@ -657,38 +665,11 @@ def llm_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences.  Emits (doc_id, chunk_idx, n_tokens, chunk_hash); the
     final partial window is kept (truncation would silently drop tails).
 
-    Pure map-side fanout: the chunk index range is a per-row
-    ``sequence`` over the bound token array, each chunk a ``slice`` —
-    no shuffle, no UDF, output rows ≈ corpus_tokens / stride.  At
-    100 TB this runs at scan speed and writes straight to a
-    split-partitioned training layout; the (chunk_hash, chunk_hash2)
-    120-bit pair is the dedup/repack key downstream (chunk-level exact dedup composes with
-    llm_exact_dedup's keep-earliest shape).  Chunk grid: ceil((n-64)/48)
-    + 1 windows, clamped to ≥ 1 so short docs emit their whole text."""
+    Pure map-side fanout (``_chunks``) — no shuffle, no UDF, output
+    rows ≈ corpus_tokens / stride.  At 100 TB this runs at scan speed
+    and writes straight to a split-partitioned training layout."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("tk"))
-    chunks = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, greatest(0, CAST(ceil((size(tk) - 64) / 48.0D)"
-                " AS INT))), c -> named_struct("
-                "  'chunk_idx', c,"
-                "  'chunk_text', concat_ws(' ', slice(tk, 1 + c * 48, 64)),"
-                "  'n_tokens', least(64, size(tk) - c * 48)))"
-            )
-        ).alias("ch"),
-    )
-    return chunks.select(
-        "doc_id",
-        F.col("ch.chunk_idx").alias("chunk_idx"),
-        F.col("ch.n_tokens").cast("int").alias("n_tokens"),
-        F.expr(_H_SPARK.format(x="ch.chunk_text")).alias("chunk_hash"),
-        # second 60-bit half of the same md5: the (hash, hash2) pair is
-        # the corpus-wide dedup identity — 60 bits alone expects ~43
-        # false merges at 10^10 chunks (hashing.py round-7 audit)
-        F.expr(_H2_SPARK.format(x="ch.chunk_text")).alias("chunk_hash2"),
-    )
+    return _chunks(docs.select("doc_id", F.split("text", " ").alias("tk")))
 
 
 @query(
@@ -814,17 +795,7 @@ def llm_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = docs.agg((F.max("doc_id") + 1).alias("n_docs"))
     toks = docs.select("doc_id", F.split("text", " ").alias("tk"))
     first_seen = (
-        toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "CASE WHEN size(tk) < 2 THEN array()"
-                    " ELSE transform(sequence(1, size(tk) - 1),"
-                    "   i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1)))"
-                    " END"
-                )
-            ).alias("gram"),
-        )
+        toks.select("doc_id", F.explode(F.expr(_word_ngrams(2))).alias("gram"))
         .groupBy("gram")
         .agg(F.min("doc_id").alias("fs"))
     )
@@ -1098,17 +1069,9 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exactly the ones whose first_doc resolves early — skew-safe
     because the payload is one int64, not a row set."""
     docs = spread(load_table(spark, sf_dir, "documents"), key="doc_id")
-    toks = docs.select("doc_id", F.split("text", " ").alias("tk")).filter(
-        F.size("tk") >= 3
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("tk"))
     grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tk) - 2),"
-                " i -> concat_ws(' ', tk[i-1], tk[i], tk[i+1]))"
-            )
-        ).alias("gram"),
+        "doc_id", F.explode(F.expr(_word_ngrams(3))).alias("gram")
     ).distinct()
     firsts = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     joined = grams.join(firsts, "gram")
@@ -1475,19 +1438,9 @@ def llm_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     is CONSTANT-width no matter the corpus, which is the entire point
     of hashed DSIR."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.split("text", " ").alias("tk")
-    ).filter(F.size("tk") >= 2)
+    toks = docs.select("doc_id", "lang", F.split("text", " ").alias("tk"))
     big = toks.select(
-        "doc_id",
-        "lang",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tk) - 1),"
-                " i -> concat(element_at(tk, i), ' ',"
-                " element_at(tk, i + 1)))"
-            )
-        ).alias("bigram"),
+        "doc_id", "lang", F.explode(F.expr(_word_ngrams(2))).alias("bigram")
     )
     feat = big.select(
         "doc_id", "lang", F.expr(_DSIR_F_SPARK).alias("f")
@@ -1601,11 +1554,12 @@ def llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop (Hamming ≤ 6, banded join) → heuristic quality gate
     (20 ≤ tokens ≤ 200, type-token ratio ≥ 0.2) → deterministic
     80% train split (salted-hash) → 64/48 sliding-window chunking with
-    120-bit chunk identities.  Every stage is an already-verified
-    operator (llm_exact_dedup / llm_simhash_dedup / llm_quality_score /
-    llm_train_test_split / llm_chunk); this key pins that they COMPOSE
-    — same join spellings, same hash salts, same window grid — because
-    a real pipeline run is the composition, not the parts.
+    120-bit chunk identities.  Every stage is the Spark spelling an
+    already-verified key calls: ``pipeline.dedup_survivors``
+    (llm_corpus_clean), ``pipeline.quality_keep`` (llm_quality_score),
+    the salted split hash (llm_train_test_split) and ``_chunks``
+    (llm_chunk).  This key pins that they COMPOSE, because a real
+    pipeline run is the composition, not the parts.
 
     Output is the training-sequence manifest (doc_id, chunk_idx,
     n_tokens, chunk_hash, chunk_hash2) — what a trainer's data loader
@@ -1619,52 +1573,16 @@ def llm_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages stream into each other without materialization barriers;
     the split/chunk tail runs at scan speed on the surviving ~dedup'd
     fraction."""
-    from kafkastreaming_spark.operators.pipeline import llm_simhash_dedup
+    from kafkastreaming_spark.operators.pipeline import dedup_survivors, quality_keep
 
-    docs = load_table(spark, sf_dir, "documents")
-    exact_keep = (
-        docs.groupBy(F.md5("text"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    near_drop = (
-        llm_simhash_dedup(spark, sf_dir)
-        .select(F.col("doc_b").alias("doc_id"))
-        .distinct()
-    )
-    surv = docs.join(exact_keep, "doc_id", "left_semi").join(
-        near_drop, "doc_id", "left_anti"
-    )
     tk = F.split("text", " ")
-    nt = F.size(tk).cast("long")
-    nd = F.size(F.array_distinct(tk)).cast("long")
-    kept = surv.filter(
-        nt.between(20, 200) & (nd.cast("double") / nt >= 0.2)
+    n_tokens = F.size(tk).cast("long")
+    n_distinct = F.size(F.array_distinct(tk)).cast("long")
+    kept = dedup_survivors(spark, sf_dir).filter(
+        quality_keep(n_tokens, n_distinct)
+        & (F.expr(_SPLIT_H_SPARK.format(salt="split")) < 80)
     )
-    train = kept.filter(
-        F.expr(_SPLIT_H_SPARK.format(salt="split")) < 80
-    ).select("doc_id", "text")
-    toks = train.select("doc_id", tk.alias("tk"))
-    chunks = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, greatest(0,"
-                " CAST(ceil((size(tk) - 64) / 48.0D) AS INT))),"
-                " c -> named_struct("
-                "  'chunk_idx', c,"
-                "  'chunk_text', concat_ws(' ', slice(tk, 1 + c * 48, 64)),"
-                "  'n_tokens', least(64, size(tk) - c * 48)))"
-            )
-        ).alias("ch"),
-    )
-    return chunks.select(
-        "doc_id",
-        F.col("ch.chunk_idx").alias("chunk_idx"),
-        F.col("ch.n_tokens").cast("int").alias("n_tokens"),
-        F.expr(_H_SPARK.format(x="ch.chunk_text")).alias("chunk_hash"),
-        F.expr(_H2_SPARK.format(x="ch.chunk_text")).alias("chunk_hash2"),
-    )
+    return _chunks(kept.select("doc_id", tk.alias("tk")))
 
 
 @query(
@@ -1727,13 +1645,8 @@ def llm_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH engines count the same g column, so the check stays exact."""
     docs = spread(load_table(spark, sf_dir, "documents"), key="doc_id")
     toks = docs.select("doc_id", F.split("text", " ").alias("tk"))
-    span_txt = (
-        "CASE WHEN size(tk) < 8 THEN array() "
-        "ELSE transform(sequence(1, size(tk) - 7),"
-        " i -> concat_ws(' ', slice(tk, i, 8))) END"
-    )
     spans = toks.select(
-        "doc_id", F.explode(F.expr(span_txt)).alias("span")
+        "doc_id", F.explode(F.expr(_word_ngrams(8))).alias("span")
     ).select(
         "doc_id",
         F.expr(_H_SPARK.format(x="span")).alias("g"),
@@ -2306,11 +2219,7 @@ def llm_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = F.expr(
         "concat("
         " transform(tk, x -> struct(1 AS n, x AS g)),"
-        " CASE WHEN size(tk) < 2"
-        "      THEN CAST(array() AS array<struct<n: int, g: string>>)"
-        "      ELSE transform(sequence(1, size(tk) - 1),"
-        "           i -> struct(2 AS n, concat(element_at(tk, i), ' ',"
-        "                       element_at(tk, i + 1)) AS g)) END)"
+        f" transform({_word_ngrams(2)}, g -> struct(2 AS n, g AS g)))"
     )
     grams = (
         spread(base, key="doc_id")

@@ -19,7 +19,7 @@ row-at-a-time Python in a hot path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafkastreaming_spark import hashing as hashing_mod
@@ -586,6 +586,36 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select(F.col("u").alias("doc_id"), F.col("p").alias("pagerank_scaled"))
 
 
+def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents left after exact dedup (keep the earliest doc_id per
+    md5(text)) and SimHash near-dup filtering (drop the later member of
+    every Hamming-≤6 pair): one md5 groupBy, then a doc_id semi join on
+    the keepers and an anti join on the near-dup drops.  Every column of
+    ``documents`` is kept."""
+    docs = load_table(spark, sf_dir, "documents")
+    exact_keep = (
+        docs.groupBy(F.md5("text"))
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+    )
+    near_drop = (
+        llm_simhash_dedup(spark, sf_dir)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
+    return docs.join(exact_keep, "doc_id", "left_semi").join(
+        near_drop, "doc_id", "left_anti"
+    )
+
+
+def quality_keep(n_tokens: Column, n_distinct: Column) -> Column:
+    """The heuristic quality gate: 20 ≤ tokens ≤ 200 and type-token
+    ratio ≥ 0.2 (the ratio is one IEEE division, as in the oracles)."""
+    return n_tokens.between(20, 200) & (
+        n_distinct.cast("double") / n_tokens >= 0.2
+    )
+
+
 @query(
     "llm_corpus_clean",
     oracle=f"""
@@ -626,20 +656,9 @@ def llm_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shared, cached signatures), two semi/anti joins on doc_id, one
     final bounded aggregation — every step is the scale-safe spelling
     already verified in isolation; this key pins that they COMPOSE,
-    which is what an actual pipeline run is."""
-    docs = load_table(spark, sf_dir, "documents")
-    exact_keep = (
-        docs.groupBy(F.md5("text"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    pairs = llm_simhash_dedup(spark, sf_dir)
-    near_drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    survivors = (
-        docs.join(exact_keep, "doc_id", "left_semi")
-        .join(near_drop, "doc_id", "left_anti")
-    )
-    return survivors.groupBy("lang", "source").agg(
+    which is what an actual pipeline run is.  The survivors come from
+    ``dedup_survivors``, which ``llm_pipeline_e2e`` shares."""
+    return dedup_survivors(spark, sf_dir).groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),
     )
@@ -1888,7 +1907,6 @@ def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.array_distinct(F.split("text", " "))).cast("long").alias("n_distinct"),
         F.col("n_chars").cast("long").alias("n_chars"),
     )
-    ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
     return feat.select(
         "doc_id",
         "n_tokens",
@@ -1909,9 +1927,7 @@ def llm_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             / 1e6
         ).alias("avg_token_len"),
-        F.when(
-            F.col("n_tokens").between(20, 200) & (ttr >= 0.2), F.lit(1)
-        )
+        F.when(quality_keep(F.col("n_tokens"), F.col("n_distinct")), F.lit(1))
         .otherwise(F.lit(0))
         .alias("keep"),
     )

@@ -1564,3 +1564,74 @@ def test_bloom_membership_no_false_negatives(spark, sf_dir):
         if r["exact_member"]:
             assert r["bloom_member"], "false negative: impossible for Bloom"
         assert r["is_fp"] == (r["bloom_member"] and not r["exact_member"])
+
+
+@pytest.mark.parametrize("n", [2, 3, 5, 8])
+def test_word_ngrams_match_python_windows(spark, n):
+    """corpus._word_ngrams(n), the one word-n-gram expression behind
+    nine keys, equals Python's sliding window over ``text.split(' ')``
+    at the boundary lengths: n − 1 tokens (no gram), exactly n (one
+    gram), n + 3; plus doubled spaces (empty tokens), empty text and
+    NULL text (no rows)."""
+    from kafkastreaming_spark.operators.corpus import _word_ngrams
+
+    texts = [
+        " ".join(f"w{j}" for j in range(length)) for length in (n - 1, n, n + 3)
+    ] + ["a  b c  d e f g h i j k", "", None]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    got: dict[int, list[str]] = {}
+    for r in (
+        df.select("id", F.split("text", " ").alias("tk"))
+        .select("id", F.posexplode(F.expr(_word_ngrams(n))))
+        .orderBy("id", "pos")
+        .collect()
+    ):
+        got.setdefault(r["id"], []).append(r["col"])
+    want = {}
+    for k, text in enumerate(texts):
+        if text is None:
+            continue
+        t = text.split(" ")
+        grams = [" ".join(t[i:i + n]) for i in range(len(t) - n + 1)]
+        if grams:
+            want[k] = grams
+    assert got == want
+    assert len(got[1]) == 1 and 0 not in got  # exactly n → one gram; n − 1 → none
+
+
+def test_pipeline_e2e_composes_registered_stages(spark, sf_dir):
+    """llm_pipeline_e2e is llm_chunk restricted to the docs that survive
+    dedup (llm_exact_dedup keepers minus every llm_simhash_dedup doc_b,
+    which pipeline.dedup_survivors must also return), pass the
+    llm_quality_score gate and land in the llm_train_test_split train
+    split.  Both sides are non-empty and llm_chunk has rows outside the
+    set, so the filter is not vacuous."""
+    from kafkastreaming_spark.operators.pipeline import dedup_survivors
+
+    exact_keep = {
+        r["keep_doc_id"] for r in QUERIES["llm_exact_dedup"](spark, sf_dir).collect()
+    }
+    near_drop = {
+        r["doc_b"] for r in QUERIES["llm_simhash_dedup"](spark, sf_dir).collect()
+    }
+    surv = exact_keep - near_drop
+    assert {
+        r["doc_id"] for r in dedup_survivors(spark, sf_dir).select("doc_id").collect()
+    } == surv
+    keep = {
+        r["doc_id"]
+        for r in QUERIES["llm_quality_score"](spark, sf_dir).collect()
+        if r["keep"] == 1
+    }
+    train = {
+        r["doc_id"]
+        for r in QUERIES["llm_train_test_split"](spark, sf_dir).collect()
+        if r["split"] == "train"
+    }
+    docs = surv & keep & train
+    chunks = [tuple(r) for r in QUERIES["llm_chunk"](spark, sf_dir).collect()]
+    want = sorted(c for c in chunks if c[0] in docs)
+    got = sorted(tuple(r) for r in QUERIES["llm_pipeline_e2e"](spark, sf_dir).collect())
+    assert got and want
+    assert len(want) < len(chunks)
+    assert got == want

@@ -1053,7 +1053,7 @@ def test_plan_hygiene_sweep(spark, sf_dir):
         "llm_bleu",
         "dq_profile",
     }
-    skip = tuple(("sink_", "stream_", "source_", "mm_", "llm_pipeline_e2e"))
+    skip = tuple(("sink_", "stream_", "source_", "mm_"))
     offenders = []
     for k in sorted(ORACLES):
         if k.startswith(skip):
