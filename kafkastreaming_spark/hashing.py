@@ -26,6 +26,12 @@ into a space of size ``N``, P(any collision) ≈ m²/2N.
 
 Spark arrays are 0-based, DuckDB lists 1-based: pass the appropriate
 ``idx`` expression (e.g. ``'i'`` vs ``'i+1'``) for the same logical gram.
+
+The numpy kernels behind ``mapInPandas`` read text through
+:func:`char_codes` (the codes the oracles' ``ascii(ch)`` yields, ASCII
+only) and hash grams with :func:`poly_grams_np`, the numpy twin of
+:func:`poly_gram`.  numpy is imported inside those two helpers, so this
+module stays import-free for every operator module.
 """
 
 from __future__ import annotations
@@ -72,3 +78,33 @@ def poly_gram_wide(idx: str, n: int) -> str:
     lo = poly_gram(idx, n)
     hi = poly_gram(idx, n, base=POLY_BASE2, mod=POLY_MOD2)
     return f"(({hi}) * {POLY_MOD} + ({lo}))"
+
+
+def char_codes(text: str, key: str) -> "np.ndarray":
+    """int64 char codes of ``text``: the values the oracles' ``ascii(ch)``
+    reads.  A UTF-8 byte equals its codepoint only for ASCII, so any other
+    text raises ``ValueError`` naming ``key`` instead of silently
+    diverging from the oracle."""
+    import numpy as np
+
+    if not text.isascii():
+        raise ValueError(
+            f"{key} assumes ASCII text; switch the kernel to codepoints "
+            "(ord) to support non-ASCII corpora"
+        )
+    return np.frombuffer(text.encode(), dtype=np.uint8).astype(np.int64)
+
+
+def poly_grams_np(c: "np.ndarray", n: int) -> "np.ndarray":
+    """numpy twin of :func:`poly_gram`: the hash of every ``n``-gram of
+    the int64 code array ``c``, in position order (empty when
+    ``len(c) < n``)."""
+    import numpy as np
+
+    m = len(c) - n + 1
+    if m < 1:
+        return np.empty(0, dtype=np.int64)
+    h = c[0:m].copy()
+    for k in range(1, n):
+        h = (h * POLY_BASE + c[k : m + k]) % POLY_MOD
+    return h

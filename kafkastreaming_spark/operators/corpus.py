@@ -607,14 +607,16 @@ def _chunks(toks: DataFrame) -> DataFrame:
     (doc_id, chunk_idx, n_tokens, chunk_hash, chunk_hash2).  The chunk
     index range is a per-row ``sequence`` over the bound token array,
     each chunk a ``slice``.  Chunk grid: ceil((n-64)/48) + 1 windows,
-    clamped to ≥ 1 so short docs emit their whole text.
+    clamped to ≥ 1 so short docs emit their whole text.  A NULL ``tk``
+    (NULL text) emits no chunk, as in the oracle: with ANSI off,
+    ``size(NULL)`` is −1, which the clamp would turn into one chunk.
 
     (chunk_hash, chunk_hash2) are the two 60-bit halves of one md5: the
     pair is the corpus-wide dedup/repack identity downstream (chunk-level
     exact dedup composes with llm_exact_dedup's keep-earliest shape) —
     60 bits alone expects ~43 false merges at 10^10 chunks (hashing.py
     round-7 audit)."""
-    chunks = toks.select(
+    chunks = toks.filter(F.col("tk").isNotNull()).select(
         "doc_id",
         F.explode(
             F.expr(

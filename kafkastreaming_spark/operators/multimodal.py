@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafkastreaming_spark.hashing import H_SPARK, char_codes
 from kafkastreaming_spark.io import load_table
 from kafkastreaming_spark.registry import query
 
@@ -181,15 +182,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = []
         for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            codes = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-            if (codes >= 128).any():
-                # The oracle derives expected samples from CODEPOINTS
-                # (ascii(ch)); byte==codepoint only holds for ASCII.
-                raise ValueError(
-                    "mm_decode_features assumes ASCII text; switch sample "
-                    "synthesis to codepoints for non-ASCII corpora"
-                )
-            payload = _make_wav(codes.astype(np.int64))
+            payload = _make_wav(char_codes(text, "mm_decode_features"))
             nch, bits, rate, n, data = _decode_wav(payload)
             rows.append(
                 (
@@ -205,21 +198,7 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     int(data.astype(np.int64).sum()),
                 )
             )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id",
-                "media_type",
-                "n_channels",
-                "sample_rate",
-                "bits",
-                "n_frames",
-                "n_bytes",
-                "amp_min",
-                "amp_max",
-                "amp_sum",
-            ],
-        )
+        yield pd.DataFrame(rows, columns=_FEAT_SCHEMA.fieldNames())
 
 
 @query(
@@ -318,13 +297,7 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             out_doc, out_idx, out_en, out_pk = [], [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if (codes >= 128).any():
-                    raise ValueError(
-                        "mm_audio_energy assumes ASCII text; switch sample "
-                        "synthesis to codepoints for non-ASCII corpora"
-                    )
-                payload = _make_wav(codes.astype(np.int64))
+                payload = _make_wav(char_codes(text, "mm_audio_energy"))
                 _, _, _, n, data = _decode_wav(payload)
                 n_frames = n // frame
                 if n_frames == 0:
@@ -461,6 +434,21 @@ def _decode_bmp(payload: bytes) -> tuple[int, int, int, "np.ndarray"]:
     return width, height, bpp, px
 
 
+_IMAGE_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("media_type", T.StringType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("bpp", T.IntegerType()),
+        T.StructField("n_bytes", T.LongType()),
+        T.StructField("px_min", T.IntegerType()),
+        T.StructField("px_max", T.IntegerType()),
+        T.StructField("px_sum", T.LongType()),
+    ]
+)
+
+
 @query(
     "mm_image_decode",
     oracle=f"""
@@ -502,13 +490,7 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if (codes >= 128).any():
-                    raise ValueError(
-                        "mm_image_decode assumes ASCII text; switch pixel "
-                        "synthesis to codepoints for non-ASCII corpora"
-                    )
-                payload = _make_bmp(codes)
+                payload = _make_bmp(char_codes(text, "mm_image_decode"))
                 width, height, bpp, px = _decode_bmp(payload)
                 flat = px.astype(np.int64)
                 rows.append(
@@ -525,31 +507,14 @@ def mm_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
             if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=[
-                        "doc_id",
-                        "media_type",
-                        "width",
-                        "height",
-                        "bpp",
-                        "n_bytes",
-                        "px_min",
-                        "px_max",
-                        "px_sum",
-                    ],
-                )
+                yield pd.DataFrame(rows, columns=_IMAGE_SCHEMA.fieldNames())
 
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.length("text") >= _BMP_W)
         .select("doc_id", "text")
     )
-    return docs.mapInPandas(
-        image_batches,
-        "doc_id long, media_type string, width int, height int, bpp int, "
-        "n_bytes long, px_min int, px_max int, px_sum long",
-    )
+    return docs.mapInPandas(image_batches, _IMAGE_SCHEMA)
 
 
 def _phash_col_sums_duck() -> tuple[str, str]:
@@ -620,12 +585,7 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                codes = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
-                if (codes >= 128).any():
-                    raise ValueError(
-                        "mm_phash_dedup assumes ASCII text (pixel synth)"
-                    )
-                payload = _make_bmp(codes)
+                payload = _make_bmp(char_codes(text, "mm_phash_dedup"))
                 _, _, _, px = _decode_bmp(payload)
                 col = px[:, :, 0].astype(np.int64).sum(axis=0)
                 dh = 0
@@ -803,10 +763,7 @@ def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequentially, which is exactly why shard count is the parallelism
     knob."""
     docs = load_table(spark, sf_dir, "documents")
-    hv = F.expr(
-        "CAST(conv(substr(md5(CAST(doc_id AS STRING) || ':mmshard'), 1, 15),"
-        " 16, 10) AS BIGINT)"
-    )
+    hv = F.expr(H_SPARK.format(x="CAST(doc_id AS STRING) || ':mmshard'"))
     blobs = docs.select(
         "doc_id",
         F.octet_length(F.encode("text", "utf-8")).cast("long").alias("n_bytes"),

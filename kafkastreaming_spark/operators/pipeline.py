@@ -3,11 +3,10 @@ text analysis (extends SURVEY.md §2.11; the driver's north star).
 
 Cross-engine primitives these build on (verified this session):
 
-* **Portable 60-bit hash** ``H(s)``: both engines parse the first 15 hex
-  chars of ``md5(s)`` as a BIGINT — Spark ``conv(substr(md5(s),1,15),16,10)``
-  ≡ DuckDB ``CAST('0x' || substr(md5(s),1,15) AS BIGINT)``.  Same value,
-  bit for bit, so hash-derived operators (SimHash, fingerprints, salted
-  MinHash) are exactly hash-checkable.
+* **Portable hashes** (``kafkastreaming_spark/hashing.py``): the 60-bit
+  md5 hash ``H(s)`` and the polynomial char-gram hash give the same value
+  in both engines, bit for bit, so hash-derived operators (SimHash,
+  fingerprints, salted MinHash) are exactly hash-checkable.
 * Bit ops (``&``, ``^``, shifts, ``bit_count``) are exact integer math in
   both engines — no float determinism discipline needed.
 * Dot products: sequential double folds (see operators/llm.py header).
@@ -710,8 +709,8 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs the corpus"), so its gram sets ride into the kernel as closure
     state — the same bounded-metadata discipline as the ANN query
     vectors.  Per corpus doc, numpy computes the distinct poly-hashed
-    gram set once (rolling ``(h*131+c) % (2^31-1)``, identical integer
-    math to the oracle) and intersects it against each query set in C
+    gram set once (``hashing.poly_grams_np``, identical integer math to
+    the oracle) and intersects it against each query set in C
     (``np.intersect1d``); the exact small-integer Jaccard rounds 6dp
     and only the tiny scored table reaches the JVM window for the
     per-query top-5.  Measured 1.6× over the previous
@@ -723,23 +722,9 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    mod, base = 2147483647, 131
-
     def grams_np(text: str) -> "np.ndarray":
-        if not text.isascii():
-            # oracle hashes codepoints (ascii); byte==codepoint needs ASCII
-            raise ValueError(
-                "llm_ngram_jaccard kernel assumes ASCII text; found a "
-                "non-ASCII doc — switch to codepoints (ord)"
-            )
-        c = np.frombuffer(text.encode(), dtype=np.uint8).astype(np.int64)
-        n = len(c) - 2
-        if n < 1:
-            return np.empty(0, dtype=np.int64)
-        h = c[0:n].copy()
-        for k in range(1, 3):
-            h = (h * base + c[k : n + k]) % mod
-        return np.unique(h)
+        c = hashing_mod.char_codes(text, "llm_ngram_jaccard")
+        return np.unique(hashing_mod.poly_grams_np(c, 3))
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     qsets = [
@@ -2200,8 +2185,6 @@ _FP_SALTS = [
 # the right size for PER-DOC gram sets (~300 grams ⇒ collision P ≈ 2e-5,
 # see hashing.py's birthday-bound note); corpus-wide gram identities at
 # 100 TB should use hashing.poly_gram_wide's 62-bit pack instead.
-_FP_BASE = hashing_mod.POLY_BASE
-_FP_MOD = hashing_mod.POLY_MOD
 _FP_MASK = (1 << 31) - 1
 
 
@@ -2297,31 +2280,16 @@ def llm_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = _WINNOW_W
     pos_bits = _WINNOW_POS_BITS
-    base, mod = _FP_BASE, _FP_MOD
 
     def winnow_batches(batches):
         for pdf in batches:
             out_doc, out_hash, out_pos = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # The oracle hashes codepoints (ascii(ch)); byte==codepoint
-                # only holds for ASCII.  Fail loudly on a non-ASCII fixture
-                # instead of silently diverging from the oracle (ADVICE r2).
-                if not text.isascii():
-                    raise ValueError(
-                        f"llm_winnow kernel assumes ASCII text; doc {doc_id} "
-                        "is not — switch the kernel to codepoints (ord) to "
-                        "support non-ASCII corpora"
-                    )
-                c = np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(
-                    np.int64
-                )
-                n = len(c) - 4
-                if n < w:
+                c = hashing_mod.char_codes(text, "llm_winnow")
+                h = hashing_mod.poly_grams_np(c, 5)
+                if len(h) < w:
                     continue
-                h = c[0:n].copy()
-                for k in range(1, 5):
-                    h = (h * base + c[k : n + k]) % mod
-                keys = (h << pos_bits) | np.arange(n, dtype=np.int64)
+                keys = (h << pos_bits) | np.arange(len(h), dtype=np.int64)
                 mins = np.lib.stride_tricks.sliding_window_view(keys, w).min(axis=1)
                 sel = np.unique(mins)
                 out_doc.append(np.full(len(sel), doc_id, dtype=np.int64))
@@ -2363,25 +2331,16 @@ def llm_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     salts = [s & _FP_MASK for s in _FP_SALTS]
-    base, mod = _FP_BASE, _FP_MOD
 
     def fp_batches(batches):
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if not text.isascii():
-                    # oracle hashes codepoints; byte==codepoint needs ASCII
-                    raise ValueError(
-                        f"llm_fingerprint kernel assumes ASCII text; doc "
-                        f"{doc_id} is not — switch to codepoints (ord)"
-                    )
-                c = np.frombuffer(text.encode(), dtype=np.uint8).astype(np.int64)
-                n = len(c) - 4
-                if n < 1:
+                h = hashing_mod.poly_grams_np(
+                    hashing_mod.char_codes(text, "llm_fingerprint"), 5
+                )
+                if len(h) == 0:
                     continue
-                h = c[0:n].copy()
-                for k in range(1, 5):
-                    h = (h * base + c[k : n + k]) % mod
                 rows.append((int(doc_id), *[int(np.min(h ^ s)) for s in salts]))
             if rows:
                 yield pd.DataFrame(

@@ -12,9 +12,10 @@ from __future__ import annotations
 import os
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreaming_spark.hashing import H_SPARK
 from kafkastreaming_spark.io import (
     EVENTS_ORACLE_CTE,
     load_table,
@@ -35,6 +36,24 @@ def _sink_path(name: str, sf_dir: str) -> str:
 
 def _sf_tag(sf_dir: str) -> str:
     return os.path.basename(sf_dir.rstrip("/"))
+
+
+def _hash_xor(expr: str) -> Column:
+    """Order-free (and overflow-free) xor of the portable 60-bit md5 hash
+    of ``expr`` over a group: the fidelity digest of the source and sink
+    round-trips, which their oracles compute from the original parquet."""
+    return F.expr(f"bit_xor({H_SPARK.format(x=expr)})")
+
+
+def _text_digest(docs: DataFrame, keys: list[str], *extra: Column) -> DataFrame:
+    """Per-``keys`` digest of a documents read-back: ``n_docs``,
+    ``total_chars`` and ``text_hash_xor``, then the ``extra`` aggregates."""
+    return docs.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+        _hash_xor("text").alias("text_hash_xor"),
+        *extra,
+    )
 
 
 @query(
@@ -276,13 +295,7 @@ def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _sink_path("ks_spark_source_jsonl", sf_dir)
     docs.write.mode("overwrite").json(path)
     back = spark.read.schema(docs.schema).json(path)
-    return back.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT))"
-        ).alias("text_hash_xor"),
-    )
+    return _text_digest(back, ["lang", "source"])
 
 
 @query(
@@ -466,13 +479,7 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _sink_path("ks_spark_source_csv", sf_dir)
     docs.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(docs.schema).option("header", "true").csv(path)
-    return back.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT))"
-        ).alias("text_hash_xor"),
-    )
+    return _text_digest(back, ["lang"])
 
 
 @query(
@@ -500,13 +507,7 @@ def source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _sink_path("ks_spark_source_orc", sf_dir)
     docs.write.mode("overwrite").orc(path)
     back = spark.read.schema(docs.schema).orc(path)
-    return back.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT))"
-        ).alias("text_hash_xor"),
-    )
+    return _text_digest(back, ["source"])
 
 
 @query(
@@ -549,10 +550,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(compacted)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(CAST(event_id AS STRING)), 1, 15),"
-            " 16, 10) AS BIGINT))"
-        ).alias("id_hash_xor"),
+        _hash_xor("CAST(event_id AS STRING)").alias("id_hash_xor"),
     )
 
 
@@ -685,16 +683,7 @@ def source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rowTag", "doc")
         .load(path)
     )
-    return back.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").cast("long").alias("total_chars"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT))"
-        ).alias("text_hash_xor"),
-        F.expr(
-            "bit_xor(CAST(conv(substr(md5(lang), 1, 15), 16, 10) AS BIGINT))"
-        ).alias("lang_hash_xor"),
-    )
+    return _text_digest(back, ["source"], _hash_xor("lang").alias("lang_hash_xor"))
 
 
 @query(
@@ -894,9 +883,9 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.agg(
         F.sum((~is_corrupt).cast("int")).cast("long").alias("n_good"),
         F.sum(is_corrupt.cast("int")).cast("long").alias("n_corrupt"),
+        # ELSE 0, not H(NULL): an all-corrupt group's xor stays 0, not NULL
         F.expr(
-            "bit_xor(CASE WHEN _bad IS NULL THEN"
-            " CAST(conv(substr(md5(text), 1, 15), 16, 10) AS BIGINT)"
+            f"bit_xor(CASE WHEN _bad IS NULL THEN {H_SPARK.format(x='text')}"
             " ELSE 0 END)"
         ).alias("good_text_xor"),
         F.sum(F.when(is_corrupt, F.length("_bad")).otherwise(F.lit(0)))

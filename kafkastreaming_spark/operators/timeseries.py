@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkastreaming_spark.functions.numeric import dsum, oracle_dsum
+from kafkastreaming_spark.hashing import H_SPARK
 from kafkastreaming_spark.io import EVENTS_ORACLE_CTE, load_table
 from kafkastreaming_spark.registry import query
 
@@ -69,9 +70,7 @@ def stream_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SAMPLE_HASH_SPARK = (
-    "pmod(CAST(conv(substr(md5(CAST(event_id AS STRING)), 1, 15), 16, 10) AS BIGINT), 100)"
-)
+_SAMPLE_HASH_SPARK = f"pmod({H_SPARK.format(x='CAST(event_id AS STRING)')}, 100)"
 _SAMPLE_HASH_DUCK = (
     "CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) % 100"
 )

@@ -4,7 +4,12 @@ not rest on the 31-bit gram space."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
 import duckdb
+import pyarrow.parquet as pq
+import pytest
 import pyspark.sql.functions as F
 
 from kafkastreaming_spark import hashing
@@ -28,7 +33,7 @@ def _spark_gram_hashes(spark, sf_dir, expr):
     )
 
 
-def _duck_gram_hashes(sf_dir, expr):
+def _duck_gram_hashes(sf_dir, expr, n=5):
     con = duckdb.connect()
     return [
         row[0]
@@ -37,10 +42,10 @@ def _duck_gram_hashes(sf_dir, expr):
             WITH codes AS (
               SELECT list_transform(string_split(text, ''), ch -> ascii(ch)) AS c
               FROM read_parquet('{sf_dir}/documents.parquet')
-              WHERE len(text) >= 5
+              WHERE len(text) >= {n}
             )
             SELECT DISTINCT unnest(list_transform(
-                     generate_series(0, len(c) - 5), i -> {expr})) AS h
+                     generate_series(0, len(c) - {n}), i -> {expr})) AS h
             FROM codes ORDER BY h
             """
         ).fetchall()
@@ -79,3 +84,45 @@ def test_poly_gram_wide_collision_free_at_fixture_scale(spark, sf_dir):
     )
     hashed = len(_spark_gram_hashes(spark, sf_dir, hashing.poly_gram_wide("i", 5)))
     assert hashed == raw, f"62-bit gram hash collided: {hashed} != {raw}"
+
+
+def test_char_codes_returns_int64_and_rejects_non_ascii():
+    c = hashing.char_codes("Az ~", "some_key")
+    assert c.dtype.name == "int64"
+    assert c.tolist() == [65, 122, 32, 126]
+    assert hashing.char_codes("", "some_key").tolist() == []
+    with pytest.raises(ValueError, match="some_key assumes ASCII text"):
+        hashing.char_codes("caf\u00e9", "some_key")
+
+
+@pytest.mark.parametrize("n", [3, 5])
+def test_poly_grams_np_matches_duckdb(sf_dir, n):
+    """The numpy twin equals the SQL spelling ``poly_gram`` over the
+    fixture corpus: the same distinct n-gram hash set."""
+    texts = pq.read_table(f"{sf_dir}/documents.parquet", columns=["text"])
+    got = set()
+    for t in texts.column("text").to_pylist():
+        got.update(hashing.poly_grams_np(hashing.char_codes(t, "test"), n).tolist())
+    assert got == set(_duck_gram_hashes(sf_dir, hashing.poly_gram("i+1", n), n))
+    assert len(hashing.poly_grams_np(hashing.char_codes("ab", "test"), 3)) == 0
+
+
+# Engine-side spellings of the portable hashes that belong in hashing.py
+# alone: the Spark H (md5 hex parse), the ASCII precondition of the
+# char-code kernels, and the numpy rolling poly-hash loop (a sliced
+# ``* base + c[k : ...]`` step; the SQL ``c[i+1]`` spelling has no colon).
+_HASHING_ONLY = {
+    "conv(substr(md5": re.compile(r"conv\(substr\(md5"),
+    "ASCII check": re.compile(r"isascii\(\)|>= 128\)\.any\(\)"),
+    "numpy poly-hash loop": re.compile(r"\* *\w+ *\+ *c\[[^\]]*:"),
+}
+
+
+def test_portable_hash_spellings_live_only_in_hashing_py():
+    root = pathlib.Path(__file__).resolve().parent.parent / "kafkastreaming_spark"
+    sources = {str(p.relative_to(root)): p.read_text("utf-8") for p in root.rglob("*.py")}
+    found = {
+        name: sorted(f for f, text in sources.items() if pat.search(text))
+        for name, pat in _HASHING_ONLY.items()
+    }
+    assert found == {name: ["hashing.py"] for name in _HASHING_ONLY}

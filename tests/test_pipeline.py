@@ -1635,3 +1635,71 @@ def test_pipeline_e2e_composes_registered_stages(spark, sf_dir):
     assert got and want
     assert len(want) < len(chunks)
     assert got == want
+
+
+def _documents_dir(tmp_path, sf_dir, texts) -> str:
+    """A tmp sf dir holding only a ``documents.parquet`` with the fixture's
+    schema, one row per ``(doc_id, text)``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(f"{sf_dir}/documents.parquet").remove_metadata()
+    rows = [
+        {
+            "doc_id": doc_id,
+            "text": text,
+            "lang": "en",
+            "source": "web",
+            "n_chars": None if text is None else len(text),
+        }
+        for doc_id, text in texts
+    ]
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema), f"{tmp_path}/documents.parquet"
+    )
+    return str(tmp_path)
+
+
+def test_llm_chunk_null_and_empty_text_match_oracle(spark, sf_dir, tmp_path):
+    """A NULL-text document emits no chunk on either engine (Spark's
+    ``size(NULL)`` is −1 with ANSI off, which the grid clamp would turn
+    into one chunk), and ``''`` splits to ``['']`` on both sides, so it
+    gives one chunk.  No fixture holds NULL or empty text."""
+    import duckdb
+
+    from kafkastreaming_spark.all import ORACLES
+    from tools.verify_local import compare
+
+    d = _documents_dir(tmp_path, sf_dir, [(1, None), (2, "a b"), (3, "")])
+    spdf = QUERIES["llm_chunk"](spark, d).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{d}/documents.parquet')"
+    )
+    ok, why = compare(spdf, con.execute(ORACLES["llm_chunk"]).df())
+    assert ok, why
+    assert sorted(spdf["doc_id"]) == [2, 3]
+
+
+@pytest.mark.parametrize(
+    "key",
+    [
+        "llm_ngram_jaccard",
+        "llm_winnow",
+        "llm_fingerprint",
+        "mm_decode_features",
+        "mm_audio_energy",
+        "mm_image_decode",
+        "mm_phash_dedup",
+        "mm_audio_vad",
+    ],
+)
+def test_char_code_kernels_reject_non_ascii_text(spark, sf_dir, tmp_path, key):
+    """The char-code kernels read UTF-8 bytes as the oracles' ``ascii(ch)``
+    codepoints, which holds only for ASCII: an 80-character text with an
+    ``é`` must fail the key, not silently diverge from its oracle."""
+    text = "café " * 16
+    assert len(text) == 80
+    d = _documents_dir(tmp_path, sf_dir, [(1, text)])
+    with pytest.raises(Exception, match="assumes ASCII text"):
+        QUERIES[key](spark, d).collect()
